@@ -9,10 +9,11 @@ compares the warehouse with the model of the last applied version.
 
 Statement mix: CREATE TABLE (ReplacingMergeTree, or MergeTree with or
 without a PARTITION BY key), INSERT VALUES of 1-4 rows, ALTER UPDATE /
-DELETE, ADD / DROP / RENAME COLUMN, and OPTIMIZE FINAL.  The sequence of statement kinds and the
-number of statements per version are fixed; the seed picks tables,
-engines, column names and values.  That keeps the cost of version ``k``
-nearly the same for every seed while the inputs still differ.
+DELETE, ADD / DROP / RENAME COLUMN, and OPTIMIZE FINAL.  The sequence
+of statement kinds, of engines and of statements per version is fixed;
+the seed picks tables, column names and values.  That keeps the cost of
+version ``k`` nearly the same for every seed while the inputs still
+differ.
 """
 
 from __future__ import annotations
@@ -22,31 +23,36 @@ import json
 import random
 from dataclasses import dataclass, field
 
-#: statements per version, cycled
-SIZES = (1, 2, 3, 4)
+#: statements per version, cycled; with KINDS, the first four versions
+#: (the run's whole history at the default ``--seconds``) hold every
+#: statement kind
+SIZES = (4, 3, 1, 4)
 
-#: statement kinds, cycled across the whole history; an infeasible kind
-#: (DROP or RENAME COLUMN with no added column) becomes an ADD COLUMN
+#: statement kinds, cycled across the whole history.  The first two
+#: inserts both land in the first table, a ReplacingMergeTree, so the
+#: second repeats a key and the OPTIMIZE FINAL of version 3 drops a row.
+#: An infeasible kind (DROP or RENAME COLUMN with no added column)
+#: becomes an ADD COLUMN.
 KINDS = (
     "create",
     "insert",
     "insert",
-    "update",
-    "add_column",
+    "create",
     "insert",
+    "add_column",
+    "update",
+    "optimize",
     "delete",
     "rename_column",
-    "optimize",
     "drop_column",
     "insert",
-    "update",
 )
 
-#: CREATE flavours.  A physically partitioned parquet table is not among
-#: them: the runner's CREATE translation cannot express one (Spark wants
-#: USING before PARTITIONED BY, and the translator appends a second USING
-#: unless USING ends the statement).
-FLAVOURS = ("replacing", "merge", "merge_partition_by")
+#: CREATE flavours, cycled.  A physically partitioned parquet table is
+#: not among them: the runner's CREATE translation cannot express one
+#: (Spark wants USING before PARTITIONED BY, and the translator appends a
+#: second USING unless USING ends the statement).
+FLAVOURS = ("replacing", "merge_partition_by", "merge")
 
 _WORDS = ("amber", "birch", "cedar", "delta", "ember", "fjord", "grove", "heath")
 _PARTS = ("p0", "p1", "p2")
@@ -109,7 +115,7 @@ class _Gen:
     def create(self) -> str:
         self.n_tables += 1
         name = f"t{self.n_tables}_{self.rng.choice(_WORDS)}"
-        flavour = self.rng.choice(FLAVOURS)
+        flavour = FLAVOURS[(self.n_tables - 1) % len(FLAVOURS)]
         cols = ["id", "v", "s"]
         if flavour == "replacing":
             sql = (
@@ -133,8 +139,8 @@ class _Gen:
     def _pick(self) -> Table:
         return self.tables[self.rng.choice(sorted(self.tables))]
 
-    def _row(self, t: Table) -> dict:
-        if t.flavour == "replacing" and t.rows and self.rng.random() < 0.4:
+    def _row(self, t: Table, dup: bool) -> dict:
+        if dup:
             rid = self.rng.choice(t.rows)["id"]  # a duplicate key for FINAL
         else:
             rid = self.next_id
@@ -148,7 +154,9 @@ class _Gen:
 
     def insert(self) -> str:
         t = self._pick()
-        rows = [self._row(t) for _ in range(self.rng.randint(1, 4))]
+        # an insert into a non-empty ReplacingMergeTree repeats one key
+        dup = t.flavour == "replacing" and bool(t.rows)
+        rows = [self._row(t, dup and i == 0) for i in range(self.rng.randint(1, 4))]
         t.rows.extend(rows)
         values = ", ".join(
             "(" + ", ".join(_lit(r[c]) for c in t.columns) + ")" for r in rows
@@ -172,7 +180,9 @@ class _Gen:
         return f"ALTER TABLE {t.name} UPDATE s = '{w}' WHERE id % {m} = {r}"
 
     def delete(self) -> str:
-        t = self._pick()
+        # spare the ReplacingMergeTree tables the duplicate keys FINAL drops
+        others = sorted(n for n, t in self.tables.items() if t.flavour != "replacing")
+        t = self.tables[self.rng.choice(others)] if others else self._pick()
         m = self.rng.randint(5, 7)
         r = self.rng.randrange(m)
         t.rows[:] = [row for row in t.rows if row["id"] % m != r]
@@ -217,7 +227,8 @@ class _Gen:
         return f"ALTER TABLE {t.name} RENAME COLUMN {col} TO {new}"
 
     def optimize(self) -> str:
-        t = self._pick()
+        replacing = sorted(n for n, t in self.tables.items() if t.flavour == "replacing")
+        t = self.tables[self.rng.choice(replacing)] if replacing else self._pick()
         if t.flavour == "replacing":
             # one survivor per ORDER BY key: the row whose non-key columns
             # (in storage order) compare greatest

@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 
-import datagen
 import history
 import run
+from clickhouse_migrator_spark.tables import TABLES
 
 
 def test_history_is_deterministic_per_seed():
@@ -26,7 +28,7 @@ def test_history_prefix_does_not_depend_on_length():
 
 def test_history_shape_is_fixed_and_files_parse():
     h = history.make_history(11, 8)
-    assert [len(v.statements) for v in h.versions] == [1, 2, 3, 4, 1, 2, 3, 4]
+    assert [len(v.statements) for v in h.versions] == [4, 3, 1, 4, 4, 3, 1, 4]
     for v in h.versions:
         if v.filename.endswith(".json"):
             assert json.loads(v.body) == list(v.statements)
@@ -35,40 +37,50 @@ def test_history_shape_is_fixed_and_files_parse():
             assert v.body.strip() == v.statements[0]
 
 
-def test_dataset_is_deterministic():
-    a, b = datagen.tables(sf=0.001, seed=7), datagen.tables(sf=0.001, seed=7)
-    assert sorted(a) == sorted(b) == sorted(datagen.tables(sf=0.001, seed=8))
-    for name in a:
-        assert a[name].equals(b[name]), name
-    assert a["lineitem"].num_rows == 6000
+def _bench_spec() -> dict:
+    with open(os.path.join(run.ROOT, "BENCHMARK.json")) as f:
+        return json.load(f)
 
 
-def test_dataset_ensure_reuses_a_complete_copy(tmp_path):
-    out = str(tmp_path / "sf")
-    datagen.ensure(out, sf=0.001)
-    stamp = os.path.getmtime(os.path.join(out, "orders.parquet"))
-    datagen.ensure(out, sf=0.001)
-    assert os.path.getmtime(os.path.join(out, "orders.parquet")) == stamp
+def test_a_timed_run_applies_every_statement_kind():
+    n = run.n_versions(_bench_spec()["run_seconds"])
+    for seed in range(20):
+        h = history.make_history(seed, n)
+        stmts = [s for v in h.versions for s in v.statements]
+        for pattern in (
+            r"ENGINE = ReplacingMergeTree", r"ENGINE = MergeTree PARTITION BY",
+            r"^INSERT INTO", r"^ALTER TABLE \S+ UPDATE", r"^ALTER TABLE \S+ DELETE",
+            r"^ALTER TABLE \S+ ADD COLUMN", r"^ALTER TABLE \S+ DROP COLUMN",
+            r"^ALTER TABLE \S+ RENAME COLUMN", r"^OPTIMIZE TABLE \S+ FINAL",
+        ):
+            assert any(re.search(pattern, s) for s in stmts), (seed, pattern)
+        assert max(len(v.statements) for v in h.versions) == 4
+        # OPTIMIZE FINAL removes a duplicate key from the model
+        k = next(i for i, v in enumerate(h.versions) if v.statements[0].startswith("OPTIMIZE"))
+        before, after = h.expected(k), h.expected(k + 1)
+        assert sum(map(len, after.values())) < sum(map(len, before.values())), seed
 
 
-class _Spec:
-    def __init__(self, module: str) -> None:
-        self.fn = type("F", (), {"__module__": f"pkg.operators.{module}"})
+def test_vendored_dataset_matches_its_checksums():
+    lines = open(os.path.join(run.DATA, "SHA256SUMS")).read().split("\n")
+    sums = dict(reversed(ln.split()) for ln in lines if ln)
+    assert sorted(sums) == sorted(f"{t}.parquet" for t in TABLES)
+    for name, want in sums.items():
+        with open(os.path.join(run.DATA, name), "rb") as f:
+            assert hashlib.sha256(f.read()).hexdigest() == want, name
 
 
-def test_panel_ignores_registry_order():
-    names = {f"{m}_q{i}": m for m in ("tpch", "dedup", "text") for i in range(5)}
-    fwd = {n: _Spec(m) for n, m in names.items()}
-    rev = {n: _Spec(m) for n, m in reversed(list(names.items()))}
-    p = run.panel(fwd, 2)
-    assert p == run.panel(rev, 2) == sorted(p)
-    assert [n for n in p if n.startswith("tpch")] == ["tpch_q1", "tpch_q3"]
-    assert len(p) == 6
+def test_panel_is_one_query_per_module_by_name():
+    from clickhouse_migrator_spark.registry import all_specs
+
+    specs = all_specs()
+    for mod, name in run.PANEL.items():
+        assert specs[name].fn.__module__.rsplit(".", 1)[1] == mod, name
+    assert set(run.SUBSTRATE) < set(run.MODULES)
 
 
 def test_benchmark_json_names_the_metrics_the_run_prints():
-    with open(os.path.join(run.ROOT, "BENCHMARK.json")) as f:
-        spec = json.load(f)
+    spec = _bench_spec()
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == run.PER_LAYER
     assert {w["name"] for w in spec["workloads"]} == set(run.WORKLOADS)

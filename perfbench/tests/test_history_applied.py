@@ -9,11 +9,11 @@ import os
 
 from checks import check_runner, check_tables
 from clickhouse_migrator_spark import migrate as M
-from history import make_history
+from history import SIZES, make_history
 
 
 def test_row_model_matches_applied_state(spark, tmp_path):
-    h = make_history(seed=2, n_versions=5)
+    h = make_history(seed=2, n_versions=len(SIZES))
     home = str(tmp_path / "migrations")
     os.makedirs(home)
     applied = {}
