@@ -319,7 +319,7 @@ def _warm_streaming_inner(spark) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())
     spark = get_spark(app_name="bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -347,6 +347,22 @@ _COMMENT_COL_RE = re.compile(
 _DEFAULT_COL_RE = re.compile(r"\s+DEFAULT\s+[^,)]+", re.I)
 
 
+def _names_provider(create_sql: str) -> bool:
+    """Whether a literal-masked CREATE TABLE names its own provider: a
+    ``USING <fmt>`` at paren depth 0, wherever it stands after the
+    column list (``PARTITIONED BY``, ``OPTIONS`` or ``TBLPROPERTIES``
+    may follow it; column definitions sit at depth 1)."""
+    depth = 0
+    for m in re.finditer(r"[()]|\bUSING\s+\w+", create_sql, re.I):
+        if m.group(0) == "(":
+            depth += 1
+        elif m.group(0) == ")":
+            depth -= 1
+        elif depth == 0:
+            return True
+    return False
+
+
 def _split_top(s: str) -> list[str]:
     """Split on top-level commas only (paren-depth AND quote aware: a
     comma or paren inside a string literal — ``SET s = 'a,b', v = 2``
@@ -690,7 +706,7 @@ def translate(sql: str) -> Statement:
         out = _ENGINE_RE.sub(" ", out)
         out = _DEFAULT_COL_RE.sub(" ", out)
         out = re.sub(r"\s+", " ", out).strip().rstrip(";")
-        if not re.search(r"\bUSING\s+\w+\s*$", out, re.I):
+        if not _names_provider(out):
             out += " USING PARQUET"
         out += ctas_tail  # Spark syntax: USING comes before AS SELECT
         return Statement(

@@ -12,9 +12,12 @@ Spark-native deltas from the reference:
 
 - ClickHouse server → Spark catalog (parquet-backed warehouse);
   ``clickhouse_driver.Client`` → ``SparkSession``.
-- pandas metadata frames → Spark DataFrames (the diff is a pure
-  DataFrame function: full_outer join + three filters + projection,
-  reference `migrate.py:26-41`).
+- pandas metadata frames → driver-side rows: the ledger, claims and
+  journal are read and appended as parquet part files on the driver
+  (:func:`_read_meta_rows`, :func:`_atomic_append`), and the diff is a
+  guard pass over those rows (full outer join + three guards +
+  projection, reference `migrate.py:26-41`) — the bookkeeping starts
+  no Spark job.  Manifest and pending set are local frames.
 - ClickHouse async-mutation polling (``pipelined``, reference
   `migrate.py:56-71`) → nothing: Spark actions are synchronous, so the
   sequencing that ``queue_exec=True`` exists to enforce is automatic.
@@ -28,6 +31,7 @@ Spark-native deltas from the reference:
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
 import os
@@ -36,8 +40,9 @@ import threading
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
+    BooleanType,
     LongType,
     StringType,
     StructField,
@@ -143,6 +148,26 @@ LEDGER_SCHEMA = StructType(
         StructField("version", LongType()),
         StructField("md5", StringType()),
         StructField("script", StringType()),
+        StructField("created_at", TimestampType()),
+    ]
+)
+
+CLAIMS_SCHEMA = StructType(
+    [
+        StructField("version", LongType()),
+        StructField("owner", StringType()),
+        StructField("started_at", TimestampType()),
+        StructField("released", BooleanType()),
+        StructField("claim_id", StringType()),
+    ]
+)
+
+JOURNAL_SCHEMA = StructType(
+    [
+        StructField("version", LongType()),
+        StructField("stmt_index", LongType()),
+        StructField("md5", StringType()),
+        StructField("owner", StringType()),
         StructField("created_at", TimestampType()),
     ]
 )
@@ -306,36 +331,47 @@ def _append_claim_row(
     the production answer, per README.
 
     ``claim_id`` uniquely identifies one claim row; its release
-    tombstone carries the SAME claim_id, and :func:`_live_claims`
-    anti-joins on it — so a tombstone can never shadow a FUTURE claim
+    tombstone carries the SAME claim_id, and :func:`_live_claim_rows`
+    matches tombstones on it — so a tombstone can never shadow a FUTURE claim
     that happens to reuse a (version, owner) pair (ADVICE r8: the old
     (version, owner) tombstone join silently degraded the at-most-one
     guard to both-proceed under owner reuse)."""
-    import datetime
+    row = {
+        "version": version,
+        "owner": owner,
+        "started_at": datetime.datetime.now(datetime.timezone.utc),
+        "released": bool(released),
+        "claim_id": claim_id,
+    }
+    _append_meta_row(spark, claims_qual, CLAIMS_SCHEMA, "claim", row)
 
+
+def _arrow_table(rows: list[dict], schema: StructType):
+    """``rows`` as a pyarrow table of a runner metadata ``schema``;
+    timestamps as UTC microseconds, which Spark reads as TIMESTAMP."""
     import pyarrow as pa
 
-    table = pa.table(
-        {
-            "version": pa.array([version], pa.int64()),
-            "owner": pa.array([owner], pa.string()),
-            "started_at": pa.array(
-                [datetime.datetime.now(datetime.timezone.utc)],
-                pa.timestamp("us", tz="UTC"),
-            ),
-            "released": pa.array([bool(released)], pa.bool_()),
-            "claim_id": pa.array([claim_id], pa.string()),
-        }
+    types = {
+        LongType(): pa.int64(),
+        StringType(): pa.string(),
+        BooleanType(): pa.bool_(),
+        TimestampType(): pa.timestamp("us", tz="UTC"),
+    }
+    return pa.Table.from_pylist(
+        rows, schema=pa.schema([(f.name, types[f.dataType]) for f in schema.fields])
     )
-    if not _atomic_append(spark, claims_qual, table, "claim"):
+
+
+def _append_meta_row(
+    spark: SparkSession, qual: str, schema: StructType, prefix: str, row: dict
+) -> None:
+    """Append ONE row to a runner metadata table through the atomic
+    rename; a non-local warehouse falls back to a Spark insert, which
+    keeps the shared ``_temporary`` race (see :func:`_append_claim_row`)."""
+    table = _arrow_table([row], schema)
+    if not _atomic_append(spark, qual, table, prefix):
         # pragma: no cover - hdfs/object-store fallback
-        spark.createDataFrame([Row(version=version, owner=owner)]).withColumn(
-            "started_at", F.current_timestamp()
-        ).withColumn("released", F.lit(bool(released))).withColumn(
-            "claim_id", F.lit(claim_id).cast("string")
-        ).select(
-            "version", "owner", "started_at", "released", "claim_id"
-        ).write.mode("append").insertInto(claims_qual)
+        spark.createDataFrame(table).write.mode("append").insertInto(qual)
 
 
 def _atomic_append(spark: SparkSession, qual: str, table, prefix: str) -> bool:
@@ -368,41 +404,52 @@ def _append_journal_row(
     """Record statement ``stmt_index`` of script ``version`` (identified
     by its ``md5``) as durably applied.  Same atomic-rename channel and
     POSIX-local-warehouse scope as the claims table."""
-    import datetime
-
-    import pyarrow as pa
-
-    table = pa.table(
-        {
-            "version": pa.array([version], pa.int64()),
-            "stmt_index": pa.array([stmt_index], pa.int64()),
-            "md5": pa.array([md5], pa.string()),
-            "owner": pa.array([owner], pa.string()),
-            "created_at": pa.array(
-                [datetime.datetime.now(datetime.timezone.utc)],
-                pa.timestamp("us", tz="UTC"),
-            ),
-        }
-    )
-    if not _atomic_append(spark, journal_qual, table, "journal"):
-        # pragma: no cover - hdfs/object-store fallback
-        spark.createDataFrame(
-            [Row(version=version, stmt_index=stmt_index, md5=md5, owner=owner)]
-        ).withColumn("created_at", F.current_timestamp()).select(
-            "version", "stmt_index", "md5", "owner", "created_at"
-        ).write.mode("append").insertInto(journal_qual)
+    row = {
+        "version": version,
+        "stmt_index": stmt_index,
+        "md5": md5,
+        "owner": owner,
+        "created_at": datetime.datetime.now(datetime.timezone.utc),
+    }
+    _append_meta_row(spark, journal_qual, JOURNAL_SCHEMA, "journal", row)
 
 
-def _read_journal_rows(spark: SparkSession, journal_qual: str) -> list[dict]:
-    """All journal rows as plain dicts.  On a local-filesystem warehouse
-    the read is a direct pyarrow scan that TOLERATES files vanishing
+def _append_ledger_row(
+    spark: SparkSession, ledger_qual: str, version: int, md5: str, script: str
+) -> None:
+    """Record script ``version`` as applied.  Same atomic-rename channel
+    and POSIX-local-warehouse scope as the claims table, so a rival
+    runner's ledger append never shares a ``_temporary/0`` committer
+    directory with ours."""
+    row = {
+        "version": version,
+        "md5": md5,
+        "script": script,
+        "created_at": datetime.datetime.now(datetime.timezone.utc),
+    }
+    _append_meta_row(spark, ledger_qual, LEDGER_SCHEMA, "ledger", row)
+
+
+def _read_meta_rows(
+    spark: SparkSession, qual: str, columns: list[str]
+) -> list[dict]:
+    """All rows of a runner metadata table (ledger, claims, journal) as
+    plain dicts holding ``columns``, read on the driver without a Spark
+    job.  On a local-filesystem warehouse the read is a direct pyarrow
+    scan of the table's part files that TOLERATES files vanishing
     between the listing and the read — :func:`compact_journal` removes
     whole dead part files, and a rival runner's read racing a compaction
-    must see the surviving rows, not die on FileNotFound (the journal is
-    one single-row file per append, so every surviving row is intact).
-    Non-local warehouses read through Spark (no compaction there)."""
-    spark.catalog.refreshTable(journal_qual)
-    loc = _table_location(spark, journal_qual)
+    must see the surviving rows, not die on FileNotFound (every append
+    is one whole file, so every surviving row is intact).
+
+    A column a file lacks reads as ``None``: claims files written before
+    ``_init_claims`` widened the table have no ``released``/``claim_id``
+    and mean exactly that (live claim, legacy key).  INT96 timestamps
+    (what a Spark ``INSERT INTO`` writes) come back as microsecond
+    datetimes, the type a Spark frame built from these rows accepts.
+    Non-local warehouses read through Spark."""
+    spark.catalog.refreshTable(qual)
+    loc = _table_location(spark, qual)
     if loc is not None and os.path.isdir(loc):
         import pyarrow.parquet as pq
 
@@ -411,20 +458,33 @@ def _read_journal_rows(spark: SparkSession, journal_qual: str) -> list[dict]:
             if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
                 continue
             try:
-                t = pq.read_table(
-                    os.path.join(loc, fname),
-                    columns=["version", "stmt_index", "md5", "owner"],
-                )
+                with pq.ParquetFile(
+                    os.path.join(loc, fname), coerce_int96_timestamp_unit="us"
+                ) as f:
+                    have = f.schema_arrow.names
+                    table = f.read(columns=[c for c in columns if c in have])
             except (FileNotFoundError, OSError):  # compacted mid-listing
                 continue
-            out.extend(t.to_pylist())
+            out.extend({c: r.get(c) for c in columns} for r in table.to_pylist())
         return out
-    return [  # pragma: no cover - hdfs/object-store fallback
-        r.asDict()
-        for r in spark.table(journal_qual)
-        .select("version", "stmt_index", "md5", "owner")
-        .collect()
-    ]
+    df = spark.table(qual)  # pragma: no cover - hdfs/object-store fallback
+    have = [c for c in columns if c in df.columns]
+    return [{c: r.asDict().get(c) for c in columns} for r in df.select(*have).collect()]
+
+
+def _read_journal_rows(spark: SparkSession, journal_qual: str) -> list[dict]:
+    """All journal rows as plain dicts (see :func:`_read_meta_rows`)."""
+    return _read_meta_rows(
+        spark, journal_qual, ["version", "stmt_index", "md5", "owner"]
+    )
+
+
+def _ledgered_versions(spark: SparkSession, ledger_qual: str) -> set[int]:
+    return {
+        int(r["version"])
+        for r in _read_meta_rows(spark, ledger_qual, ["version"])
+        if r["version"] is not None
+    }
 
 
 def _journaled_stmts(
@@ -465,10 +525,7 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
     loc = _table_location(spark, journal_qual)
     if loc is None or not os.path.isdir(loc):
         return 0  # pragma: no cover - hdfs/object-store: no compaction
-    spark.catalog.refreshTable(ledger_qual)
-    ledgered = {
-        int(r.version) for r in spark.table(ledger_qual).select("version").collect()
-    }
+    ledgered = _ledgered_versions(spark, ledger_qual)
     import pyarrow.parquet as pq
 
     removed = 0
@@ -805,40 +862,41 @@ def clear_journal(spark: SparkSession, db_name: str) -> int:
     the number of rows cleared."""
     _init_journal(spark, db_name)
     qual = f"`{db_name}`.`{JOURNAL}`"
-    spark.catalog.refreshTable(qual)
-    n = spark.table(qual).count()
+    n = len(_read_journal_rows(spark, qual))
     if n:
         _swap_overwrite(spark, f"{db_name}.{JOURNAL}", spark.table(qual).limit(0))
     return n
 
 
-def _live_claims(spark: SparkSession, claims_qual: str) -> DataFrame:
-    """Claims minus release tombstones.  Releases are APPEND-ONLY rows
-    (``released = true`` carrying the released claim's ``claim_id``)
-    rather than a table rewrite: the old ``_swap_overwrite``-based
-    release had a DROP/RENAME window in which a rival's freshly-appended
-    claim was silently destroyed and a rival's read could hit
-    FileNotFound (ADVICE r7).  Appends never destroy rival rows.
+def _live_claim_rows(rows: list[dict]) -> list[dict]:
+    """Claim rows minus release tombstones.  Releases are APPEND-ONLY
+    rows (``released = true`` carrying the released claim's
+    ``claim_id``) rather than a table rewrite: the old
+    ``_swap_overwrite``-based release had a DROP/RENAME window in which
+    a rival's freshly-appended claim was silently destroyed and a
+    rival's read could hit FileNotFound (ADVICE r7).  Appends never
+    destroy rival rows.
 
-    The tombstone join key is the per-row ``claim_id`` (ADVICE r8): a
-    (version, owner)-keyed anti-join would permanently shadow any
-    future claim reusing a tombstoned pair, silently degrading the
-    at-most-one guard to both-proceed.  Legacy rows written before the
-    claim_id column (claim_id NULL) fall back to their (version, owner)
+    The tombstone key is the per-row ``claim_id`` (ADVICE r8): a
+    (version, owner)-keyed match would permanently shadow any future
+    claim reusing a tombstoned pair, silently degrading the at-most-one
+    guard to both-proceed.  Legacy rows written before the claim_id
+    column (claim_id NULL) fall back to their ``version#owner``
     composite — exactly the old semantics for exactly the old rows."""
-    c = spark.table(claims_qual)
-    rel = F.coalesce(F.col("released"), F.lit(False))
-    key = F.coalesce(
-        F.col("claim_id"),
-        F.concat_ws("#", F.col("version").cast("string"), F.col("owner")),
-    ).alias("_ck")
-    tombs = c.filter(rel).select(key)
-    return (
-        c.filter(~rel)
-        .withColumn("_ck", key)
-        .join(tombs, ["_ck"], "left_anti")
-        .drop("_ck")
-    )
+
+    def key(r: dict) -> str:
+        if r["claim_id"] is not None:
+            return r["claim_id"]
+        return "#".join(str(x) for x in (r["version"], r["owner"]) if x is not None)
+
+    tombs = {key(r) for r in rows if r["released"]}
+    return [r for r in rows if not r["released"] and key(r) not in tombs]
+
+
+def _live_claims(spark: SparkSession, claims_qual: str) -> DataFrame:
+    """The live claims (:func:`_live_claim_rows`) as a local frame."""
+    rows = _read_meta_rows(spark, claims_qual, CLAIMS_SCHEMA.fieldNames())
+    return _local_frame(spark, _live_claim_rows(rows), CLAIMS_SCHEMA)
 
 
 def clear_claims(spark: SparkSession, db_name: str) -> int:
@@ -851,10 +909,10 @@ def clear_claims(spark: SparkSession, db_name: str) -> int:
     compaction rewrite races nothing."""
     _init_claims(spark, db_name)
     qual = f"`{db_name}`.`{CLAIMS}`"
-    n = _live_claims(spark, qual).count()
-    if spark.table(qual).limit(1).count():
+    rows = _read_meta_rows(spark, qual, CLAIMS_SCHEMA.fieldNames())
+    if rows:
         _swap_overwrite(spark, f"{db_name}.{CLAIMS}", spark.table(qual).limit(0))
-    return n
+    return len(_live_claim_rows(rows))
 
 
 # ── manifest scan (reference migrate.py:84-86) ───────────────────────────────
@@ -886,9 +944,16 @@ def scan_migrations(migrations_home: str) -> list[Migration]:
     return sorted(out, key=lambda m: m.version)
 
 
+def _local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """A frame over driver-side rows, built from a pyarrow table: a
+    ``LocalRelation`` whose ``collect()`` starts no Spark job (a frame
+    built from a Python list costs one job per action)."""
+    return spark.createDataFrame(_arrow_table(rows, schema))
+
+
 def manifest_df(spark: SparkSession, migrations: list[Migration]) -> DataFrame:
-    rows = [Row(version=m.version, script=m.script, md5=m.md5) for m in migrations]
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    rows = [{"version": m.version, "script": m.script, "md5": m.md5} for m in migrations]
+    return _local_frame(spark, rows, MANIFEST_SCHEMA)
 
 
 # ── the diff planner (reference migrate.py:26-41) ────────────────────────────
@@ -897,45 +962,66 @@ def manifest_df(spark: SparkSession, migrations: list[Migration]) -> DataFrame:
 def migrations_to_apply(
     spark: SparkSession, db_name: str, incoming: DataFrame
 ) -> DataFrame:
-    """Pure DataFrame diff: ledger vs incoming manifest on ``version``.
+    """Driver-side guard pass: ledger vs incoming manifest on ``version``.
 
-    Mirrors reference `migrate.py:26-41` exactly: full-outer join, then
-    three validations (missing-count guard, deleted-migration guard,
-    edited-migration guard), then the pending set = anti-join
-    projection.  All joins are on tiny metadata frames — Catalyst
-    broadcasts them automatically."""
-    ledger = spark.table(f"`{db_name}`.`{LEDGER}`").select(
-        F.col("version").cast("bigint").alias("version"),
-        F.col("script").alias("c_script"),
-        F.col("md5").alias("c_md5"),
+    Mirrors reference `migrate.py:26-41`, which does the same on a few
+    pandas rows: full-outer join, then three validations
+    (missing-count guard, deleted-migration guard, edited-migration
+    guard), then the pending set = the incoming rows no ledger row
+    matches.  Both sides are a handful of metadata rows, so the join
+    runs in Python over the ledger's part files (:func:`_read_meta_rows`)
+    and ``incoming.collect()`` — no Spark job for a local ``incoming``
+    such as :func:`manifest_df`'s.  The join is row-for-row, so a
+    duplicated ledger row counts twice in the missing-count guard, as
+    it did in the Spark join.  The pending set comes back as a local
+    frame with the manifest's columns."""
+    ledger = _read_meta_rows(
+        spark, f"`{db_name}`.`{LEDGER}`", ["version", "script", "md5"]
     )
-    n_ledger = ledger.count()
-    if n_ledger == 0:
+    if not ledger:
         return incoming
-    n_incoming = incoming.count()
-    if n_incoming == 0 or n_incoming < n_ledger:
+    inc = [
+        {
+            "version": None if r.version is None else int(r.version),
+            "script": r.script,
+            "md5": r.md5,
+        }
+        for r in incoming.collect()
+    ]
+    if not inc or len(inc) < len(ledger):
         raise AssertionError(
             "Migrations have gone missing: "
-            f"ledger has {n_ledger}, incoming has {n_incoming}"
+            f"ledger has {len(ledger)}, incoming has {len(inc)}"
         )
-    joined = ledger.join(
-        incoming.withColumn("version", F.col("version").cast("bigint")),
-        on="version",
-        how="full_outer",
-    )
-    deleted = joined.filter(F.col("c_md5").isNotNull() & F.col("md5").isNull())
-    if deleted.limit(1).count() > 0:
-        missing = [r.c_script for r in deleted.select("c_script").collect()]
+    # the full outer join on version: (ledger row | None, incoming row |
+    # None, ledger md5, incoming md5); a NULL version matches nothing
+    by_version: dict[int, list[dict]] = {}
+    for i in inc:
+        if i["version"] is not None:
+            by_version.setdefault(i["version"], []).append(i)
+    pairs = []
+    for c in ledger:
+        pairs += [(c, i) for i in by_version.get(c["version"], [])] or [(c, None)]
+    ledgered = {c["version"] for c in ledger}
+    pairs += [(None, i) for i in inc if i["version"] is None or i["version"] not in ledgered]
+    joined = [(c, i, c["md5"] if c else None, i["md5"] if i else None) for c, i in pairs]
+
+    missing = [c["script"] for c, _, cm, im in joined if cm is not None and im is None]
+    if missing:
         raise AssertionError(f"Migrations deleted from codebase but already run: {missing}")
-    edited = joined.filter(
-        F.col("c_md5").isNotNull()
-        & F.col("md5").isNotNull()
-        & (F.col("md5") != F.col("c_md5"))
-    )
-    if edited.limit(1).count() > 0:
-        bad = [r.script for r in edited.select("script").collect()]
+    bad = [i["script"] for _, i, cm, im in joined if None not in (cm, im) and cm != im]
+    if bad:
         raise AssertionError(f"Do not edit migrations once run: {bad}")
-    return joined.filter(F.col("c_md5").isNull()).select("version", "script", "md5")
+    pending = [
+        {
+            "version": c["version"] if c else i["version"],
+            "script": i["script"] if i else None,
+            "md5": im,
+        }
+        for c, i, cm, im in joined
+        if cm is None
+    ]
+    return _local_frame(spark, pending, MANIFEST_SCHEMA)
 
 
 # ── copy-on-write DML execution (SURVEY.md §2.C C2-C3) ───────────────────────
@@ -1839,7 +1925,8 @@ def apply_migration(
     ledger_qual = f"`{db_name}`.`{LEDGER}`"
     claims_qual = f"`{db_name}`.`{CLAIMS}`"
     owner = uuid.uuid4().hex
-    for row in migrations.orderBy("version").collect():
+    # a Python sort: ``orderBy`` starts 3 Spark jobs even on a few rows
+    for row in sorted(migrations.collect(), key=lambda r: r.version):
         version = int(row.version)
         # ── concurrent-runner guard (VERDICT r6 #3) ──────────────────
         # Claim the version BEFORE executing; refuse if any other claim
@@ -1863,28 +1950,21 @@ def apply_migration(
             )
 
         with _CLAIM_LOCK:
-            # a rival runner appends through its OWN SparkSession; this
-            # session's relation cache would serve a stale file listing
-            # for both metadata tables — refresh before every guard read
-            spark.catalog.refreshTable(ledger_qual)
-            spark.catalog.refreshTable(claims_qual)
-            if (
-                spark.table(ledger_qual)
-                .filter(F.col("version") == version)
-                .limit(1)
-                .count()
-            ):
+            # every guard read lists the metadata tables' files afresh
+            # (_read_meta_rows), so a rival runner's appends through its
+            # OWN SparkSession are visible
+            if version in _ledgered_versions(spark, ledger_qual):
                 # another runner applied it between our diff and now
                 print(f"Skipping V{version}: already applied by a concurrent runner")
                 continue
             _append_claim_row(
                 spark, claims_qual, version, owner, released=False, claim_id=claim_id
             )
-            rivals = (
-                _live_claims(spark, claims_qual)
-                .filter((F.col("version") == version) & (F.col("owner") != owner))
-                .limit(1)
-                .count()
+            rivals = any(
+                c["version"] == version and c["owner"] not in (owner, None)
+                for c in _live_claim_rows(
+                    _read_meta_rows(spark, claims_qual, CLAIMS_SCHEMA.fieldNames())
+                )
             )
             if rivals:
                 # release OWN claim before refusing: both racers may
@@ -1897,13 +1977,7 @@ def apply_migration(
                 # rivals read (its claim is gone, its ledger row is
                 # durable-before-visible) — re-check the ledger now
                 # that we hold the winning claim
-                spark.catalog.refreshTable(ledger_qual)
-                if (
-                    spark.table(ledger_qual)
-                    .filter(F.col("version") == version)
-                    .limit(1)
-                    .count()
-                ):
+                if version in _ledgered_versions(spark, ledger_qual):
                     _release_own_claim_locked()
                     print(
                         f"Skipping V{version}: already applied by a concurrent runner"
@@ -1987,14 +2061,7 @@ def apply_migration(
                 _INFLIGHT.stmt = None
                 _INFLIGHT.md5 = None
                 _INFLIGHT.swapped = None
-            entry = (
-                spark.createDataFrame(
-                    [Row(version=version, md5=row.md5, script=row.script)],
-                )
-                .withColumn("created_at", F.current_timestamp())
-                .select("version", "md5", "script", "created_at")
-            )
-            entry.write.mode("append").insertInto(ledger_qual)
+            _append_ledger_row(spark, ledger_qual, version, row.md5, row.script)
             # the version's journal rows are dead weight now that its
             # ledger row is durable — compact them so the journal stays
             # bounded across N migrations (VERDICT r10 #6).  Whole-file
@@ -2094,7 +2161,7 @@ def _system_view(spark: SparkSession, which: str) -> str:
             for t in spark.catalog.listTables(db.name):
                 if t.name.startswith("__") or t.database is None:
                     continue
-                for c in spark.catalog.listColumns(t.name, db.name):
+                for c in spark.catalog.listColumns(f"`{db.name}`.`{t.name}`"):
                     rows.append((db.name, t.name, c.name, c.dataType))
         df = spark.createDataFrame(
             rows, "database string, table string, name string, type string"
@@ -2365,6 +2432,16 @@ _WITH_FILL_RE = re.compile(
 )
 
 
+_WITH_FILL_UNSUPPORTED = (
+    "WITH FILL is supported for a single trailing ORDER BY column "
+    "(ORDER BY c [ASC|DESC] WITH FILL [FROM a] [TO b] [STEP s]) of a "
+    "query that names none of the rewrite's __wf/__lo/__hi columns"
+)
+# the names the rewrite below introduces; a query that uses one would
+# be silently rebound to the rewrite's own CTE or bounds
+_WITH_FILL_RESERVED_RE = re.compile(r"(?<!\w)__(?:wf|lo|hi)(?!\w)", re.I)
+
+
 def _rewrite_with_fill(query: str) -> str:
     """``ORDER BY c WITH FILL …`` → full-outer join against a dense
     ``sequence()`` grid (the same declarative gap-fill plan as the
@@ -2379,14 +2456,12 @@ def _rewrite_with_fill(query: str) -> str:
     m = _search_unquoted(_WITH_FILL_RE, query)
     if not m:
         if _search_unquoted(re.compile(r"\bWITH\s+FILL\b", re.I), query):
-            raise ValueError(
-                "WITH FILL is supported for a single trailing ORDER BY "
-                "column (ORDER BY c [ASC|DESC] WITH FILL [FROM a] [TO b] "
-                "[STEP s])"
-            )
+            raise ValueError(_WITH_FILL_UNSUPPORTED)
         return query
     inner = query[: m.start()].strip()
     col = m.group("col")
+    if _WITH_FILL_RESERVED_RE.search(_STR_LIT_RE.sub("''", f"{inner} {col}")):
+        raise ValueError(_WITH_FILL_UNSUPPORTED)
     direction = (m.group("dir") or "").strip()
     step = m.group("step") or "1"
     lo, hi = m.group("lo"), m.group("hi")

@@ -54,7 +54,7 @@ def get_spark(
     warehouse_dir: str | None = None,
 ) -> SparkSession:
     """Create (or get) a local SparkSession with the engine's defaults."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
     )

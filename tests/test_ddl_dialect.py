@@ -164,6 +164,19 @@ def test_codec_and_inline_index_stripped():
     assert st.sql == "CREATE TABLE t (id BIGINT, v BIGINT) USING PARQUET"
 
 
+def test_create_keeps_its_own_provider_before_partitioned_by():
+    """A top-level ``USING <fmt>`` anywhere after the column list names
+    the provider; only a CREATE without one gets ``USING PARQUET``."""
+    st = translate("CREATE TABLE t (k Int64, d String) USING PARQUET PARTITIONED BY (d)")
+    assert st.sql == "CREATE TABLE t (k BIGINT, d STRING) USING PARQUET PARTITIONED BY (d)"
+    st = translate(
+        "CREATE TABLE t (k Int64) USING ORC TBLPROPERTIES ('note' = 'USING x')"
+    )
+    assert st.sql == "CREATE TABLE t (k BIGINT) USING ORC TBLPROPERTIES ('note' = 'USING x')"
+    st = translate("CREATE TABLE t (k Int64, s String DEFAULT 'USING x') ENGINE = Log")
+    assert st.sql.endswith(") USING PARQUET")
+
+
 def test_alter_index_ops_are_noops():
     for stmt in (
         "ALTER TABLE t ADD INDEX iv v TYPE minmax GRANULARITY 2",

@@ -34,10 +34,9 @@ def test_merged_state_union_estimate_within_tolerance(spark, sf_dir):
 
 def test_estimate_branch_does_not_rescan_orders(spark, sf_dir):
     df = agg_hll_set_operations(spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    # exact branch: one scan; sketch branch: behind the checkpoint
-    # (LogicalRDD), so at most 2 scan operators may appear and never
-    # the pre-r13 six
-    assert plan.count("Scan parquet") <= 2, plan
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # exact branch: one parquet relation; sketch branch: behind the
+    # checkpoint (LogicalRDD), so it reads no relation — never the
+    # pre-r13 six
+    assert "LogicalRDD" in plan, plan
+    assert plan.count("] parquet") <= 1, plan

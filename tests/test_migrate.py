@@ -688,3 +688,125 @@ def test_cross_process_race_at_most_one_applies(spark, db, tmp_path, monkeypatch
     assert versions == [1, 2], (versions, results)
     spark.catalog.refreshTable(f"`{db}`.t_xrace")
     assert spark.table(f"`{db}`.t_xrace").count() == 1
+
+
+# ── driver-side bookkeeping: the runner's metadata work starts no Spark job ──
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, the number of Spark jobs it started), counted by
+    the status tracker over a fresh job group."""
+    sc = spark.sparkContext
+    group = "count-" + uuid.uuid4().hex
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_noop_migrate_starts_no_spark_jobs(spark, db):
+    home = f"{FIXTURES}/migrations_mixed"
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 2
+    n, jobs = _jobs_started(
+        spark, lambda: M.migrate(spark, db, home, create_db_if_no_exists=False)
+    )
+    assert (n, jobs) == (0, 0)
+
+
+def test_create_only_version_starts_no_bookkeeping_jobs(spark, db, tmp_path, monkeypatch):
+    """Diff, claim, journal, ledger append, compaction and release are
+    all driver-side file operations: the only jobs a version may start
+    are its statements' own (counted apart in their own group here)."""
+    home = _write_migrations(
+        tmp_path,
+        {"V1__create.sql": "CREATE TABLE t_nojobs (v Int64) ENGINE = MergeTree ORDER BY v"},
+    )
+    run_stmt = M.execute_statement
+    stmt_jobs = []
+
+    def counted(sess, sql):
+        out, jobs = _jobs_started(sess, lambda: run_stmt(sess, sql))
+        stmt_jobs.append(jobs)
+        return out
+
+    monkeypatch.setattr(M, "execute_statement", counted)
+    n, jobs = _jobs_started(
+        spark, lambda: M.migrate(spark, db, home, create_db_if_no_exists=False)
+    )
+    assert (n, jobs) == (1, 0)
+    assert len(stmt_jobs) == 1
+    assert [r.version for r in spark.table(f"`{db}`.schema_versions").collect()] == [1]
+    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+
+
+def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
+    """The driver-side reader sees what Spark itself wrote: a ledger row
+    from ``INSERT INTO schema_versions`` (an INT96 ``created_at``) and a
+    claims file from a build before ``released``/``claim_id`` existed,
+    whose row is a live claim under its (version, owner) key."""
+    db = "testdb_" + uuid.uuid4().hex[:8]
+    M.create_db(spark, db)
+    try:
+        home = _write_migrations(
+            tmp_path,
+            {
+                "V1__a.sql": "CREATE TABLE legacy_a (v Int64) ENGINE = Log",
+                "V2__b.sql": "CREATE TABLE legacy_b (v Int64) ENGINE = Log",
+            },
+        )
+        spark.sql(
+            f"CREATE TABLE `{db}`.`{M.CLAIMS}` "
+            "(version BIGINT, owner STRING, started_at TIMESTAMP) USING PARQUET"
+        )
+        spark.sql(f"INSERT INTO `{db}`.`{M.CLAIMS}` VALUES (2, 'rival', current_timestamp())")
+        M.init_db(spark, db)
+        v1 = M.scan_migrations(home)[0]
+        _ledger_insert(spark, db, 1, v1.md5, v1.script)
+
+        manifest = M.manifest_df(spark, M.scan_migrations(home))
+        assert [r.version for r in M.migrations_to_apply(spark, db, manifest).collect()] == [2]
+        live = M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").collect()
+        assert [(r.version, r.owner, r.released, r.claim_id) for r in live] == [
+            (2, "rival", None, None)
+        ]
+        assert live[0].started_at is not None
+        with pytest.raises(M.ConcurrentMigrationError, match="V2"):
+            M.migrate(spark, db, home, create_db_if_no_exists=False)
+        assert M.clear_claims(spark, db) == 1
+        assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+        ledger = spark.table(f"`{db}`.schema_versions").collect()
+        assert sorted(r.version for r in ledger) == [1, 2]
+        assert all(r.created_at is not None for r in ledger)
+    finally:
+        spark.sql(f"DROP DATABASE `{db}` CASCADE")
+
+
+def test_guards_count_duplicate_ledger_rows(spark, db):
+    """The diff joins row for row, like the reference's outer merge: a
+    duplicated ledger row counts twice in the missing-count guard and
+    names its script twice in the edited guard."""
+    _ledger_insert(spark, db, 1, "m1", "a.sql")
+    _ledger_insert(spark, db, 1, "m1", "a.sql")
+    with pytest.raises(AssertionError) as missing:
+        M.migrations_to_apply(spark, db, _manifest(spark, [(1, "a.sql", "m1")]))
+    assert str(missing.value) == "Migrations have gone missing: ledger has 2, incoming has 1"
+    with pytest.raises(AssertionError) as edited:
+        M.migrations_to_apply(
+            spark, db, _manifest(spark, [(1, "a.sql", "EDITED"), (2, "b.sql", "m2")])
+        )
+    assert str(edited.value) == "Do not edit migrations once run: ['a.sql', 'a.sql']"
+    _ledger_insert(spark, db, 2, "m2", "b.sql")
+    with pytest.raises(AssertionError) as deleted:
+        M.migrations_to_apply(
+            spark,
+            db,
+            _manifest(spark, [(1, "a.sql", "m1"), (3, "c.sql", "m3"), (4, "d.sql", "m4")]),
+        )
+    assert str(deleted.value) == "Migrations deleted from codebase but already run: ['b.sql']"
+    out = M.migrations_to_apply(
+        spark, db, _manifest(spark, [(1, "a.sql", "m1"), (2, "b.sql", "m2"), (3, "c.sql", "m3")])
+    )
+    assert [(r.version, r.script, r.md5) for r in out.collect()] == [(3, "c.sql", "m3")]

@@ -401,6 +401,31 @@ def test_with_fill_rewrite_shape():
     )
 
 
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT d AS __lo, count(*) AS n FROM t GROUP BY d ORDER BY __lo WITH FILL",
+        "SELECT d, max(v) AS `__HI` FROM t GROUP BY d ORDER BY d WITH FILL FROM 0 TO 9",
+        "SELECT d, __wf FROM t ORDER BY d WITH FILL STEP 1",
+    ],
+)
+def test_with_fill_reserved_names_raise(query):
+    """A fill column or inner projection named like the rewrite's own
+    CTE (``__wf``) or bounds (``__lo``/``__hi``) would be rebound to
+    them; the rewrite refuses instead of answering wrongly."""
+    from clickhouse_migrator_spark.migrate import _rewrite_with_fill
+
+    with pytest.raises(ValueError, match="WITH FILL is supported"):
+        _rewrite_with_fill(query)
+
+
+def test_with_fill_reserved_name_in_literal_is_data():
+    from clickhouse_migrator_spark.migrate import _rewrite_with_fill
+
+    out = _rewrite_with_fill("SELECT d, '__lo' AS s FROM t ORDER BY d WITH FILL FROM 0 TO 3")
+    assert out.startswith("WITH __wf AS (SELECT d, '__lo' AS s FROM t)")
+
+
 def test_with_fill_execution(spark, sf_dir, views):
     """WITH FILL densifies integer gaps; filled rows carry NULL counts."""
     ch = execute_and_inflate(

@@ -248,6 +248,41 @@ def test_insert_select_into_partitioned_target(spark, db, tmp_path):
     assert spark.table(f"`{db}`.dst").count() == 3
 
 
+def test_migration_created_partitioned_table_takes_staged_inserts(
+    spark, db, tmp_path, monkeypatch
+):
+    """A script can CREATE a physically partitioned table itself (the
+    translation keeps its own ``USING PARQUET`` in front of
+    ``PARTITIONED BY`` instead of appending a second one), and an INSERT
+    into it in the same script goes through the staged per-partition
+    publish."""
+    home = _mig(
+        tmp_path,
+        [
+            "CREATE TABLE cp (k Int64, v Int64, d String) "
+            "USING PARQUET PARTITIONED BY (d)",
+            "INSERT INTO cp VALUES (1, 10, 'a'), (2, 20, 'b')",
+        ],
+    )
+    published = []
+    publish = M._publish_stage
+
+    def recorded(sess, stage_qual, target_qual):
+        published.append(target_qual)
+        publish(sess, stage_qual, target_qual)
+
+    monkeypatch.setattr(M, "_publish_stage", recorded)
+    assert M.migrate(spark, db, home) == 1
+    assert published == [f"`{db}`.`cp`"]
+    assert M._partition_columns(spark, f"`{db}`.`cp`") == ["d"]
+    assert _rows(spark, db, "cp") == [(1, 10, "a"), (2, 20, "b")]
+    parts = {r.partition for r in spark.sql(f"SHOW PARTITIONS `{db}`.cp").collect()}
+    assert parts == {"d=a", "d=b"}
+    loc = M._table_location(spark, f"`{db}`.`cp`")
+    assert any(f.startswith("part-stmt-") for f in os.listdir(os.path.join(loc, "d=a")))
+    assert _no_stage_leftovers(spark, db)
+
+
 # ── helpers pinned ───────────────────────────────────────────────────────────
 
 

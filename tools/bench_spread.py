@@ -54,7 +54,7 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=5)
     ap.add_argument("--out", default="BENCH_SPREAD.json")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
     args = ap.parse_args()
 
     runs = []

@@ -25,7 +25,8 @@ def main() -> None:
     outdir, suffix, *names = sys.argv[1:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="dump_plans", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = get_spark(app_name="dump_plans", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
     for name in names:

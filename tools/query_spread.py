@@ -74,7 +74,7 @@ def main() -> int:
 
     from clickhouse_migrator_spark.session import RUNTIME_CONFS
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     builder = (
         SparkSession.builder.appName("query-spread")
         .master(f"local[{cpus}]")
