@@ -25,6 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from clickhouse_migrator_spark import memo
+from clickhouse_migrator_spark.memo_events import drain_fills
 from clickhouse_migrator_spark.registry import all_specs
 from clickhouse_migrator_spark.session import get_spark
 
@@ -102,71 +104,49 @@ def _contaminated(wall: float, fg: float | None, cpus: int) -> bool:
     return fg > max(RETRY_FOREIGN_ABS_S, RETRY_FOREIGN_PCT * wall * cpus)
 
 
-#: Session-memo consumers, from the call graph (pinned by
-#: tests/test_bench_foreign_cpu.py).  Families:
-#:   pairs  — near-dup pair table + component labels (dedup.py); also
-#:            implies grams (the pair build consumes shingles+tokens)
-#:   grams  — k-gram shingle streams + the token substrate beneath them
-#:   tokens — the tokenized-documents substrate only
-#:   ivf    — IVF k-means training state (similarity.py)
-_SHINGLE_CONSUMER_NAMES = {"pipeline_decontaminate_ngrams"}
-_TOKEN_CONSUMER_NAMES = {
-    "pipeline_span_dedup_c4",
-    "pipeline_split_leakage_audit",
-    "text_keywords_per_doc",
-    "text_tfidf_top20",
-}
-
-
-def _memo_families_to_clear(name: str) -> frozenset[str]:
-    """Memo families an honest retry of ``name`` must drop.  A retry
-    must not measure reuse of state the query itself warms — but
-    clearing a memo the query NEVER READS is both pointless and
-    harmful: the r12 sf1 ratio gate caught an unrelated events_* retry
-    dropping the near-dup pair memo, which shifted the whole substrate
-    fill (~6 s at sf1) onto the next dedup/graph consumer in bench
-    order (graph_degree_distribution: 0.47 s → 6.3 s, a spurious 17×
-    scale ratio).  r13 (ADVICE r12 #1): the shingle/token memos gained
-    non-dedup consumers, so the family map is now per-memo — a
-    pipeline gram-consumer retry drops the gram caches it reads
-    without dumping the (untouched) pair-table fill on the next
-    dedup/graph query."""
-    if name.startswith(("dedup_", "graph_")):
-        return frozenset({"pairs"})  # implies shingles + tokens
-    if name in _SHINGLE_CONSUMER_NAMES:
-        return frozenset({"grams"})  # shingles + tokens, not pairs
-    if name in _TOKEN_CONSUMER_NAMES:
-        return frozenset({"tokens"})
-    if name.startswith("sim_"):
-        # every sim_* query reads the typed-vector memo; the IVF
-        # consumers additionally read the trained centroids — clearing
-        # both is the honest superset for the family (the vec refill
-        # is one scan+cast, paid by the retried query itself)
-        return frozenset({"ivf", "vecs"})
-    return frozenset()
-
-
-def _measure_all(specs, run_once, cpus: int, reset_caches=lambda name: None):
+def _measure_all(specs, run_once, cpus: int, reset_caches=lambda name, memos: None):
     """Measurement loop with one-shot contention retry per query.
 
     ``run_once(name, spec) -> (wall, foreign_s | None, errored)`` is
     injected so the policy is unit-testable without Spark
-    (tests/test_bench_foreign_cpu.py).  Returns (timings, foreign,
-    retries) where retries[name] discloses BOTH measurements and which
-    one was kept (the quieter foreign-CPU one; an errored or
-    still-noisy retry keeps the first).  ``reset_caches(name)`` may
-    clear selectively — see _memo_families_to_clear."""
+    (tests/test_bench_foreign_cpu.py).  Session-memo fill events
+    (:mod:`clickhouse_migrator_spark.memo_events`) recorded during a
+    run are attributed to its query.  A retry must not measure reuse
+    of state the query itself warmed, so ``reset_caches(name, memos)``
+    receives exactly the memos the first attempt filled — clearing a
+    memo the query never filled would only dump its refill on the next
+    consumer in bench order (r12: an events_* retry dropping the pair
+    memo took graph_degree_distribution 0.47 s → 6.3 s at sf1).
+
+    Returns the artifact's measurement fields: ``queries``,
+    ``foreign_cpu_s``, ``retries`` (both measurements of each retried
+    query and which one was kept — the quieter foreign-CPU one; an
+    errored or still-noisy retry keeps the first),
+    ``retry_memos_cleared`` and ``memo_fills``."""
     timings: dict[str, float] = {}
     foreign: dict[str, float] = {}
     retries: dict[str, dict] = {}
+    cleared: dict[str, list] = {}
+    fills: dict[str, list] = {}
+
+    def attempt(name, spec):
+        drain_fills()  # discard any fills not attributable to a query
+        try:
+            return run_once(name, spec)
+        finally:
+            filled = drain_fills()
+            if filled:
+                fills.setdefault(name, []).extend(filled)
+
     for name, spec in sorted(specs.items()):
-        wall, fg, err = run_once(name, spec)
+        wall, fg, err = attempt(name, spec)
         if err:
             timings[name] = -1.0
             continue
         if _contaminated(wall, fg, cpus):
-            reset_caches(name)
-            wall2, fg2, err2 = run_once(name, spec)
+            cleared[name] = sorted({f["memo"] for f in fills.get(name, [])})
+            reset_caches(name, cleared[name])
+            wall2, fg2, err2 = attempt(name, spec)
             rec = {
                 "first_wall": wall,
                 "first_foreign_cpu_s": fg,
@@ -182,7 +162,13 @@ def _measure_all(specs, run_once, cpus: int, reset_caches=lambda name: None):
         timings[name] = wall
         if fg is not None:
             foreign[name] = fg
-    return timings, foreign, retries
+    return {
+        "queries": timings,
+        "foreign_cpu_s": foreign,
+        "retries": retries,
+        "retry_memos_cleared": cleared,
+        "memo_fills": fills,
+    }
 
 
 def _warm_shapes(spark) -> None:
@@ -377,22 +363,11 @@ def main() -> None:
 
     hz = os.sysconf("SC_CLK_TCK")
 
-    # per-query session-memo fill disclosure (VERDICT r12 #1): which
-    # query paid a substrate fill (or a retry-induced refill), and how
-    # long it took — drained from the operators' fill-event buffer
-    # after every measurement, so the pagerank-class outlier becomes
-    # attributable from the artifact alone
-    from clickhouse_migrator_spark.memo_events import drain_fills
-
-    fills_by_query: dict[str, list] = {}
-    retry_memos_cleared: dict[str, list] = {}
-
     def run_once(name, spec):
         try:
             snap0 = _cpu_snapshot()
         except Exception:  # pragma: no cover — non-Linux fallback
             snap0 = None
-        drain_fills()  # discard any fills not attributable to a query
         t0 = time.perf_counter()
         try:
             materialize(spec.fn(spark, sf_dir))
@@ -400,10 +375,6 @@ def main() -> None:
         except Exception as e:  # pragma: no cover
             print(f"bench error {name}: {e}", file=sys.stderr)
             return -1.0, None, True
-        finally:
-            fills = drain_fills()
-            if fills:
-                fills_by_query.setdefault(name, []).extend(fills)
         fg = None
         if snap0 is not None:
             try:
@@ -415,58 +386,22 @@ def main() -> None:
                 fg = None
         return wall, fg, False
 
-    def reset_caches(name):
-        # honest repeats: operators cache intermediates and the dedup
-        # pack memoizes its pair table per (session, corpus) — a warm
-        # retry would measure reuse, not the query.  Memos are cleared
-        # ONLY for the families that actually read them
-        # (_memo_families_to_clear): clearing a memo the retried query
-        # never touches doesn't change its measurement but forces a
-        # full re-fill onto whatever innocent consumer runs next
-        # (measured: graph_degree_distribution 0.47 → 6.3 s at sf1
-        # after an events_* retry dropped the pair memo).
+    def reset_caches(name, memos):
+        # honest repeats: operators cache intermediates and the session
+        # memos hold what the first attempt filled — a warm retry would
+        # measure reuse, not the query.  The blanket clearCache also
+        # drops the cache registrations of the memos that survive;
+        # reregister() re-pins them so later consumers read a loaded
+        # cache instead of each recomputing uncached (ADVICE r12 #2)
         try:
-            from clickhouse_migrator_spark.operators import dedup
-
             spark.catalog.clearCache()
-            fams = _memo_families_to_clear(name)
-            retry_memos_cleared[name] = sorted(fams)
-            if "pairs" in fams:
-                dedup.invalidate_near_dup_cache(None)
-            elif "grams" in fams:
-                dedup.invalidate_gram_caches(None)
-            elif "tokens" in fams:
-                dedup.invalidate_token_cache(None)
-            if "ivf" in fams:
-                from clickhouse_migrator_spark.operators.similarity import (
-                    invalidate_ivf_cache,
-                )
-
-                invalidate_ivf_cache()
-            if "vecs" in fams:
-                from clickhouse_migrator_spark.operators.similarity import (
-                    invalidate_vec_cache,
-                )
-
-                invalidate_vec_cache()
-            # the blanket clearCache above also dropped the cache
-            # REGISTRATIONS of memo entries that survived the family
-            # filter; re-register them so later consumers of a
-            # surviving memo share one refill instead of each
-            # recomputing uncached for the rest of the run
-            # (ADVICE r12 #2)
-            dedup.reregister_memo_caches()
-            from clickhouse_migrator_spark.operators.similarity import (
-                reregister_vec_cache,
-            )
-
-            reregister_vec_cache()
+            memo.invalidate(names=memos)
+            memo.reregister()
         except Exception:  # pragma: no cover
             pass
 
-    timings, foreign, retries = _measure_all(
-        specs, run_once, int(cpus), reset_caches
-    )
+    measured = _measure_all(specs, run_once, int(cpus), reset_caches)
+    timings, foreign = measured["queries"], measured["foreign_cpu_s"]
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -484,26 +419,18 @@ def main() -> None:
                 "cpus": int(cpus),
                 "n_queries": len(timings),
                 "n_errors": n_err,
-                "queries": timings,
-                # per-query CPU seconds burned by processes OUTSIDE the
-                # bench's own subtree (driver + JVM + pandas workers) —
-                # the contention fingerprint for variance forensics
-                "foreign_cpu_s": foreign,
+                # queries: per-query wall seconds; foreign_cpu_s: CPU
+                # seconds burned OUTSIDE the bench's own subtree (the
+                # contention fingerprint); retries: queries whose first
+                # measurement blew the foreign-CPU budget, both
+                # measurements, and which was kept;
+                # retry_memos_cleared: the memos each retry dropped
+                # (the blanket clearCache always happens); memo_fills:
+                # the queries that paid a memo fill/refill, with its
+                # wall seconds (VERDICT r12 #1)
+                **measured,
                 "foreign_cpu_total_s": round(sum(foreign.values()), 1),
-                # per-query contention self-healing disclosure: queries
-                # whose first measurement blew the foreign-CPU budget,
-                # both measurements, and which was kept
-                "retried": len(retries),
-                "retries": retries,
-                # which session-memo families each retry dropped (the
-                # blanket clearCache is implicit and always happens)
-                "retry_memos_cleared": retry_memos_cleared,
-                # substrate-fill attribution (VERDICT r12 #1): the
-                # queries that paid a memo fill/refill this run, with
-                # the fill's wall seconds — fills land INSIDE the
-                # payer's timed region, so this is the decoder ring
-                # for "why is this one query slow this run"
-                "memo_fills": fills_by_query,
+                "retried": len(measured["retries"]),
             },
             f,
             indent=1,
@@ -526,7 +453,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "n_errors": n_err,
                 "foreign_cpu_total_s": round(sum(foreign.values()), 1),
-                "retried": len(retries),
+                "retried": len(measured["retries"]),
                 "per_query_file": out_path,
                 "queries": top,
             }

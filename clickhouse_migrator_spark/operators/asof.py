@@ -103,7 +103,7 @@ def asof_join(
         .withColumn("__bucket", F.pmod(F.hash(F.col(by)), F.lit(n_buckets)))
     )
 
-    def merge(key, pdf: pd.DataFrame):
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         l = pdf[pdf["__side"] == 0][lcols].sort_values(on)
         r = (
             pdf[pdf["__side"] == 1][[by, *rcols]]

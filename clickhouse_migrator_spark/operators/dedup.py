@@ -27,12 +27,10 @@ Five families, each the idiomatic Spark shape for its scale regime:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .. import memo
 from ..hashsafe import oracle_round_quotient, round_quotient, utrim
-from ..memo_events import record_fill
 from ..registry import register
 from ..tables import table
 
@@ -75,61 +73,27 @@ def kgrams(toks: Column, k: int) -> Column:
     )
 
 
-#: (applicationId, sf_dir, fingerprint) → tokenized documents frame
-#: (doc_id, toks) — ONE scan + regex-tokenize pass shared by every
-#: gram/shingle/span/boundary consumer (r13, VERDICT r12 next-round #1:
-#: the k=3 shingle stream, the k=8 passage grams, the 8-token spans and
-#: the boundary grams each re-ran the full tokenize; at 100 TB that is
-#: four full text scans for one corpus).  Same session-memo discipline
-#: as the pair substrate: fingerprint key, pinned fill, fill event
-#: recorded, invalidation hook wired into bench retries.
-_TOKEN_CACHE: dict[tuple, DataFrame] = {}
-
-#: memo key → the .cache()-backed DataFrames behind that memo entry.
-#: bench.py's contention retry calls spark.catalog.clearCache()
-#: unconditionally (the retried query's OWN plan-keyed cache entries
-#: cannot be enumerated), which also drops these shared registrations —
-#: reregister_memo_caches() re-caches the survivors so later consumers
-#: refill ONE shared entry instead of each recomputing uncached
-#: (ADVICE r12 #2).
-_MEMO_BACKING: dict[tuple, list[DataFrame]] = {}
-
-
 def token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, toks) frame: the documents table tokenized
-    once per (session, corpus), cached, fill pinned into its own job
-    (the multi-consumer cold-cache race class, guide §2.4) and reported
-    through :mod:`..memo_events`.
+    once per (session, corpus) and pinned by the session memo
+    (:mod:`..memo`) — ONE scan + regex-tokenize pass shared by every
+    gram/shingle/span/boundary consumer (r13, VERDICT r12 next-round
+    #1: the k=3 shingle stream, the k=8 passage grams, the 8-token
+    spans and the boundary grams each re-ran the full tokenize; at
+    100 TB that is four full text scans for one corpus).
 
     The repartition widens the single-row-group fixture scan before
     the regex split so the CPU-heavy tokenize uses every core — at
-    production scale many files/row-groups give the width for free.
-    Deployment note: ``.cache()`` pins blocks to live executors; on a
-    cluster with executor churn persist the token frame to storage (or
-    use a reliable checkpoint) instead."""
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fingerprint(sf_dir))
-    got = _TOKEN_CACHE.get(key)
-    if got is None:
-        t0 = time.perf_counter()
+    production scale many files/row-groups give the width for free."""
+
+    def build():
         d = table(spark, sf_dir, "documents").repartition(
             int(spark.sparkContext.defaultParallelism), "doc_id"
         )
-        got = d.select("doc_id", _tokens().alias("toks")).cache()
-        got.count()  # pinned fill: consumers must all hit a warm cache
-        record_fill("token_arrays", time.perf_counter() - t0)
-        _TOKEN_CACHE[key] = got
-        _MEMO_BACKING[key] = [got]
-    return got
+        toks = d.select("doc_id", _tokens().alias("toks"))
+        return toks, (toks,)
 
-
-#: (applicationId, sf_dir, k, df_cap, fingerprint) → shingle stream.
-#: Several registered queries each called shingles() and CACHED THEIR
-#: OWN identical copy (distinct DataFrame objects don't share cache
-#: entries) — ~1.5-3 s of re-explode + a duplicate cache fill per
-#: consumer at bench scale.  Memoizing the DataFrame object shares one
-#: cache entry across every consumer, exactly like the pair-substrate
-#: memo below; invalidate_near_dup_cache clears both.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
+    return memo.get(spark, sf_dir, "token_arrays", build, reads=("documents",))
 
 
 def shingles(
@@ -143,34 +107,30 @@ def shingles(
     and set sizes all see the same capped set — so Jaccard stays a true
     set similarity (of the signal shingles).  The hot-shingle list is a
     tiny aggregate (linear scan, partial-agg'd) anti-joined back;
-    Catalyst broadcasts it."""
-    key = (
-        spark.sparkContext.applicationId,
+    Catalyst broadcasts it.
+
+    Memoized per (session, corpus, k, df_cap): several registered
+    queries each called shingles() and cached their own identical copy
+    (distinct DataFrame objects don't share cache entries).  With a cap,
+    the exploded stream feeds BOTH the hot-shingle aggregate and the
+    anti-join probe side inside the first consumer's job, so the memo
+    pins it before any consumer runs (r13: the two sides raced the cold
+    cache and ran the tokenize+gram explode twice concurrently)."""
+    return memo.get(
+        spark,
         sf_dir,
-        k,
-        df_cap,
-        _corpus_fingerprint(sf_dir),
+        f"shingles_k{k}",
+        lambda: _shingles_impl(spark, sf_dir, k, df_cap),
+        reads=("documents",),
+        params=(df_cap,),
+        fill=df_cap is not None,
     )
-    got = _SHINGLE_CACHE.get(key)
-    if got is None:
-        t0 = time.perf_counter()
-        got, backing = _shingles_impl(spark, sf_dir, k, df_cap)
-        if backing is not None:
-            # r13: the exploded stream feeds BOTH the hot-shingle
-            # aggregate and the anti-join probe side INSIDE the first
-            # consumer's job — they raced the cold cache and ran the
-            # tokenize+gram explode twice concurrently (the r12 race
-            # class, one layer further in).  Pin the fill first.
-            backing.count()
-            record_fill(f"shingles_k{k}", time.perf_counter() - t0)
-            _MEMO_BACKING[key] = [backing]
-        _SHINGLE_CACHE[key] = got
-    return got
 
 
 def _shingles_impl(
     spark: SparkSession, sf_dir: str, k: int, df_cap: int | None
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """(capped shingle stream, the frames the memo must pin)."""
     d = token_arrays(spark, sf_dir)
     toks = F.col("toks")
     grams = kgrams(toks, k)
@@ -179,12 +139,11 @@ def _shingles_impl(
         .select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
     )
     if df_cap is None:
-        return sh, None
+        return sh, ()
     # the gram transform is an interpreted HOF over every token window
     # and BOTH the hot-shingle aggregate and the anti-join probe side
-    # read it — cache the exploded stream so tokenize+gram runs once
-    # (MEMORY_AND_DISK default spills rather than recomputes at scale)
-    sh = sh.cache()
+    # read it — the memo caches the exploded stream so tokenize+gram
+    # runs once (MEMORY_AND_DISK default spills rather than recomputes)
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -194,7 +153,7 @@ def _shingles_impl(
     # no broadcast hint: the hot list is usually tiny (AQE broadcasts it
     # at runtime), but at 100 TB it can grow past executor memory — the
     # shuffle anti-join is linear either way
-    return sh.join(hot, "shingle", "left_anti"), sh
+    return sh.join(hot, "shingle", "left_anti"), (sh,)
 
 
 _SHINGLE_SQL = f"""
@@ -480,132 +439,36 @@ def _minhash_min_cols() -> list[Column]:
     ]
 
 
-_NEAR_DUP_CACHE: dict[tuple, DataFrame] = {}
-
-#: scratch caches the impl marks for unpersist once the wrapper's eager
-#: localCheckpoint has materialized the result (the impl itself stays
-#: checkpoint-free so plan tests can audit the real query plan).
-#: Entries are (sf_dir, frame): releases are scoped to the corpus being
-#: finalized/invalidated, so an interleaved build for ANOTHER sf_dir
-#: keeps its per_doc cache instead of silently recomputing (ADVICE r5 #3)
-_NEAR_DUP_SCRATCH: list[tuple[str, DataFrame]] = []
-
-
-def _release_scratch(sf_dir: str | None) -> None:
-    """Unpersist and drop scratch entries for one corpus (or all)."""
-    keep: list[tuple[str, DataFrame]] = []
-    for owner, scratch in _NEAR_DUP_SCRATCH:
-        if sf_dir is None or owner == sf_dir:
-            scratch.unpersist()
-        else:
-            keep.append((owner, scratch))
-    _NEAR_DUP_SCRATCH[:] = keep
-
-
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """(path, mtime_ns, size) of every file under the documents table —
-    the cache key component that invalidates the memo when the data
-    under ``sf_dir`` is regenerated within one application (ADVICE r2)."""
-    import os
-
-    from ..tables import fingerprint_path
-
-    return fingerprint_path(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _drop_memo_entries(caches: tuple[dict, ...], sf_dir: str | None) -> None:
-    """Drop entries (all, or one sf_dir's) from the given memo dicts,
-    unpersisting any .cache()-backed frames they own."""
-    for cache in caches:
-        for k in [k for k in cache if sf_dir is None or k[1] == sf_dir]:
-            for frame in _MEMO_BACKING.pop(k, []):
-                frame.unpersist()
-            del cache[k]
-
-
-def invalidate_token_cache(sf_dir: str | None = None) -> None:
-    """Drop the memoized tokenized-documents frames (bench retry
-    honesty hook for token-substrate consumers)."""
-    _drop_memo_entries((_TOKEN_CACHE,), sf_dir)
-
-
-def invalidate_gram_caches(sf_dir: str | None = None) -> None:
-    """Drop the shingle-stream memos AND the token substrate beneath
-    them — everything a shingle consumer
-    (``pipeline_decontaminate_ngrams``) can warm (ADVICE r12 #1)."""
-    _drop_memo_entries((_SHINGLE_CACHE, _TOKEN_CACHE), sf_dir)
-
-
-def invalidate_near_dup_cache(sf_dir: str | None = None) -> None:
-    """Drop memoized pair tables, shingle/token streams AND component
-    labels (all, or those under one sf_dir) — the explicit hook for
-    callers that rewrite a corpus in place."""
-    _drop_memo_entries(
-        (_NEAR_DUP_CACHE, _SHINGLE_CACHE, _TOKEN_CACHE, _COMPONENT_CACHE), sf_dir
-    )
-    # scratch entries left by a direct _near_dup_pairs_impl call (plan
-    # tests) would otherwise wait for the next wrapper build — scoped to
-    # the corpus being invalidated
-    _release_scratch(sf_dir)
-
-
-def reregister_memo_caches() -> None:
-    """Re-``.cache()`` the backing frames of every SURVIVING memo entry
-    after a blanket ``spark.catalog.clearCache()`` (bench contention
-    retries).  The clear drops their CacheManager registrations along
-    with the retried query's own entries; without re-registration every
-    later consumer of a surviving memo recomputes the stream UNCACHED
-    for the rest of the run (ADVICE r12 #2).  The refill itself happens
-    lazily on the next consumer — same cost as the original fill, and
-    the bench artifact's retry record discloses which families were
-    dropped vs kept."""
-    for frames in _MEMO_BACKING.values():
-        for frame in frames:
-            frame.cache()
-
-
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoizing wrapper over :func:`_near_dup_pairs_impl`: five
     registered queries (clustering, survivor pick, and the whole graph
     pack) all read the SAME verified pair table, so it is materialized
     once per (session, corpus) — exactly how a production pipeline
     treats the pair table at 100 TB (build it once, persist, fan out
-    consumers) instead of re-running minhash+LSH per downstream job.
+    consumers) instead of re-running minhash+LSH per downstream job."""
 
-    The key includes a data fingerprint (file mtimes + sizes), so a
-    corpus regenerated under the same path within one application is
-    re-detected, and :func:`invalidate_near_dup_cache` is the explicit
-    hook.  Deployment note: ``localCheckpoint`` pins the materialized
-    table to live executors — on a real cluster with executor loss, use
-    a reliable checkpoint (``spark.sparkContext.setCheckpointDir`` +
-    ``.checkpoint()``) or persist the pair table to storage instead."""
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fingerprint(sf_dir))
-    cached = _NEAR_DUP_CACHE.get(key)
-    if cached is None:
-        t0 = time.perf_counter()
-        n_scratch = len(_NEAR_DUP_SCRATCH)
-        impl = _near_dup_pairs_impl(spark, sf_dir)
+    def build():
+        pairs, per_doc = _near_dup_pairs_impl(spark, sf_dir)
         # r12 (guide §1/§2.4): the checkpoint job reads per_doc from
         # FOUR concurrent subtrees (band self-join l/r + verify a/b);
         # with a cold cache they raced the fill and each re-ran the
-        # full shingle+minhash aggregate side by side (4 × ~0.8 s ×
-        # 32-task stages in the event log).  Filling the scratch cache
-        # in its own job first makes the checkpoint's four reads cache
-        # hits — same plan, same rows, one shingle pass.
-        for _owner, scratch in _NEAR_DUP_SCRATCH[n_scratch:]:
-            scratch.count()
-        cached = impl.localCheckpoint(eager=True)
-        # the checkpoint materialized the pairs; the impl's per-doc
-        # scratch cache (32 hashes + the full hashed shingle set per
-        # doc) is never read again — release THIS corpus's entries only
-        # (an interleaved build for another sf_dir keeps its cache)
-        _release_scratch(sf_dir)
-        record_fill("near_dup_pairs", time.perf_counter() - t0)
-        _NEAR_DUP_CACHE[key] = cached
-    return cached
+        # full shingle+minhash aggregate side by side.  Filling the
+        # scratch cache in its own job first makes the checkpoint's
+        # four reads cache hits — same plan, same rows, one pass.
+        per_doc.count()
+        pairs = pairs.localCheckpoint(eager=True)
+        # the checkpoint materialized the pairs; the per-doc scratch
+        # (32 hashes + the full hashed shingle set per doc) is never
+        # read again
+        per_doc.unpersist()
+        return pairs, ()
+
+    return memo.get(spark, sf_dir, "near_dup_pairs", build, reads=("documents",))
 
 
-def _near_dup_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _near_dup_pairs_impl(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     """MinHash+LSH near-dup detection, end to end — THE production path
     (also the pair substrate for clustering and the dup graph):
 
@@ -619,7 +482,12 @@ def _near_dup_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic; oracle = exact Jaccard pairs (miss probability
     ≤ (1-0.8²)^16 ≈ 5e-11 per qualifying pair, i.e. the outputs
-    coincide)."""
+    coincide).
+
+    Returns (pair plan, per-doc scratch frame): the plan reads the
+    cached per-doc aggregate, which the caller releases once the pairs
+    are materialized.  The impl stays checkpoint-free so plan tests can
+    audit the real query plan."""
     sh = shingles(spark, sf_dir)
     # ONE groupBy(doc_id) computes the 32 min-hashes AND the verify
     # stage's hashed shingle set + exact size — the signature and
@@ -633,7 +501,6 @@ def _near_dup_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_set(F.xxhash64("shingle")).alias("hs"),
         F.count(F.lit(1)).alias("n"),
     ).cache()
-    _NEAR_DUP_SCRATCH.append((sf_dir, per_doc))
     rows_per_band = N_HASHES // N_BANDS
     bands = F.array(
         *[
@@ -660,11 +527,12 @@ def _near_dup_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
-    return (
+    pairs = (
         _jaccard_from_doc_sets(per_doc.select("doc_id", "hs", "n"), candidates)
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("doc_a", "doc_b", "jaccard", "jaccard_r6")
     )
+    return pairs, per_doc
 
 
 @register(
@@ -1109,15 +977,6 @@ def dedup_embedding_cosine_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-#: (applicationId, sf_dir, fingerprint) → converged label frame.
-#: Both registered consumers (cluster summary + survivor pick) need the
-#: SAME converged labels, and the propagation loop costs a handful of
-#: checkpoint-barrier jobs each time it runs — memoize the (tiny,
-#: already localCheckpoint-materialized) result like the pair substrate
-#: above so the loop runs once per (session, corpus).
-_COMPONENT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component) labels for every document that appears in a
     near-dup pair — iterative min-label propagation (see
@@ -1126,15 +985,19 @@ def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edges come from the LSH-bounded :func:`near_dup_pairs` path, NOT
     the all-pairs exact baseline: at τ=0.8 the two provably coincide
     (per-pair miss ≤ 5e-11), so the recursive-CTE oracle stays valid
-    while the Spark plan stays linear."""
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fingerprint(sf_dir))
-    got = _COMPONENT_CACHE.get(key)
-    if got is None:
-        t0 = time.perf_counter()
-        got = _component_labels_impl(spark, sf_dir)
-        record_fill("component_labels", time.perf_counter() - t0)
-        _COMPONENT_CACHE[key] = got
-    return got
+    while the Spark plan stays linear.
+
+    Memoized per (session, corpus): both registered consumers (cluster
+    summary + survivor pick) need the SAME converged labels, and the
+    propagation loop costs a handful of checkpoint-barrier jobs each
+    time it runs."""
+    return memo.get(
+        spark,
+        sf_dir,
+        "component_labels",
+        lambda: (_component_labels_impl(spark, sf_dir), ()),
+        reads=("documents",),
+    )
 
 
 #: Edge count below which connected components run as one driver-side

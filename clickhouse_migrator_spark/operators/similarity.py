@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from .. import memo
 from ..registry import register
 from ..tables import table
 from .sampling import cap_sample, sql_cap_sample
@@ -35,62 +36,21 @@ def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda a, z: a + z)
 
 
-#: (applicationId, sf_dir, corpus fingerprint) → typed vector frame
-#: (vec_id, v, label), cached.  Every sim_* query consumed its own
-#: parquet scan+cast of the embeddings corpus — and most consume it
-#: SEVERAL times per plan (corpus side + probe side + the cap-sample
-#: count pass each re-derive the scan: 4–12 embeddings scans per query,
-#: counted in plans/r13/).  One session-memoized cached frame makes
-#: every pass after the first a memory read; at 100 TB each avoided
-#: derivation is a full corpus scan + per-row double-cast.  Same
-#: session-memo discipline as the dedup token substrate: fingerprint
-#: key, pinned fill, fill event, bench retry family ("vecs").
-_VEC_CACHE: dict[tuple, DataFrame] = {}
-
-#: backing frames for reregistration after a bench retry's blanket
-#: spark.catalog.clearCache() (ADVICE r12 #2 — same seam as
-#: dedup._MEMO_BACKING)
-_VEC_BACKING: list[DataFrame] = []
-
-
-def invalidate_vec_cache() -> None:
-    """Drop the memoized vector frame (bench retry honesty hook)."""
-    _VEC_CACHE.clear()
-    _VEC_BACKING.clear()
-
-
-def reregister_vec_cache() -> None:
-    """Re-``.cache()`` surviving vector-memo frames after a blanket
-    ``spark.catalog.clearCache()`` — see dedup.reregister_memo_caches."""
-    for frame in _VEC_BACKING:
-        frame.cache()
-
-
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed vector scan, memoized per (session, corpus).  NULL
-    embeddings are excluded — a missing vector cannot be searched or
-    ranked; the sign-LSH bucket of a NULL vector otherwise rendered as
-    '' and matched every other NULL (round-8 edge fuzz); all sim_*
-    oracles carry the same `WHERE embedding IS NOT NULL` contract.
+    """Typed vector scan (vec_id, v, label), memoized and pinned per
+    (session, corpus) by the session memo (:mod:`..memo`).  Every sim_*
+    query consumed its own parquet scan+cast of the embeddings corpus —
+    and most consume it SEVERAL times per plan (corpus side + probe
+    side + the cap-sample count pass: 4–12 embeddings scans per query);
+    the memo makes every pass after the first a memory read.
 
-    Deployment note: ``.cache()`` pins blocks to live executors; on a
-    cluster with executor churn persist the typed frame to storage (or
-    use a reliable checkpoint) instead."""
-    import os
-    import time
+    NULL embeddings are excluded — a missing vector cannot be searched
+    or ranked; the sign-LSH bucket of a NULL vector otherwise rendered
+    as '' and matched every other NULL (round-8 edge fuzz); all sim_*
+    oracles carry the same `WHERE embedding IS NOT NULL` contract."""
 
-    from ..memo_events import record_fill
-    from ..tables import fingerprint_path
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fingerprint_path(os.path.join(sf_dir, "embeddings.parquet")),
-    )
-    got = _VEC_CACHE.get(key)
-    if got is None:
-        t0 = time.perf_counter()
-        got = (
+    def build():
+        v = (
             table(spark, sf_dir, "embeddings")
             .filter(F.col("embedding").isNotNull())
             .select(
@@ -98,13 +58,10 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform("embedding", lambda x: x.cast("double")).alias("v"),
                 "label",
             )
-            .cache()
         )
-        got.count()  # pinned fill: consumers must all hit a warm cache
-        record_fill("vec_arrays", time.perf_counter() - t0)
-        _VEC_CACHE[key] = got
-        _VEC_BACKING.append(got)
-    return got
+        return v, (v,)
+
+    return memo.get(spark, sf_dir, "vec_arrays", build, reads=("embeddings",))
 
 
 def cosine_topk(
@@ -385,44 +342,21 @@ KMEANS_TRAIN_CAP = 4096  # driver-side training sample bound (FAISS posture)
 NPROBE = 2
 SEED_POOL = 64  # candidate pool for the greedy max-min seeding
 
-#: (applicationId, sf_dir, corpus fingerprint) → trained centroid list
-#: (or None for an empty corpus).  Training is deterministic given the
-#: corpus (hash-fixed sample + seeding + Lloyd), so every consumer —
-#: ``sim_ivf_kmeans_topk`` plus the recall audit's TWO operating-point
-#: runs — reproduces bit-identical centroids; memoizing the (collect +
-#: numpy) step per (session, corpus) removes two full re-trainings
-#: (head job + sample collect job each) from the audit without changing
-#: any result.  Same memo pattern as the dedup pair substrate;
-#: invalidated by bench.py's contention-retry reset hook.
-_IVF_TRAIN_CACHE: dict[tuple, "object"] = {}
-
-
-def invalidate_ivf_cache() -> None:
-    """Drop memoized IVF training state (bench retry honesty hook)."""
-    _IVF_TRAIN_CACHE.clear()
-
-
 def _ivf_train(spark: SparkSession, sf_dir: str, vecs: DataFrame):
     """Memoized (dim, centroid ndarray) for the corpus, or None when
-    the corpus is empty.  See _IVF_TRAIN_CACHE."""
-    from ..tables import fingerprint_path
-    import os
-
-    key = (
-        spark.sparkContext.applicationId,
+    the corpus is empty.  Training is deterministic given the corpus
+    (hash-fixed sample + seeding + Lloyd), so every consumer —
+    ``sim_ivf_kmeans_topk`` plus the recall audit's TWO operating-point
+    runs — reproduces bit-identical centroids; memoizing the (collect +
+    numpy) step per (session, corpus) removes two full re-trainings
+    from the audit without changing any result."""
+    return memo.get(
+        spark,
         sf_dir,
-        fingerprint_path(os.path.join(sf_dir, "embeddings.parquet")),
+        "ivf_train",
+        lambda: (_ivf_train_impl(spark, vecs), ()),
+        reads=("embeddings",),
     )
-    if key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[key]
-    import time
-
-    from ..memo_events import record_fill
-
-    t0 = time.perf_counter()
-    _IVF_TRAIN_CACHE[key] = got = _ivf_train_impl(spark, vecs)
-    record_fill("ivf_train", time.perf_counter() - t0)
-    return got
 
 
 def _ivf_train_impl(spark: SparkSession, vecs: DataFrame):

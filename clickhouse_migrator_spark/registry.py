@@ -9,7 +9,6 @@ state machines) and get the driver's weaker rows-only check.
 from __future__ import annotations
 
 import os
-import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -43,26 +42,15 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
+#: the driver-sample rotation round that orders ``queries()``
+ROTATION_ROUND = 14
+
+
 def current_round() -> int:
-    """The build round in progress, read from the repo's own committed
-    artifacts: one ``CORRECTNESS_r{N}.json`` lands per completed round,
-    so the round underway is max(N) + 1.  Deterministic for everyone
-    looking at the same tree — including the driver, which runs the
-    round-N gate while the newest artifact is still round N-1.
-    ``SPARK_GRAFT_ROTATION_ROUND`` overrides for tests/tools."""
+    """The rotation round ordering ``queries()``: :data:`ROTATION_ROUND`,
+    or ``SPARK_GRAFT_ROTATION_ROUND`` when set (tests/tools)."""
     env = os.environ.get("SPARK_GRAFT_ROTATION_ROUND")
-    if env is not None:
-        return int(env)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    best = 0
-    try:
-        for f in os.listdir(root):
-            m = re.match(r"CORRECTNESS_r0*(\d+)\.json$", f)
-            if m:
-                best = max(best, int(m.group(1)))
-    except OSError:  # pragma: no cover — installed outside the repo
-        pass
-    return best + 1
+    return int(env) if env is not None else ROTATION_ROUND
 
 
 def rotated_names(names: list[str], rnd: int, window: int = DRIVER_SAMPLE) -> list[str]:

@@ -26,47 +26,27 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import memo
 from ..registry import register
 from ..session import ensure_runtime_confs
 from ..tables import table
 
 
-# (applicationId, sf_dir, corpus fingerprint) → events parquet schema.
-# Every streaming query needs the batch-read schema to declare its file
-# source; the footer read costs ~80 ms driver-side and was paid up to 3×
-# per query (r5 streaming fixed-cost shave) — now once per session per
-# corpus.  The key carries a (path, mtime_ns, size) fingerprint exactly
-# like the dedup substrate caches (ADVICE r5 #2): rewriting
-# events.parquet in place within one session re-reads the schema instead
-# of serving a stale one.
-_EVENTS_SCHEMA_CACHE: dict[tuple, Any] = {}
-
-
-def _events_fingerprint(sf_dir: str) -> tuple:
-    """(path, mtime_ns, size) of every file under the events table."""
-    import os
-
-    from ..tables import fingerprint_path
-
-    return fingerprint_path(os.path.join(sf_dir, "events.parquet"))
-
-
 def events_schema(spark: SparkSession, sf_dir: str):
+    """The events parquet schema, a session memo (:mod:`..memo`).
+    Every streaming query needs the batch-read schema to declare its
+    file source; the footer read costs ~80 ms driver-side and was paid
+    up to 3× per query — now once per session per corpus, re-read when
+    events.parquet is rewritten in place."""
     ensure_runtime_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
+    return memo.get(
+        spark,
         sf_dir,
-        _events_fingerprint(sf_dir),
+        "events_schema",
+        lambda: (spark.read.parquet(f"{sf_dir}/events.parquet").schema, ()),
+        reads=("events",),
+        fill=False,
     )
-    schema = _EVENTS_SCHEMA_CACHE.get(key)
-    if schema is None:
-        # drop superseded fingerprints for the same corpus path so a
-        # repeatedly-rewritten table doesn't grow the cache unboundedly
-        for k in [k for k in _EVENTS_SCHEMA_CACHE if k[:2] == key[:2]]:
-            del _EVENTS_SCHEMA_CACHE[k]
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_CACHE[key] = schema
-    return schema
 
 
 def _ts_is_bigint(schema) -> bool:

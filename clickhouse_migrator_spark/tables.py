@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import memo
 from .session import ensure_runtime_confs
 
 TABLES = (
@@ -32,89 +33,28 @@ TABLES = (
 )
 
 
-#: (applicationId, sf_dir, name, fingerprint) → loaded DataFrame.  A
-#: DataFrame is an immutable logical plan, so handing the same one to
-#: every caller is safe; this is the engine's CATALOG role — schema and
-#: file listing resolved once per session, not re-inferred per query
-#: (each ``spark.read.parquet`` costs ~80 ms of driver-side listing +
-#: footer schema read; a 351-query bench pays that ~700×).  Keyed on
-#: applicationId so a new session never sees plans from a stopped one,
-#: and on a (path, mtime_ns, size) fingerprint so a table REWRITTEN IN
-#: PLACE is re-resolved — the fingerprint check is a handful of stat()
-#: calls (~µs), and without it every downstream fingerprint-keyed memo
-#: (the dedup substrate, the streaming schema cache) rebuilds a plan
-#: that still reads the stale listing.  On a fingerprint change the
-#: path is also pushed through ``spark.catalog.refreshByPath``: Spark's
-#: CacheManager matches cached data BY PLAN STRUCTURE, so a rebuilt
-#: byte-identical plan (same path) would otherwise be served the old
-#: corpus's cached blocks (e.g. the dedup shingle stream's ``.cache()``).
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def fingerprint_path(path: str) -> tuple:
-    """(path, mtime_ns, size) of every file under ``path`` — THE shared
-    cache-key component for every fingerprint-keyed memo in the engine
-    (table plans here, the dedup substrate's corpus caches, the
-    streaming events-schema cache).  Directory walk is fully sorted so
-    partitioned layouts fingerprint deterministically."""
-    import os
-
-    entries = []
-    if os.path.isdir(path):
-        for base, dirs, files in os.walk(path):
-            dirs.sort()
-            for f in sorted(files):
-                p = os.path.join(base, f)
-                st = os.stat(p)
-                entries.append((p, st.st_mtime_ns, st.st_size))
-    elif os.path.exists(path):
-        st = os.stat(path)
-        entries.append((path, st.st_mtime_ns, st.st_size))
-    return tuple(entries)
-
-
-def _table_fingerprint(sf_dir: str, name: str) -> tuple:
-    import os
-
-    return fingerprint_path(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-#: (applicationId, sf_dir, name) → last fingerprint RESOLVED for that
-#: path.  Deliberately NOT cleared by invalidate_table_cache: this is
-#: the refresh ledger — a later table() call that sees a DIFFERENT
-#: fingerprint than the last resolve must push refreshByPath even if
-#: the plan memo was explicitly cleared in between (otherwise the
-#: explicit hook would skip the Spark-side CacheManager/listing refresh
-#: and serve staler data than no invalidation at all).
-_RESOLVED_FP: dict[tuple[str, str, str], tuple] = {}
-
-
-def invalidate_table_cache() -> None:
-    """Drop every cached table plan (for callers that point ``sf_dir``
-    at a directory they rewrite in place).  Spark-side caches are
-    refreshed lazily: the next ``table()`` call compares the path's
-    fingerprint against the refresh ledger and pushes
-    ``refreshByPath`` when the bytes changed."""
-    _TABLE_CACHE.clear()
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table with engine-canonical column types."""
-    app = spark.sparkContext.applicationId
-    fp = _table_fingerprint(sf_dir, name)
-    key3 = (app, sf_dir, name)
-    key = (*key3, fp)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Load one fixture table with engine-canonical column types.
+
+    The plan is a session memo (:mod:`.memo`): a DataFrame is an
+    immutable logical plan, so handing the same one to every caller is
+    safe, and the schema and file listing are resolved once per session
+    instead of per query (each ``spark.read.parquet`` costs ~80 ms of
+    driver-side listing + footer read).  A table rewritten in place is
+    re-resolved, and the memo refreshes Spark's cached blocks for it."""
+    return memo.get(
+        spark,
+        sf_dir,
+        "table",
+        lambda: (_load(spark, sf_dir, name), ()),
+        reads=(name,),
+        params=(name,),
+        fill=False,
+    )
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
-    for k in [k for k in _TABLE_CACHE if k[:3] == key3]:
-        del _TABLE_CACHE[k]
-    if _RESOLVED_FP.get(key3, fp) != fp:
-        # drop Spark-side file listings and any cached data blocks for
-        # plans that read this path — see the cache-key comment above
-        spark.catalog.refreshByPath(f"{sf_dir}/{name}.parquet")
-    _RESOLVED_FP[key3] = fp
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ns epoch → µs timestamp_ntz.  Integer division (`DIV`), NOT
@@ -124,7 +64,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
         )
-    _TABLE_CACHE[key] = df
     return df
 
 

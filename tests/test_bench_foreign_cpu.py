@@ -92,6 +92,12 @@ def test_contaminated_budget_shape():
     assert not bench._contaminated(-1.0, 99.0, 32)
 
 
+def _measure(specs, run_once, **kw):
+    """(timings, foreign, retries) of one _measure_all pass."""
+    m = bench._measure_all(specs, run_once, **kw)
+    return m["queries"], m["foreign_cpu_s"], m["retries"]
+
+
 def _fake_runner(script):
     """run_once stub fed from a {name: [(wall, fg, err), ...]} script —
     each call pops the next synthetic measurement for that query."""
@@ -111,11 +117,11 @@ def test_retry_engages_and_keeps_quieter_measurement():
     }
     run_once, calls = _fake_runner(script)
     resets = {"n": 0}
-    timings, foreign, retries = bench._measure_all(
+    timings, foreign, retries = _measure(
         {"q_noisy": None, "q_clean": None},
         run_once,
         cpus=32,
-        reset_caches=lambda name: resets.__setitem__("n", resets["n"] + 1),
+        reset_caches=lambda name, memos: resets.__setitem__("n", resets["n"] + 1),
     )
     assert calls["n"] == 3 and resets["n"] == 1
     assert timings == {"q_noisy": 0.7, "q_clean": 2.0}
@@ -130,7 +136,7 @@ def test_retry_engages_and_keeps_quieter_measurement():
 def test_retry_still_noisy_keeps_first_and_discloses():
     script = {"q": [(0.8, 20.0, False), (1.0, 25.0, False)]}
     run_once, _ = _fake_runner(script)
-    timings, foreign, retries = bench._measure_all(
+    timings, foreign, retries = _measure(
         {"q": None}, run_once, cpus=32
     )
     # both noisy: keep the first (quieter) — never ping-pong
@@ -141,7 +147,7 @@ def test_retry_still_noisy_keeps_first_and_discloses():
 def test_retry_error_keeps_first_measurement():
     script = {"q": [(0.8, 20.0, False), (-1.0, None, True)]}
     run_once, _ = _fake_runner(script)
-    timings, foreign, retries = bench._measure_all(
+    timings, foreign, retries = _measure(
         {"q": None}, run_once, cpus=32
     )
     assert timings == {"q": 0.8}
@@ -152,7 +158,7 @@ def test_retry_error_keeps_first_measurement():
 def test_clean_run_never_retries():
     script = {"a": [(1.0, 0.0, False)], "b": [(2.0, 0.5, False)]}
     run_once, calls = _fake_runner(script)
-    timings, foreign, retries = bench._measure_all(
+    timings, foreign, retries = _measure(
         {"a": None, "b": None}, run_once, cpus=32
     )
     assert calls["n"] == 2 and retries == {}
@@ -161,7 +167,7 @@ def test_clean_run_never_retries():
 def test_errored_first_run_not_retried():
     script = {"q": [(-1.0, None, True)]}
     run_once, calls = _fake_runner(script)
-    timings, foreign, retries = bench._measure_all(
+    timings, foreign, retries = _measure(
         {"q": None}, run_once, cpus=32
     )
     assert timings == {"q": -1.0} and calls["n"] == 1 and retries == {}
@@ -172,67 +178,54 @@ def test_reset_receives_retried_query_name():
     run_once, _ = _fake_runner(script)
     seen = []
     bench._measure_all(
-        {"dedup_x": None}, run_once, cpus=32, reset_caches=seen.append
+        {"dedup_x": None},
+        run_once,
+        cpus=32,
+        reset_caches=lambda name, memos: seen.append(name),
     )
     assert seen == ["dedup_x"]
 
 
-def test_memo_families_cleared_only_for_their_consumers():
-    """r12 measurement-bug fix + r13 per-memo granularity (ADVICE r12
-    #1): an unrelated query's contention retry must NOT drop the
-    dedup/IVF memos — doing so shifted the whole pair-substrate fill
-    onto the next dedup/graph consumer in bench order
-    (graph_degree_distribution 0.47 -> 6.3 s at sf1, a spurious 17x
-    scale ratio that failed the sf1 ratio gate) — and a retry of a
-    pipeline GRAM consumer must drop the gram/token caches it reads
-    without dumping the pair-table fill on the dedup family."""
-    clear = bench._memo_families_to_clear
-    assert clear("dedup_simhash_hamming") == {"pairs"}
-    assert clear("graph_degree_distribution") == {"pairs"}
-    # sim_*: the typed-vector memo (every sim query reads it) plus the
-    # IVF centroids (r13: the vec memo made the family's duplicate
-    # embeddings scans memory reads)
-    assert clear("sim_ivf_kmeans_topk") == {"ivf", "vecs"}
-    # shingle consumer outside dedup_*/graph_*: grams (shingle+token),
-    # never the pair table
-    assert clear("pipeline_decontaminate_ngrams") == {"grams"}
-    # token-substrate-only consumers: tokens, never shingles or pairs
-    assert clear("pipeline_span_dedup_c4") == {"tokens"}
-    assert clear("pipeline_split_leakage_audit") == {"tokens"}
-    for innocent in (
-        "events_attribution_linear",
-        "agg_skew_kurt",
-        "streaming_tumbling_hourly",
-        "tpch_q1_pricing_summary",
-        "pipeline_curriculum_phases",
-    ):
-        assert clear(innocent) == frozenset()
+def test_retry_clears_exactly_the_memos_its_first_attempt_filled():
+    """A contention retry must not measure reuse of state the query
+    itself warmed, so it clears the memos the first attempt's fill
+    events name — and only those: an unrelated query's retry that
+    dropped the pair memo once shifted the whole substrate fill onto
+    the next dedup/graph consumer (graph_degree_distribution 0.47 ->
+    6.3 s at sf1).  A query that read warm memos and filled nothing
+    clears nothing.  Fills land on the query that paid them, and what
+    each retry cleared is part of the artifact."""
+    from clickhouse_migrator_spark import memo_events
 
+    fills = {"dedup_x": ["token_arrays", "shingles_k3", "near_dup_pairs"]}
+    script = {
+        "dedup_x": [(3.0, 50.0, False), (0.5, 0.0, False)],
+        "graph_degree_distribution": [(3.0, 50.0, False), (0.5, 0.0, False)],
+        "tpch_q1": [(1.0, 0.0, False)],
+    }
+    base_run, _ = _fake_runner(script)
 
-def test_memo_consumer_lists_match_call_graph():
-    """The family map's explicit name lists must track the operators'
-    actual substrate reads: every registered query whose function body
-    (source) reaches shingles()/token_arrays() outside the dedup_* /
-    graph_* prefixes must be listed, and nothing else may be."""
-    import inspect
+    def run_once(name, spec):
+        for memo in fills.get(name, []):
+            memo_events.record_fill(memo, 0.25)
+        return base_run(name, spec)
 
-    from clickhouse_migrator_spark.registry import all_specs
-    from clickhouse_migrator_spark.operators import dedup, graph  # noqa: F401
-
-    shingle_users, token_users = set(), set()
-    for name, spec in all_specs().items():
-        if name.startswith(("dedup_", "graph_")):
-            continue
-        try:
-            src = inspect.getsource(spec.fn)
-        except (OSError, TypeError):  # pragma: no cover
-            continue
-        if "shingles(" in src:
-            shingle_users.add(name)
-        elif "token_arrays(" in src:
-            token_users.add(name)
-    assert shingle_users == bench._SHINGLE_CONSUMER_NAMES
-    assert token_users == bench._TOKEN_CONSUMER_NAMES
+    memo_events.record_fill("vec_arrays", 1.0)  # paid by no measured query
+    resets = []
+    m = bench._measure_all(
+        dict.fromkeys(script),
+        run_once,
+        cpus=32,
+        reset_caches=lambda name, memos: resets.append((name, memos)),
+    )
+    assert resets == [
+        ("dedup_x", ["near_dup_pairs", "shingles_k3", "token_arrays"]),
+        ("graph_degree_distribution", []),
+    ]
+    assert m["retry_memos_cleared"] == dict(resets)
+    # both attempts of dedup_x filled; nothing else paid a fill
+    assert [f["memo"] for f in m["memo_fills"]["dedup_x"]] == fills["dedup_x"] * 2
+    assert set(m["memo_fills"]) == {"dedup_x"}
 
 
 def test_memo_fill_events_record_and_drain():

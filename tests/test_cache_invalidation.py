@@ -1,17 +1,16 @@
-"""End-to-end substrate-cache invalidation (VERDICT r5 next-round #5,
-ADVICE r5 #2/#3).
+"""End-to-end session-memo invalidation (VERDICT r5 next-round #5,
+ADVICE r5 #2, ADVICE r13 #1/#2).
 
-Three session-scoped memo layers key on a corpus fingerprint
-(path + mtime_ns + size per data file):
+Every session memo (:mod:`clickhouse_migrator_spark.memo`) keys on the
+fingerprint (path + mtime_ns + size per data file) of the tables it
+reads.  These tests rewrite fixture copies IN PLACE and assert that:
 
-* the dedup substrate (`_SHINGLE_CACHE`, `_NEAR_DUP_CACHE`,
-  `_COMPONENT_CACHE`) plus its executor-storage scratch entries,
-* the streaming events schema cache (`_EVENTS_SCHEMA_CACHE`).
-
-These tests rewrite fixture copies IN PLACE and assert every layer
-rebuilds from the new bytes rather than serving stale results, and that
-scratch release is scoped per corpus (an interleaved build for another
-sf_dir keeps its cache).
+* every layer rebuilds from the new bytes rather than serving stale
+  results, and the superseded entry is evicted and unpersisted;
+* ``memo.reregister()`` re-pins surviving frames after a blanket
+  ``clearCache()``;
+* the ``refreshByPath`` record survives an explicit invalidation, so a
+  rebuilt plan never reads the old bytes' cached blocks.
 """
 
 from __future__ import annotations
@@ -19,7 +18,8 @@ from __future__ import annotations
 import shutil
 
 import duckdb
-import pytest
+
+from clickhouse_migrator_spark import memo
 
 SRC = "/root/testdata/sf0.001"
 
@@ -35,14 +35,36 @@ def _write_docs(dest_dir, limit, tag=""):
     )
 
 
+def _rewrite_head(dest_dir, name, limit, extra=""):
+    """Rewrite ``name``.parquet in place with its first ``limit`` rows
+    (plus the ``extra`` select items)."""
+    duckdb.connect().sql(
+        f"COPY (SELECT *{extra} FROM '{SRC}/{name}.parquet' LIMIT {limit}) "
+        f"TO '{dest_dir}/{name}.parquet' (FORMAT PARQUET)"
+    )
+
+
+def _unpersisted(df) -> bool:
+    level = df.storageLevel
+    return not (level.useMemory or level.useDisk)
+
+
+def _cache_loaded(spark, df) -> bool:
+    """True when ``df`` has a CacheManager entry whose blocks are
+    already materialized (a consumer would read a loaded cache)."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
 def test_dedup_substrate_rebuilds_on_corpus_rewrite(spark, tmp_path):
     """Mutating documents.parquet in place must invalidate EVERY dedup
-    memo layer — shingle stream, verified pairs, component labels — via
-    the fingerprint key alone (no explicit invalidation call)."""
+    memo layer — token arrays, shingle stream, verified pairs,
+    component labels — via the fingerprint key alone (no explicit
+    invalidation call), evicting and unpersisting the superseded
+    entries."""
     from clickhouse_migrator_spark.operators.dedup import (
-        _COMPONENT_CACHE,
-        _NEAR_DUP_CACHE,
-        _SHINGLE_CACHE,
         component_labels,
         near_dup_pairs,
         shingles,
@@ -52,16 +74,15 @@ def test_dedup_substrate_rebuilds_on_corpus_rewrite(spark, tmp_path):
     (tmp_path / "corpus_a").mkdir()
     _write_docs(d, 60)
 
+    names = ["token_arrays", "shingles_k3", "near_dup_pairs", "component_labels"]
     sh1 = shingles(spark, d)
     docs1 = sh1.select("doc_id").distinct().count()
     pairs1 = near_dup_pairs(spark, d)
     labels1 = component_labels(spark, d)
-    keys1 = {
-        "sh": [k for k in _SHINGLE_CACHE if k[1] == d],
-        "nd": [k for k in _NEAR_DUP_CACHE if k[1] == d],
-        "cc": [k for k in _COMPONENT_CACHE if k[1] == d],
-    }
-    assert keys1["sh"] and keys1["nd"] and keys1["cc"]
+    keys1 = memo.entries(d, names)
+    assert sorted(k[2] for k in keys1) == sorted(names)
+    frames1 = [f for k in keys1 for f in memo._ENTRIES[k].frames]
+    assert frames1 and all(f.is_cached for f in frames1)
 
     # rewrite the corpus in place: fewer docs, different bytes
     _write_docs(d, 25, tag=" rewritten")
@@ -72,60 +93,87 @@ def test_dedup_substrate_rebuilds_on_corpus_rewrite(spark, tmp_path):
     assert docs2 < docs1  # rebuilt from the NEW bytes, not stale
     assert near_dup_pairs(spark, d) is not pairs1
     assert component_labels(spark, d) is not labels1
-    # superseded-fingerprint keys coexist until explicit invalidation;
-    # the NEW fingerprint must be present alongside
-    for cache, old in (
-        (_SHINGLE_CACHE, keys1["sh"]),
-        (_NEAR_DUP_CACHE, keys1["nd"]),
-        (_COMPONENT_CACHE, keys1["cc"]),
-    ):
-        fresh = [k for k in cache if k[1] == d and k not in old]
-        assert fresh, "no new-fingerprint cache entry after rewrite"
+    # superseded entries evicted and their frames unpersisted: one live
+    # entry per memo name for this corpus.  (The rebuilt plans are
+    # structurally identical to the old ones and share their
+    # CacheManager slot, so the unpersist() call is what is checked.)
+    assert sorted(k[2] for k in memo.entries(d, names)) == sorted(names)
+    assert not any(f.is_cached for f in frames1)
 
 
-def test_scratch_release_scoped_per_corpus(spark, tmp_path):
-    """ADVICE r5 #3: finalizing/invalidating corpus A must not unpersist
-    corpus B's in-flight per_doc scratch cache."""
-    from clickhouse_migrator_spark.operators.dedup import (
-        _NEAR_DUP_SCRATCH,
-        _near_dup_pairs_impl,
-        invalidate_near_dup_cache,
-        near_dup_pairs,
-    )
+def test_vec_memo_rewrite_evicts_and_unpersists_old_frame(spark, tmp_path):
+    """ADVICE r13 #1: rewriting embeddings.parquet in place must leave
+    exactly one live vector entry for (app, sf_dir), and the old
+    vector frame must be unpersisted, not leaked."""
+    from clickhouse_migrator_spark.operators.similarity import _vecs
 
-    da, db = str(tmp_path / "a"), str(tmp_path / "b")
-    (tmp_path / "a").mkdir(), (tmp_path / "b").mkdir()
-    _write_docs(da, 30)
-    _write_docs(db, 30, tag=" corpus b")
+    d = str(tmp_path / "emb")
+    (tmp_path / "emb").mkdir()
+    shutil.copy(f"{SRC}/embeddings.parquet", f"{d}/embeddings.parquet")
 
-    invalidate_near_dup_cache()  # clean slate
-    # direct impl call for B leaves its scratch registered (plan-test path)
-    _near_dup_pairs_impl(spark, db)
-    b_scratch = [(o, s) for o, s in _NEAR_DUP_SCRATCH if o == db]
-    assert b_scratch
-    assert all(s.storageLevel.useMemory for _, s in b_scratch)
+    old = _vecs(spark, d)
+    n_old = old.count()
+    # the extra column makes the new plan differ from the old one, so
+    # the old frame's CacheManager entry is observable on its own
+    _rewrite_head(d, "embeddings", 40, extra=", 1 AS extra_col")
+    new = _vecs(spark, d)
 
-    # wrapper build for A releases only A's scratch
-    near_dup_pairs(spark, da)
-    assert [(o, s) for o, s in _NEAR_DUP_SCRATCH if o == da] == []
-    assert [(o, s) for o, s in _NEAR_DUP_SCRATCH if o == db] == b_scratch
+    assert new is not old
+    assert new.count() < n_old
+    assert _unpersisted(old)
+    assert len(memo.entries(d, ["vec_arrays"])) == 1
 
-    # scoped invalidation of A still leaves B; invalidating B drops it
-    invalidate_near_dup_cache(da)
-    assert [(o, s) for o, s in _NEAR_DUP_SCRATCH if o == db] == b_scratch
-    invalidate_near_dup_cache(db)
-    assert not any(o == db for o, _ in _NEAR_DUP_SCRATCH)
+
+def test_reregister_repins_surviving_frames(spark, tmp_path):
+    """ADVICE r13 #2: after a blanket clearCache, reregister() itself
+    starts the count job, so the next consumer of a surviving memo
+    reads a loaded cache instead of refilling it on its own clock."""
+    from clickhouse_migrator_spark.operators.similarity import _vecs
+
+    d = str(tmp_path / "emb")
+    (tmp_path / "emb").mkdir()
+    shutil.copy(f"{SRC}/embeddings.parquet", f"{d}/embeddings.parquet")
+
+    v = _vecs(spark, d)
+    assert _cache_loaded(spark, v)
+    spark.catalog.clearCache()
+    assert not _cache_loaded(spark, v)
+    memo.reregister()
+    assert _vecs(spark, d) is v  # the entry survived
+    assert _cache_loaded(spark, v)
+
+
+def test_refresh_record_survives_invalidate(spark, tmp_path):
+    """A cached frame derived from a table, then the table rewritten in
+    place with fewer rows and every memo invalidated: the rebuilt
+    same-shaped frame must count the NEW bytes.  The memo's refresh
+    record outlives the invalidation, so it still pushes refreshByPath
+    and the CacheManager cannot serve the old cached blocks for the
+    structurally identical plan."""
+    from clickhouse_migrator_spark.tables import table
+
+    d = str(tmp_path / "ord")
+    (tmp_path / "ord").mkdir()
+    shutil.copy(f"{SRC}/orders.parquet", f"{d}/orders.parquet")
+
+    def order_keys():
+        return table(spark, d, "orders").select("o_orderkey")
+
+    old = order_keys().cache()
+    n_old = old.count()
+    _rewrite_head(d, "orders", 100)
+    memo.invalidate()
+
+    assert order_keys().count() == 100 < n_old
+    old.unpersist()
 
 
 def test_events_schema_cache_rebuilds_on_rewrite(spark, tmp_path):
-    """ADVICE r5 #2: the streaming schema cache must key on the events
+    """ADVICE r5 #2: the streaming schema memo must key on the events
     fingerprint — rewriting events.parquet with a DIFFERENT schema in
     the same session must be observed, and superseded fingerprints for
     the same path must be evicted (no unbounded growth)."""
-    from clickhouse_migrator_spark.streaming.events_stream import (
-        _EVENTS_SCHEMA_CACHE,
-        events_schema,
-    )
+    from clickhouse_migrator_spark.streaming.events_stream import events_schema
 
     d = str(tmp_path / "ev")
     (tmp_path / "ev").mkdir()
@@ -143,4 +191,4 @@ def test_events_schema_cache_rebuilds_on_rewrite(spark, tmp_path):
     s2 = events_schema(spark, d)
     assert "extra_col" in s2.fieldNames()
     # one live entry per (app, path): the stale fingerprint was evicted
-    assert len([k for k in _EVENTS_SCHEMA_CACHE if k[1] == d]) == 1
+    assert len(memo.entries(d, ["events_schema"])) == 1

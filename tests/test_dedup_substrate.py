@@ -115,7 +115,9 @@ def test_near_dup_plan_has_no_full_shingle_selfjoin(spark):
     # underlying impl plan, which is what actually runs at build time
     from clickhouse_migrator_spark.operators.dedup import _near_dup_pairs_impl
 
-    plan = _plan_string(_near_dup_pairs_impl(spark, SF_DIR))
+    pairs, per_doc = _near_dup_pairs_impl(spark, SF_DIR)
+    plan = _plan_string(pairs)
+    per_doc.unpersist()
     # the LSH banding join is on (band, bucket); intersections join on
     # (doc_b, shingle). A pure [shingle] equi-join = the quadratic path.
     import re
@@ -223,20 +225,17 @@ def test_component_labels_memoized_per_corpus(spark):
     """Both registered consumers (cluster summary + survivor pick) read
     the converged label frame; the propagation loop must run once per
     (session, corpus) — the second call returns the memoized object,
-    and the explicit invalidation hook clears it."""
-    from clickhouse_migrator_spark.operators.dedup import (
-        _COMPONENT_CACHE,
-        component_labels,
-        invalidate_near_dup_cache,
-    )
+    and memo.invalidate clears it."""
+    from clickhouse_migrator_spark import memo
+    from clickhouse_migrator_spark.operators.dedup import component_labels
 
-    invalidate_near_dup_cache(SF_DIR)
+    memo.invalidate(SF_DIR)
     first = component_labels(spark, SF_DIR)
     assert component_labels(spark, SF_DIR) is first
-    assert any(k[1] == SF_DIR for k in _COMPONENT_CACHE)
+    assert memo.entries(SF_DIR, ["component_labels"])
 
-    invalidate_near_dup_cache(SF_DIR)
-    assert not any(k[1] == SF_DIR for k in _COMPONENT_CACHE)
+    memo.invalidate(SF_DIR)
+    assert not memo.entries(SF_DIR, ["component_labels"])
 
     # labels still answer after re-memoization, and every labelled doc
     # carries a component no larger than itself (min-label invariant)
@@ -250,13 +249,10 @@ def test_substrate_fills_disclosed_on_paying_caller(spark):
     the query that paid it — including a retry-induced refill (the
     likely r12 pagerank-outlier mechanism).  A warm re-read must report
     nothing."""
-    from clickhouse_migrator_spark import memo_events
-    from clickhouse_migrator_spark.operators.dedup import (
-        invalidate_near_dup_cache,
-        token_arrays,
-    )
+    from clickhouse_migrator_spark import memo, memo_events
+    from clickhouse_migrator_spark.operators.dedup import token_arrays
 
-    invalidate_near_dup_cache(SF_DIR)  # cold slate = a retry's state
+    memo.invalidate(SF_DIR)  # cold slate = a retry's state
     memo_events.drain_fills()
     near_dup_pairs(spark, SF_DIR)
     fills = {e["memo"]: e["s"] for e in memo_events.drain_fills()}

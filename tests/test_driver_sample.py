@@ -3,8 +3,8 @@ every round.  Through round 11 that window was the same 50
 registration-order names, leaving 300+ queries permanently invisible to
 the driver's own gate (VERDICT r11 #4) — ``all_specs()`` now rotates the
 (sorted) registry by 50 positions per round, keyed off the repo's own
-committed ``CORRECTNESS_r{N}.json`` artifacts, so consecutive driver
-rounds sweep the whole registry.
+``ROTATION_ROUND`` constant, so consecutive driver rounds sweep the whole
+registry.
 
 Pinned here:
 * the rotation is deterministic (same tree → same order);
@@ -22,6 +22,7 @@ sys.path.insert(0, ".")
 
 from clickhouse_migrator_spark.registry import (
     DRIVER_SAMPLE,
+    ROTATION_ROUND,
     all_specs,
     current_round,
     rotated_names,
@@ -61,8 +62,9 @@ def test_current_round_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ROTATION_ROUND", "7")
     assert current_round() == 7
     monkeypatch.delenv("SPARK_GRAFT_ROTATION_ROUND")
-    # artifact-derived: CORRECTNESS_r11.json is committed → round ≥ 12
-    assert current_round() >= 12
+    # the explicit constant, not a scan of the repo root: the order of
+    # queries() stays the one the round-14 artifact scan produced
+    assert current_round() == ROTATION_ROUND == 14
 
 
 def test_current_window_oracle_output_types_hash_safe(sf_dir):

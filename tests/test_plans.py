@@ -342,13 +342,14 @@ def test_bloom_prefilter_prunes_before_join_exchange(spark, sf_dir):
 
 def test_table_cache_returns_same_plan(spark, sf_dir):
     """table() plays the catalog role: same DataFrame object per
-    (session, sf_dir, name); invalidate_table_cache() drops it."""
-    from clickhouse_migrator_spark.tables import invalidate_table_cache, table
+    (session, sf_dir, name); memo.invalidate() drops it."""
+    from clickhouse_migrator_spark import memo
+    from clickhouse_migrator_spark.tables import table
 
     a = table(spark, sf_dir, "orders")
     b = table(spark, sf_dir, "orders")
     assert a is b
-    invalidate_table_cache()
+    memo.invalidate(sf_dir, ["table"])
     c = table(spark, sf_dir, "orders")
     assert c is not a
     assert c.schema == a.schema

@@ -162,25 +162,22 @@ def test_vec_memo_single_fill_and_invalidation(spark, sf_dir):
     — the second call returns the SAME cached frame (one scan+cast per
     session instead of 4–12 per query), the fill is disclosed through
     memo_events on the caller that paid it, a warm re-read reports
-    nothing, and the bench retry hook clears the memo."""
-    from clickhouse_migrator_spark import memo_events
-    from clickhouse_migrator_spark.operators.similarity import (
-        _VEC_CACHE,
-        _vecs,
-        invalidate_vec_cache,
-    )
+    nothing, and memo.invalidate clears the memo."""
+    from clickhouse_migrator_spark import memo, memo_events
+    from clickhouse_migrator_spark.operators.similarity import _vecs
 
-    invalidate_vec_cache()
+    memo.invalidate(names=["vec_arrays"])
     memo_events.drain_fills()
     first = _vecs(spark, sf_dir)
     fills = [e["memo"] for e in memo_events.drain_fills()]
     assert fills == ["vec_arrays"]
     assert _vecs(spark, sf_dir) is first  # memo hit, no second fill
     assert memo_events.drain_fills() == []
-    assert any(k[1] == sf_dir for k in _VEC_CACHE)
+    assert memo.entries(sf_dir, ["vec_arrays"])
 
-    invalidate_vec_cache()
-    assert not _VEC_CACHE
+    memo.invalidate(names=["vec_arrays"])
+    assert not memo.entries(names=["vec_arrays"])
+    assert not first.is_cached  # the frame was unpersisted with its entry
     # still answers after re-memoization, NULL embeddings excluded
     rows = _vecs(spark, sf_dir).collect()
     assert rows and all(r.v is not None for r in rows)

@@ -39,6 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from clickhouse_migrator_spark import memo  # noqa: E402
+
 
 def _rest(port: int, path: str):
     with urllib.request.urlopen(f"http://localhost:{port}/api/v1/{path}", timeout=10) as r:
@@ -103,15 +105,11 @@ def main() -> int:
     runs: list[dict] = []
     for i in range(n):
         # honest repeats: operators cache intermediates (e.g. the doc
-        # scan) and the dedup pack memoizes its localCheckpoint'd pair
-        # table per (session, corpus); a warm cache would measure
+        # scan) and the session memos hold substrates such as the
+        # localCheckpoint'd pair table; a warm cache would measure
         # reuse, not the plan
         spark.catalog.clearCache()
-        from clickhouse_migrator_spark.operators.dedup import (
-            invalidate_near_dup_cache,
-        )
-
-        invalidate_near_dup_cache(None)
+        memo.invalidate()
         seen = set(_stages(port, app_id))
         busy0, mine0 = _cpu_snapshot()
         t0 = time.perf_counter()
