@@ -186,23 +186,29 @@ def test_reset_receives_retried_query_name():
     assert seen == ["dedup_x"]
 
 
-def test_retry_clears_exactly_the_memos_its_first_attempt_filled():
+def test_memo_families_cleared_only_for_their_consumers():
     """A contention retry must not measure reuse of state the query
     itself warmed, so it clears the memos the first attempt's fill
     events name — and only those: an unrelated query's retry that
     dropped the pair memo once shifted the whole substrate fill onto
     the next dedup/graph consumer (graph_degree_distribution 0.47 ->
-    6.3 s at sf1).  A query that read warm memos and filled nothing
-    clears nothing.  Fills land on the query that paid them, and what
-    each retry cleared is part of the artifact."""
+    6.3 s at sf1).  A gram consumer outside dedup_* clears the shingle
+    and token memos but never the pair table; a token-only consumer
+    clears only the token memo; a query that read warm memos and filled
+    nothing clears nothing.  Fills land on the query that paid them,
+    and what each retry cleared is part of the artifact."""
     from clickhouse_migrator_spark import memo_events
 
-    fills = {"dedup_x": ["token_arrays", "shingles_k3", "near_dup_pairs"]}
-    script = {
-        "dedup_x": [(3.0, 50.0, False), (0.5, 0.0, False)],
-        "graph_degree_distribution": [(3.0, 50.0, False), (0.5, 0.0, False)],
-        "tpch_q1": [(1.0, 0.0, False)],
+    fills = {
+        "dedup_x": ["token_arrays", "shingles_k3", "near_dup_pairs"],
+        "pipeline_decontaminate_ngrams": ["token_arrays", "shingles_k3"],
+        "pipeline_span_dedup_c4": ["token_arrays"],
     }
+    script = {
+        name: [(3.0, 50.0, False), (0.5, 0.0, False)]
+        for name in (*fills, "graph_degree_distribution")
+    }
+    script["tpch_q1"] = [(1.0, 0.0, False)]
     base_run, _ = _fake_runner(script)
 
     def run_once(name, spec):
@@ -218,14 +224,64 @@ def test_retry_clears_exactly_the_memos_its_first_attempt_filled():
         cpus=32,
         reset_caches=lambda name, memos: resets.append((name, memos)),
     )
-    assert resets == [
-        ("dedup_x", ["near_dup_pairs", "shingles_k3", "token_arrays"]),
-        ("graph_degree_distribution", []),
-    ]
+    assert dict(resets) == {
+        "dedup_x": ["near_dup_pairs", "shingles_k3", "token_arrays"],
+        "pipeline_decontaminate_ngrams": ["shingles_k3", "token_arrays"],
+        "pipeline_span_dedup_c4": ["token_arrays"],
+        "graph_degree_distribution": [],
+    }
+    assert len(resets) == 4
     assert m["retry_memos_cleared"] == dict(resets)
-    # both attempts of dedup_x filled; nothing else paid a fill
-    assert [f["memo"] for f in m["memo_fills"]["dedup_x"]] == fills["dedup_x"] * 2
-    assert set(m["memo_fills"]) == {"dedup_x"}
+    # both attempts of each filling query filled; nothing else paid one
+    for name, memos in fills.items():
+        assert [f["memo"] for f in m["memo_fills"][name]] == memos * 2
+    assert set(m["memo_fills"]) == set(fills)
+
+
+def test_memo_consumer_lists_match_call_graph(spark, sf_dir):
+    """What a retry clears is read from the fill events, so the fill
+    events must track the operators' actual substrate reads: built on a
+    cold memo slate, every registered query outside dedup_*/graph_*
+    whose function body reaches shingles() must fill the shingle and
+    token memos, one that reaches only token_arrays() must fill the
+    token memo alone, neither may fill the pair memo, and a query that
+    reaches no memo fills nothing."""
+    import inspect
+
+    from clickhouse_migrator_spark import memo, memo_events
+    from clickhouse_migrator_spark.registry import all_specs
+
+    specs = all_specs()
+    shingle_users, token_users = set(), set()
+    for name, spec in specs.items():
+        if name.startswith(("dedup_", "graph_")):
+            continue
+        src = inspect.getsource(spec.fn)
+        if "shingles(" in src:
+            shingle_users.add(name)
+        elif "token_arrays(" in src:
+            token_users.add(name)
+    assert shingle_users and token_users
+
+    def cold_fills(name):
+        memo.invalidate(sf_dir)
+        memo_events.drain_fills()
+        specs[name].fn(spark, sf_dir)
+        return {e["memo"] for e in memo_events.drain_fills()}
+
+    for name in sorted(shingle_users):
+        got = cold_fills(name)
+        assert {"token_arrays", "shingles_k3"} <= got, name
+        assert "near_dup_pairs" not in got, name
+    for name in sorted(token_users):
+        assert cold_fills(name) == {"token_arrays"}, name
+    for innocent in (
+        "events_attribution_linear",
+        "agg_skew_kurt",
+        "tpch_q1_pricing_summary",
+        "pipeline_curriculum_phases",
+    ):
+        assert cold_fills(innocent) == set(), innocent
 
 
 def test_memo_fill_events_record_and_drain():
