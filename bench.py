@@ -6,7 +6,7 @@ last JSON line — BENCH_r02.json came back ``parsed: null`` because the
 full 346-entry per-query map blew past the captured window):
 
 * the COMPLETE per-query map is written to ``$SPARK_GRAFT_BENCH_OUT``
-  (default ``BENCH_LOCAL.json``) for committing alongside the round;
+  (default ``BENCH_LOCAL.json`` in the current directory; not tracked);
 * stdout ends with ONE COMPACT summary line — total seconds, query
   count, sf, and only the top-20 slowest queries — small enough to
   always sit inside the driver's tail capture.
@@ -80,16 +80,15 @@ def _cpu_snapshot() -> tuple[int, int]:
 
 
 # ── per-query contention self-healing (VERDICT r11 #3) ──────────────────────
-# The committed-artifact gate (tools/close_check.py, 5% whole-run budget)
-# protects what WE commit, but the driver's own bench runs were hostage
-# to host bursts: r11's driver artifact read +36% purely because ~190 s
-# of foreign CPU landed inside query windows (42 s of it inside one
-# 0.64 s query).  bench.py now heals per query: a measurement whose
-# foreign-CPU share exceeds the budget below is re-run ONCE (after
-# clearing session caches so the repeat is honest), the quieter of the
-# two measurements is kept, and the artifact discloses both plus a
-# `retried` count — contamination self-corrects instead of being
-# diagnosed after the fact.
+# A whole-run foreign-CPU budget can only reject a contaminated run
+# after the fact, and bench runs are hostage to host bursts: r11's
+# driver artifact read +36% purely because ~190 s of foreign CPU landed
+# inside query windows (42 s of it inside one 0.64 s query).  bench.py
+# therefore heals per query: a measurement whose foreign-CPU share
+# exceeds the budget below is re-run ONCE (after clearing session caches
+# so the repeat is honest), the quieter of the two measurements is kept,
+# and the artifact discloses both plus a `retried` count — contamination
+# self-corrects instead of being diagnosed after the fact.
 RETRY_FOREIGN_ABS_S = 1.0
 RETRY_FOREIGN_PCT = 0.25
 

@@ -75,7 +75,7 @@ def utrim(col: Column | str) -> Column:
     every text scan was VERDICT r9 #3; numbers in SCALE.md).  The two
     are character-for-character equal — btrim's end-of-string is the
     regex's ``\\z``, never ``$`` (no final-line-terminator divergence)
-    — pinned by ``tests/test_review_r8.py`` parity tests and the
+    — pinned by ``tests/test_edge_fuzz.py`` parity tests and the
     hypothesis equivalence test.  Pure JVM expression — stays in
     whole-stage codegen."""
     c = F.col(col) if isinstance(col, str) else col

@@ -300,6 +300,16 @@ def _path_of_location(loc: str | None) -> str | None:
     return None
 
 
+def _part_files(directory: str) -> list[str]:
+    """Sorted names of the parquet part files in ``directory``, skipping
+    the hidden (``.``/``_``-prefixed) files Spark's listing skips too."""
+    return sorted(
+        f
+        for f in os.listdir(directory)
+        if not f.startswith((".", "_")) and f.endswith(".parquet")
+    )
+
+
 def _append_claim_row(
     spark: SparkSession,
     claims_qual: str,
@@ -454,9 +464,7 @@ def _read_meta_rows(
         import pyarrow.parquet as pq
 
         out: list[dict] = []
-        for fname in sorted(os.listdir(loc)):
-            if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
-                continue
+        for fname in _part_files(loc):
             try:
                 with pq.ParquetFile(
                     os.path.join(loc, fname), coerce_int96_timestamp_unit="us"
@@ -529,9 +537,7 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
     import pyarrow.parquet as pq
 
     removed = 0
-    for fname in sorted(os.listdir(loc)):
-        if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
-            continue
+    for fname in _part_files(loc):
         path = os.path.join(loc, fname)
         try:
             t = pq.read_table(path, columns=["version"])
@@ -591,20 +597,12 @@ def _local_parquet_location(spark: SparkSession, qual: str) -> str | None:
     violate the bucket layout that bucket-pruned reads and shuffle-free
     joins rely on — those targets take the direct-execution fallback
     (at-least-once on crash-before-journal, see README scope note)."""
-    from urllib.parse import unquote, urlparse
-
     info = _describe_table(spark, qual)["detail"]
     if (info.get("Provider") or "").lower() != "parquet":
         return None
     if "Num Buckets" in info:
         return None
-    loc = info.get("Location")
-    if not loc:
-        return None
-    p = urlparse(loc)
-    if p.scheme in ("file", ""):
-        return unquote(p.path)
-    return None
+    return _path_of_location(info.get("Location"))
 
 
 def _partition_columns(spark: SparkSession, qual: str) -> list[str]:
@@ -803,9 +801,7 @@ def _publish_stage(spark: SparkSession, stage_qual: str, target_qual: str) -> No
         for rel in rels:
             src_dir, dst_dir = os.path.join(src, *rel), os.path.join(dst, *rel)
             os.makedirs(dst_dir, exist_ok=True)
-            for fname in sorted(os.listdir(src_dir)):
-                if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
-                    continue
+            for fname in _part_files(src_dir):
                 # 'part-stmt-' prefix: visible to Spark's file listing
                 # (a '_'-prefixed name would be treated as hidden)
                 os.rename(

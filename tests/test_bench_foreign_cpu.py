@@ -301,3 +301,20 @@ def test_memo_fill_events_record_and_drain():
     ]
     # drained: a second drain (the next query's) sees nothing
     assert memo_events.drain_fills() == []
+
+
+# ── SPARK_GRAFT_BENCH_ONLY names must all exist ──────────────────────────────
+
+
+def test_bench_only_unknown_name_exits_nonzero():
+    env = {**os.environ, "SPARK_GRAFT_BENCH_ONLY": "definitely_not_a_query"}
+    r = subprocess.run(
+        [sys.executable, "-c", "import bench; bench.main()"],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 2, r.stderr[-500:]
+    assert "unknown queries" in r.stderr

@@ -8,29 +8,11 @@ Longer sweeps: ``python tools/case_fuzz.py 50``."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
-from clickhouse_migrator_spark import migrate as M
 from tools.case_fuzz import run_epoch
 
 
-@pytest.fixture()
-def fuzzdb(spark, request):
-    name = "cfdb_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    prev = spark.catalog.currentDatabase()
-    spark.catalog.setCurrentDatabase(name)
-
-    def fin():
-        spark.catalog.setCurrentDatabase(prev)
-        spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-    request.addfinalizer(fin)
-    return name
-
-
 @pytest.mark.parametrize("seed", [1100, 1101, 1102])
-def test_identifier_case_fuzz(spark, fuzzdb, seed):
-    assert run_epoch(spark, fuzzdb, seed) == []
+def test_identifier_case_fuzz(spark, db, seed):
+    assert run_epoch(spark, db, seed) == []

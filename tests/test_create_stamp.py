@@ -20,28 +20,11 @@ would destroy data.
 from __future__ import annotations
 
 import json
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_migrator_spark import migrate as M
-
-
-@pytest.fixture()
-def db(spark, request):
-    name = "cdb_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    M.init_db(spark, name)
-    prev = spark.catalog.currentDatabase()
-    spark.catalog.setCurrentDatabase(name)
-
-    def fin():
-        spark.catalog.setCurrentDatabase(prev)
-        spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-    request.addfinalizer(fin)
-    return name
 
 
 # CREATE at index 1, sandwiched by non-idempotent statements so a
@@ -83,6 +66,7 @@ BOUNDARIES = [
 ]
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize(
     "stage,occ", BOUNDARIES, ids=[f"{s}-{i}" for s, i in BOUNDARIES]
 )
@@ -105,6 +89,7 @@ def test_create_crash_at_every_boundary_converges(
     assert M.migrate(spark, db, home) == 0  # converged
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_created_table_carries_stamp(spark, db, tmp_path):
     home = _setup(spark, db, tmp_path, version=6)
     assert M.migrate(spark, db, home) == 1
@@ -113,6 +98,7 @@ def test_created_table_carries_stamp(spark, db, tmp_path):
     assert (v, i) == ("6", "0") and len(md5) == 32
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_preexisting_unstamped_table_still_fail_stops(spark, db, tmp_path):
     """A table the user created OUTSIDE the runner has no stamp — the
     CREATE must keep the conservative TABLE_ALREADY_EXISTS fail-stop."""
@@ -122,6 +108,7 @@ def test_preexisting_unstamped_table_still_fail_stops(spark, db, tmp_path):
         M.migrate(spark, db, home)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_edited_script_stamp_mismatch_fail_stops(
     spark, db, tmp_path, monkeypatch
 ):
@@ -143,6 +130,7 @@ def test_edited_script_stamp_mismatch_fail_stops(
         M.migrate(spark, db, home)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_direct_execute_statement_never_stamps(spark, db):
     """Outside a migration there is no in-flight identity: a direct
     execute_statement CREATE gets layout props but NO stamp, and a

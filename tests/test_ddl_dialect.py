@@ -3,6 +3,7 @@ wrapper types, enums, decimals, arrays, RENAME/OPTIMIZE/TRUNCATE."""
 
 from __future__ import annotations
 
+from clickhouse_migrator_spark import ddl
 from clickhouse_migrator_spark.ddl import map_types, translate
 
 
@@ -300,3 +301,29 @@ def test_split_top_is_quote_aware(spark):
     finally:
         spark.catalog.setCurrentDatabase(prev)
         spark.sql(f"DROP DATABASE `{db}` CASCADE")
+
+
+# ── backslash-escaped literals stay opaque to the DDL scanners ───────────────
+
+
+def test_ddl_split_top_backslash_literal():
+    parts = ddl._split_top(r"a = 'x\',y', b = 2")
+    assert len(parts) == 2
+    assert parts[0].strip() == r"a = 'x\',y'"
+    assert parts[1].strip() == "b = 2"
+
+
+def test_ddl_literal_mask_backslash_roundtrip():
+    sql = r"CREATE TABLE t (s String DEFAULT 'it\'s a UInt32, ORDER BY x')"
+    masked, lits = ddl._mask_literal_contents(sql)
+    # the whole escaped literal collapsed into ONE slot — no stray
+    # fragment of the literal remains visible to keyword scans
+    assert "UInt32" not in masked and "ORDER BY x" not in masked
+    assert ddl._unmask_literal_contents(masked, lits) == sql
+
+
+def test_map_types_backslash_literal_content_untouched():
+    sql = r"s String DEFAULT 'keep UInt32 \' Nullable(Int8)'"
+    out = ddl.map_types(sql)
+    assert r"'keep UInt32 \' Nullable(Int8)'" in out
+    assert out.startswith("s STRING")

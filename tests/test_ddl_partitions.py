@@ -8,8 +8,6 @@ they are first-class engine operations (SURVEY.md §2.C)."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from clickhouse_migrator_spark import migrate as M
@@ -43,17 +41,6 @@ def test_classification():
 def test_partition_cond_tuple_mismatch():
     with pytest.raises(ValueError):
         M._partition_cond("(a, b)", "7")
-
-
-@pytest.fixture()
-def db(spark):
-    name = "partdb_" + uuid.uuid4().hex[:8]
-    prev = spark.catalog.currentDatabase()
-    M.create_db(spark, name)
-    spark.catalog.setCurrentDatabase(name)
-    yield name
-    spark.catalog.setCurrentDatabase(prev)
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
 
 
 def _mk_events(spark):
@@ -137,3 +124,27 @@ def test_replace_partition(spark, db):
     # ev's Jan rows replaced by ev2's Jan rows; Feb row kept; src intact
     assert {r.id for r in spark.table("ev").collect()} == {9, 3}
     assert spark.table("ev2").count() == 2
+
+
+# ── partition-expression comma split is quote-aware ──────────────────────────
+
+
+def test_migrate_split_top_commas_quote_aware():
+    assert M._split_top_commas("if(k = 'a,b', 0, 1), c") == [
+        "if(k = 'a,b', 0, 1)",
+        "c",
+    ]
+    assert M._split_top_commas("'x,y'") == ["'x,y'"]
+
+
+def test_partition_cond_with_literal_comma(spark):
+    view = "advice8_part"
+    spark.createDataFrame(
+        [("a,b", 1), ("z", 2)], "k string, v int"
+    ).createOrReplaceTempView(view)
+    try:
+        cond = M._partition_cond("(if(k = 'a,b', 0, 1))", "0")
+        kept = spark.table(view).filter(cond).collect()
+        assert [r.k for r in kept] == ["a,b"]
+    finally:
+        spark.catalog.dropTempView(view)

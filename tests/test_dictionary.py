@@ -4,8 +4,6 @@ MOVE PARTITION TO TABLE → append + copy-on-write delete."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from clickhouse_migrator_spark import migrate as M
@@ -27,17 +25,6 @@ def test_move_partition_classified():
     st = translate("ALTER TABLE a MOVE PARTITION 202001 TO TABLE b")
     assert st.kind == "move_partition"
     assert (st.table, st.rename_to, st.predicate) == ("a", "b", "202001")
-
-
-@pytest.fixture()
-def db(spark):
-    name = "dictdb_" + uuid.uuid4().hex[:8]
-    prev = spark.catalog.currentDatabase()
-    M.create_db(spark, name)
-    spark.catalog.setCurrentDatabase(name)
-    yield name
-    spark.catalog.setCurrentDatabase(prev)
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
 
 
 def test_dictget_end_to_end(spark, db):
@@ -98,3 +85,26 @@ def test_move_partition_end_to_end(spark, db):
 def test_dictget_unclosed_raises(spark):
     with pytest.raises(ValueError, match="unclosed dictGet"):
         M._rewrite_dictget(spark, "SELECT dictGet('d', 'a', x FROM t")
+
+
+# ── dictGet argument scan skips literal parens ───────────────────────────────
+
+
+def test_dictget_literal_paren_arg(spark, db):
+    M.execute_statement(
+        spark,
+        "CREATE TABLE kv (k String, val String) ENGINE = MergeTree ORDER BY (k)",
+    )
+    spark.sql("INSERT INTO kv VALUES ('a)', 'closed'), ('b', 'plain')")
+    M.execute_statement(
+        spark,
+        "CREATE DICTIONARY d8 (k String, val String) PRIMARY KEY k "
+        "SOURCE(CLICKHOUSE(TABLE 'kv')) LAYOUT(HASHED()) LIFETIME(300)",
+    )
+    # the key expression contains a ')' INSIDE a literal — the old
+    # depth scan closed the call there and mis-split the args
+    rows = M.execute_and_inflate(
+        spark,
+        "SELECT dictGet('d8', 'val', concat('a', ')')) AS v",
+    ).collect()
+    assert [r.v for r in rows] == ["closed"]

@@ -1,7 +1,7 @@
 """Data-edge fuzz regressions (VERDICT r7 #3).
 
-The full harness is ``tools/edge_fuzz.py`` (run at round close over
-all variants; artifact ``EDGE_FUZZ_r8.json``).  This file pins the
+The full harness is ``tools/edge_fuzz.py`` (runs all variants; the
+round-8 artifact is ``archive/EDGE_FUZZ_r8.json``).  This file pins the
 five REAL divergences the harness caught in round 8, as fast unit
 tests:
 
@@ -88,3 +88,57 @@ def test_approx_count_distinct_keeps_null_group(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0].o_orderpriority is None
     assert rows[0].n_customers_exact == 2
+
+
+# ── utrim end-of-string parity with DuckDB trim() ────────────────────────────
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "hello \n",       # Zs before a FINAL newline — $ stripped it
+        "hello\xa0\r",
+        "a \n b ",        # trailing Zs at true end — still stripped
+        "\xa0lead",
+    ],
+)
+def test_utrim_final_line_terminator_parity(spark, text):
+    got = (
+        spark.createDataFrame([(text,)], "t string")
+        .select(utrim(F.col("t")).alias("x"))
+        .collect()[0]
+        .x
+    )
+    want = duckdb.execute("SELECT trim(?)", [text]).fetchone()[0]
+    assert got == want, (repr(text), repr(got), repr(want))
+
+
+def test_utrim_btrim_equals_regex_spec_on_all_zs(spark):
+    """The r9 btrim fast path must equal the anchored \\p{Zs} regex
+    SPEC character-for-character: every Zs codepoint alone and layered
+    with non-Zs whitespace (tab/newline stay, exactly like DuckDB),
+    verified against DuckDB trim() itself in the same sweep."""
+    from clickhouse_migrator_spark.hashsafe import _UNICODE_WS_EDGES, _ZS_CHARS
+
+    assert len(_ZS_CHARS) == 17
+    cases = []
+    for z in _ZS_CHARS:
+        cases.extend(
+            [
+                f"{z}x{z}",
+                f"{z}{z}a b{z}\n",   # Zs then final newline: newline survives
+                f"\t{z}mid{z}\t",    # tab is NOT Zs: survives on both ends
+                f"{z}",
+                f"x{z}y",            # interior Zs untouched
+            ]
+        )
+    cases.extend(["", "\n", "   　 ", "no-ws"])
+    df = spark.createDataFrame([(c,) for c in cases], "t string").select(
+        F.col("t"),
+        utrim(F.col("t")).alias("fast"),
+        F.regexp_replace(F.col("t"), _UNICODE_WS_EDGES, "").alias("spec"),
+    )
+    for r in df.collect():
+        assert r.fast == r.spec, repr(r.t)
+        want = duckdb.execute("SELECT trim(?)", [r.t]).fetchone()[0]
+        assert r.fast == want, (repr(r.t), repr(r.fast), repr(want))

@@ -16,15 +16,6 @@ from clickhouse_migrator_spark import migrate as M
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
-@pytest.fixture()
-def db(spark):
-    name = "testdb_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    M.init_db(spark, name)
-    yield name
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-
 def _ledger_insert(spark, db, version, md5, script):
     spark.sql(
         f"INSERT INTO `{db}`.schema_versions VALUES "
@@ -39,12 +30,14 @@ def _manifest(spark, rows):
 # ── diff planner (reference tests :27-59) ───────────────────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_empty_ledger_returns_all_incoming(spark, db):
     inc = _manifest(spark, [(1, "a.sql", "m1"), (2, "b.sql", "m2")])
     out = M.migrations_to_apply(spark, db, inc)
     assert sorted(r.version for r in out.collect()) == [1, 2]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_deleted_migration_raises(spark, db):
     _ledger_insert(spark, db, 1, "m1", "a.sql")
     _ledger_insert(spark, db, 2, "m2", "b.sql")
@@ -53,6 +46,7 @@ def test_deleted_migration_raises(spark, db):
         M.migrations_to_apply(spark, db, inc)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_missing_migration_count_raises(spark, db):
     _ledger_insert(spark, db, 1, "m1", "a.sql")
     _ledger_insert(spark, db, 2, "m2", "b.sql")
@@ -61,6 +55,7 @@ def test_missing_migration_count_raises(spark, db):
         M.migrations_to_apply(spark, db, inc)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_edited_migration_raises(spark, db):
     _ledger_insert(spark, db, 1, "m1", "a.sql")
     inc = _manifest(spark, [(1, "a.sql", "EDITED")])
@@ -68,6 +63,7 @@ def test_edited_migration_raises(spark, db):
         M.migrations_to_apply(spark, db, inc)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_pending_set_is_anti_join(spark, db):
     _ledger_insert(spark, db, 1, "m1", "a.sql")
     inc = _manifest(spark, [(1, "a.sql", "m1"), (2, "b.sql", "m2"), (3, "c.sql", "m3")])
@@ -79,6 +75,7 @@ def test_pending_set_is_anti_join(spark, db):
 # ── end-to-end (reference tests :62-89) ─────────────────────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_e2e_sql_only(spark, db):
     n = M.migrate(spark, db, f"{FIXTURES}/migrations_sql", create_db_if_no_exists=False)
     assert n == 1
@@ -87,6 +84,7 @@ def test_e2e_sql_only(spark, db):
     assert M.migrate(spark, db, f"{FIXTURES}/migrations_sql", create_db_if_no_exists=False) == 0
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_e2e_mixed_sql_and_json(spark, db):
     n = M.migrate(spark, db, f"{FIXTURES}/migrations_mixed", create_db_if_no_exists=False)
     assert n == 2
@@ -122,6 +120,7 @@ def seq_csv(tmp_path):
     return str(p)
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize("queue_exec", [True, False])
 def test_sequential_dmls_via_runner(spark, db, seq_csv, queue_exec):
     """Dependent UPDATE chain: enabled=0 WHERE score>3000, then guard
@@ -153,6 +152,7 @@ def test_sequential_dmls_via_runner(spark, db, seq_csv, queue_exec):
         spark.catalog.setCurrentDatabase("default")
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_sequential_dmls_full_flow(spark, db, seq_csv):
     """Reference flow order: create table → ingest CSV → run dependent
     DMLs → assert exact counts (reference tests :91-118)."""
@@ -190,6 +190,7 @@ def test_duplicate_versions_rejected(tmp_path):
         M.scan_migrations(str(tmp_path))
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_cow_delete(spark, db):
     spark.catalog.setCurrentDatabase(db)
     try:
@@ -307,6 +308,7 @@ def test_ingest_jsoneachrow(spark, tmp_path):
         spark.sql(f"DROP DATABASE `{db}` CASCADE")
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_unsigned_default_wraps_two_complement(spark, db):
     """ClickHouse reinterprets a negative DEFAULT on an unsigned column
     as two's-complement (UInt32 DEFAULT -1 → 4294967295 — the value the
@@ -348,6 +350,7 @@ def _write_migrations(d, files):
     return str(d)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_mid_script_failure_rerun_semantics(spark, db, tmp_path):
     """Reference contract (`/root/reference/README.md:58`): a failure
     stops the run and no further version files execute.  SURVEY §4
@@ -401,6 +404,7 @@ def test_mid_script_failure_rerun_semantics(spark, db, tmp_path):
     assert ledger == [1, 2]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_fail_stop_skips_later_versions(spark, db, tmp_path):
     """A failing V2 must prevent V3 from ever executing (fail-stop in
     version order), and the claim taken for V2 is released so the rerun
@@ -428,6 +432,7 @@ def test_fail_stop_skips_later_versions(spark, db, tmp_path):
 # ── concurrent-runner guard (VERDICT r6 #3) ─────────────────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_concurrent_runners_exactly_one_applies(spark, db, tmp_path):
     """Two runners racing on the SAME pending set: the claims protocol
     must let exactly one apply each script (the loser either raises
@@ -485,6 +490,7 @@ def test_concurrent_runners_exactly_one_applies(spark, db, tmp_path):
     assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_stale_claim_blocks_and_clear_claims_recovers(spark, db, tmp_path):
     """A claim left behind by a crashed runner blocks the version; the
     documented operator recovery is clear_claims()."""
@@ -515,6 +521,7 @@ def _raw_tables(spark, db):
     }
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_cow_crash_in_drop_rename_window_recovers_forward(
     spark, db, tmp_path, monkeypatch, request
 ):
@@ -556,6 +563,7 @@ def test_cow_crash_in_drop_rename_window_recovers_forward(
     assert M.recover_cow(spark, db) == {}
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_cow_crash_before_drop_rolls_back(spark, db, tmp_path, monkeypatch, request):
     """A crash BEFORE the swap's DROP (e.g. mid-write or right after)
     leaves the user-visible table fully intact; recover_cow() must drop
@@ -591,6 +599,7 @@ def test_cow_crash_before_drop_rolls_back(spark, db, tmp_path, monkeypatch, requ
     assert sorted(r.v for r in spark.table(f"`{db}`.t_cowb").collect()) == [11, 12]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_release_preserves_rival_claims(spark, db, tmp_path):
     """Releases are append-only tombstones (ADVICE r7): a rival's claim
     row present while our runner releases its own claims must survive
@@ -616,6 +625,7 @@ def test_release_preserves_rival_claims(spark, db, tmp_path):
     assert [(r.version, r.owner) for r in live] == [(99, "rival")]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_cross_process_race_at_most_one_applies(spark, db, tmp_path, monkeypatch):
     """Simulate SEPARATE driver processes (no shared in-process lock) by
     neutralizing _CLAIM_LOCK: the claims protocol alone must guarantee
@@ -707,6 +717,7 @@ def _jobs_started(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_noop_migrate_starts_no_spark_jobs(spark, db):
     home = f"{FIXTURES}/migrations_mixed"
     assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 2
@@ -716,6 +727,7 @@ def test_noop_migrate_starts_no_spark_jobs(spark, db):
     assert (n, jobs) == (0, 0)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_create_only_version_starts_no_bookkeeping_jobs(spark, db, tmp_path, monkeypatch):
     """Diff, claim, journal, ledger append, compaction and release are
     all driver-side file operations: the only jobs a version may start
@@ -784,6 +796,7 @@ def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
         spark.sql(f"DROP DATABASE `{db}` CASCADE")
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_guards_count_duplicate_ledger_rows(spark, db):
     """The diff joins row for row, like the reference's outer merge: a
     duplicated ledger row counts twice in the missing-count guard and
@@ -810,3 +823,378 @@ def test_guards_count_duplicate_ledger_rows(spark, db):
         spark, db, _manifest(spark, [(1, "a.sql", "m1"), (2, "b.sql", "m2"), (3, "c.sql", "m3")])
     )
     assert [(r.version, r.script, r.md5) for r in out.collect()] == [(3, "c.sql", "m3")]
+
+
+# ── copy-on-write markers name the in-flight version and never outlive it ────
+
+
+def _write_script(tmp_path, name, body):
+    p = tmp_path / name
+    p.write_text(body)
+    return p
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_cow_crash_during_apply_reports_inflight_version(
+    spark, db, tmp_path, monkeypatch, request
+):
+    """Crash in the DROP→RENAME window while apply_migration is running
+    V7: recover_cow completes the rename AND reports "completed:V7".
+    Round 10 (statement journal): recovery also writes the statement's
+    journal row from the swap's markers, so the rerun RESUMES after the
+    completed mutation — exactly-once, no double-apply (this test
+    originally pinned the r9 disclosure-only semantics)."""
+    spark.catalog.setCurrentDatabase(db)
+    request.addfinalizer(lambda: spark.catalog.setCurrentDatabase("default"))
+    M.execute_statement(
+        spark, "CREATE TABLE t_adv9 (v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"INSERT INTO `{db}`.t_adv9 VALUES (1), (2)")
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write_script(home, "V7__bump.sql", "ALTER TABLE t_adv9 UPDATE v = v + 10 WHERE v > 0;")
+    manifest = M.manifest_df(spark, M.scan_migrations(str(home)))
+    pending = M.migrations_to_apply(spark, db, manifest)
+
+    def boom(stage):
+        if stage == "after_drop":
+            raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(M, "_crash_point", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        M.apply_migration(spark, db, pending)
+    monkeypatch.setattr(M, "_crash_point", lambda s: None)
+    # the crashed runner released nothing durable for the ledger…
+    assert (
+        spark.table(f"`{db}`.schema_versions").filter(F.col("version") == 7).count()
+        == 0
+    )
+    actions = M.recover_cow(spark, db)
+    assert actions == {"t_adv9": "completed:V7"}
+    # effects of V7 present, marker gone from the recovered table
+    assert sorted(r.v for r in spark.table(f"`{db}`.t_adv9").collect()) == [11, 12]
+    props = {
+        r["key"]: r["value"]
+        for r in spark.sql(f"SHOW TBLPROPERTIES `{db}`.t_adv9").collect()
+    }
+    assert M._COW_VERSION_PROP not in props
+    # crashed claim is stale-but-clearable, exactly the documented path
+    M.clear_claims(spark, db)
+    # the rerun SKIPS the journaled mutation (exactly-once, VERDICT r9
+    # #1) and only records the ledger row: values stay +10, not +20
+    pending2 = M.migrations_to_apply(spark, db, manifest)
+    assert M.apply_migration(spark, db, pending2) == 1
+    assert sorted(r.v for r in spark.table(f"`{db}`.t_adv9").collect()) == [11, 12]
+    assert (
+        spark.table(f"`{db}`.schema_versions").filter(F.col("version") == 7).count()
+        == 1
+    )
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_cow_marker_never_survives_successful_swap(spark, db, tmp_path, request):
+    """The in-flight marker is transient: a NON-crashed apply_migration
+    run leaves no cow_inflight_version property on the mutated table."""
+    spark.catalog.setCurrentDatabase(db)
+    request.addfinalizer(lambda: spark.catalog.setCurrentDatabase("default"))
+    M.execute_statement(
+        spark, "CREATE TABLE t_adv9b (v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"INSERT INTO `{db}`.t_adv9b VALUES (1)")
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write_script(home, "V1__bump.sql", "ALTER TABLE t_adv9b UPDATE v = v + 1 WHERE v > 0;")
+    manifest = M.manifest_df(spark, M.scan_migrations(str(home)))
+    assert M.apply_migration(spark, db, M.migrations_to_apply(spark, db, manifest)) == 1
+    props = {
+        r["key"]: r["value"]
+        for r in spark.sql(f"SHOW TBLPROPERTIES `{db}`.t_adv9b").collect()
+    }
+    assert M._COW_VERSION_PROP not in props
+    # direct execute_statement (no runner context) also stays unmarked
+    # on the crash-window temp:
+    assert getattr(M._INFLIGHT, "version", None) is None
+
+
+def _mk(spark, db, rows="(1, 10), (2, 30)"):
+    spark.sql(f"CREATE TABLE `{db}`.t (id BIGINT, v BIGINT) USING PARQUET")
+    spark.sql(f"INSERT INTO `{db}`.t VALUES {rows}")
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_cow_markers_excluded_from_carryover(spark, db):
+    _mk(spark, db)
+    qual = f"`{db}`.`t`"
+    # simulate a leaked marker from a crash between RENAME and UNSET
+    spark.sql(
+        f"ALTER TABLE {qual} SET TBLPROPERTIES "
+        f"('{M._COW_VERSION_PROP}' = '7', '{M._COW_STMT_PROP}' = '3', "
+        f"'clickhouse.order_by' = 'id')"
+    )
+    M.execute_statement(spark, "ALTER TABLE t UPDATE v = v + 1 WHERE v > 0")
+    props = M._table_props(spark, qual)
+    # the real layout prop survives the swap; the leaked markers do not
+    assert props.get("clickhouse.order_by") == "id"
+    assert M._COW_VERSION_PROP not in props
+    assert M._COW_STMT_PROP not in props
+
+
+# ── claim tombstones are keyed by claim_id ───────────────────────────────────
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_tombstone_does_not_shadow_future_claim_with_reused_pair(spark, db):
+    """Claim A for (version=5, owner=X) is released (tombstoned by its
+    claim_id).  A future claim B reusing the SAME (version, owner) pair
+    but a fresh claim_id must be LIVE — under the old (version, owner)
+    anti-join it was permanently invisible and two runners could both
+    proceed."""
+    qual = f"`{db}`.`{M.CLAIMS}`"
+    owner = "owner-reused"
+    M._append_claim_row(spark, qual, 5, owner, released=False, claim_id="claimA")
+    M._append_claim_row(spark, qual, 5, owner, released=True, claim_id="claimA")
+    assert M._live_claims(spark, qual).count() == 0
+    M._append_claim_row(spark, qual, 5, owner, released=False, claim_id="claimB")
+    live = M._live_claims(spark, qual).collect()
+    assert len(live) == 1 and live[0].claim_id == "claimB"
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_legacy_null_claim_id_rows_keep_pair_semantics(spark, db):
+    """Rows from a pre-claim_id build (claim_id NULL) are matched by
+    their (version, owner) composite — a NULL-id tombstone still
+    releases the NULL-id claim, and never touches a claim_id'd row."""
+    qual = f"`{db}`.`{M.CLAIMS}`"
+    M._append_claim_row(spark, qual, 9, "legacy", released=False, claim_id=None)
+    M._append_claim_row(spark, qual, 9, "modern", released=False, claim_id="c1")
+    M._append_claim_row(spark, qual, 9, "legacy", released=True, claim_id=None)
+    live = M._live_claims(spark, qual).collect()
+    assert len(live) == 1 and live[0].owner == "modern"
+
+
+def test_claims_schema_widens_claim_id_in_place(spark):
+    """A claims table created by an older build (no claim_id column) is
+    widened on _init_claims; existing rows read claim_id NULL (legacy
+    semantics)."""
+    name = "testdb_" + uuid.uuid4().hex[:8]
+    M.create_db(spark, name)
+    try:
+        spark.sql(
+            f"CREATE TABLE `{name}`.`{M.CLAIMS}` "
+            "(version BIGINT, owner STRING, started_at TIMESTAMP, "
+            "released BOOLEAN) USING PARQUET"
+        )
+        spark.sql(
+            f"INSERT INTO `{name}`.`{M.CLAIMS}` VALUES "
+            "(1, 'old', current_timestamp(), false)"
+        )
+        M._init_claims(spark, name)
+        qual = f"`{name}`.`{M.CLAIMS}`"
+        cols = {f.name for f in spark.table(qual).schema.fields}
+        assert "claim_id" in cols
+        rows = spark.table(qual).collect()
+        assert len(rows) == 1 and rows[0].claim_id is None
+        assert M._live_claims(spark, qual).count() == 1
+    finally:
+        spark.sql(f"DROP DATABASE `{name}` CASCADE")
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_apply_releases_use_fresh_claim_ids(spark, db, tmp_path, request):
+    """End-to-end: a two-script run leaves every claim tombstoned and
+    each claim row carries a distinct non-null claim_id whose tombstone
+    matches it exactly."""
+    spark.catalog.setCurrentDatabase(db)
+    request.addfinalizer(lambda: spark.catalog.setCurrentDatabase("default"))
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write_script(home, "V1__a.sql", "CREATE TABLE adv9_t1 (v Int64) ENGINE = Log;")
+    _write_script(home, "V2__b.sql", "CREATE TABLE adv9_t2 (v Int64) ENGINE = Log;")
+    manifest = M.manifest_df(spark, M.scan_migrations(str(home)))
+    assert M.apply_migration(spark, db, M.migrations_to_apply(spark, db, manifest)) == 2
+    qual = f"`{db}`.`{M.CLAIMS}`"
+    assert M._live_claims(spark, qual).count() == 0
+    rows = spark.table(qual).collect()
+    claims = [r for r in rows if not (r.released or False)]
+    tombs = [r for r in rows if (r.released or False)]
+    assert all(r.claim_id for r in rows)
+    assert len({r.claim_id for r in claims}) == len(claims) == 2
+    assert {r.claim_id for r in tombs} == {r.claim_id for r in claims}
+
+
+# ── table location URIs are percent-decoded ──────────────────────────────────
+
+
+def test_table_location_unquotes_percent_escapes(spark, tmp_path, monkeypatch):
+    # faked DESCRIBE output must carry the section header: since the
+    # r12 section-aware parse, a Location row is only metadata when it
+    # appears AFTER '# Detailed Table Information' (a data column named
+    # 'Location' no longer shadows it)
+    def _row(name, dtype):
+        r = type("_Row", (), {})()
+        r.col_name, r.data_type = name, dtype
+        return r
+
+    rows = [
+        _row("k", "bigint"),
+        _row("# Detailed Table Information", ""),
+        _row("Location", "file:/tmp/Application%20Support/wh/t"),
+        _row("Provider", "parquet"),
+    ]
+    monkeypatch.setattr(
+        M.SparkSession, "sql", lambda self, q: _FakeDF(rows), raising=False
+    )
+
+    class _FakeDF:
+        def __init__(self, rows):
+            self._rows = rows
+
+        def collect(self):
+            return self._rows
+
+    assert (
+        M._table_location(spark, "`x`.`t`")
+        == "/tmp/Application Support/wh/t"
+    )
+    assert (
+        M._local_parquet_location(spark, "`x`.`t`")
+        == "/tmp/Application Support/wh/t"
+    )
+
+
+# ── ALTER UPDATE/DELETE validate column names case-sensitively ───────────────
+
+
+def test_alter_update_unknown_column_raises(spark, db):
+    M.execute_statement(
+        spark, "CREATE TABLE t_rv (v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"INSERT INTO `{db}`.t_rv VALUES (1)")
+    with pytest.raises(ValueError, match="unknown column"):
+        M.execute_statement(spark, "ALTER TABLE t_rv UPDATE tpyo = 0 WHERE v > 0")
+    with pytest.raises(ValueError, match="twice"):
+        M.execute_statement(
+            spark, "ALTER TABLE t_rv UPDATE v = 1, v = 2 WHERE v > 0"
+        )
+    # case-only mismatch is rejected with a did-you-mean (ClickHouse
+    # column names are case-sensitive — ADVICE r9 superseded the r8
+    # case-insensitive resolution)
+    with pytest.raises(ValueError, match="did you mean 'v'"):
+        M.execute_statement(spark, "ALTER TABLE t_rv UPDATE V = v + 1 WHERE v > 0")
+    M.execute_statement(spark, "ALTER TABLE t_rv UPDATE v = v + 1 WHERE v > 0")
+    assert spark.table(f"`{db}`.t_rv").collect()[0].v == 2
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_rejects_case_mismatched_column(spark, db, request):
+    spark.catalog.setCurrentDatabase(db)
+    request.addfinalizer(lambda: spark.catalog.setCurrentDatabase("default"))
+    M.execute_statement(
+        spark,
+        "CREATE TABLE t_case (value Int64, k Int64) ENGINE = MergeTree ORDER BY tuple()",
+    )
+    spark.sql(f"INSERT INTO `{db}`.t_case VALUES (1, 1)")
+    with pytest.raises(ValueError, match=r"unknown column 'Value'.*did you mean 'value'"):
+        M.execute_statement(spark, "ALTER TABLE t_case UPDATE Value = 0 WHERE k = 1")
+    # untouched — the reject happened before any write
+    assert spark.table(f"`{db}`.t_case").collect()[0].value == 1
+    # exact-case spelling still applies
+    M.execute_statement(spark, "ALTER TABLE t_case UPDATE value = 7 WHERE k = 1")
+    assert spark.table(f"`{db}`.t_case").collect()[0].value == 7
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_case_mismatch_in_predicate_rejected(spark, db):
+    _mk(spark, db)
+    with pytest.raises(ValueError, match="did you mean 'v'"):
+        M.execute_statement(spark, "ALTER TABLE t UPDATE v = v + 1 WHERE V > 0")
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_case_mismatch_in_rhs_rejected(spark, db):
+    _mk(spark, db)
+    with pytest.raises(ValueError, match="did you mean 'v'"):
+        M.execute_statement(spark, "ALTER TABLE t UPDATE v = V + 1 WHERE v > 0")
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_delete_case_mismatch_rejected(spark, db):
+    _mk(spark, db)
+    with pytest.raises(ValueError, match="did you mean 'id'"):
+        M.execute_statement(spark, "ALTER TABLE t DELETE WHERE ID = 1")
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_exact_case_still_works(spark, db):
+    _mk(spark, db)
+    M.execute_statement(spark, "ALTER TABLE t UPDATE v = v + 1 WHERE v > 20")
+    got = {
+        (r.id, r.v) for r in spark.table(f"`{db}`.t").collect()
+    }
+    assert got == {(1, 10), (2, 31)}
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_function_names_not_misread_as_columns(spark, db):
+    # upper(...) is a FUNCTION; the validator must not reject it even
+    # though no column is named "upper"
+    spark.sql(f"CREATE TABLE `{db}`.s (id BIGINT, name STRING) USING PARQUET")
+    spark.sql(f"INSERT INTO `{db}`.s VALUES (1, 'a'), (2, 'b')")
+    M.execute_statement(
+        spark, "ALTER TABLE s UPDATE name = upper(name) WHERE id >= 1"
+    )
+    got = {r.name for r in spark.table(f"`{db}`.s").collect()}
+    assert got == {"A", "B"}
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_alter_update_string_literals_not_validated(spark, db):
+    # 'V' inside a string literal is data, not an identifier
+    spark.sql(f"CREATE TABLE `{db}`.s2 (id BIGINT, name STRING) USING PARQUET")
+    spark.sql(f"INSERT INTO `{db}`.s2 VALUES (1, 'x')")
+    M.execute_statement(spark, "ALTER TABLE s2 UPDATE name = 'V' WHERE id = 1")
+    assert spark.table(f"`{db}`.s2").collect()[0].name == "V"
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_update_with_subquery_predicate_not_rejected(spark, db):
+    M.execute_statement(
+        spark, "CREATE TABLE t_main (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    M.execute_statement(
+        spark, "CREATE TABLE t_other (K Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"INSERT INTO `{db}`.t_main VALUES (1, 10), (2, 20)")
+    spark.sql(f"INSERT INTO `{db}`.t_other VALUES (1)")
+    # `K` case-insensitively collides with t_main's `k` but belongs to
+    # t_other — r10 rejected this valid migration with ValueError
+    M.execute_statement(
+        spark,
+        "ALTER TABLE t_main UPDATE v = 99 WHERE k IN (SELECT K FROM t_other)",
+    )
+    assert sorted((r.k, r.v) for r in spark.table(f"`{db}`.t_main").collect()) == [
+        (1, 99),
+        (2, 20),
+    ]
+    M.execute_statement(
+        spark, "ALTER TABLE t_main DELETE WHERE k IN (SELECT K FROM t_other)"
+    )
+    assert [(r.k, r.v) for r in spark.table(f"`{db}`.t_main").collect()] == [(2, 20)]
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_case_mismatch_still_rejected_without_subquery(spark, db):
+    """The heuristic still fires on plain expressions — only subqueries
+    disable it."""
+    M.execute_statement(
+        spark, "CREATE TABLE t_case (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    with pytest.raises(ValueError, match="case-sensitive"):
+        M.execute_statement(spark, "ALTER TABLE t_case UPDATE v = 0 WHERE K = 1")
+
+
+def test_sql_keywords_in_predicate_not_treated_as_identifiers():
+    # SELECT/FROM/JOIN/etc. must never reach the column matcher
+    M._check_read_identifiers(
+        ["select_x", "k"], "k > 0 AND k < 10", "WHERE"
+    )  # no raise

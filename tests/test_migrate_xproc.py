@@ -28,7 +28,6 @@ import os
 import subprocess
 import sys
 import time
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,15 +37,7 @@ from clickhouse_migrator_spark import migrate as M
 RUNNER = os.path.join(os.path.dirname(__file__), "xproc_runner.py")
 
 
-@pytest.fixture()
-def db(spark):
-    name = "xprocdb_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    M.init_db(spark, name)
-    yield name
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-
+@pytest.mark.usefixtures("ledger_db")
 def test_real_two_process_race_at_most_one_applies(spark, db, tmp_path):
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     home = tmp_path / "mig"
@@ -136,6 +127,7 @@ def test_real_two_process_race_at_most_one_applies(spark, db, tmp_path):
 COMPACT_RUNNER = os.path.join(os.path.dirname(__file__), "xproc_compact_runner.py")
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_compaction_races_live_runner_appends_and_resume(spark, db, tmp_path):
     """VERDICT r11 #5: one runner compacts the journal from a second JVM
     while this process is mid-migration — appending journal rows,

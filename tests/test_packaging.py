@@ -12,10 +12,13 @@ public ``migrate`` API imports from OUTSIDE the repo directory.
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import tomllib
 import venv
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -225,3 +228,23 @@ def test_wheel_build_and_install_from_artifact(tmp_path):
     assert r.stdout.strip().startswith(pkg.__version__)
     for param in ("db_name", "migrations_home", "create_db_if_no_exists", "queue_exec"):
         assert param in r.stdout
+
+
+#: evidence files of the retired per-round process; they live in archive/
+ROUND_ARTIFACT = re.compile(
+    r"^(BENCH_|GATE_|CORRECTNESS_|PLAN_AUDIT_|[A-Z]+_FUZZ_|PERF_r|VERIFY_r|OPTIMIZATION_r)"
+)
+
+
+def test_no_round_artifacts_or_round_named_tests():
+    try:
+        r = subprocess.run(
+            ["git", "ls-files"], cwd=REPO, capture_output=True, text=True
+        )
+    except FileNotFoundError:
+        r = None
+    if r is None or r.returncode != 0:
+        pytest.skip("not a git checkout")
+    files = r.stdout.splitlines()
+    assert [f for f in files if "/" not in f and ROUND_ARTIFACT.match(f)] == []
+    assert [f for f in files if re.fullmatch(r"tests/test_\w+_r\d+\.py", f)] == []

@@ -58,3 +58,35 @@ def test_query_matches_oracle(name, spark, sf_dir, ducks):
     assert len(srows) == len(drows), f"rowcount spark={len(srows)} duckdb={len(drows)}"
     assert sorted(sdf.columns) == sorted(rel.columns)
     assert _rowset(sdf.columns, srows) == _rowset(rel.columns, drows)
+
+
+# ── mixed NULL/non-NULL map keys render in the same order on both engines ────
+
+
+def test_mixed_null_map_keys_render_consistently(spark, tmp_path):
+    """agg_summap_user_values on a user with a NULL-typed event: keys
+    skip the NULL (concat_ws), values keep it FIRST — identical to the
+    oracle's NULLS FIRST ordering."""
+    import __spark_entry__ as e
+
+    events = spark.createDataFrame(
+        [
+            (1, None, 1, None, 10.0, None),
+            (2, None, 1, "click", 5.0, None),
+            (3, None, 1, "view", 2.0, None),
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    events.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    sf = str(tmp_path)
+    row = e.queries()["agg_summap_user_values"](spark, sf).collect()[0]
+    con = duckdb.connect()
+    # Spark writes a parquet DIRECTORY; glob its part files for DuckDB
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
+    )
+    want = con.sql(e.oracle_sql()["agg_summap_user_values"]).fetchone()
+    assert (row.user_id, row.map_keys, row.map_values) == want
+    assert row.map_keys == "click,view"
+    assert row.map_values.split(",")[0] == "10.00"  # NULL key's sum first

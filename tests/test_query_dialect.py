@@ -6,22 +6,9 @@ they rewrite to native Spark plans."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from clickhouse_migrator_spark import migrate as M
-
-
-@pytest.fixture()
-def db(spark):
-    name = "qdial_" + uuid.uuid4().hex[:8]
-    prev = spark.catalog.currentDatabase()
-    M.create_db(spark, name)
-    spark.catalog.setCurrentDatabase(name)
-    yield name
-    spark.catalog.setCurrentDatabase(prev)
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
 
 
 def test_final_dedupes_replacing_table(spark, db):

@@ -13,7 +13,11 @@ from __future__ import annotations
 
 import pytest
 
-from clickhouse_migrator_spark.functions.select_funcs import rewrite_functions
+from clickhouse_migrator_spark import migrate as M
+from clickhouse_migrator_spark.functions.select_funcs import (
+    _string_mask,
+    rewrite_functions,
+)
 from clickhouse_migrator_spark.migrate import execute_and_inflate
 from clickhouse_migrator_spark.tables import table
 
@@ -1132,3 +1136,60 @@ def test_format_readable_quantity_top_tier_no_separator(spark):
     ).first()
     assert row.big == "1234.56 trillion"
     assert row.small == "1.50 trillion"
+
+
+# ── backslash escapes and LIMIT BY spellings inside literals are data ───────
+
+
+def test_string_mask_backslash_quote_stays_inside_literal():
+    q = r"SELECT 'it\'s data SETTINGS max_threads = 1' AS note, v FROM t"
+    mask = _string_mask(q)
+    lit_start = q.index("'")
+    lit_end = q.index("' AS") + 1
+    assert all(mask[i] for i in range(lit_start, lit_end))
+    assert not mask[q.index(" AS note") + 1]
+
+
+def test_settings_strip_is_backslash_literal_opaque():
+    q = r"SELECT 'it\'s data SETTINGS max_threads = 1' AS note, v FROM t"
+    assert M._rewrite_clauses(q) == q
+    assert rewrite_functions(q) == q
+
+
+def test_limit_by_spelling_inside_literal_after_order_by_is_data():
+    q = "SELECT id, v FROM t ORDER BY v, 'a LIMIT 9 BY z'"
+    assert M._rewrite_limit_by(q) == q
+
+
+def test_real_limit_by_with_literal_decoy_in_sort_key():
+    q = (
+        "SELECT id, g, v FROM t "
+        "ORDER BY if(s = 'x LIMIT 9 BY y', 0, 1), v LIMIT 2 BY g"
+    )
+    out = M._rewrite_limit_by(q)
+    # the window partitions on the REAL BY column and keeps the decoy
+    # literal intact inside the sort key
+    assert "PARTITION BY g" in out
+    assert "'x LIMIT 9 BY y'" in out
+    assert "__rn <= 2" in out
+
+
+def test_limit_by_execution_with_literal_decoy(spark):
+    pdf_view = "advice8_lb"
+    spark.createDataFrame(
+        [(i, i % 3, (i * 7) % 11, "x" if i % 2 else "y") for i in range(30)],
+        "id int, g int, v int, s string",
+    ).createOrReplaceTempView(pdf_view)
+    try:
+        out = M.execute_and_inflate(
+            spark,
+            f"SELECT id, g, v, s FROM {pdf_view} "
+            "ORDER BY if(s = 'x LIMIT 9 BY y', 0, 1), v, id LIMIT 2 BY g",
+        ).collect()
+        assert len(out) == 6  # 3 groups × 2
+        per_g = {}
+        for r in out:
+            per_g.setdefault(r.g, []).append(r)
+        assert all(len(v) == 2 for v in per_g.values())
+    finally:
+        spark.catalog.dropTempView(pdf_view)

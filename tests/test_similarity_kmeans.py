@@ -181,3 +181,45 @@ def test_vec_memo_single_fill_and_invalidation(spark, sf_dir):
     # still answers after re-memoization, NULL embeddings excluded
     rows = _vecs(spark, sf_dir).collect()
     assert rows and all(r.v is not None for r in rows)
+
+
+# ── the IVF recall audit counts each candidate once ──────────────────────────
+
+
+def test_ivf_recall_audit_catches_duplicated_candidate(spark):
+    """Tamper the full-probe approx result with the exact list-layout
+    bug the audit documents: one candidate duplicated, another
+    displaced.  Join-fanout used to let n_hit reach k (recall 1.0);
+    with the dedup, the displaced candidate is genuinely missing and
+    full_probe_recall_is_1 must come out False."""
+    from clickhouse_migrator_spark.operators import similarity as S
+
+    sf_dir = "/root/testdata/sf0.001"
+    real = S.ivf_kmeans_topk
+
+    def tampered(spark_, sf_dir_, nprobe):
+        df = real(spark_, sf_dir_, nprobe=nprobe)
+        rows = df.select("query_id", "vec_id").collect()
+        q0 = rows[0].query_id
+        q0_rows = [r for r in rows if r.query_id == q0]
+        assert len(q0_rows) >= 2
+        keep = [(r.query_id, r.vec_id) for r in rows]
+        # displace q0's last candidate with a duplicate of its first
+        keep.remove((q0, q0_rows[-1].vec_id))
+        keep.append((q0, q0_rows[0].vec_id))
+        return spark_.createDataFrame(keep, "query_id BIGINT, vec_id BIGINT")
+
+    S.ivf_kmeans_topk, orig = tampered, S.ivf_kmeans_topk
+    try:
+        row = S.sim_ivf_recall_audit(spark, sf_dir).collect()[0]
+    finally:
+        S.ivf_kmeans_topk = orig
+    assert row.full_probe_recall_is_1 is False
+
+
+def test_ivf_recall_audit_green_untampered(spark):
+    from clickhouse_migrator_spark.operators import similarity as S
+
+    row = S.sim_ivf_recall_audit(spark, "/root/testdata/sf0.001").collect()[0]
+    assert row.mean_recall_ge_floor is True
+    assert row.full_probe_recall_is_1 is True

@@ -1,9 +1,10 @@
 """Hygiene for the single-partition bounds registry (VERDICT r5 #7).
 
 Full missing/stale consistency against actual physical plans is
-enforced by ``tools/plan_audit.py`` (committed as PLAN_AUDIT_r{N} each
-round: zero UNJUSTIFIED flags, zero STALE entries).  These tests pin
-the cheap invariants so registry rot is caught in the unit suite."""
+enforced by ``tools/plan_audit.py`` (zero UNJUSTIFIED flags, zero
+STALE entries; earlier runs are in ``archive/PLAN_AUDIT_r*.txt``).
+These tests pin the cheap invariants so registry rot is caught in the
+unit suite."""
 
 from __future__ import annotations
 

@@ -31,28 +31,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_migrator_spark import migrate as M
-
-
-@pytest.fixture()
-def db(spark, request):
-    name = "sp_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    M.init_db(spark, name)
-    prev = spark.catalog.currentDatabase()
-    spark.catalog.setCurrentDatabase(name)
-
-    def fin():
-        spark.catalog.setCurrentDatabase(prev)
-        spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-    request.addfinalizer(fin)
-    return name
 
 
 def _mig(tmp_path, stmts, version=3):
@@ -99,6 +82,7 @@ def _no_stage_leftovers(spark, db):
 # ── the staged path engages, and the commit point holds ──────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_partitioned_insert_is_staged_not_fallback(spark, db, tmp_path, monkeypatch):
     """Pre-journal crash on a partitioned INSERT leaves the target EMPTY
     (the old fallback made the first attempt's rows durable — the
@@ -121,6 +105,7 @@ def test_partitioned_insert_is_staged_not_fallback(spark, db, tmp_path, monkeypa
     assert _no_stage_leftovers(spark, db)
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize("stage", ["after_journal", "mid_publish"])
 def test_partitioned_crash_windows_converge_exactly_once(
     spark, db, tmp_path, monkeypatch, stage
@@ -152,6 +137,7 @@ def test_partitioned_crash_windows_converge_exactly_once(
 # ── partition semantics: append, escaping, NULL, multi-level ─────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_append_into_existing_partition_merges_files(spark, db, tmp_path):
     _mk_pt(spark, db)
     spark.sql(f"INSERT INTO `{db}`.pt VALUES (0, 5, 'a')")  # pre-existing rows
@@ -167,6 +153,7 @@ def test_append_into_existing_partition_merges_files(spark, db, tmp_path):
     assert staged_files, "published file must carry the deterministic stage name"
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_escaped_and_null_partition_values(spark, db, tmp_path):
     """Values Spark %-escapes in directory names (':' → %3A) must round-
     trip through ADD PARTITION's unescaped spec, and a NULL partition
@@ -187,6 +174,7 @@ def test_escaped_and_null_partition_values(spark, db, tmp_path):
     assert _no_stage_leftovers(spark, db)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_hostile_partition_values_round_trip(spark, db, tmp_path):
     """'=' (the dir-syntax separator), a single quote (the ADD PARTITION
     literal delimiter, escaped via _sq), and '%' (the escape character
@@ -207,6 +195,7 @@ def test_hostile_partition_values_round_trip(spark, db, tmp_path):
     assert spark.table(f"`{db}`.pt").filter(F.col("d") == "100%").count() == 1
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_multilevel_partitions_exactly_once_across_crash(
     spark, db, tmp_path, monkeypatch
 ):
@@ -232,6 +221,7 @@ def test_multilevel_partitions_exactly_once_across_crash(
     assert _no_stage_leftovers(spark, db)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_insert_select_into_partitioned_target(spark, db, tmp_path):
     """INSERT ... SELECT (dynamic partitions from data) through the
     staged path, including a partition that already exists."""
@@ -248,6 +238,7 @@ def test_insert_select_into_partitioned_target(spark, db, tmp_path):
     assert spark.table(f"`{db}`.dst").count() == 3
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_migration_created_partitioned_table_takes_staged_inserts(
     spark, db, tmp_path, monkeypatch
 ):
@@ -313,6 +304,7 @@ def test_stage_partition_dirs_flat_and_nested(tmp_path):
 # ── r12 self-review regressions ──────────────────────────────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_underscore_leading_partition_column(spark, db, tmp_path):
     """A partition column named with a leading underscore (legal Spark
     identifier, e.g. _c0) must publish: the old shape-heuristic walk
@@ -331,6 +323,7 @@ def test_underscore_leading_partition_column(spark, db, tmp_path):
     assert _no_stage_leftovers(spark, db)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_backslash_partition_value(spark, db, tmp_path):
     """A backslash in a partition value must survive the dir-escape →
     SQL-literal round trip: Spark's default parser treats backslash as
@@ -347,6 +340,7 @@ def test_backslash_partition_value(spark, db, tmp_path):
     assert parts == {"d=a%5Cb"}
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_data_column_named_location_does_not_shadow_metadata(spark, db, tmp_path):
     """DESCRIBE parsing is section-aware: a data column literally named
     'Location' (schema rows come first) must not shadow the detailed
@@ -363,3 +357,118 @@ def test_data_column_named_location_does_not_shadow_metadata(spark, db, tmp_path
         (1, "somewhere")
     ]
     assert _no_stage_leftovers(spark, db)
+
+
+# ── bucketed targets fall back to direct execution (at-least-once) ───────────
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_local_parquet_location_refuses_bucketed_accepts_partitioned(spark, db):
+    spark.sql(
+        f"CREATE TABLE `{db}`.pt (k BIGINT, v BIGINT, d STRING) "
+        "USING PARQUET PARTITIONED BY (d)"
+    )
+    spark.sql(
+        f"CREATE TABLE `{db}`.bt (k BIGINT, v BIGINT) "
+        "USING PARQUET CLUSTERED BY (k) INTO 4 BUCKETS"
+    )
+    spark.sql(f"CREATE TABLE `{db}`.ft (k BIGINT, v BIGINT) USING PARQUET")
+    assert M._local_parquet_location(spark, f"`{db}`.`pt`") is not None
+    assert M._local_parquet_location(spark, f"`{db}`.`bt`") is None
+    assert M._local_parquet_location(spark, f"`{db}`.`ft`") is not None
+    assert M._partition_columns(spark, f"`{db}`.`pt`") == ["d"]
+    assert M._partition_columns(spark, f"`{db}`.`ft`") == []
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_runner_insert_into_partitioned_table_rows_visible(spark, db, tmp_path):
+    """The r11 regression shape: INSERT through the runner into a
+    PARTITIONED BY parquet table.  Rows must be visible afterwards (the
+    staged flat-rename publish made them invisible) and land in real
+    partition directories."""
+    spark.sql(
+        f"CREATE TABLE `{db}`.pt (k BIGINT, v BIGINT, d STRING) "
+        "USING PARQUET PARTITIONED BY (d)"
+    )
+    home = _mig(
+        tmp_path,
+        [
+            "INSERT INTO pt VALUES (1, 10, 'a'), (2, 20, 'b')",
+            "INSERT INTO pt VALUES (3, 30, 'a')",
+        ],
+    )
+    assert M.migrate(spark, db, home) == 1
+    got = sorted((r.k, r.v, r.d) for r in spark.table(f"`{db}`.pt").collect())
+    assert got == [(1, 10, "a"), (2, 20, "b"), (3, 30, "a")]
+    # partition pruning actually works on the written layout
+    assert (
+        spark.table(f"`{db}`.pt").filter(F.col("d") == "a").count() == 2
+    )
+    loc = M._table_location(spark, f"`{db}`.`pt`")
+    assert loc and os.path.isdir(os.path.join(loc, "d=a"))
+    # and no stage-table garbage
+    leftovers = [
+        r["tableName"]
+        for r in spark.sql(f"SHOW TABLES IN `{db}`").collect()
+        if r["tableName"].startswith(M._STAGE_PREFIX)
+    ]
+    assert leftovers == []
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_runner_insert_into_bucketed_table_rows_visible(spark, db, tmp_path):
+    spark.sql(
+        f"CREATE TABLE `{db}`.bt (k BIGINT, v BIGINT) "
+        "USING PARQUET CLUSTERED BY (k) INTO 4 BUCKETS"
+    )
+    home = _mig(tmp_path, ["INSERT INTO bt VALUES (1, 10), (2, 20)"], version=4)
+    assert M.migrate(spark, db, home) == 1
+    got = sorted((r.k, r.v) for r in spark.table(f"`{db}`.bt").collect())
+    assert got == [(1, 10), (2, 20)]
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_fallback_insert_crash_documented_at_least_once(
+    spark, db, tmp_path, monkeypatch
+):
+    """A fallback-path INSERT (bucketed target → direct execution; the
+    partitioned case graduated to the staged exactly-once path) crashed
+    after its effects but before the journal row: the rerun re-executes
+    it and the rows DUPLICATE — the documented at-least-once fallback
+    window (README), not silent corruption: every written row is a
+    faithful copy of the statement's rows."""
+    spark.sql(
+        f"CREATE TABLE `{db}`.pf (k BIGINT, v BIGINT, d STRING) "
+        "USING PARQUET CLUSTERED BY (k) INTO 2 BUCKETS"
+    )
+    home = _mig(tmp_path, ["INSERT INTO pf VALUES (1, 10, 'a')"], version=5)
+    fired = {"n": 0}
+
+    def boom(s):
+        if s == "after_stmt" and fired["n"] == 0:
+            fired["n"] += 1
+            raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(M, "_crash_point", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        M.migrate(spark, db, home)
+    monkeypatch.setattr(M, "_crash_point", lambda s: None)
+    # fallback = direct execution: the first attempt's rows ARE visible
+    assert spark.table(f"`{db}`.pf").count() == 1
+    M.clear_claims(spark, db)
+    assert M.migrate(spark, db, home) == 1
+    got = sorted((r.k, r.v, r.d) for r in spark.table(f"`{db}`.pf").collect())
+    assert got == [(1, 10, "a"), (1, 10, "a")]  # documented duplicate
+    assert M.migrate(spark, db, home) == 0  # and converged thereafter
+    assert spark.table(f"`{db}`.pf").count() == 2
+
+
+def test_readme_scopes_exactly_once_claim():
+    """README's exactly-once section must carry the scope qualifier:
+    flat local parquet only; partitioned/bucketed/non-local targets
+    fall back to at-least-once direct execution."""
+    with open(os.path.join(os.path.dirname(__file__), "..", "README.md")) as f:
+        txt = f.read().lower()
+    assert "exactly-once" in txt
+    assert "at-least-once" in txt
+    assert "partitioned" in txt and "bucketed" in txt

@@ -22,28 +22,11 @@ and asserts the final value shows each statement applied EXACTLY once.
 from __future__ import annotations
 
 import json
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_migrator_spark import migrate as M
-
-
-@pytest.fixture()
-def db(spark, request):
-    name = "jdb_" + uuid.uuid4().hex[:8]
-    M.create_db(spark, name)
-    M.init_db(spark, name)
-    prev = spark.catalog.currentDatabase()
-    spark.catalog.setCurrentDatabase(name)
-
-    def fin():
-        spark.catalog.setCurrentDatabase(prev)
-        spark.sql(f"DROP DATABASE `{name}` CASCADE")
-
-    request.addfinalizer(fin)
-    return name
 
 
 N_STMTS = 5
@@ -89,6 +72,7 @@ BOUNDARIES = [
 ] + [("before_drop", 2), ("after_drop", 2)]
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize("stage,occ", BOUNDARIES, ids=[f"{s}-{i}" for s, i in BOUNDARIES])
 def test_crash_at_every_boundary_converges_exactly_once(
     spark, db, tmp_path, monkeypatch, stage, occ
@@ -110,6 +94,7 @@ def test_crash_at_every_boundary_converges_exactly_once(
     assert _v(spark, db) == EXPECTED
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_transient_failure_resumes_same_script(spark, db, tmp_path, monkeypatch):
     """A statement that fails WITHOUT an edit (transient cause): the
     rerun of the identical script resumes at the failed statement —
@@ -134,6 +119,7 @@ def test_transient_failure_resumes_same_script(spark, db, tmp_path, monkeypatch)
     assert _v(spark, db) == EXPECTED
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_edited_script_discards_journal_whole_script_rerun(
     spark, db, tmp_path, monkeypatch
 ):
@@ -151,6 +137,7 @@ def test_edited_script_discards_journal_whole_script_rerun(
     assert _v(spark, db) == 1 + 2 * (1 + 10)
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_clear_journal_forces_full_reexecution(spark, db, tmp_path, monkeypatch):
     home, _ = _setup(spark, db, tmp_path)
     _arm(monkeypatch, "before_stmt", 3)
@@ -166,6 +153,7 @@ def test_clear_journal_forces_full_reexecution(spark, db, tmp_path, monkeypatch)
     assert _v(spark, db) == 1 + 2 * (1 + 10 + 100) + 1000 + 10000
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_recover_cow_live_table_reconciliation_action(
     spark, db, tmp_path, monkeypatch
 ):
@@ -190,6 +178,7 @@ def test_recover_cow_live_table_reconciliation_action(
     assert _v(spark, db) == EXPECTED
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_recover_cow_after_journal_crash_does_not_duplicate_row(
     spark, db, tmp_path, monkeypatch
 ):
@@ -212,6 +201,7 @@ def test_recover_cow_after_journal_crash_does_not_duplicate_row(
     assert _v(spark, db) == EXPECTED
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_pre_journal_orphan_falls_back_to_disclosure(spark, db, tmp_path):
     """An orphan temp from a pre-journal build (version marker only, no
     stmt/md5): recover_cow completes the rename and keeps the r9
@@ -268,6 +258,7 @@ INSERT_BOUNDARIES = [
 ] + [("mid_publish", 0), ("mid_publish", 2), ("mid_publish", 4)]
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize(
     "stage,occ", INSERT_BOUNDARIES, ids=[f"{s}-{i}" for s, i in INSERT_BOUNDARIES]
 )
@@ -321,6 +312,7 @@ MIXED_BOUNDARIES = [
 ]
 
 
+@pytest.mark.usefixtures("ledger_db")
 @pytest.mark.parametrize(
     "stage,occ", MIXED_BOUNDARIES, ids=[f"{s}-{i}" for s, i in MIXED_BOUNDARIES]
 )
@@ -344,6 +336,7 @@ def test_mixed_insert_cow_crash_sweep_exactly_once(
     assert _rows(spark, db, "jm") == MIXED_EXPECTED
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_self_referencing_insert_select_exactly_once(
     spark, db, tmp_path, monkeypatch
 ):
@@ -365,6 +358,7 @@ def test_self_referencing_insert_select_exactly_once(
     assert spark.table(f"`{db}`.js").count() == 4
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_insert_journal_append_failure_converges(spark, db, tmp_path, monkeypatch):
     """The journal append FAILS with a plain exception (not a crash)
     right after an INSERT staged: fail-stop releases the claim, the
@@ -390,6 +384,7 @@ def test_insert_journal_append_failure_converges(spark, db, tmp_path, monkeypatc
     assert _rows(spark, db, "jf") == [(1, 42)]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_staged_insert_column_list_fills_null(spark, db, tmp_path):
     """A column-subset INSERT through the runner behaves exactly like a
     direct execution (unspecified columns NULL) — the stage table is a
@@ -401,6 +396,7 @@ def test_staged_insert_column_list_fills_null(spark, db, tmp_path):
     assert [(r.k, r.v) for r in rows] == [(9, None)]
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_staged_insert_cross_database_target(spark, db, tmp_path, monkeypatch):
     """INSERT INTO a table in ANOTHER database: the stage lives in the
     migration db, the publish lands in the target db's table directory,
@@ -430,6 +426,7 @@ def test_staged_insert_cross_database_target(spark, db, tmp_path, monkeypatch):
         spark.sql(f"DROP DATABASE IF EXISTS `{other}` CASCADE")
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_staged_insert_into_missing_table_raises_user_error(spark, db, tmp_path):
     """An INSERT whose target doesn't exist must surface the analyzer's
     error (the staging gate returns None and direct execution raises),
@@ -451,6 +448,7 @@ def test_staged_insert_into_missing_table_raises_user_error(spark, db, tmp_path)
 # ── journal compaction (VERDICT r10 #6) ──────────────────────────────────────
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_journal_compacts_after_each_success(spark, db, tmp_path):
     """Journal rows for ledgered versions are removed automatically —
     the journal stays bounded (empty) across N successful migrations,
@@ -483,6 +481,7 @@ def test_journal_compacts_after_each_success(spark, db, tmp_path):
         assert files == [], f"journal files not compacted after V{v}: {files}"
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_compaction_preserves_failed_version_progress(
     spark, db, tmp_path, monkeypatch
 ):
@@ -527,6 +526,7 @@ def test_compaction_preserves_failed_version_progress(
     assert spark.table(jq).count() == 0  # V2 now ledgered → compacted
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_compaction_races_reader_and_appender(spark, db):
     """A rival compacting dead files concurrently with journal appends
     and reads never breaks either: whole-file removal only ever touches
@@ -568,6 +568,7 @@ def test_compaction_races_reader_and_appender(spark, db):
     assert dead == set()
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_journal_rows_keyed_by_md5_not_just_version(spark, db, tmp_path):
     """_journaled_stmts honors only rows whose md5 matches the current
     script body; rows from a different body are reported stale."""
@@ -581,3 +582,101 @@ def test_journal_rows_keyed_by_md5_not_just_version(spark, db, tmp_path):
     assert done == set() and stale is True
     done, stale = M._journaled_stmts(spark, jq, 5, "aaa")
     assert done == set() and stale is False
+
+
+# ── plain INSERT crash and journal-append failure reruns are exactly-once ────
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_after_stmt_crash_on_insert_no_duplicates(spark, db, tmp_path, monkeypatch):
+    """The exact fault shape ADVICE r11 #1 reproduced live under r10
+    semantics (rows duplicated): crash at after_stmt on a plain INSERT,
+    then the fuzzer's documented recovery (recover_cow + clear_claims +
+    rerun).  The exact-multiset model demands zero duplicates."""
+    M.execute_statement(
+        spark, "CREATE TABLE az (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    home = tmp_path / "mig"
+    home.mkdir()
+    (home / "V1__i.json").write_text(
+        json.dumps(["INSERT INTO az VALUES (0, 7), (1, 8), (2, 9)"])
+    )
+    fired = {"n": 0}
+
+    def boom(s):
+        if s == "after_stmt" and fired["n"] == 0:
+            fired["n"] += 1
+            raise RuntimeError("crashj")
+
+    monkeypatch.setattr(M, "_crash_point", boom)
+    with pytest.raises(RuntimeError, match="crashj"):
+        M.migrate(spark, db, str(home))
+    monkeypatch.setattr(M, "_crash_point", lambda s: None)
+    M.recover_cow(spark, db)
+    M.clear_claims(spark, db)
+    M.migrate(spark, db, str(home))
+    from collections import Counter
+
+    got = Counter((r.k, r.v) for r in spark.table(f"`{db}`.az").collect())
+    assert got == Counter({(0, 7): 1, (1, 8): 1, (2, 9): 1}), got
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_cow_journal_append_failure_plain_rerun_exactly_once(
+    spark, db, tmp_path, monkeypatch
+):
+    M.execute_statement(
+        spark, "CREATE TABLE ac (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"INSERT INTO `{db}`.ac VALUES (1, 1)")
+    home = tmp_path / "mig"
+    home.mkdir()
+    (home / "V2__u.json").write_text(
+        json.dumps(["ALTER TABLE ac UPDATE v = v + 5 WHERE k = 1"])
+    )
+    real = M._append_journal_row
+    state = {"fail": True}
+
+    def flaky(spark_, jq, version, i, md5, owner):
+        if state["fail"] and version == 2:
+            state["fail"] = False
+            raise RuntimeError("journal io error")
+        return real(spark_, jq, version, i, md5, owner)
+
+    monkeypatch.setattr(M, "_append_journal_row", flaky)
+    with pytest.raises(RuntimeError, match="journal io error"):
+        M.migrate(spark, db, str(home))
+    # the swap RENAME completed: the mutation is applied, markers linger
+    assert spark.table(f"`{db}`.ac").collect()[0].v == 6
+    props = M._table_props(spark, f"`{db}`.ac")
+    assert props.get(M._COW_VERSION_PROP) == "2"
+    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    # plain rerun — no recover_cow — must NOT re-apply v = v + 5
+    monkeypatch.setattr(M, "_append_journal_row", real)
+    assert M.migrate(spark, db, str(home)) == 1
+    assert spark.table(f"`{db}`.ac").collect()[0].v == 6
+    props = M._table_props(spark, f"`{db}`.ac")
+    assert all(k not in props for k in M._COW_MARKER_PROPS)
+    assert M.migrate(spark, db, str(home)) == 0
+    assert spark.table(f"`{db}`.ac").collect()[0].v == 6
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_reconcile_live_markers_returns_and_unsets(spark, db):
+    M.execute_statement(
+        spark, "CREATE TABLE ar (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(
+        f"ALTER TABLE `{db}`.ar SET TBLPROPERTIES "
+        f"('{M._COW_VERSION_PROP}' = '4', '{M._COW_STMT_PROP}' = '1', "
+        f"'{M._COW_MD5_PROP}' = 'mmm')"
+    )
+    out = M._reconcile_live_markers(spark, db)
+    assert out == {"ar": "4"}
+    done, _ = M._journaled_stmts(spark, f"`{db}`.`{M.JOURNAL}`", 4, "mmm")
+    assert done == {1}
+    assert all(
+        k not in M._table_props(spark, f"`{db}`.ar") for k in M._COW_MARKER_PROPS
+    )
+    # idempotent: second pass finds nothing and adds nothing
+    assert M._reconcile_live_markers(spark, db) == {}

@@ -100,3 +100,18 @@ def test_stateful_sessionizer_matches_batch(spark, sf_dir, tmp_path):
     )
     expected = events_session_30m(spark, sf_dir)
     assert _rowset(got) == _rowset(expected)
+
+
+# ── sessionizer docstring documents the trailing window ──────────────────────
+
+
+def test_sessionizer_docstring_documents_trailing_window():
+    from clickhouse_migrator_spark.streaming.events_stream import (
+        sessionize_with_state,
+    )
+
+    doc = sessionize_with_state.__doc__ or ""
+    assert "does NOT flush every open session" in doc
+    assert "sentinel" in doc
+    # the old false claim must be gone
+    assert "flushes every open\n    session" not in doc

@@ -4,22 +4,7 @@ mutation-poll target, `/root/reference/clickhouse_migrate/migrate.py:64`)."""
 
 from __future__ import annotations
 
-import uuid
-
-import pytest
-
 from clickhouse_migrator_spark import migrate as M
-
-
-@pytest.fixture()
-def db(spark):
-    name = "sysdb_" + uuid.uuid4().hex[:8]
-    prev = spark.catalog.currentDatabase()
-    M.create_db(spark, name)
-    spark.catalog.setCurrentDatabase(name)
-    yield name
-    spark.catalog.setCurrentDatabase(prev)
-    spark.sql(f"DROP DATABASE `{name}` CASCADE")
 
 
 def test_system_tables_lists_engine(spark, db):

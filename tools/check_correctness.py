@@ -5,11 +5,6 @@ DuckDB over the same parquet fixtures, then compares row count, sorted
 column names, and order-insensitive values.  Use while iterating:
 
     python tools/check_correctness.py [--pandas] [sf_dir] [query ...]
-    python tools/check_correctness.py --json GATE_r2.json [sf_dir]
-
-``--json FILE`` additionally writes the full per-query result table in
-the driver's CORRECTNESS_r{N}.json row format, committed per round so
-the builder-gate and driver-sample can be diffed without re-running.
 
 ``--pandas`` switches to the DRIVER-FAITHFUL collection path: Spark
 results through ``toPandas()`` and oracle results through DuckDB
@@ -17,16 +12,13 @@ results through ``toPandas()`` and oracle results through DuckDB
 path hands both sides to Python ints, which structurally cannot see
 the divergence the driver's pandas hash sees — e.g. a DuckDB HUGEINT
 sum becomes float64 ``6.0`` in pandas while Spark emits int64 ``6``
-(VERDICT r4 "what's wrong #2", red for three rounds).  Run the close
-gate BOTH ways.
+(VERDICT r4 "what's wrong #2", red for three rounds).  Run the gate
+BOTH ways.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import subprocess
 import sys
 from datetime import date, datetime
 
@@ -98,20 +90,11 @@ def _rowset(cols, rows, norm=_norm):
 
 def main() -> int:
     argv = sys.argv[1:]
-    json_out = None
-    pandas_mode = False
-    if argv and argv[0] == "--pandas":
-        pandas_mode = True
-        argv = argv[1:]
-    if argv and argv[0] == "--json":
-        json_out = argv[1]
-        argv = argv[2:]
-    if argv and argv[0] == "--pandas":
-        pandas_mode = True
+    pandas_mode = bool(argv) and argv[0] == "--pandas"
+    if pandas_mode:
         argv = argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    results: dict[str, dict] = {}
 
     con = duckdb.connect()
     for t in TABLES:
@@ -134,16 +117,9 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failed.append(name)
-            results[name] = {"rows_match": None, "schema_match": None,
-                             "hash_match": None, "spark_rows": None,
-                             "oracle_rows": None, "err": f"spark: {e}"[:300]}
             continue
         if name not in oracles:
             print(f"ok?   {name}: rows-only ({len(srows)} rows, no oracle)")
-            results[name] = {"rows_match": None, "schema_match": None,
-                             "hash_match": None, "spark_rows": len(srows),
-                             "oracle_rows": None, "err": None,
-                             "rows_only": True}
             continue
         try:
             rel = con.sql(oracles[name])
@@ -155,9 +131,6 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failed.append(name)
-            results[name] = {"rows_match": None, "schema_match": None,
-                             "hash_match": None, "spark_rows": len(srows),
-                             "oracle_rows": None, "err": f"duckdb: {e}"[:300]}
             continue
         problems = []
         if len(srows) != len(drows):
@@ -175,46 +148,7 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"PASS  {name} ({len(srows)} rows)")
-        results[name] = {
-            "rows_match": len(srows) == len(drows),
-            "schema_match": sorted(scols) == sorted(dcols),
-            "hash_match": not problems,
-            "spark_rows": len(srows),
-            "oracle_rows": len(drows),
-            "err": None,
-        }
 
-    if json_out:
-        # provenance stamp: records WHICH tree generated the artifact, so
-        # a byte-identical regeneration on a later tree still produces a
-        # new committed blob — without it, close_check's per-file
-        # freshness rule (last commit touching the artifact must postdate
-        # the last code commit) can never be satisfied by an honest
-        # regeneration whose per-query results did not change
-        try:
-            head = subprocess.run(
-                ["git", "rev-parse", "HEAD"],
-                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                capture_output=True, text=True,
-            ).stdout.strip()
-        except Exception:
-            head = None
-        # CONVENTION (ADVICE r12 #4): keys starting with "_" are
-        # artifact metadata, not query rows — any consumer iterating
-        # this file as {query: row} must skip them.  n_queries counts
-        # the real rows; kept a sibling (not a nested format change)
-        # so earlier rounds' GATE files stay shape-compatible.
-        results["_meta"] = {
-            "generated_on_commit": head or "unknown",
-            "sf_dir": sf_dir,
-            "mode": "pandas" if pandas_mode else "fetchall",
-            "n_queries": len(results),
-            "n_failures": len(failed),
-        }
-        with open(json_out, "w") as f:
-            json.dump(results, f, indent=1)
-        n_rows = sum(1 for k in results if not k.startswith("_"))
-        print(f"wrote {json_out} ({n_rows} rows + _meta)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
 

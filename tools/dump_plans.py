@@ -1,5 +1,6 @@
 """Dump `.explain("formatted")` for a list of registered queries to
-files — the round's plans/<round>/<query>_{before,after}.txt evidence.
+files — before/after plan evidence (earlier rounds' dumps are in
+archive/plans/<round>/<query>_{before,after}.txt).
 
 Usage:
     python tools/dump_plans.py OUTDIR SUFFIX query [query ...]

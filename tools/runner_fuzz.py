@@ -625,12 +625,12 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
 
 def main() -> int:
     """CLI: ``runner_fuzz.py [n_scenarios] [seed] [--artifact PATH
-    [--xproc K]]``.  Artifact mode (the round-close gate, VERDICT r9
-    #5) records the seed for replay, runs the scenarios WITHOUT
-    fail-fast (counting failures), optionally runs the REAL two-process
-    racer K times as a fuzz stage (pytest tests/test_migrate_xproc.py
-    in a fresh interpreter each run), and writes one JSON artifact that
-    tools/close_check.py asserts on (seed present, zero failures)."""
+    [--xproc K]]``.  Artifact mode (VERDICT r9 #5) records the seed
+    for replay, runs the scenarios WITHOUT fail-fast (counting
+    failures), optionally runs the REAL two-process racer K times as a
+    fuzz stage (pytest tests/test_migrate_xproc.py in a fresh
+    interpreter each run), and writes one JSON artifact with the seed
+    and the failure count."""
     import time as _time
 
     args = [a for a in sys.argv[1:]]
