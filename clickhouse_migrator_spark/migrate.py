@@ -14,7 +14,8 @@ Spark-native deltas from the reference:
   ``clickhouse_driver.Client`` → ``SparkSession``.
 - pandas metadata frames → driver-side rows: the ledger, claims and
   journal are read and appended as parquet part files on the driver
-  (:func:`_read_meta_rows`, :func:`_atomic_append`), and the diff is a
+  (:func:`_read_meta_rows`, :func:`_append_meta_row`) in the directory
+  each entry point resolves once (:func:`_meta`), and the diff is a
   guard pass over those rows (full outer join + three guards +
   projection, reference `migrate.py:26-41`) — the bookkeeping starts
   no Spark job.  Manifest and pending set are local frames.
@@ -279,8 +280,8 @@ def _describe_table(spark: SparkSession, qual: str) -> dict:
 
 def _table_location(spark: SparkSession, qual: str) -> str | None:
     """Local-filesystem path of a table's storage location, or None for
-    non-file schemes (object stores — where the atomic-rename append
-    below doesn't apply and a transactional table format is the
+    non-file schemes (HDFS, object stores — where the atomic-rename
+    append doesn't apply and a transactional table format is the
     production answer, per README)."""
     return _path_of_location(_describe_table(spark, qual)["detail"].get("Location"))
 
@@ -310,9 +311,36 @@ def _part_files(directory: str) -> list[str]:
     )
 
 
+@dataclass(frozen=True)
+class _MetaTable:
+    """A runner metadata table (ledger, claims or journal): its quoted
+    catalog name and the local directory holding its part files."""
+
+    qual: str
+    path: str
+
+
+def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
+    """Resolve metadata table ``name`` of ``db_name`` with one DESCRIBE.
+    Each entry point resolves the tables it touches once and passes the
+    handle down, so its readers and appenders never ask the catalog
+    again.  The runner reads and appends these tables as local part
+    files, so any other location is refused: on HDFS or an object store
+    replace them with a transactional table format (README)."""
+    qual = f"`{db_name}`.`{name}`"
+    path = _table_location(spark, qual)
+    if path is None or not os.path.isdir(path):
+        raise ValueError(
+            f"runner metadata table {qual} is not in a local directory; the "
+            "runner needs a local-filesystem warehouse for its ledger, claims "
+            "and journal"
+        )
+    return _MetaTable(qual, path)
+
+
 def _append_claim_row(
     spark: SparkSession,
-    claims_qual: str,
+    claims: _MetaTable,
     version: int,
     owner: str,
     released: bool,
@@ -332,13 +360,12 @@ def _append_claim_row(
     durable-before-visible contract the guard needs.
 
     Scope of the atomicity claim: ``os.rename`` is a LOCAL-filesystem
-    syscall, so the rename path applies only to POSIX local
-    warehouses.  ``_table_location`` returns ``None`` for ``hdfs://``
-    and object-store schemes, routing those to the Spark
-    ``insertInto`` fallback below — which still has the shared
-    ``_temporary`` staging race this function exists to eliminate.  On
-    HDFS/object stores a transactional table format (Delta/Iceberg) is
-    the production answer, per README.
+    syscall, so the metadata tables must live in POSIX local
+    directories — :func:`_meta` refuses ``hdfs://`` and object-store
+    locations rather than fall back to a Spark insert, which would
+    bring back the shared ``_temporary`` staging race.  On HDFS/object
+    stores a transactional table format (Delta/Iceberg) is the
+    production answer, per README.
 
     ``claim_id`` uniquely identifies one claim row; its release
     tombstone carries the SAME claim_id, and :func:`_live_claim_rows`
@@ -353,7 +380,7 @@ def _append_claim_row(
         "released": bool(released),
         "claim_id": claim_id,
     }
-    _append_meta_row(spark, claims_qual, CLAIMS_SCHEMA, "claim", row)
+    _append_meta_row(spark, claims, CLAIMS_SCHEMA, "claim", row)
 
 
 def _arrow_table(rows: list[dict], schema: StructType):
@@ -373,39 +400,24 @@ def _arrow_table(rows: list[dict], schema: StructType):
 
 
 def _append_meta_row(
-    spark: SparkSession, qual: str, schema: StructType, prefix: str, row: dict
+    spark: SparkSession, meta: _MetaTable, schema: StructType, prefix: str, row: dict
 ) -> None:
-    """Append ONE row to a runner metadata table through the atomic
-    rename; a non-local warehouse falls back to a Spark insert, which
-    keeps the shared ``_temporary`` race (see :func:`_append_claim_row`)."""
-    table = _arrow_table([row], schema)
-    if not _atomic_append(spark, qual, table, prefix):
-        # pragma: no cover - hdfs/object-store fallback
-        spark.createDataFrame(table).write.mode("append").insertInto(qual)
-
-
-def _atomic_append(spark: SparkSession, qual: str, table, prefix: str) -> bool:
-    """Append ONE pyarrow table of rows to a parquet catalog table via
-    the private-staging atomic rename (durable-before-visible; see
-    :func:`_append_claim_row` for why a Spark insert can't be used
-    here).  Returns False when the table is not on a local filesystem —
-    the caller falls back to a Spark insert."""
-    loc = _table_location(spark, qual)
-    if loc is None:
-        return False
+    """Append ONE row to a runner metadata table via the private-staging
+    atomic rename (durable-before-visible; see :func:`_append_claim_row`
+    for why a Spark insert can't be used here), then refresh the table
+    so Spark readers in this session see the new file."""
     import pyarrow.parquet as pq
 
     fname = f"part-{prefix}-{uuid.uuid4().hex}.snappy.parquet"
-    tmp = os.path.join(loc, "." + fname)
-    pq.write_table(table, tmp, compression="snappy")
-    os.rename(tmp, os.path.join(loc, fname))
-    spark.catalog.refreshTable(qual)
-    return True
+    tmp = os.path.join(meta.path, "." + fname)
+    pq.write_table(_arrow_table([row], schema), tmp, compression="snappy")
+    os.rename(tmp, os.path.join(meta.path, fname))
+    spark.catalog.refreshTable(meta.qual)
 
 
 def _append_journal_row(
     spark: SparkSession,
-    journal_qual: str,
+    journal: _MetaTable,
     version: int,
     stmt_index: int,
     md5: str,
@@ -421,11 +433,11 @@ def _append_journal_row(
         "owner": owner,
         "created_at": datetime.datetime.now(datetime.timezone.utc),
     }
-    _append_meta_row(spark, journal_qual, JOURNAL_SCHEMA, "journal", row)
+    _append_meta_row(spark, journal, JOURNAL_SCHEMA, "journal", row)
 
 
 def _append_ledger_row(
-    spark: SparkSession, ledger_qual: str, version: int, md5: str, script: str
+    spark: SparkSession, ledger: _MetaTable, version: int, md5: str, script: str
 ) -> None:
     """Record script ``version`` as applied.  Same atomic-rename channel
     and POSIX-local-warehouse scope as the claims table, so a rival
@@ -437,76 +449,82 @@ def _append_ledger_row(
         "script": script,
         "created_at": datetime.datetime.now(datetime.timezone.utc),
     }
-    _append_meta_row(spark, ledger_qual, LEDGER_SCHEMA, "ledger", row)
+    _append_meta_row(spark, ledger, LEDGER_SCHEMA, "ledger", row)
 
 
-def _read_meta_rows(
-    spark: SparkSession, qual: str, columns: list[str]
-) -> list[dict]:
+def _read_meta_rows(meta: _MetaTable, columns: list[str]) -> list[dict]:
     """All rows of a runner metadata table (ledger, claims, journal) as
-    plain dicts holding ``columns``, read on the driver without a Spark
-    job.  On a local-filesystem warehouse the read is a direct pyarrow
-    scan of the table's part files that TOLERATES files vanishing
-    between the listing and the read — :func:`compact_journal` removes
-    whole dead part files, and a rival runner's read racing a compaction
-    must see the surviving rows, not die on FileNotFound (every append
-    is one whole file, so every surviving row is intact).
+    plain dicts holding ``columns``: a direct pyarrow scan of the
+    table's part files on the driver, with no Spark job and no catalog
+    call.  It TOLERATES files vanishing between the listing and the
+    read — :func:`compact_journal` removes whole dead part files, and a
+    rival runner's read racing a compaction must see the surviving
+    rows, not die on FileNotFound (every append is one whole file, so
+    every surviving row is intact).
 
     A column a file lacks reads as ``None``: claims files written before
     ``_init_claims`` widened the table have no ``released``/``claim_id``
     and mean exactly that (live claim, legacy key).  INT96 timestamps
     (what a Spark ``INSERT INTO`` writes) come back as microsecond
-    datetimes, the type a Spark frame built from these rows accepts.
-    Non-local warehouses read through Spark."""
-    spark.catalog.refreshTable(qual)
-    loc = _table_location(spark, qual)
-    if loc is not None and os.path.isdir(loc):
-        import pyarrow.parquet as pq
+    datetimes, the type a Spark frame built from these rows accepts."""
+    import pyarrow.parquet as pq
 
-        out: list[dict] = []
-        for fname in _part_files(loc):
-            try:
-                with pq.ParquetFile(
-                    os.path.join(loc, fname), coerce_int96_timestamp_unit="us"
-                ) as f:
-                    have = f.schema_arrow.names
-                    table = f.read(columns=[c for c in columns if c in have])
-            except (FileNotFoundError, OSError):  # compacted mid-listing
-                continue
-            out.extend({c: r.get(c) for c in columns} for r in table.to_pylist())
-        return out
-    df = spark.table(qual)  # pragma: no cover - hdfs/object-store fallback
-    have = [c for c in columns if c in df.columns]
-    return [{c: r.asDict().get(c) for c in columns} for r in df.select(*have).collect()]
+    out: list[dict] = []
+    for fname in _part_files(meta.path):
+        try:
+            with pq.ParquetFile(
+                os.path.join(meta.path, fname), coerce_int96_timestamp_unit="us"
+            ) as f:
+                have = f.schema_arrow.names
+                table = f.read(columns=[c for c in columns if c in have])
+        except (FileNotFoundError, OSError):  # compacted mid-listing
+            continue
+        out.extend({c: r.get(c) for c in columns} for r in table.to_pylist())
+    return out
 
 
-def _read_journal_rows(spark: SparkSession, journal_qual: str) -> list[dict]:
+def _read_journal_rows(journal: _MetaTable) -> list[dict]:
     """All journal rows as plain dicts (see :func:`_read_meta_rows`)."""
-    return _read_meta_rows(
-        spark, journal_qual, ["version", "stmt_index", "md5", "owner"]
-    )
+    return _read_meta_rows(journal, ["version", "stmt_index", "md5", "owner"])
 
 
-def _ledgered_versions(spark: SparkSession, ledger_qual: str) -> set[int]:
+def _ledgered_versions(ledger: _MetaTable) -> set[int]:
     return {
         int(r["version"])
-        for r in _read_meta_rows(spark, ledger_qual, ["version"])
+        for r in _read_meta_rows(ledger, ["version"])
         if r["version"] is not None
     }
 
 
 def _journaled_stmts(
-    spark: SparkSession, journal_qual: str, version: int, md5: str
+    journal: _MetaTable, version: int, md5: str
 ) -> tuple[set[int], bool]:
     """(indices journaled for this exact script, whether STALE rows for
     the version exist under a DIFFERENT md5).  Stale rows mean the
     script was edited after a partial run — statement indices no longer
     correspond, so the caller discards the progress and falls back to
     the documented whole-script rerun semantics."""
-    rows = [r for r in _read_journal_rows(spark, journal_qual) if int(r["version"]) == version]
+    rows = [r for r in _read_journal_rows(journal) if int(r["version"]) == version]
     done = {int(r["stmt_index"]) for r in rows if r["md5"] == md5}
     stale = any(r["md5"] != md5 for r in rows)
     return done, stale
+
+
+def _journal_late(
+    spark: SparkSession,
+    journal: _MetaTable,
+    version: str,
+    stmt: str,
+    md5: str,
+    owner: str,
+) -> None:
+    """Append the journal row of a COW swap whose effects are durable
+    but whose own journal append was lost (a crash or a failed append
+    after the swap's RENAME), unless the row is already there.  The
+    arguments are the swap's marker values."""
+    done, _stale = _journaled_stmts(journal, int(version), md5)
+    if int(stmt) not in done:
+        _append_journal_row(spark, journal, int(version), int(stmt), md5, owner)
 
 
 def compact_journal(spark: SparkSession, db_name: str) -> int:
@@ -525,20 +543,16 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
     :func:`_read_journal_rows`, which tolerates a file vanishing
     between its listing and its read — a concurrent compaction is
     invisible to them.  Called automatically by the runner after each
-    ledger append; safe as an operator step any time.  No-op on
-    non-local warehouses.  Returns the number of rows removed."""
+    ledger append; safe as an operator step any time.  Returns the
+    number of rows removed."""
     _init_journal(spark, db_name)
-    journal_qual = f"`{db_name}`.`{JOURNAL}`"
-    ledger_qual = f"`{db_name}`.`{LEDGER}`"
-    loc = _table_location(spark, journal_qual)
-    if loc is None or not os.path.isdir(loc):
-        return 0  # pragma: no cover - hdfs/object-store: no compaction
-    ledgered = _ledgered_versions(spark, ledger_qual)
+    journal = _meta(spark, db_name, JOURNAL)
+    ledgered = _ledgered_versions(_meta(spark, db_name, LEDGER))
     import pyarrow.parquet as pq
 
     removed = 0
-    for fname in _part_files(loc):
-        path = os.path.join(loc, fname)
+    for fname in _part_files(journal.path):
+        path = os.path.join(journal.path, fname)
         try:
             t = pq.read_table(path, columns=["version"])
         except (FileNotFoundError, OSError):  # a rival compacted it
@@ -551,7 +565,7 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
             except FileNotFoundError:  # pragma: no cover - rival won
                 pass
     if removed:
-        spark.catalog.refreshTable(journal_qual)
+        spark.catalog.refreshTable(journal.qual)
     return removed
 
 
@@ -583,9 +597,9 @@ _INSERT_TARGET_RE = re.compile(
 
 def _local_parquet_location(spark: SparkSession, qual: str) -> str | None:
     """Local-filesystem path of an UNBUCKETED PARQUET catalog table, or
-    None (view, non-parquet provider, object-store scheme — the staged-
-    append path doesn't apply there, same scope rule as
-    :func:`_atomic_append`).
+    None (view, non-parquet provider, HDFS or object-store scheme — the
+    staged-append path publishes by ``os.rename``, so it applies only to
+    local directories; other targets execute direct).
 
     Partitioned targets are ELIGIBLE (round 12): the stage clone
     mirrors the target's partitioning and :func:`_publish_stage`
@@ -642,14 +656,14 @@ def _sql_str_lit(spark: SparkSession, value: str) -> str:
 
 
 def _journal_owner_map(
-    spark: SparkSession, journal_qual: str, version: int, md5: str
+    journal: _MetaTable, version: int, md5: str
 ) -> dict[int, str]:
     """stmt_index → owner of the journal row that committed it for this
     exact script body (first row wins; a duplicate row — e.g. one
     written late by recover_cow racing the runner's own append — is
     harmless, both attest the same fact)."""
     out: dict[int, str] = {}
-    for r in _read_journal_rows(spark, journal_qual):
+    for r in _read_journal_rows(journal):
         if int(r["version"]) == version and r["md5"] == md5:
             out.setdefault(int(r["stmt_index"]), r["owner"])
     return out
@@ -815,7 +829,9 @@ def _publish_stage(spark: SparkSession, stage_qual: str, target_qual: str) -> No
     spark.catalog.refreshTable(target_qual)
 
 
-def _reconcile_staged(spark: SparkSession, db_name: str, version: int, md5: str) -> None:
+def _reconcile_staged(
+    spark: SparkSession, db_name: str, journal: _MetaTable, version: int, md5: str
+) -> None:
     """Finish or garbage-collect insert stages left behind by a crashed
     or failed earlier run of ``version`` (called before the statement
     loop).  A stage whose (stmt_index, owner) matches a journal row for
@@ -839,8 +855,7 @@ def _reconcile_staged(spark: SparkSession, db_name: str, version: int, md5: str)
         stages.append((name, owner, i))
     if not stages:
         return  # common case: clean run, no journal read needed
-    journal_qual = f"`{db_name}`.`{JOURNAL}`"
-    owners = _journal_owner_map(spark, journal_qual, version, md5)
+    owners = _journal_owner_map(journal, version, md5)
     for name, owner, i in stages:
         stage_qual = f"`{db_name}`.`{name}`"
         target = _table_props(spark, stage_qual).get(_STAGE_TARGET_PROP)
@@ -857,10 +872,10 @@ def clear_journal(spark: SparkSession, db_name: str) -> int:
     instead).  Single-operator step like :func:`clear_claims`.  Returns
     the number of rows cleared."""
     _init_journal(spark, db_name)
-    qual = f"`{db_name}`.`{JOURNAL}`"
-    n = len(_read_journal_rows(spark, qual))
+    journal = _meta(spark, db_name, JOURNAL)
+    n = len(_read_journal_rows(journal))
     if n:
-        _swap_overwrite(spark, f"{db_name}.{JOURNAL}", spark.table(qual).limit(0))
+        _swap_overwrite(spark, f"{db_name}.{JOURNAL}", spark.table(journal.qual).limit(0))
     return n
 
 
@@ -889,9 +904,9 @@ def _live_claim_rows(rows: list[dict]) -> list[dict]:
     return [r for r in rows if not r["released"] and key(r) not in tombs]
 
 
-def _live_claims(spark: SparkSession, claims_qual: str) -> DataFrame:
+def _live_claims(spark: SparkSession, claims: _MetaTable) -> DataFrame:
     """The live claims (:func:`_live_claim_rows`) as a local frame."""
-    rows = _read_meta_rows(spark, claims_qual, CLAIMS_SCHEMA.fieldNames())
+    rows = _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
     return _local_frame(spark, _live_claim_rows(rows), CLAIMS_SCHEMA)
 
 
@@ -904,10 +919,10 @@ def clear_claims(spark: SparkSession, db_name: str) -> int:
     Flyway's ``repair``): run it only when no runner is live, so the
     compaction rewrite races nothing."""
     _init_claims(spark, db_name)
-    qual = f"`{db_name}`.`{CLAIMS}`"
-    rows = _read_meta_rows(spark, qual, CLAIMS_SCHEMA.fieldNames())
+    claims = _meta(spark, db_name, CLAIMS)
+    rows = _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
     if rows:
-        _swap_overwrite(spark, f"{db_name}.{CLAIMS}", spark.table(qual).limit(0))
+        _swap_overwrite(spark, f"{db_name}.{CLAIMS}", spark.table(claims.qual).limit(0))
     return len(_live_claim_rows(rows))
 
 
@@ -972,7 +987,7 @@ def migrations_to_apply(
     it did in the Spark join.  The pending set comes back as a local
     frame with the manifest's columns."""
     ledger = _read_meta_rows(
-        spark, f"`{db_name}`.`{LEDGER}`", ["version", "script", "md5"]
+        _meta(spark, db_name, LEDGER), ["version", "script", "md5"]
     )
     if not ledger:
         return incoming
@@ -1269,21 +1284,7 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
     ADVICE r9 flagged on the success path)."""
     actions: dict[str, str] = {}
     _init_journal(spark, db_name)
-    journal_qual = f"`{db_name}`.`{JOURNAL}`"
-
-    def _journal_late(version: str, stmt: str | None, md5: str | None) -> bool:
-        """Append the journal row for a swap whose effects are durable
-        but whose journal append was lost to the crash.  Returns True
-        when the rerun will resume after the statement."""
-        if stmt is None or md5 is None:
-            return False  # pre-journal temp (old build): disclosure only
-        done, _stale = _journaled_stmts(spark, journal_qual, int(version), md5)
-        if int(stmt) not in done:
-            _append_journal_row(
-                spark, journal_qual, int(version), int(stmt), md5, "recover_cow"
-            )
-        return True
-
+    journal = _meta(spark, db_name, JOURNAL)
     for r in spark.sql(f"SHOW TABLES IN `{db_name}`").collect():
         if r["isTemporary"] or not r["tableName"].startswith("__cow_"):
             continue
@@ -1306,9 +1307,12 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
                 f"ALTER TABLE `{db_name}`.`{orphan}` RENAME TO `{db_name}`.`{target}`"
             )
             if inflight is not None:
-                journaled = _journal_late(
-                    inflight, props.get(_COW_STMT_PROP), props.get(_COW_MD5_PROP)
-                )
+                stmt, md5 = props.get(_COW_STMT_PROP), props.get(_COW_MD5_PROP)
+                # a temp from a pre-journal build has no statement
+                # markers: disclosure only, the rerun re-executes
+                journaled = stmt is not None and md5 is not None
+                if journaled:
+                    _journal_late(spark, journal, inflight, stmt, md5, "recover_cow")
                 keys = ", ".join(f"'{k}'" for k in _COW_MARKER_PROPS if k in props)
                 spark.sql(
                     f"ALTER TABLE `{db_name}`.`{target}` "
@@ -1319,9 +1323,8 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
                     print(
                         f"recover_cow: completed the interrupted swap of "
                         f"`{db_name}`.`{target}` and journaled statement "
-                        f"{props.get(_COW_STMT_PROP)} of migration "
-                        f"V{inflight} — the rerun resumes AFTER it "
-                        "(exactly-once)"
+                        f"{stmt} of migration V{inflight} — the rerun "
+                        "resumes AFTER it (exactly-once)"
                     )
                 else:
                     print(
@@ -1358,8 +1361,7 @@ def _reconcile_live_markers(spark: SparkSession, db_name: str) -> dict[str, str]
     rows collapse in :func:`_journaled_stmts`' set; UNSET is idempotent).
     Returns {table: version} for each table reconciled."""
     out: dict[str, str] = {}
-    _init_journal(spark, db_name)
-    journal_qual = f"`{db_name}`.`{JOURNAL}`"
+    journal = None  # resolved at the first marker: the common run has none
     for r in spark.sql(f"SHOW TABLES IN `{db_name}`").collect():
         name = r["tableName"]
         if r["isTemporary"] or name.startswith("__cow_"):
@@ -1370,19 +1372,16 @@ def _reconcile_live_markers(spark: SparkSession, db_name: str) -> dict[str, str]
             continue
         stmt, md5 = props.get(_COW_STMT_PROP), props.get(_COW_MD5_PROP)
         if stmt is not None and md5 is not None:
-            done, _stale = _journaled_stmts(spark, journal_qual, int(inflight), md5)
-            if int(stmt) not in done:
-                _append_journal_row(
-                    spark, journal_qual, int(inflight), int(stmt), md5, "reconcile"
-                )
+            journal = journal or _meta(spark, db_name, JOURNAL)
+            _journal_late(spark, journal, inflight, stmt, md5, "reconcile")
         keys = ", ".join(f"'{k}'" for k in _COW_MARKER_PROPS if k in props)
         spark.sql(f"ALTER TABLE `{db_name}`.`{name}` UNSET TBLPROPERTIES ({keys})")
         out[name] = inflight
     return out
 
 
-_CREATE_NAME_RE = __import__("re").compile(
-    r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.`]+)", __import__("re").I
+_CREATE_NAME_RE = re.compile(
+    r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.`]+)", re.I
 )
 
 
@@ -1451,6 +1450,16 @@ def _partition_cond(partition_by: str, value: str):
             e = F.expr(piece)
         cond = cond & e.eqNullSafe(F.expr(x))
     return cond
+
+
+def _named_partition(spark: SparkSession, st: Statement) -> tuple[str, "F.Column"]:
+    """(qualified ``st.table``, row predicate of the partition ``st``
+    names), from the table's recorded ``clickhouse.partition_by``."""
+    qual = _qualify(spark, st.table)
+    pby = _table_props(spark, qual).get("clickhouse.partition_by")
+    if not pby:
+        raise ValueError(f"table {st.table} has no recorded PARTITION BY")
+    return qual, _partition_cond(pby, st.predicate)
 
 
 def _detached_parts_name(qual: str) -> str:
@@ -1748,11 +1757,7 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
         )
         return None
     if st.kind == "move_partition":
-        src_q = _qualify(spark, st.table)
-        pby = _table_props(spark, src_q).get("clickhouse.partition_by")
-        if not pby:
-            raise ValueError(f"table {st.table} has no recorded PARTITION BY")
-        cond = _partition_cond(pby, st.predicate)
+        src_q, cond = _named_partition(spark, st)
         df = spark.table(src_q)
         dst_q = _qualify(spark, st.rename_to)
         df.filter(cond).write.insertInto(dst_q.replace("`", ""))
@@ -1761,11 +1766,7 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
     if st.kind == "replace_partition":
         # dst := (dst minus partition) ∪ (src's partition copy); one
         # union rewrite + atomic swap, src untouched
-        dst_q = _qualify(spark, st.table)
-        pby = _table_props(spark, dst_q).get("clickhouse.partition_by")
-        if not pby:
-            raise ValueError(f"table {st.table} has no recorded PARTITION BY")
-        cond = _partition_cond(pby, st.predicate)
+        dst_q, cond = _named_partition(spark, st)
         src = spark.table(_qualify(spark, st.rename_to))
         dst = spark.table(dst_q)
         _swap_overwrite(
@@ -1780,11 +1781,7 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
         spark.sql(f"TRUNCATE TABLE {_qualify(spark, st.table)}")
         return None
     if st.kind in ("drop_partition", "detach_partition", "attach_partition"):
-        qual = _qualify(spark, st.table)
-        pby = _table_props(spark, qual).get("clickhouse.partition_by")
-        if not pby:
-            raise ValueError(f"table {st.table} has no recorded PARTITION BY")
-        cond = _partition_cond(pby, st.predicate)
+        qual, cond = _named_partition(spark, st)
         det = _detached_parts_name(qual)
         if st.kind == "attach_partition":
             # restore parked rows: append the matching slice back, then
@@ -1803,11 +1800,7 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
         _swap_overwrite(spark, st.table, df.filter(~cond))
         return None
     if st.kind == "clear_column_in_partition":
-        qual = _qualify(spark, st.table)
-        pby = _table_props(spark, qual).get("clickhouse.partition_by")
-        if not pby:
-            raise ValueError(f"table {st.table} has no recorded PARTITION BY")
-        cond = _partition_cond(pby, st.predicate)
+        qual, cond = _named_partition(spark, st)
         df = spark.table(qual)
         if st.column not in df.columns and st.if_exists:
             return None  # CLEAR COLUMN IF EXISTS: no-op
@@ -1822,43 +1815,23 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
             ),
         )
         return None
-    if st.kind == "detach_table":
+    if st.kind in ("detach_table", "attach_table"):
         qual = _qualify(spark, st.table)
         db, t = qual.split(".", 1)
         hidden = f"{db}.`__dettable_{t.strip('`')}`"
-        spark.sql(f"ALTER TABLE {qual} RENAME TO {hidden}")
+        src, dst = (qual, hidden) if st.kind == "detach_table" else (hidden, qual)
+        spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
         return None
-    if st.kind == "attach_table":
-        qual = _qualify(spark, st.table)
-        db, t = qual.split(".", 1)
-        hidden = f"{db}.`__dettable_{t.strip('`')}`"
-        spark.sql(f"ALTER TABLE {hidden} RENAME TO {qual}")
-        return None
-    if st.kind == "set_ttl":
-        # TTL is a retention policy, not storage DDL: record it; the
-        # enforcement pass is apply_ttl() run by a maintenance job
-        qual = _qualify(spark, st.table)
-        spark.sql(
-            f"ALTER TABLE {qual} SET TBLPROPERTIES ('clickhouse.ttl' = '{_sq(st.ttl)}')"
-        )
-        return None
-    if st.kind == "set_order_by":
-        # MODIFY ORDER BY updates the recorded sort key that OPTIMIZE …
-        # DEDUPLICATE and FINAL resolve against (same recording as the
-        # CREATE-time clause)
-        qual = _qualify(spark, st.table)
-        spark.sql(
-            f"ALTER TABLE {qual} SET TBLPROPERTIES "
-            f"('clickhouse.order_by' = '{_sq(st.order_by)}')"
-        )
-        return None
-    if st.kind == "set_sample_by":
-        # MODIFY SAMPLE BY updates the recorded sampling key that
+    if st.kind in ("set_ttl", "set_order_by", "set_sample_by"):
+        # update the recorded property the CREATE-time clause sets: TTL
+        # is a retention policy (enforced by apply_ttl() in a maintenance
+        # job, not storage DDL); ORDER BY is the sort key OPTIMIZE …
+        # DEDUPLICATE and FINAL resolve against; SAMPLE BY is the key
         # `FROM t SAMPLE k` resolves against
-        qual = _qualify(spark, st.table)
+        prop = st.kind[len("set_") :]
         spark.sql(
-            f"ALTER TABLE {qual} SET TBLPROPERTIES "
-            f"('clickhouse.sample_by' = '{_sq(st.sample_by)}')"
+            f"ALTER TABLE {_qualify(spark, st.table)} SET TBLPROPERTIES "
+            f"('clickhouse.{prop}' = '{_sq(getattr(st, prop))}')"
         )
         return None
     raise ValueError(f"unknown statement kind: {st.kind}")  # pragma: no cover
@@ -1908,21 +1881,24 @@ def apply_migration(
     (:func:`recover_cow` / :func:`_reconcile_live_markers`), and plain
     INSERTs run staged — rows become visible only after their journal
     row is durable (:func:`_maybe_stage_insert`), so a crash on either
-    side of the commit reconciles without duplication.  On non-local
-    warehouses (hdfs/object stores) inserts fall back to direct
-    execution and keep the documented at-least-once-on-crash window —
-    a transactional table format is the production answer there.
+    side of the commit reconciles without duplication.  INSERTs into
+    a table that is not a local unbucketed parquet table (hdfs/object
+    stores, bucketed targets) execute direct and keep the documented
+    at-least-once-on-crash window; the metadata tables themselves must
+    be local (:func:`_meta`) — a transactional table format is the
+    production answer elsewhere.
     Editing the failed script changes its md5 and discards the
     journaled progress — the documented whole-script rerun semantics
     for edited scripts.
     """
-    applied = 0
-    _init_claims(spark, db_name)
-    ledger_qual = f"`{db_name}`.`{LEDGER}`"
-    claims_qual = f"`{db_name}`.`{CLAIMS}`"
-    owner = uuid.uuid4().hex
     # a Python sort: ``orderBy`` starts 3 Spark jobs even on a few rows
-    for row in sorted(migrations.collect(), key=lambda r: r.version):
+    pending = sorted(migrations.collect(), key=lambda r: r.version)
+    if not pending:
+        return 0
+    ledger, claims, journal = (_meta(spark, db_name, t) for t in (LEDGER, CLAIMS, JOURNAL))
+    applied = 0
+    owner = uuid.uuid4().hex
+    for row in pending:
         version = int(row.version)
         # ── concurrent-runner guard (VERDICT r6 #3) ──────────────────
         # Claim the version BEFORE executing; refuse if any other claim
@@ -1942,24 +1918,24 @@ def apply_migration(
             # FileNotFound (ADVICE r7); an atomic-rename append races
             # nothing and a rival's rows are physically untouched.
             _append_claim_row(
-                spark, claims_qual, version, owner, released=True, claim_id=claim_id
+                spark, claims, version, owner, released=True, claim_id=claim_id
             )
 
         with _CLAIM_LOCK:
             # every guard read lists the metadata tables' files afresh
             # (_read_meta_rows), so a rival runner's appends through its
             # OWN SparkSession are visible
-            if version in _ledgered_versions(spark, ledger_qual):
+            if version in _ledgered_versions(ledger):
                 # another runner applied it between our diff and now
                 print(f"Skipping V{version}: already applied by a concurrent runner")
                 continue
             _append_claim_row(
-                spark, claims_qual, version, owner, released=False, claim_id=claim_id
+                spark, claims, version, owner, released=False, claim_id=claim_id
             )
             rivals = any(
                 c["version"] == version and c["owner"] not in (owner, None)
                 for c in _live_claim_rows(
-                    _read_meta_rows(spark, claims_qual, CLAIMS_SCHEMA.fieldNames())
+                    _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
                 )
             )
             if rivals:
@@ -1973,7 +1949,7 @@ def apply_migration(
                 # rivals read (its claim is gone, its ledger row is
                 # durable-before-visible) — re-check the ledger now
                 # that we hold the winning claim
-                if version in _ledgered_versions(spark, ledger_qual):
+                if version in _ledgered_versions(ledger):
                     _release_own_claim_locked()
                     print(
                         f"Skipping V{version}: already applied by a concurrent runner"
@@ -1994,12 +1970,11 @@ def apply_migration(
             # the journaled progress and keeps the documented
             # whole-script rerun semantics (indices no longer
             # correspond after an edit)
-            journal_qual = f"`{db_name}`.`{JOURNAL}`"
-            done, stale = _journaled_stmts(spark, journal_qual, version, row.md5)
+            done, stale = _journaled_stmts(journal, version, row.md5)
             # publish journal-committed insert stages a crash orphaned
             # (their statements are in `done` and will be skipped) and
             # drop uncommitted ones (their statements re-execute clean)
-            _reconcile_staged(spark, db_name, version, row.md5)
+            _reconcile_staged(spark, db_name, journal, version, row.md5)
             if stale:
                 print(
                     f"V{version}: discarding journaled progress from an "
@@ -2039,7 +2014,7 @@ def apply_migration(
                     # the markers)
                     _crash_point("after_stmt")
                     _append_journal_row(
-                        spark, journal_qual, version, i, row.md5, owner
+                        spark, journal, version, i, row.md5, owner
                     )
                     _crash_point("after_journal")
                     if staged is not None:
@@ -2057,7 +2032,7 @@ def apply_migration(
                 _INFLIGHT.stmt = None
                 _INFLIGHT.md5 = None
                 _INFLIGHT.swapped = None
-            _append_ledger_row(spark, ledger_qual, version, row.md5, row.script)
+            _append_ledger_row(spark, ledger, version, row.md5, row.script)
             # the version's journal rows are dead weight now that its
             # ledger row is durable — compact them so the journal stays
             # bounded across N migrations (VERDICT r10 #6).  Whole-file

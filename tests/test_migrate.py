@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 import gzip
+import json
 import os
 import uuid
 
@@ -426,7 +427,7 @@ def test_fail_stop_skips_later_versions(spark, db, tmp_path):
     # claim released on failure: no stale LIVE claims (releases are
     # append-only tombstones now — the raw table keeps claim+release
     # row pairs; what must be empty is the live view)
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
 
 
 # ── concurrent-runner guard (VERDICT r6 #3) ─────────────────────────────────
@@ -487,7 +488,7 @@ def test_concurrent_runners_exactly_one_applies(spark, db, tmp_path):
     assert spark.table(f"`{db}`.t_race").count() == 1  # INSERT ran exactly once
     # all claims released: live view empty (raw rows are append-only
     # claim+tombstone pairs)
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
 
 
 @pytest.mark.usefixtures("ledger_db")
@@ -621,7 +622,7 @@ def test_release_preserves_rival_claims(spark, db, tmp_path):
         "VALUES (99, 'rival', current_timestamp(), false, 'rival1')"
     )
     assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
-    live = M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").collect()
+    live = M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).collect()
     assert [(r.version, r.owner) for r in live] == [(99, "rival")]
 
 
@@ -751,7 +752,31 @@ def test_create_only_version_starts_no_bookkeeping_jobs(spark, db, tmp_path, mon
     assert (n, jobs) == (1, 0)
     assert len(stmt_jobs) == 1
     assert [r.version for r in spark.table(f"`{db}`.schema_versions").collect()] == [1]
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
+
+
+def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, monkeypatch):
+    """The runner looks up its metadata tables' locations once per
+    call: a version of three CREATEs asks the catalog as often as a
+    version of one (no DESCRIBE per journal read or append)."""
+    creates = [f"CREATE TABLE t_desc{i} (v Int64) ENGINE = Log" for i in range(4)]
+    home = tmp_path / "mig"
+    home.mkdir()
+    real = M._describe_table
+    calls = []
+
+    def counted(sess, qual):
+        calls.append(qual)
+        return real(sess, qual)
+
+    monkeypatch.setattr(M, "_describe_table", counted)
+    counts = []
+    for name, stmts in (("V1__one.json", creates[:1]), ("V2__three.json", creates[1:])):
+        (home / name).write_text(json.dumps(stmts))
+        calls.clear()
+        assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
+        counts.append(len(calls))
+    assert counts[0] == counts[1], counts
 
 
 def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
@@ -780,7 +805,7 @@ def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
 
         manifest = M.manifest_df(spark, M.scan_migrations(home))
         assert [r.version for r in M.migrations_to_apply(spark, db, manifest).collect()] == [2]
-        live = M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").collect()
+        live = M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).collect()
         assert [(r.version, r.owner, r.released, r.claim_id) for r in live] == [
             (2, "rival", None, None)
         ]
@@ -949,13 +974,13 @@ def test_tombstone_does_not_shadow_future_claim_with_reused_pair(spark, db):
     but a fresh claim_id must be LIVE — under the old (version, owner)
     anti-join it was permanently invisible and two runners could both
     proceed."""
-    qual = f"`{db}`.`{M.CLAIMS}`"
+    claims = M._meta(spark, db, M.CLAIMS)
     owner = "owner-reused"
-    M._append_claim_row(spark, qual, 5, owner, released=False, claim_id="claimA")
-    M._append_claim_row(spark, qual, 5, owner, released=True, claim_id="claimA")
-    assert M._live_claims(spark, qual).count() == 0
-    M._append_claim_row(spark, qual, 5, owner, released=False, claim_id="claimB")
-    live = M._live_claims(spark, qual).collect()
+    M._append_claim_row(spark, claims, 5, owner, released=False, claim_id="claimA")
+    M._append_claim_row(spark, claims, 5, owner, released=True, claim_id="claimA")
+    assert M._live_claims(spark, claims).count() == 0
+    M._append_claim_row(spark, claims, 5, owner, released=False, claim_id="claimB")
+    live = M._live_claims(spark, claims).collect()
     assert len(live) == 1 and live[0].claim_id == "claimB"
 
 
@@ -964,11 +989,11 @@ def test_legacy_null_claim_id_rows_keep_pair_semantics(spark, db):
     """Rows from a pre-claim_id build (claim_id NULL) are matched by
     their (version, owner) composite — a NULL-id tombstone still
     releases the NULL-id claim, and never touches a claim_id'd row."""
-    qual = f"`{db}`.`{M.CLAIMS}`"
-    M._append_claim_row(spark, qual, 9, "legacy", released=False, claim_id=None)
-    M._append_claim_row(spark, qual, 9, "modern", released=False, claim_id="c1")
-    M._append_claim_row(spark, qual, 9, "legacy", released=True, claim_id=None)
-    live = M._live_claims(spark, qual).collect()
+    claims = M._meta(spark, db, M.CLAIMS)
+    M._append_claim_row(spark, claims, 9, "legacy", released=False, claim_id=None)
+    M._append_claim_row(spark, claims, 9, "modern", released=False, claim_id="c1")
+    M._append_claim_row(spark, claims, 9, "legacy", released=True, claim_id=None)
+    live = M._live_claims(spark, claims).collect()
     assert len(live) == 1 and live[0].owner == "modern"
 
 
@@ -994,7 +1019,7 @@ def test_claims_schema_widens_claim_id_in_place(spark):
         assert "claim_id" in cols
         rows = spark.table(qual).collect()
         assert len(rows) == 1 and rows[0].claim_id is None
-        assert M._live_claims(spark, qual).count() == 1
+        assert M._live_claims(spark, M._meta(spark, name, M.CLAIMS)).count() == 1
     finally:
         spark.sql(f"DROP DATABASE `{name}` CASCADE")
 
@@ -1013,7 +1038,7 @@ def test_apply_releases_use_fresh_claim_ids(spark, db, tmp_path, request):
     manifest = M.manifest_df(spark, M.scan_migrations(str(home)))
     assert M.apply_migration(spark, db, M.migrations_to_apply(spark, db, manifest)) == 2
     qual = f"`{db}`.`{M.CLAIMS}`"
-    assert M._live_claims(spark, qual).count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
     rows = spark.table(qual).collect()
     claims = [r for r in rows if not (r.released or False)]
     tombs = [r for r in rows if (r.released or False)]
@@ -1060,6 +1085,12 @@ def test_table_location_unquotes_percent_escapes(spark, tmp_path, monkeypatch):
         M._local_parquet_location(spark, "`x`.`t`")
         == "/tmp/Application Support/wh/t"
     )
+    # an object-store location has no local path, and the runner refuses
+    # to keep its metadata tables there
+    rows[2] = _row("Location", "s3a://bucket/wh/t")
+    assert M._table_location(spark, "`x`.`t`") is None
+    with pytest.raises(ValueError, match="`x`.`t`"):
+        M._meta(spark, "x", "t")
 
 
 # ── ALTER UPDATE/DELETE validate column names case-sensitively ───────────────

@@ -147,9 +147,9 @@ def test_compaction_races_live_runner_appends_and_resume(spark, db, tmp_path):
     spark.catalog.setCurrentDatabase(db)
     try:
         assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
-        journal_qual = f"`{db}`.`{M.JOURNAL}`"
+        journal = M._meta(spark, db, M.JOURNAL)
         for i in range(40):
-            M._append_journal_row(spark, journal_qual, 1, 100 + i, "deadmd5", "x")
+            M._append_journal_row(spark, journal, 1, 100 + i, "deadmd5", "x")
 
         ready, go, stop = tmp_path / "ready", tmp_path / "go", tmp_path / "stop"
         env = dict(os.environ)
@@ -208,7 +208,7 @@ def test_compaction_races_live_runner_appends_and_resume(spark, db, tmp_path):
             # seed more dead rows so the compactor still has deletions
             # overlapping the RESUME's journal reads
             for i in range(40):
-                M._append_journal_row(spark, journal_qual, 1, 200 + i, "deadmd5", "x")
+                M._append_journal_row(spark, journal, 1, 200 + i, "deadmd5", "x")
             M.recover_cow(spark, db)
             M.clear_claims(spark, db)
             assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
@@ -232,5 +232,5 @@ def test_compaction_races_live_runner_appends_and_resume(spark, db, tmp_path):
     # the dead v1 rows are gone (rival's deletions + the runner's own
     # post-ledger compaction both contribute)
     M.compact_journal(spark, db)
-    left = M._read_journal_rows(spark, f"`{db}`.`{M.JOURNAL}`")
+    left = M._read_journal_rows(M._meta(spark, db, M.JOURNAL))
     assert [r for r in left if int(r["version"]) == 1] == [], left

@@ -114,7 +114,7 @@ def test_transient_failure_resumes_same_script(spark, db, tmp_path, monkeypatch)
         M.migrate(spark, db, home)
     # fail-stop applied 0..2 once; failure released the claim
     assert _v(spark, db) == 1 + 1 + 10 + 100
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
     assert M.migrate(spark, db, home) == 1  # resumes at stmt 3
     assert _v(spark, db) == EXPECTED
 
@@ -369,17 +369,17 @@ def test_insert_journal_append_failure_converges(spark, db, tmp_path, monkeypatc
     real = M._append_journal_row
     state = {"fail": True}
 
-    def flaky(spark_, jq, version, i, md5, owner):
+    def flaky(spark_, journal, version, i, md5, owner):
         if state["fail"] and version == 11:
             state["fail"] = False
             raise RuntimeError("journal io error")
-        return real(spark_, jq, version, i, md5, owner)
+        return real(spark_, journal, version, i, md5, owner)
 
     monkeypatch.setattr(M, "_append_journal_row", flaky)
     with pytest.raises(RuntimeError, match="journal io error"):
         M.migrate(spark, db, home)
     assert _rows(spark, db, "jf") == []  # staged rows never became visible
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
     assert M.migrate(spark, db, home) == 1  # plain rerun, no recovery step
     assert _rows(spark, db, "jf") == [(1, 42)]
 
@@ -472,7 +472,7 @@ def test_journal_compacts_after_each_success(spark, db, tmp_path):
         assert M.migrate(spark, db, str(home)) == 1
         spark.catalog.refreshTable(jq)
         assert spark.table(jq).count() == 0
-        loc = M._table_location(spark, jq)
+        loc = M._meta(spark, db, M.JOURNAL).path
         files = [
             f
             for f in _os.listdir(loc)
@@ -534,7 +534,7 @@ def test_compaction_races_reader_and_appender(spark, db):
     vanishing between listing and read."""
     import threading
 
-    jq = f"`{db}`.`{M.JOURNAL}`"
+    journal = M._meta(spark, db, M.JOURNAL)
     spark.sql(
         f"INSERT INTO `{db}`.`{M.LEDGER}` VALUES (1, 'x', 's', current_timestamp())"
     )
@@ -553,18 +553,18 @@ def test_compaction_races_reader_and_appender(spark, db):
     th.start()
     try:
         for i in range(20):
-            M._append_journal_row(spark, jq, 1, i, "dead", "o")  # ledgered → dead
-            M._append_journal_row(spark, jq, 99, i, "live", "o")  # must survive
-            done, _ = M._journaled_stmts(spark, jq, 99, "live")
+            M._append_journal_row(spark, journal, 1, i, "dead", "o")  # ledgered → dead
+            M._append_journal_row(spark, journal, 99, i, "live", "o")  # must survive
+            done, _ = M._journaled_stmts(journal, 99, "live")
             assert done == set(range(i + 1)), f"live row lost at {i}: {done}"
     finally:
         stop.set()
         th.join()
     assert errors == []
     M.compact_journal(spark, db)
-    done, _ = M._journaled_stmts(spark, jq, 99, "live")
+    done, _ = M._journaled_stmts(journal, 99, "live")
     assert done == set(range(20))
-    dead, _ = M._journaled_stmts(spark, jq, 1, "dead")
+    dead, _ = M._journaled_stmts(journal, 1, "dead")
     assert dead == set()
 
 
@@ -572,15 +572,15 @@ def test_compaction_races_reader_and_appender(spark, db):
 def test_journal_rows_keyed_by_md5_not_just_version(spark, db, tmp_path):
     """_journaled_stmts honors only rows whose md5 matches the current
     script body; rows from a different body are reported stale."""
-    jq = f"`{db}`.`{M.JOURNAL}`"
-    M._append_journal_row(spark, jq, 4, 0, "aaa", "o1")
-    M._append_journal_row(spark, jq, 4, 1, "aaa", "o1")
-    M._append_journal_row(spark, jq, 4, 0, "bbb", "o2")
-    done, stale = M._journaled_stmts(spark, jq, 4, "aaa")
+    journal = M._meta(spark, db, M.JOURNAL)
+    M._append_journal_row(spark, journal, 4, 0, "aaa", "o1")
+    M._append_journal_row(spark, journal, 4, 1, "aaa", "o1")
+    M._append_journal_row(spark, journal, 4, 0, "bbb", "o2")
+    done, stale = M._journaled_stmts(journal, 4, "aaa")
     assert done == {0, 1} and stale is True
-    done, stale = M._journaled_stmts(spark, jq, 4, "ccc")
+    done, stale = M._journaled_stmts(journal, 4, "ccc")
     assert done == set() and stale is True
-    done, stale = M._journaled_stmts(spark, jq, 5, "aaa")
+    done, stale = M._journaled_stmts(journal, 5, "aaa")
     assert done == set() and stale is False
 
 
@@ -637,11 +637,11 @@ def test_cow_journal_append_failure_plain_rerun_exactly_once(
     real = M._append_journal_row
     state = {"fail": True}
 
-    def flaky(spark_, jq, version, i, md5, owner):
+    def flaky(spark_, journal, version, i, md5, owner):
         if state["fail"] and version == 2:
             state["fail"] = False
             raise RuntimeError("journal io error")
-        return real(spark_, jq, version, i, md5, owner)
+        return real(spark_, journal, version, i, md5, owner)
 
     monkeypatch.setattr(M, "_append_journal_row", flaky)
     with pytest.raises(RuntimeError, match="journal io error"):
@@ -650,7 +650,7 @@ def test_cow_journal_append_failure_plain_rerun_exactly_once(
     assert spark.table(f"`{db}`.ac").collect()[0].v == 6
     props = M._table_props(spark, f"`{db}`.ac")
     assert props.get(M._COW_VERSION_PROP) == "2"
-    assert M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count() == 0
+    assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
     # plain rerun — no recover_cow — must NOT re-apply v = v + 5
     monkeypatch.setattr(M, "_append_journal_row", real)
     assert M.migrate(spark, db, str(home)) == 1
@@ -673,7 +673,7 @@ def test_reconcile_live_markers_returns_and_unsets(spark, db):
     )
     out = M._reconcile_live_markers(spark, db)
     assert out == {"ar": "4"}
-    done, _ = M._journaled_stmts(spark, f"`{db}`.`{M.JOURNAL}`", 4, "mmm")
+    done, _ = M._journaled_stmts(M._meta(spark, db, M.JOURNAL), 4, "mmm")
     assert done == {1}
     assert all(
         k not in M._table_props(spark, f"`{db}`.ar") for k in M._COW_MARKER_PROPS

@@ -241,7 +241,7 @@ def _assert_ledger(spark, db: str, applied: list[int], ctx: str) -> None:
 
 
 def _live_claim_count(spark, db: str) -> int:
-    return M._live_claims(spark, f"`{db}`.`{M.CLAIMS}`").count()
+    return M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count()
 
 
 def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> None:
