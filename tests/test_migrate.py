@@ -7,6 +7,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import re
 import uuid
 
 import pytest
@@ -729,19 +730,41 @@ def test_noop_migrate_starts_no_spark_jobs(spark, db):
 
 
 @pytest.mark.usefixtures("ledger_db")
-def test_create_only_version_starts_no_bookkeeping_jobs(spark, db, tmp_path, monkeypatch):
+@pytest.mark.parametrize("case", ["create", "staged_insert"])
+def test_create_only_version_starts_no_bookkeeping_jobs(
+    spark, db, tmp_path, monkeypatch, case
+):
     """Diff, claim, journal, ledger append, compaction and release are
     all driver-side file operations: the only jobs a version may start
-    are its statements' own (counted apart in their own group here)."""
-    home = _write_migrations(
-        tmp_path,
-        {"V1__create.sql": "CREATE TABLE t_nojobs (v Int64) ENGINE = MergeTree ORDER BY v"},
-    )
+    are its statements' own (counted apart in their own group here).
+    The ``staged_insert`` case INSERTs into an existing PARTITIONED BY
+    table, so the statement runs against a stage: creating the stage
+    and publishing it start no job either, and the stage is a clone of
+    the target's partitioning that carries the stage-target property
+    but none of the target's ``clickhouse.*`` props."""
+    if case == "staged_insert":
+        spark.sql(
+            f"CREATE TABLE `{db}`.t_nojobs (k BIGINT, d STRING) USING PARQUET "
+            "PARTITIONED BY (d) TBLPROPERTIES ('clickhouse.order_by' = 'k')"
+        )
+        body = "INSERT INTO t_nojobs VALUES (1, 'a'), (2, 'b')"
+    else:
+        body = "CREATE TABLE t_nojobs (v Int64) ENGINE = MergeTree ORDER BY v"
+    home = _write_migrations(tmp_path, {"V1__step.sql": body})
     run_stmt = M.execute_statement
     stmt_jobs = []
+    stages = []
+
+    def run(sess, sql):
+        out = run_stmt(sess, sql)
+        stage = re.search(r"`[^`]+`\.`" + M._STAGE_PREFIX + r"[^`]+`", sql)
+        if stage is not None:
+            qual = stage.group(0)
+            stages.append((M._describe_table(sess, qual)["pcols"], M._table_props(sess, qual)))
+        return out
 
     def counted(sess, sql):
-        out, jobs = _jobs_started(sess, lambda: run_stmt(sess, sql))
+        out, jobs = _jobs_started(sess, lambda: run(sess, sql))
         stmt_jobs.append(jobs)
         return out
 
@@ -753,6 +776,61 @@ def test_create_only_version_starts_no_bookkeeping_jobs(spark, db, tmp_path, mon
     assert len(stmt_jobs) == 1
     assert [r.version for r in spark.table(f"`{db}`.schema_versions").collect()] == [1]
     assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
+    if case == "staged_insert":
+        ((pcols, props),) = stages
+        assert pcols == ["d"]
+        assert {k: v for k, v in props.items() if k.startswith("clickhouse.")} == {
+            M._STAGE_TARGET_PROP: f"`{db}`.`t_nojobs`"
+        }
+        assert sorted((r.k, r.d) for r in spark.table(f"`{db}`.t_nojobs").collect()) == [
+            (1, "a"),
+            (2, "b"),
+        ]
+    else:
+        assert stages == []
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_noop_migrate_catalog_calls_do_not_grow_with_tables(
+    spark, db, tmp_path, monkeypatch
+):
+    """A noop migrate() asks the catalog the same questions with 1 user
+    table and with 30: its self-heal reads the journal's swap intents,
+    not every table's properties."""
+    from collections import Counter
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.catalog import Catalog
+
+    home = _write_migrations(
+        tmp_path, {"V1__t.sql": "CREATE TABLE t_cat0 (v Int64) ENGINE = Log"}
+    )
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+    calls: Counter = Counter()
+
+    def counting(name, real, key=lambda *a: name):
+        def wrapped(*a, **k):
+            calls[key(*a)] += 1
+            return real(*a, **k)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        SparkSession,
+        "sql",
+        counting("sql", SparkSession.sql, lambda _s, q, *a: " ".join(q.split()[:2]).upper()),
+    )
+    monkeypatch.setattr(Catalog, "refreshTable", counting("refreshTable", Catalog.refreshTable))
+    for name in ("_describe_table", "_table_props"):
+        monkeypatch.setattr(M, name, counting(name, getattr(M, name)))
+    counts = []
+    for n_tables in (1, 30):
+        for i in range(1, n_tables):
+            spark.sql(f"CREATE TABLE IF NOT EXISTS `{db}`.t_cat{i} (v BIGINT) USING PARQUET")
+        calls.clear()
+        assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 0
+        counts.append(dict(calls))
+    assert counts[0] == counts[1], counts
 
 
 def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, monkeypatch):
@@ -918,8 +996,11 @@ def test_cow_crash_during_apply_reports_inflight_version(
 
 @pytest.mark.usefixtures("ledger_db")
 def test_cow_marker_never_survives_successful_swap(spark, db, tmp_path, request):
-    """The in-flight marker is transient: a NON-crashed apply_migration
-    run leaves no cow_inflight_version property on the mutated table."""
+    """A NON-crashed apply_migration run leaves no cow_inflight_*
+    marker and nothing to reconcile: the swap id it stamped is inert
+    because its intent was committed (and compacted with the version),
+    and no marker is ever unset.  A direct execute_statement stamps
+    nothing and journals nothing."""
     spark.catalog.setCurrentDatabase(db)
     request.addfinalizer(lambda: spark.catalog.setCurrentDatabase("default"))
     M.execute_statement(
@@ -935,10 +1016,17 @@ def test_cow_marker_never_survives_successful_swap(spark, db, tmp_path, request)
         r["key"]: r["value"]
         for r in spark.sql(f"SHOW TBLPROPERTIES `{db}`.t_adv9b").collect()
     }
-    assert M._COW_VERSION_PROP not in props
+    assert all(k not in props for k in M._COW_MARKER_PROPS)
+    assert len(props[M._COW_SWAP_PROP]) == 32
+    journal = M._meta(spark, db, M.JOURNAL)
+    assert M._read_journal_rows(journal) == []
+    assert M._reconcile_live_markers(spark, journal) == {}
     # direct execute_statement (no runner context) also stays unmarked
     # on the crash-window temp:
     assert getattr(M._INFLIGHT, "version", None) is None
+    M.execute_statement(spark, "ALTER TABLE t_adv9b UPDATE v = v + 1 WHERE v > 0")
+    assert M._COW_SWAP_PROP not in M._table_props(spark, f"`{db}`.t_adv9b")
+    assert M._read_journal_rows(journal) == []
 
 
 def _mk(spark, db, rows="(1, 10), (2, 30)"):
@@ -950,18 +1038,33 @@ def _mk(spark, db, rows="(1, 10), (2, 30)"):
 def test_cow_markers_excluded_from_carryover(spark, db):
     _mk(spark, db)
     qual = f"`{db}`.`t`"
-    # simulate a leaked marker from a crash between RENAME and UNSET
+    # simulate a leaked marker from an earlier build's crash between
+    # RENAME and UNSET, and the swap id an earlier swap stamped
     spark.sql(
         f"ALTER TABLE {qual} SET TBLPROPERTIES "
         f"('{M._COW_VERSION_PROP}' = '7', '{M._COW_STMT_PROP}' = '3', "
-        f"'clickhouse.order_by' = 'id')"
+        f"'{M._COW_SWAP_PROP}' = 'earlier', 'clickhouse.order_by' = 'id')"
     )
     M.execute_statement(spark, "ALTER TABLE t UPDATE v = v + 1 WHERE v > 0")
     props = M._table_props(spark, qual)
-    # the real layout prop survives the swap; the leaked markers do not
+    # the real layout prop survives the swap; the leaked markers and the
+    # earlier swap's id do not
     assert props.get("clickhouse.order_by") == "id"
     assert M._COW_VERSION_PROP not in props
     assert M._COW_STMT_PROP not in props
+    assert M._COW_SWAP_PROP not in props
+    # under a migration the swap stamps its OWN id, never the carried one
+    M._INFLIGHT.version, M._INFLIGHT.stmt, M._INFLIGHT.md5 = 1, 0, "m"
+    M._INFLIGHT.journal, M._INFLIGHT.owner = M._meta(spark, db, M.JOURNAL), "o"
+    try:
+        M.execute_statement(spark, "ALTER TABLE t UPDATE v = v + 1 WHERE v > 0")
+    finally:
+        vars(M._INFLIGHT).clear()
+    (intent,) = M._read_journal_rows(M._meta(spark, db, M.JOURNAL))
+    props = M._table_props(spark, qual)
+    assert props[M._COW_SWAP_PROP] == intent["swap_id"] != "earlier"
+    assert intent["target"] == qual
+    assert props.get("clickhouse.order_by") == "id"
 
 
 # ── claim tombstones are keyed by claim_id ───────────────────────────────────
@@ -1082,7 +1185,7 @@ def test_table_location_unquotes_percent_escapes(spark, tmp_path, monkeypatch):
         == "/tmp/Application Support/wh/t"
     )
     assert (
-        M._local_parquet_location(spark, "`x`.`t`")
+        M._local_parquet_location(M._describe_table(spark, "`x`.`t`")["detail"])
         == "/tmp/Application Support/wh/t"
     )
     # an object-store location has no local path, and the runner refuses

@@ -258,14 +258,14 @@ def test_migration_created_partitioned_table_takes_staged_inserts(
     published = []
     publish = M._publish_stage
 
-    def recorded(sess, stage_qual, target_qual):
+    def recorded(sess, stage_qual, target_qual, *rest):
         published.append(target_qual)
-        publish(sess, stage_qual, target_qual)
+        publish(sess, stage_qual, target_qual, *rest)
 
     monkeypatch.setattr(M, "_publish_stage", recorded)
     assert M.migrate(spark, db, home) == 1
     assert published == [f"`{db}`.`cp`"]
-    assert M._partition_columns(spark, f"`{db}`.`cp`") == ["d"]
+    assert M._describe_table(spark, f"`{db}`.`cp`")["pcols"] == ["d"]
     assert _rows(spark, db, "cp") == [(1, 10, "a"), (2, 20, "b")]
     parts = {r.partition for r in spark.sql(f"SHOW PARTITIONS `{db}`.cp").collect()}
     assert parts == {"d=a", "d=b"}
@@ -373,11 +373,12 @@ def test_local_parquet_location_refuses_bucketed_accepts_partitioned(spark, db):
         "USING PARQUET CLUSTERED BY (k) INTO 4 BUCKETS"
     )
     spark.sql(f"CREATE TABLE `{db}`.ft (k BIGINT, v BIGINT) USING PARQUET")
-    assert M._local_parquet_location(spark, f"`{db}`.`pt`") is not None
-    assert M._local_parquet_location(spark, f"`{db}`.`bt`") is None
-    assert M._local_parquet_location(spark, f"`{db}`.`ft`") is not None
-    assert M._partition_columns(spark, f"`{db}`.`pt`") == ["d"]
-    assert M._partition_columns(spark, f"`{db}`.`ft`") == []
+    info = {t: M._describe_table(spark, f"`{db}`.`{t}`") for t in ("pt", "bt", "ft")}
+    assert M._local_parquet_location(info["pt"]["detail"]) is not None
+    assert M._local_parquet_location(info["bt"]["detail"]) is None
+    assert M._local_parquet_location(info["ft"]["detail"]) is not None
+    assert info["pt"]["pcols"] == ["d"]
+    assert info["ft"]["pcols"] == []
 
 
 @pytest.mark.usefixtures("ledger_db")

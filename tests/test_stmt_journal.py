@@ -6,15 +6,16 @@ used to make the mandatory rerun re-execute the WHOLE script —
 double-applying non-idempotent mutations (r8/r9 only disclosed this via
 recover_cow's "completed:V<n>" + README warning).  Round 10 journals
 every successfully executed statement (version, stmt_index, md5)
-through the claims' atomic-rename channel; COW swaps stamp the triple
-onto the temp table so recover_cow can write the journal row on the
-crashed runner's behalf.
+through the claims' atomic-rename channel; a COW swap journals an
+intent and stamps its swap id onto the temp table first, so the next
+run (or recover_cow) can write the journal row on the crashed runner's
+behalf.
 
 The headline test injects a crash at EVERY statement boundary of a
 5-statement non-idempotent migration (v += 10^i, so any double-apply
 perturbs a unique digit) — before each statement, after its effects are
-durable but before the journal append, after the journal append but
-before the marker unset, and inside the swap's DROP→RENAME window —
+durable but before the journal append, after the journal append, and
+on both sides of the swap's DROP (after its intent is journaled) —
 then runs the documented recovery (recover_cow + clear_claims + rerun)
 and asserts the final value shows each statement applied EXACTLY once.
 """
@@ -158,20 +159,26 @@ def test_recover_cow_live_table_reconciliation_action(
     spark, db, tmp_path, monkeypatch
 ):
     """Crash after the swap's RENAME but before the journal append: the
-    live table wears the markers; recover_cow journals late, pops the
-    markers, and reports journaled:V<n>."""
+    live table wears the swap id of an intent that has no commit row;
+    recover_cow journals the statement late and reports journaled:V<n>."""
     home, _ = _setup(spark, db, tmp_path)
     _arm(monkeypatch, "after_stmt", 2)
     with pytest.raises(RuntimeError):
         M.migrate(spark, db, home)
     monkeypatch.setattr(M, "_crash_point", lambda s: None)
+    journal = M._meta(spark, db, M.JOURNAL)
+    md5 = M.scan_migrations(home)[0].md5
+    (intent,) = [
+        r for r in M._read_journal_rows(journal) if r["swap_id"] and r["stmt_index"] == 2
+    ]
+    assert (intent["version"], intent["md5"]) == (3, md5)
     props = M._table_props(spark, f"`{db}`.jt")
-    assert props.get(M._COW_VERSION_PROP) == "3"
-    assert props.get(M._COW_STMT_PROP) == "2"
+    assert props.get(M._COW_SWAP_PROP) == intent["swap_id"]
+    assert all(k not in props for k in M._COW_MARKER_PROPS)
+    assert M._journaled_stmts(journal, 3, md5)[0] == {0, 1}
     actions = M.recover_cow(spark, db)
     assert actions == {"jt": "journaled:V3"}
-    props = M._table_props(spark, f"`{db}`.jt")
-    assert all(k not in props for k in M._COW_MARKER_PROPS)
+    assert M._journaled_stmts(journal, 3, md5)[0] == {0, 1, 2}
     # the late-journaled row makes the rerun resume AFTER stmt 2
     M.clear_claims(spark, db)
     assert M.migrate(spark, db, home) == 1
@@ -193,9 +200,10 @@ def test_recover_cow_after_journal_crash_does_not_duplicate_row(
     rows = (
         spark.table(jq)
         .filter((F.col("version") == 3) & (F.col("stmt_index") == 1))
+        .filter(F.col("swap_id").isNull())  # commit rows, not the swap intent
         .count()
     )
-    assert rows == 1  # reconciliation saw the row and only unset markers
+    assert rows == 1  # reconciliation saw the commit row and added none
     M.clear_claims(spark, db)
     assert M.migrate(spark, db, home) == 1
     assert _v(spark, db) == EXPECTED
@@ -646,23 +654,68 @@ def test_cow_journal_append_failure_plain_rerun_exactly_once(
     monkeypatch.setattr(M, "_append_journal_row", flaky)
     with pytest.raises(RuntimeError, match="journal io error"):
         M.migrate(spark, db, str(home))
-    # the swap RENAME completed: the mutation is applied, markers linger
+    # the swap RENAME completed: the mutation is applied, and the table
+    # wears the swap id of an intent with no commit row
     assert spark.table(f"`{db}`.ac").collect()[0].v == 6
+    journal = M._meta(spark, db, M.JOURNAL)
+    (intent,) = M._read_journal_rows(journal)
+    assert (intent["version"], intent["stmt_index"]) == (2, 0)
     props = M._table_props(spark, f"`{db}`.ac")
-    assert props.get(M._COW_VERSION_PROP) == "2"
+    assert props.get(M._COW_SWAP_PROP) == intent["swap_id"]
     assert M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count() == 0
     # plain rerun — no recover_cow — must NOT re-apply v = v + 5
     monkeypatch.setattr(M, "_append_journal_row", real)
     assert M.migrate(spark, db, str(home)) == 1
     assert spark.table(f"`{db}`.ac").collect()[0].v == 6
-    props = M._table_props(spark, f"`{db}`.ac")
-    assert all(k not in props for k in M._COW_MARKER_PROPS)
+    # the version is ledgered, so its intent went with its commit rows
+    assert M._read_journal_rows(journal) == []
     assert M.migrate(spark, db, str(home)) == 0
     assert spark.table(f"`{db}`.ac").collect()[0].v == 6
 
 
 @pytest.mark.usefixtures("ledger_db")
-def test_reconcile_live_markers_returns_and_unsets(spark, db):
+def test_reconcile_live_markers_journals_stamped_intents(spark, db, monkeypatch):
+    """Only an uncommitted intent whose table wears its swap id is
+    journaled late; an intent whose swap never happened (old id, or
+    table absent) and an intent that already has its commit row are
+    left alone.  A second pass finds nothing and adds nothing."""
+    M.execute_statement(
+        spark, "CREATE TABLE ar (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    spark.sql(f"ALTER TABLE `{db}`.ar SET TBLPROPERTIES ('{M._COW_SWAP_PROP}' = 'sw2')")
+    journal = M._meta(spark, db, M.JOURNAL)
+    ar, gone = f"`{db}`.`ar`", f"`{db}`.`gone`"
+    M._append_swap_intent(journal, 4, 0, "mmm", "o", ar, "sw0")  # committed below
+    M._append_journal_row(spark, journal, 4, 0, "mmm", "o")
+    M._append_swap_intent(journal, 4, 1, "mmm", "o", ar, "sw1")  # superseded id
+    M._append_swap_intent(journal, 4, 2, "mmm", "o", ar, "sw2")  # swapped
+    M._append_swap_intent(journal, 4, 3, "mmm", "o", gone, "sw3")  # no table
+    tables = len(spark.sql(f"SHOW TABLES IN `{db}`").collect())
+    props = M._table_props
+    asked = []
+
+    def counted(sess, qual):
+        asked.append(qual)
+        return props(sess, qual)
+
+    monkeypatch.setattr(M, "_table_props", counted)
+    out = M._reconcile_live_markers(spark, journal)
+    monkeypatch.setattr(M, "_table_props", props)
+    assert out == {"ar": "4"}
+    # one property read per distinct uncommitted target, not per table
+    assert sorted(asked) == sorted([ar, gone]) and tables > len(asked)
+    done, _ = M._journaled_stmts(journal, 4, "mmm")
+    assert done == {0, 2}
+    # idempotent: second pass finds nothing and adds nothing
+    assert M._reconcile_live_markers(spark, journal) == {}
+    assert M._journaled_stmts(journal, 4, "mmm")[0] == {0, 2}
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_recover_cow_retires_legacy_live_markers(spark, db):
+    """Upgrade path: markers an earlier build left on a live table (a
+    crash between its RENAME and its journal append) are read by
+    recover_cow alone — journaled late, unset, reported once."""
     M.execute_statement(
         spark, "CREATE TABLE ar (k Int64, v Int64) ENGINE = MergeTree ORDER BY tuple()"
     )
@@ -671,12 +724,15 @@ def test_reconcile_live_markers_returns_and_unsets(spark, db):
         f"('{M._COW_VERSION_PROP}' = '4', '{M._COW_STMT_PROP}' = '1', "
         f"'{M._COW_MD5_PROP}' = 'mmm')"
     )
-    out = M._reconcile_live_markers(spark, db)
-    assert out == {"ar": "4"}
-    done, _ = M._journaled_stmts(M._meta(spark, db, M.JOURNAL), 4, "mmm")
+    journal = M._meta(spark, db, M.JOURNAL)
+    # migrate()'s self-heal reads intents only
+    assert M._reconcile_live_markers(spark, journal) == {}
+    assert M.recover_cow(spark, db) == {"ar": "journaled:V4"}
+    done, _ = M._journaled_stmts(journal, 4, "mmm")
     assert done == {1}
     assert all(
         k not in M._table_props(spark, f"`{db}`.ar") for k in M._COW_MARKER_PROPS
     )
     # idempotent: second pass finds nothing and adds nothing
-    assert M._reconcile_live_markers(spark, db) == {}
+    assert M.recover_cow(spark, db) == {}
+    assert M._journaled_stmts(journal, 4, "mmm")[0] == {1}

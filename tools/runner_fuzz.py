@@ -9,13 +9,20 @@ replays exactly the statements the engine executed (including the
 documented non-idempotent rerun semantics after a mid-script failure or
 a copy-on-write crash), and asserts the invariants after every epoch:
 
-  I1  ledger versions == the model's applied set (exactly, ordered);
+  I1  the ledger holds exactly the model's applied versions, one row
+      each, with the md5 of the script on disk;
   I2  every fuzzed table's (k, v) contents == the model state;
   I3  zero live claims after any completed/failed run (failures release
-      their claim; only CRASHES leave one, and clear_claims clears it);
+      their claim; only CRASHES leave one, and clear_claims clears it),
+      no journal row or swap intent left for a ledgered version, and no
+      leftover ``__stage_stmt_*`` / ``__cow_*`` table;
   I4  a rerun after convergence applies 0 migrations (idempotent diff);
   I5  duplicate versions / edited-after-commit / deleted-after-commit
       manifests are rejected, and the run they reject is a no-op.
+
+I1 and I3 are the benchmark's own runner checker
+(``perfbench/checks.py``'s ``check_runner``), so the fuzz and the
+benchmark hold the runner to one definition.
 
 Faults per epoch (random, seeded):
   - mid-script failure at a random statement index of a .json script
@@ -27,12 +34,13 @@ Faults per epoch (random, seeded):
     random ALTER UPDATE/DELETE, then recover_cow + journal-aware rerun
     (r10 exactly-once: the journaled prefix is SKIPPED; the crashed
     mutation applies exactly once — "rolled_back" → the rerun executes
-    it, "completed:V<n>" → recovery journaled it from the swap markers
+    it, "completed:V<n>" → recovery journaled it from the swap intent
     and the rerun resumes after it);
   - statement-journal crash injection (r10, fault "crashj") at
     before_stmt / after_stmt / after_journal on a random statement of
-    the batch — covering the journal-append, staged-insert-publish and
-    marker-unset windows; the model asserts every statement (INSERTs
+    the batch — covering the journal-append and staged-insert-publish
+    windows and a swap left without its commit row (journaled late by
+    the rerun's self-heal); the model asserts every statement (INSERTs
     included, r11: staged-append commit) applies exactly once;
   - fallback-path crash injection (r12, fault "crashf"): the INSERT's
     target is made non-stageable (_local_parquet_location → None,
@@ -70,6 +78,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from clickhouse_migrator_spark import migrate as M  # noqa: E402
+from perfbench.checks import check_runner  # noqa: E402
 
 
 # ── statement generators (engine SQL + model effect) ────────────────────────
@@ -233,15 +242,14 @@ def _assert_state(spark, db: str, state: dict[str, Counter], ctx: str) -> None:
         assert got == +want, f"{ctx}: table {t}: got {got} want {+want}"
 
 
-def _assert_ledger(spark, db: str, applied: list[int], ctx: str) -> None:
-    got = sorted(
-        r.version for r in spark.table(f"`{db}`.`{M.LEDGER}`").select("version").collect()
-    )
-    assert got == sorted(applied), f"{ctx}: ledger {got} != applied {applied}"
-
-
-def _live_claim_count(spark, db: str) -> int:
-    return M._live_claims(spark, M._meta(spark, db, M.CLAIMS)).count()
+def _assert_runner(spark, db: str, home: str, applied: list[int], ctx: str) -> None:
+    """I1 and I3 through ``check_runner``, which keys the ledger by
+    version; the row count catches a version ledgered twice."""
+    md5 = {m.version: m.md5 for m in M.scan_migrations(home)}
+    problems = check_runner(spark, db, {v: md5[v] for v in applied})
+    assert not problems, f"{ctx}: {problems}"
+    rows = spark.table(f"`{db}`.`{M.LEDGER}`").count()
+    assert rows == len(applied), f"{ctx}: {rows} ledger rows for {len(applied)} versions"
 
 
 def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> None:
@@ -387,8 +395,7 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                     applied.append(v)
                 for s in stmts[:bad_idx]:
                     s.apply(state)
-                assert _live_claim_count(spark, db) == 0, f"{ctx}: claim leaked"
-                _assert_ledger(spark, db, applied, ctx + " (post-fail)")
+                _assert_runner(spark, db, home, applied, ctx + " (post-fail)")
                 _assert_state(spark, db, state, ctx + " (post-fail)")
                 # fix: rewrite without the bad statement; rerun converges
                 with open(path, "w") as f:
@@ -461,7 +468,7 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                     # STATEMENT JOURNAL (r10): the rerun RESUMES — the
                     # journaled [:i_crash] are skipped; the crashed cow
                     # is skipped too when recovery completed (it wrote
-                    # the journal row from the swap's markers) and
+                    # the journal row from the swap's intent) and
                     # re-executed when rolled back.  Exactly-once.
                     M.clear_claims(spark, db)
                     M.migrate(spark, db, home)
@@ -486,12 +493,11 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                 # (nothing done yet), after_stmt (cow effects durable /
                 # insert rows STAGED but invisible, journal row lost),
                 # after_journal (journal durable, insert not yet
-                # published / swap markers possibly still on the
-                # table).  Model: every statement of every new version
+                # published).  Model: every statement of every new version
                 # applies EXACTLY once — the journaled prefix is
                 # skipped on rerun (committed insert stages are
                 # published by _reconcile_staged), an un-journaled cow
-                # is journaled late by recover_cow from its markers,
+                # is journaled late from its swap intent,
                 # and an un-journaled INSERT re-executes against a
                 # target that never saw the staged rows (r11
                 # exactly-once; the r10 at-least-once duplicate-INSERT
@@ -612,9 +618,8 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                     applied.append(v)
 
             # ── invariants after every epoch ──────────────────────────
-            _assert_ledger(spark, db, applied, ctx)
+            _assert_runner(spark, db, home, applied, ctx)
             _assert_state(spark, db, state, ctx)
-            assert _live_claim_count(spark, db) == 0, f"{ctx}: live claims remain"
             assert M.migrate(spark, db, home) == 0, f"{ctx}: rerun not a no-op"
     finally:
         M._crash_point = orig_crash
