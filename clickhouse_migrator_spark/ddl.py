@@ -33,6 +33,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from .functions.select_funcs import _blank, _lex_spans, _split_top
+
 TYPE_MAP = {
     "UInt8": "SMALLINT",
     "UInt16": "INT",
@@ -110,8 +112,8 @@ _MODIFY_SAMPLE_RE = re.compile(
 )
 _MODIFY_COMMENT_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+MODIFY\s+COMMENT\s+"
-    r"(?P<c>'(?:[^']|'')*')\s*;?\s*$",
-    re.I,
+    r"(?P<c>'.*')\s*;?\s*$",
+    re.I | re.S,
 )
 _REMOVE_DEFAULT_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+MODIFY\s+COLUMN\s+"
@@ -148,7 +150,6 @@ def _tuple_to_struct(m: "re.Match[str]") -> str:
     return "STRUCT<" + ", ".join(fields) + ">"
 
 
-_LITERAL_RE = re.compile(r"'(?:\\.|''|[^'\\])*'")
 _LIT_SLOT_RE = re.compile("\x00(\\d+)\x00")
 
 
@@ -160,12 +161,19 @@ def _mask_literal_contents(sql: str) -> tuple[str, list[str]]:
     ``DEFAULT 'a UInt32 b'`` and captured layout clauses out of
     ``DEFAULT 'ORDER BY x'`` (round-7 probe battery)."""
     lits: list[str] = []
+    out, last = [], 0
+    for s, e, kind in _lex_spans(sql):
+        if kind == "literal":
+            out += [sql[last : s + 1], f"\x00{len(lits)}\x00"]
+            lits.append(sql[s + 1 : e - 1])
+            last = e - 1
+    out.append(sql[last:])
+    return "".join(out), lits
 
-    def _slot(m: "re.Match[str]") -> str:
-        lits.append(m.group(0)[1:-1])
-        return f"'\x00{len(lits) - 1}\x00'"
 
-    return _LITERAL_RE.sub(_slot, sql), lits
+def _is_literal(text: str) -> bool:
+    """Whether ``text`` is exactly one string literal."""
+    return _lex_spans(text) == [(0, len(text), "literal")]
 
 
 def _unmask_literal_contents(sql: str | None, lits: list[str]) -> str | None:
@@ -341,8 +349,8 @@ _ATTACH_TABLE_RE = re.compile(
 )
 _COMMENT_COL_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+COMMENT\s+COLUMN\s+"
-    r"(?:IF\s+EXISTS\s+)?(?P<col>[\w`]+)\s+(?P<txt>'[^']*')\s*;?\s*$",
-    re.I,
+    r"(?:IF\s+EXISTS\s+)?(?P<col>[\w`]+)\s+(?P<txt>'.*')\s*;?\s*$",
+    re.I | re.S,
 )
 _DEFAULT_COL_RE = re.compile(r"\s+DEFAULT\s+[^,)]+", re.I)
 
@@ -363,58 +371,21 @@ def _names_provider(create_sql: str) -> bool:
     return False
 
 
-def _split_top(s: str) -> list[str]:
-    """Split on top-level commas only (paren-depth AND quote aware: a
-    comma or paren inside a string literal — ``SET s = 'a,b', v = 2``
-    — is data; ``''`` is the escaped quote)."""
-    parts, depth, cur = [], 0, []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "\\" and j + 1 < n:
-                    # backslash-escaped char (ClickHouse default style)
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(s[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 def _split_assignments(assign: str) -> list[tuple[str, str]]:
     """Split ``a = e1, b = e2`` on top-level commas only."""
-    parts = _split_top(assign)
     out = []
-    for p in parts:
+    for p in _split_top(assign):
+        if "=" not in p:
+            raise ValueError(f"ALTER UPDATE assignment without '=': {p.strip()!r}")
         col, expr = p.split("=", 1)
         out.append((col.strip().strip("`"), expr.strip()))
     return out
 
 
 def translate(sql: str) -> Statement:
-    """Classify + translate one ClickHouse-dialect statement."""
-    sql = _ON_CLUSTER_RE.sub(" ", sql)
+    """Classify + translate one ClickHouse-dialect statement.  Comments
+    are blanked first, so none can hide a keyword or swallow a clause."""
+    sql = _ON_CLUSTER_RE.sub(" ", _blank(sql))
     sql = re.sub(r"\bSYNC\s*;?\s*$", "", sql, flags=re.I)  # synchronous-drop modifier
     # MATERIALIZED VIEW → a real table built by CTAS (POPULATE is then
     # implicit — Spark has no deferred-fill concept); *continuous*
@@ -458,7 +429,8 @@ def translate(sql: str) -> Statement:
             sample_by=m.group("e").strip(),
         )
     m = _MODIFY_COMMENT_RE.match(sql)
-    if m:  # table comment — Spark spells it COMMENT ON TABLE … IS …
+    if m and _is_literal(m.group("c")):
+        # table comment — Spark spells it COMMENT ON TABLE … IS …
         return Statement(
             kind="passthrough",
             sql=f"COMMENT ON TABLE {m.group('table')} IS {m.group('c')}",
@@ -594,7 +566,8 @@ def translate(sql: str) -> Statement:
             kind="attach_table", sql=sql, table=m.group("table").strip("`")
         )
     m = _COMMENT_COL_RE.match(sql)
-    if m:  # ClickHouse COMMENT COLUMN → Spark ALTER COLUMN ... COMMENT
+    if m and _is_literal(m.group("txt")):
+        # ClickHouse COMMENT COLUMN → Spark ALTER COLUMN ... COMMENT
         return Statement(
             kind="passthrough",
             sql=(

@@ -53,98 +53,100 @@ from collections.abc import Callable
 __all__ = ["rewrite_functions"]
 
 
+# ClickHouse's lexical rules, in one place.  No two alternatives can
+# match at the same position, so the leftmost match is the next opaque
+# span: a single-quoted literal (doubled-quote and backslash escapes),
+# a backticked identifier (backslash escape), a ``--`` or ``/* */``
+# comment, or a Spark ``/*+ */`` optimizer hint.  The possessive loops
+# never give an escape back, so ``'a'' b`` stays one unterminated
+# literal; a quote that never closes is ``open`` and runs to the end.
+_LEX_RE = re.compile(
+    r"(?P<comment>--[^\n]*|/\*(?!\+).*?(?:\*/|\Z))"
+    r"|(?P<hint>/\*\+.*?(?:\*/|\Z))"
+    r"|(?P<literal>'(?:[^'\\]|\\.|'')*+')"
+    r"|(?P<ident>`(?:[^`\\]|\\.)*+`)"
+    r"|(?P<open>['`])",
+    re.S,
+)
+
+
+def _lex_spans(sql: str) -> list[tuple[int, int, str]]:
+    """``(start, end, kind)`` of every literal, backticked identifier,
+    comment and hint in ``sql``, in order; ``kind`` is ``literal``,
+    ``ident``, ``comment``, ``hint`` or ``open`` (an unterminated quote,
+    which runs to the end).  None of them may be rewritten or
+    paren-scanned."""
+    spans: list[tuple[int, int, str]] = []
+    pos = 0
+    while (m := _LEX_RE.search(sql, pos)) is not None:
+        end = len(sql) if m.lastgroup == "open" else m.end()
+        spans.append((m.start(), end, m.lastgroup))
+        pos = end
+    return spans
+
+
 def _string_mask(sql: str) -> list[bool]:
-    """True at positions inside single-quoted literals, backticks, or
-    SQL comments (``-- …`` / ``/* … */``) — none of which may be
-    rewritten or paren-scanned."""
+    """True at positions inside a :func:`_lex_spans` span."""
     mask = [False] * len(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            for k in range(i, j):
-                mask[k] = True
-            i = j
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            for k in range(i, j):
-                mask[k] = True
-            i = j
-        elif ch == "'" or ch == "`":
-            quote = ch
-            mask[i] = True
-            i += 1
-            while i < n:
-                mask[i] = True
-                if sql[i] == "\\" and i + 1 < n:
-                    # ClickHouse's default escaping style: a backslash
-                    # escapes the next char ('it\'s' stays one literal —
-                    # ADVICE r7: the ''-only scan truncated it)
-                    mask[i + 1] = True
-                    i += 2
-                    continue
-                if sql[i] == quote:
-                    # '' escape inside single quotes
-                    if quote == "'" and i + 1 < n and sql[i + 1] == "'":
-                        mask[i + 1] = True
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-        else:
-            i += 1
+    for s, e, _kind in _lex_spans(sql):
+        mask[s:e] = [True] * (e - s)
     return mask
 
 
-def _scan_args(sql: str, start: int) -> tuple[list[str], int]:
+def _blank(sql: str, kinds: tuple[str, ...] = ("comment",)) -> str:
+    """``sql`` with every span of the given kinds replaced by spaces of
+    the same length, so offsets into the result index ``sql`` too."""
+    out, last = [], 0
+    for s, e, kind in _lex_spans(sql):
+        if kind in kinds:
+            out += [sql[last:s], " " * (e - s)]
+            last = e
+    out.append(sql[last:])
+    return "".join(out)
+
+
+def _split_top(text: str) -> list[str]:
+    """Split on commas outside parens, brackets and lexer spans.  Parts
+    come back unstripped and rejoin with ``,`` to ``text``; ``""`` gives
+    ``[]``."""
+    mask = _string_mask(text)
+    parts, depth, last = [], 0, 0
+    for i, ch in enumerate(text):
+        if mask[i]:
+            continue
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(text[last:i])
+            last = i + 1
+    return parts + [text[last:]] if text else []
+
+
+def _scan_args(
+    sql: str, start: int, mask: list[bool] | None = None
+) -> tuple[list[str], int]:
     """Split a balanced argument list starting just after '('.
 
-    Returns (args, index_past_closing_paren).  Quote- and paren-aware;
-    a lone ')' immediately at start yields [] (zero-arg call).
+    Returns (stripped args, index_past_closing_paren); ``mask`` is
+    ``_string_mask(sql)`` when the caller already has it.  An empty or
+    blank list yields [] (zero-arg call).
     """
-    args: list[str] = []
+    mask = _string_mask(sql) if mask is None else mask
     depth = 1
-    buf: list[str] = []
-    i, n = start, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
+    for i in range(start, len(sql)):
+        if mask[i]:
             continue
-        if ch == "(" or ch == "[":
+        if sql[i] in "([":
             depth += 1
-        elif ch == "]":
+        elif sql[i] == "]":
             depth -= 1
-        elif ch == ")":
+        elif sql[i] == ")":
             depth -= 1
             if depth == 0:
-                arg = "".join(buf).strip()
-                if arg or args:
-                    args.append(arg)
-                return args, i + 1
-        elif ch == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
+                args = [a.strip() for a in _split_top(sql[start:i])]
+                return (args if args != [""] else []), i + 1
     raise ValueError(f"unbalanced parentheses in: {sql[start - 20 : start + 40]!r}")
 
 
@@ -1068,19 +1070,6 @@ def _depths(sql: str, mask: list[bool]) -> list[int]:
     return out
 
 
-def _split_top_commas(text: str) -> list[str]:
-    """Split on depth-0 commas (quote/paren-aware)."""
-    mask = _string_mask(text)
-    depths = _depths(text, mask)
-    parts, last = [], 0
-    for i, ch in enumerate(text):
-        if ch == "," and not mask[i] and depths[i] == 0:
-            parts.append(text[last:i].strip())
-            last = i + 1
-    parts.append(text[last:].strip())
-    return parts
-
-
 def _rewrite_uniq_array_context(sql: str) -> str:
     """Context-aware ``uniqArray`` rewrite (VERDICT r5 #3): when the
     statement is a plain single-table aggregate in which ``uniqArray``
@@ -1142,7 +1131,7 @@ def _rewrite_uniq_array_context(sql: str) -> str:
     if re.search(rf"\b{re.escape(bare)}\s*\.", sql):
         return sql
     sel_end = next(s for kw, s, _b in clauses if kw == "FROM")
-    items = _split_top_commas(sql[clauses[0][2] : sel_end])
+    items = [p.strip() for p in _split_top(sql[clauses[0][2] : sel_end])]
     ua_items = [i for i, it in enumerate(items) if "uniqArray" in it]
     if len(ua_items) != 1:
         return sql
@@ -1170,7 +1159,7 @@ def _rewrite_uniq_array_context(sql: str) -> str:
     others = [it for i, it in enumerate(items) if i != idx]
     sel_aliases: set[str] = {_norm(alias_m.group(1))}
     if "GROUP BY" in spans:
-        keys = {_norm(k) for k in _split_top_commas(spans["GROUP BY"])}
+        keys = {_norm(k) for k in _split_top(spans["GROUP BY"])}
         for it in others:
             am = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$", it)
             expr, al = (am.group(1), am.group(2)) if am else (it, None)
@@ -1195,7 +1184,7 @@ def _rewrite_uniq_array_context(sql: str) -> str:
         # would then evaluate over exploded rows and, with LIMIT,
         # change the returned set (ADVICE r6 #2).  Accept only sort
         # items that are a group key, a select alias, or an ordinal.
-        for ob in _split_top_commas(spans["ORDER BY"]):
+        for ob in _split_top(spans["ORDER BY"]):
             core = re.sub(
                 r"(?i)\s+(ASC|DESC)\s*$",
                 "",
@@ -1256,7 +1245,7 @@ def rewrite_functions(sql: str) -> str:
                 prev = re.search(r"([A-Za-z_]+)\s*$", sql[: m.start()])
                 if prev and prev.group(1).upper() in ("FROM", "JOIN"):
                     continue
-            args, end = _scan_args(sql, m.end())
+            args, end = _scan_args(sql, m.end(), mask)
             rest = sql[end:]
             stripped = rest.lstrip()
             # a rule that raises on malformed arity/params DECLINES the
@@ -1266,7 +1255,7 @@ def rewrite_functions(sql: str) -> str:
                 if name in _PARAMETRIC and stripped.startswith("("):
                     # name(params)(args) — the combinator form
                     inner_start = end + (len(rest) - len(stripped)) + 1
-                    inner_args, end = _scan_args(sql, inner_start)
+                    inner_args, end = _scan_args(sql, inner_start, mask)
                     repl = _PARAMETRIC[name](args, inner_args)
                 elif name in RULES:
                     maybe = RULES[name](args)

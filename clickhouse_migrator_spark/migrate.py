@@ -52,9 +52,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .ddl import Statement, _split_top as _ddl_split_top, translate
+from .ddl import Statement, translate
 from .functions.select_funcs import (
+    _blank,
     _depths as _paren_depths,
+    _lex_spans,
+    _scan_args,
+    _split_top,
     _string_mask,
     rewrite_functions as _rewrite_funcs,
 )
@@ -750,7 +754,7 @@ def _maybe_stage_insert(
     target-name span and flows through the same :func:`execute_statement`
     translation.  A failure (not crash) drops the stage and re-raises —
     fail-stop semantics unchanged."""
-    m = _INSERT_TARGET_RE.match(sql)
+    m = _INSERT_TARGET_RE.match(_blank(sql))
     if m is None or m.group("t").lower() == "function":
         return None
     try:
@@ -1145,8 +1149,6 @@ def _sq(value: str) -> str:
     return value.replace("'", "''")
 
 
-_STR_LIT_RE = re.compile(r"'(?:[^']|'')*'")
-_BQ_IDENT_RE = re.compile(r"`([^`]*)`")
 _BARE_IDENT_RE = re.compile(r"(?<![\w.`'])[A-Za-z_]\w*")
 _EXPR_KEYWORDS = frozenset(
     """and or not in like ilike rlike regexp between is null true false case
@@ -1195,12 +1197,12 @@ def _check_read_identifiers(columns: list[str], expr: str, what: str) -> None:
                 f"{near!r}? (ClickHouse identifiers are case-sensitive)"
             )
 
-    s = _STR_LIT_RE.sub(" ", expr)
+    s = _blank(expr, ("literal", "ident", "comment", "hint", "open"))
     if re.search(r"\bSELECT\b", s, re.I):
         return  # subquery: identifiers may belong to other relations
-    for m in _BQ_IDENT_RE.finditer(s):  # backquoted = explicit identifier
-        _reject(m.group(1))
-    s = _BQ_IDENT_RE.sub(" ", s)
+    for b, e, kind in _lex_spans(expr):
+        if kind == "ident":  # backquoted = explicit identifier
+            _reject(expr[b + 1 : e - 1])
     prev = ""
     for m in _BARE_IDENT_RE.finditer(s):
         w = m.group(0)
@@ -1481,16 +1483,6 @@ _PART_FUNCS: list[tuple[re.Pattern[str], "object"]] = [
 ]
 
 
-def _split_top_commas(s: str) -> list[str]:
-    """Quote- AND paren-aware top-level comma split (ADVICE r7: this
-    local copy was quote-blind after ddl/select_funcs were hardened —
-    a PARTITION BY expression or partition value with a ',' inside a
-    string literal mis-split).  Delegates to the shared quote-aware
-    splitter; parts come back stripped, same contract as before."""
-    parts = [p.strip() for p in _ddl_split_top(s)]
-    return parts if parts != [""] else []
-
-
 def _partition_cond(partition_by: str, value: str):
     """Row predicate for ``ALTER TABLE ... <op> PARTITION <value>``:
     recorded PARTITION BY expression(s) == the named partition value(s).
@@ -1501,11 +1493,14 @@ def _partition_cond(partition_by: str, value: str):
         p = p[p.index("(") + 1 : p.rindex(")")].strip()
     # strip one *wrapping* paren pair (`(a, b)`), never a function's
     # closing paren (`toYYYYMM(ts)`)
-    if p.startswith("(") and p.endswith(")") and _split_top_commas(p)[0] == p:
+    if p.startswith("(") and p.endswith(")") and _split_top(p)[0] == p:
         p = p[1:-1].strip()
-    pieces = _split_top_commas(p)
+    pieces = [x.strip() for x in _split_top(p)]
     v = value.strip()
-    vals = _split_top_commas(v[1:-1]) if v.startswith("(") and v.endswith(")") else [v]
+    if v.startswith("(") and v.endswith(")"):
+        vals = [x.strip() for x in _split_top(v[1:-1])]
+    else:
+        vals = [v]
     if len(vals) != len(pieces):
         raise ValueError(
             f"partition value {value!r} does not match PARTITION BY {partition_by!r}"
@@ -2223,27 +2218,18 @@ def _rewrite_dictget(spark: SparkSession, query: str) -> str:
         m = _search_unquoted(_DICTGET_RE, query)
         if not m:
             return query
-        # balanced-paren scan for the argument list — masked positions
-        # (string literals / backticks / comments) count for nothing: a
-        # paren inside a literal arg, dictGet('d', 'x', concat(k, ')')),
-        # must not close the call (ADVICE r7, mirrors _find_prewhere)
-        mask = _string_mask(query)
-        depth, i = 1, m.end()
-        while depth:
-            if i >= len(query):
-                raise ValueError(f"unclosed dictGet call: {query[m.start():]!r}")
-            if not mask[i]:
-                if query[i] == "(":
-                    depth += 1
-                elif query[i] == ")":
-                    depth -= 1
-            i += 1
-        args = _ddl_split_top(query[m.end() : i - 1])
+        # balanced-paren scan for the argument list — lexer spans count
+        # for nothing: a paren inside a literal arg, dictGet('d', 'x',
+        # concat(k, ')')), must not close the call
+        try:
+            args, i = _scan_args(query, m.end())
+        except ValueError:
+            raise ValueError(f"unclosed dictGet call: {query[m.start():]!r}") from None
         if len(args) != 3:
             raise ValueError(f"dictGet expects 3 args: {query[m.start():i]!r}")
-        dname = args[0].strip().strip("'\"")
-        attr = args[1].strip().strip("'\"")
-        key_expr = args[2].strip()
+        dname = args[0].strip("'\"")
+        attr = args[1].strip("'\"")
+        key_expr = args[2]
         qual = _qualify(spark, dname)
         pk = _table_props(spark, qual).get("clickhouse.dict_key")
         if not pk:
@@ -2308,32 +2294,30 @@ _ARRAY_JOIN_ZIP_RE = re.compile(r"\s*,\s*\S.*?\s+AS\s+\w+", re.I | re.S)
 
 def _rewrite_array_join(query: str) -> str:
     """``[LEFT] ARRAY JOIN expr AS x`` → ``LATERAL VIEW [OUTER]
-    explode(expr) AS x``.  The expression is scanned with paren/quote
-    awareness (it may contain commas inside calls); the alias is the
-    first top-level ``AS``."""
+    explode(expr) AS x``.  The expression is scanned past lexer spans
+    with paren awareness (it may contain commas inside calls), and its
+    comments are blanked; the alias is the first top-level ``AS``."""
     while True:
         m = _search_unquoted(_ARRAY_JOIN_START_RE, query)
         if not m:
             return query
-        i, n = m.end(), len(query)
+        spans = _lex_spans(query)
+        if spans and spans[-1][2] == "open" and spans[-1][0] >= m.end():
+            raise ValueError("unterminated string literal in ARRAY JOIN")
+        mask = _string_mask(query)
         depth = 0
-        while i < n:
+        for i in range(m.end(), len(query)):
+            if mask[i]:
+                continue
             ch = query[i]
-            if ch == "'":
-                j = query.find("'", i + 1)
-                while j != -1 and j + 1 < n and query[j + 1] == "'":
-                    j = query.find("'", j + 2)
-                if j == -1:
-                    raise ValueError("unterminated string literal in ARRAY JOIN")
-                i = j
-            elif ch == "(":
+            if ch == "(":
                 depth += 1
             elif ch == ")":
                 depth -= 1
             elif depth == 0:
                 mm = _ARRAY_JOIN_AS_RE.match(query, i)
                 if mm:
-                    expr = query[m.end() : i].strip()
+                    expr = _blank(query[m.end() : i]).strip()
                     if _ARRAY_JOIN_ZIP_RE.match(query, mm.end()):
                         raise ValueError(
                             "multi-column ARRAY JOIN (zip form) is not "
@@ -2347,7 +2331,6 @@ def _rewrite_array_join(query: str) -> str:
                     )
                     query = query[: m.start()] + repl + query[mm.end() :]
                     break
-            i += 1
         else:
             raise ValueError(
                 "ARRAY JOIN requires an 'AS <alias>' (the bare form would "
@@ -2490,7 +2473,7 @@ def _rewrite_with_fill(query: str) -> str:
         return query
     inner = query[: m.start()].strip()
     col = m.group("col")
-    if _WITH_FILL_RESERVED_RE.search(_STR_LIT_RE.sub("''", f"{inner} {col}")):
+    if _WITH_FILL_RESERVED_RE.search(_blank(f"{inner} {col}", ("literal", "comment"))):
         raise ValueError(_WITH_FILL_UNSUPPORTED)
     direction = (m.group("dir") or "").strip()
     step = m.group("step") or "1"

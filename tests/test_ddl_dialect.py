@@ -61,11 +61,22 @@ def test_create_with_wrappers():
     assert "BIGINT" in st.sql and "ARRAY<STRING>" in st.sql
     assert "LowCardinality" not in st.sql and "Nullable" not in st.sql
     assert st.order_by == "id"
+    # a leading comment, and inline ones in the column list, neither hide
+    # the statement kind nor swallow the clauses after them
+    st = translate(
+        "-- events, v2\nCREATE TABLE t (id UInt64, -- key, first\n"
+        "tag LowCardinality(String) /* was, String */) "
+        "ENGINE = MergeTree ORDER BY id"
+    )
+    assert st.kind == "create_table" and st.order_by == "id"
+    assert st.sql == "CREATE TABLE t (id BIGINT, tag STRING ) USING PARQUET"
 
 
 def test_rename_table_translated():
     st = translate("RENAME TABLE db.a TO db.b")
     assert st.kind == "passthrough"
+    assert st.sql == "ALTER TABLE db.a RENAME TO db.b"
+    st = translate("/* blue/green */ RENAME TABLE db.a TO db.b -- swap")
     assert st.sql == "ALTER TABLE db.a RENAME TO db.b"
 
 
@@ -77,6 +88,8 @@ def test_optimize_classified():
     st2 = translate("OPTIMIZE TABLE db.t FINAL DEDUPLICATE")
     assert st2.kind == "optimize"
     assert st2.deduplicate is True
+    st3 = translate("-- nightly, compact\nOPTIMIZE TABLE t FINAL /* DEDUPLICATE */")
+    assert (st3.kind, st3.table, st3.deduplicate) == ("optimize", "t", False)
 
 
 def test_create_records_engine_name():
@@ -136,6 +149,23 @@ def test_alter_column_ops_classified():
     assert (st.kind, st.column, st.rename_to) == ("rename_column", "a", "b")
     # MODIFY TTL must not be swallowed by MODIFY COLUMN
     assert translate("ALTER TABLE t MODIFY TTL ts + INTERVAL 7 DAY").kind == "set_ttl"
+    st = translate("-- x\nALTER TABLE t DROP COLUMN /* old, unused */ v")
+    assert (st.kind, st.table, st.column) == ("drop_column", "t", "v")
+
+
+def test_comments_blanked_before_classifying():
+    st = translate("-- x\nALTER TABLE u DELETE WHERE id = 1")
+    assert (st.kind, st.table, st.predicate) == ("cow_delete", "u", "id = 1")
+    st = translate(
+        "ALTER TABLE u UPDATE -- set both, s and v\n s = 'a--b', "
+        "/* c, d */ v = 2 WHERE id = 1 -- done"
+    )
+    assert st.kind == "cow_update"
+    assert st.assignments == [("s", "'a--b'"), ("v", "2")]
+    assert st.predicate == "id = 1"
+    # a Spark optimizer hint is not a comment and stays
+    st = translate("INSERT INTO t SELECT /*+ REPARTITION(2) */ * FROM s")
+    assert st.sql == "INSERT INTO t SELECT /*+ REPARTITION(2) */ * FROM s"
 
 
 def test_materialized_view_maps_to_ctas_table():
@@ -274,13 +304,17 @@ def test_ddl_literals_are_opaque_to_all_scans():
 def test_split_top_is_quote_aware(spark):
     """Pinned (round-7): top-level comma splits treat literal commas as
     data — end-to-end through an ALTER UPDATE with a comma literal."""
-    from clickhouse_migrator_spark.ddl import _split_top
+    from clickhouse_migrator_spark.functions.select_funcs import _split_top
     from clickhouse_migrator_spark import migrate as M
     import uuid
 
     assert _split_top("'a,b', 'c', k") == ["'a,b'", " 'c'", " k"]
     assert _split_top("a = 'x,y', b = 2") == ["a = 'x,y'", " b = 2"]
     assert _split_top("f(x, y), 'it''s, ok'") == ["f(x, y)", " 'it''s, ok'"]
+    assert _split_top("`a,b` = 1, c = 2") == ["`a,b` = 1", " c = 2"]
+    assert _split_top("a = [1, 2], b = 3") == ["a = [1, 2]", " b = 3"]
+    st = translate("ALTER TABLE t UPDATE `a,b` = 1 WHERE k = 1")
+    assert st.assignments == [("a,b", "1")]
 
     db = "splitdb_" + uuid.uuid4().hex[:8]
     prev = spark.catalog.currentDatabase()
@@ -307,7 +341,9 @@ def test_split_top_is_quote_aware(spark):
 
 
 def test_ddl_split_top_backslash_literal():
-    parts = ddl._split_top(r"a = 'x\',y', b = 2")
+    from clickhouse_migrator_spark.functions.select_funcs import _split_top
+
+    parts = _split_top(r"a = 'x\',y', b = 2")
     assert len(parts) == 2
     assert parts[0].strip() == r"a = 'x\',y'"
     assert parts[1].strip() == "b = 2"

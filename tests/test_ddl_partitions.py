@@ -129,12 +129,19 @@ def test_replace_partition(spark, db):
 # ── partition-expression comma split is quote-aware ──────────────────────────
 
 
-def test_migrate_split_top_commas_quote_aware():
-    assert M._split_top_commas("if(k = 'a,b', 0, 1), c") == [
+def test_migrate_split_top_commas_quote_aware(spark):
+    from clickhouse_migrator_spark.functions.select_funcs import _split_top
+
+    assert [p.strip() for p in _split_top("if(k = 'a,b', 0, 1), c")] == [
         "if(k = 'a,b', 0, 1)",
         "c",
     ]
-    assert M._split_top_commas("'x,y'") == ["'x,y'"]
+    assert [p.strip() for p in _split_top("'x,y'")] == ["'x,y'"]
+    assert [p.strip() for p in _split_top("`a,b`, d")] == ["`a,b`", "d"]
+    # a backticked key with a comma is one partition key, not two
+    cond = M._partition_cond("tuple(`a,b`, d)", "(1, 2)")
+    df = spark.createDataFrame([(1, 2), (1, 3)], "`a,b` int, d int")
+    assert [tuple(r) for r in df.filter(cond).collect()] == [(1, 2)]
 
 
 def test_partition_cond_with_literal_comma(spark):

@@ -56,6 +56,8 @@ def test_alter_modify_forms_round6(spark):
     assert translate("ALTER TABLE t RESET SETTING x").sql == "SELECT 1"
     st = translate("ALTER TABLE t MODIFY COMMENT 'new docs'")
     assert st.sql == "COMMENT ON TABLE t IS 'new docs'"
+    st = translate(r"ALTER TABLE t MODIFY COMMENT 'it\'s'")
+    assert st.sql == r"COMMENT ON TABLE t IS 'it\'s'"
     st = translate("ALTER TABLE t MODIFY COLUMN c REMOVE DEFAULT")
     assert st.sql == "ALTER TABLE t ALTER COLUMN c DROP DEFAULT"
     st = translate("ALTER TABLE t MODIFY ORDER BY (a, b)")

@@ -287,6 +287,8 @@ def test_comment_column_rewritten(spark):
     st = translate("ALTER TABLE t COMMENT COLUMN v 'the value'")
     assert st.kind == "passthrough"
     assert st.sql == "ALTER TABLE t ALTER COLUMN v COMMENT 'the value'"
+    st = translate("ALTER TABLE t COMMENT COLUMN c 'it''s'")
+    assert st.sql == "ALTER TABLE t ALTER COLUMN c COMMENT 'it''s'"
 
 
 def test_ingest_jsoneachrow(spark, tmp_path):
@@ -1325,6 +1327,8 @@ def test_case_mismatch_still_rejected_without_subquery(spark, db):
     )
     with pytest.raises(ValueError, match="case-sensitive"):
         M.execute_statement(spark, "ALTER TABLE t_case UPDATE v = 0 WHERE K = 1")
+    # a backslash-escaped quote does not end the literal: 'V' is data
+    M._check_read_identifiers(["k", "v", "s"], r"s = 'it\'s V'", "WHERE")
 
 
 def test_sql_keywords_in_predicate_not_treated_as_identifiers():

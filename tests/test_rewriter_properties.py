@@ -6,18 +6,18 @@ not just the hand-picked examples in test_select_functions.py."""
 
 from __future__ import annotations
 
-import re
-
 from hypothesis import given, settings, strategies as st
 
 from clickhouse_migrator_spark.functions.select_funcs import (
+    _lex_spans,
+    _split_top,
     _string_mask,
     rewrite_functions,
 )
 
 # building blocks for random-but-balanced SQL expressions
 _IDENTS = st.sampled_from(
-    ["x", "y", "col1", "tbl.c", "value", "ts", "user_id", "`quoted col`"]
+    ["x", "y", "col1", "tbl.c", "value", "ts", "user_id", "`quoted col`", "`a,b`"]
 )
 _CH_FUNCS = st.sampled_from(
     ["countIf", "sumIf", "uniq", "argMax", "toInt32", "arrayMap", "position",
@@ -25,15 +25,17 @@ _CH_FUNCS = st.sampled_from(
 )
 _LITERALS = st.sampled_from(
     ["'plain'", "'countIf(x)'", "'it''s'", "'[1,2]'", "'-- no comment'",
-     "42", "3.14", "'argMax(a, b)'"]
+     "42", "3.14", "'argMax(a, b)'", r"'it\'s'", "'a,b'"]
 )
 
 
 @st.composite
 def sql_exprs(draw, depth: int = 2) -> str:
-    kind = draw(st.integers(0, 4 if depth > 0 else 2))
+    kind = draw(st.integers(0, 5 if depth > 0 else 2))
     if kind == 0:
         return draw(_IDENTS)
+    if kind == 5:
+        return f"{draw(sql_exprs(depth=depth - 1))} /* c, d */"
     if kind == 1:
         return draw(_LITERALS)
     if kind == 2:
@@ -70,8 +72,9 @@ def test_quoted_literals_survive_verbatim(sql):
     out = rewrite_functions(sql)
     # every single-quoted literal of the input must appear in the output
     # (rewrites never reach inside quotes, and rules only copy args)
-    for lit in re.findall(r"'(?:[^']|'')*'", sql):
-        assert lit in out, (lit, out)
+    for s, e, kind in _lex_spans(sql):
+        if kind == "literal":
+            assert sql[s:e] in out, (sql[s:e], out)
 
 
 @given(sql_statements())
@@ -97,3 +100,74 @@ def test_brackets_stay_balanced(sql):
 def test_unknown_functions_pass_through(name, args):
     sql = f"SELECT {name}({', '.join(args)}) FROM t"
     assert rewrite_functions(sql) == sql
+
+
+# ── the lexer: one span scanner under the mask and the splitter ─────────────
+
+_LEX_TEXT = st.text(
+    alphabet=st.sampled_from(
+        ["'", "`", "\\", "-", "/", "*", "+", "\n", "a", " ", ",", "(", ")", "["]
+    ),
+    max_size=40,
+)
+
+
+def _reference_mask(sql: str) -> list[bool]:
+    """The character-loop scanner the span lexer replaced, kept verbatim
+    as the reference its mask must reproduce."""
+    mask = [False] * len(sql)
+    i, n = 0, len(sql)
+    while i < n:
+        ch = sql[i]
+        if ch == "-" and sql[i : i + 2] == "--":
+            j = sql.find("\n", i)
+            j = n if j == -1 else j
+            for k in range(i, j):
+                mask[k] = True
+            i = j
+        elif ch == "/" and sql[i : i + 2] == "/*":
+            j = sql.find("*/", i + 2)
+            j = n if j == -1 else j + 2
+            for k in range(i, j):
+                mask[k] = True
+            i = j
+        elif ch == "'" or ch == "`":
+            quote = ch
+            mask[i] = True
+            i += 1
+            while i < n:
+                mask[i] = True
+                if sql[i] == "\\" and i + 1 < n:
+                    mask[i + 1] = True
+                    i += 2
+                    continue
+                if sql[i] == quote:
+                    if quote == "'" and i + 1 < n and sql[i + 1] == "'":
+                        mask[i + 1] = True
+                        i += 2
+                        continue
+                    i += 1
+                    break
+                i += 1
+        else:
+            i += 1
+    return mask
+
+
+@given(st.one_of(_LEX_TEXT, sql_statements()))
+@settings(max_examples=500, deadline=None)
+def test_span_mask_matches_reference_scanner(sql):
+    assert _string_mask(sql) == _reference_mask(sql)
+
+
+@given(st.one_of(_LEX_TEXT, sql_statements()))
+@settings(max_examples=500, deadline=None)
+def test_split_top_rejoins_and_never_splits_a_span(sql):
+    parts = _split_top(sql)
+    assert ",".join(parts) == sql
+    assert parts or sql == ""
+    mask = _string_mask(sql)
+    cut = -1
+    for p in parts[:-1]:
+        cut += len(p) + 1
+        assert sql[cut] == "," and not mask[cut], (sql, parts)

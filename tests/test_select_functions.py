@@ -233,6 +233,16 @@ def test_array_join_to_lateral_view():
     assert (
         out == "SELECT doc_id, w FROM t LATERAL VIEW OUTER explode(words) AS w"
     )
+    # backslash-escaped quotes and comments inside the joined expression
+    out = _rewrite_clauses(
+        r"SELECT x FROM t ARRAY JOIN splitByChar(',', concat(s, 'it\'s')) AS x"
+    )
+    assert out == (
+        r"SELECT x FROM t LATERAL VIEW "
+        r"explode(splitByChar(',', concat(s, 'it\'s'))) AS x"
+    )
+    out = _rewrite_clauses("SELECT x FROM t ARRAY JOIN arr -- it's\n AS x")
+    assert out == "SELECT x FROM t LATERAL VIEW explode(arr) AS x"
 
 
 def test_array_join_zip_form_raises():
@@ -428,6 +438,9 @@ def test_with_fill_reserved_name_in_literal_is_data():
 
     out = _rewrite_with_fill("SELECT d, '__lo' AS s FROM t ORDER BY d WITH FILL FROM 0 TO 3")
     assert out.startswith("WITH __wf AS (SELECT d, '__lo' AS s FROM t)")
+    q = r"SELECT d, 'it\'s __wf' AS c FROM t ORDER BY d WITH FILL FROM 1 TO 5"
+    out = _rewrite_with_fill(q)
+    assert out.startswith(r"WITH __wf AS (SELECT d, 'it\'s __wf' AS c FROM t)")
 
 
 def test_with_fill_execution(spark, sf_dir, views):

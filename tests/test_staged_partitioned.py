@@ -253,6 +253,8 @@ def test_migration_created_partitioned_table_takes_staged_inserts(
             "CREATE TABLE cp (k Int64, v Int64, d String) "
             "USING PARQUET PARTITIONED BY (d)",
             "INSERT INTO cp VALUES (1, 10, 'a'), (2, 20, 'b')",
+            # a leading comment still takes the staged path
+            "-- backfill, one row\nINSERT INTO cp VALUES (3, 30, 'a')",
         ],
     )
     published = []
@@ -264,9 +266,9 @@ def test_migration_created_partitioned_table_takes_staged_inserts(
 
     monkeypatch.setattr(M, "_publish_stage", recorded)
     assert M.migrate(spark, db, home) == 1
-    assert published == [f"`{db}`.`cp`"]
+    assert published == [f"`{db}`.`cp`"] * 2
     assert M._describe_table(spark, f"`{db}`.`cp`")["pcols"] == ["d"]
-    assert _rows(spark, db, "cp") == [(1, 10, "a"), (2, 20, "b")]
+    assert _rows(spark, db, "cp") == [(1, 10, "a"), (2, 20, "b"), (3, 30, "a")]
     parts = {r.partition for r in spark.sql(f"SHOW PARTITIONS `{db}`.cp").collect()}
     assert parts == {"d=a", "d=b"}
     loc = M._table_location(spark, f"`{db}`.`cp`")

@@ -10,7 +10,10 @@ REST of the mutation surface: for every statement template with known
 identifier slots, it
 
   1. executes the well-cased statement on a fresh mixed-case table and
-     asserts it SUCCEEDS with the expected effect (no false rejections);
+     asserts it SUCCEEDS with the expected effect (no false rejections),
+     then runs it once more, decorated with a leading ``--`` line and a
+     ``/* */`` comment between two clauses, on another fresh table and
+     asserts the same effect (comments are never part of the statement);
   2. mutates the case of one identifier occurrence (seeded random case
      pattern) and asserts the engine REJECTS it with the case-sensitive
      ValueError — never silently resolves it;
@@ -142,6 +145,16 @@ def run_epoch(spark, db: str, seed: int) -> list[str]:
         except Exception as e:
             failures.append(f"{label}: well-cased form rejected: {e}")
             continue
+        td = _fresh_table(spark, db, rng)
+        decorated = "-- note, x\n" + good_sql.replace(
+            "__t__", f"{td} /* c, d */", 1
+        )
+        try:
+            M.execute_statement(spark, decorated)
+            if _state(spark, db, td) != _state(spark, db, t):
+                failures.append(f"{label}: commented form differs: {decorated!r}")
+        except Exception as e:
+            failures.append(f"{label}: commented form rejected: {e}")
         # 2. one mutated identifier occurrence must be rejected
         slot = rng.choice(slots)
         bad = rng.choice(_mutations(slot))
