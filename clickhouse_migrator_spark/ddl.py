@@ -153,17 +153,20 @@ def _tuple_to_struct(m: "re.Match[str]") -> str:
 _LIT_SLOT_RE = re.compile("\x00(\\d+)\x00")
 
 
-def _mask_literal_contents(sql: str) -> tuple[str, list[str]]:
-    """Replace every string-literal's CONTENT with a ``\\x00i\\x00``
-    slot (quotes stay, so quote-expecting grammar still matches).  Type
-    tokens, ENGINE/ORDER BY/PARTITION BY keywords, commas, or parens
-    inside a literal are DATA — the quote-blind scans rewrote
+def _mask_literal_contents(
+    sql: str, kinds: tuple[str, ...] = ("literal",)
+) -> tuple[str, list[str]]:
+    """Replace the CONTENT of every :func:`_lex_spans` span of ``kinds``
+    (string literals unless told otherwise) with a ``\\x00i\\x00`` slot
+    (quotes stay, so quote-expecting grammar still matches).  Type
+    tokens, ENGINE/ORDER BY/PARTITION BY/WHERE keywords, commas, or
+    parens inside a literal are DATA — the quote-blind scans rewrote
     ``DEFAULT 'a UInt32 b'`` and captured layout clauses out of
     ``DEFAULT 'ORDER BY x'`` (round-7 probe battery)."""
     lits: list[str] = []
     out, last = [], 0
     for s, e, kind in _lex_spans(sql):
-        if kind == "literal":
+        if kind in kinds:
             out += [sql[last : s + 1], f"\x00{len(lits)}\x00"]
             lits.append(sql[s + 1 : e - 1])
             last = e - 1
@@ -185,9 +188,9 @@ def _unmask_literal_contents(sql: str | None, lits: list[str]) -> str | None:
 def map_types(sql: str) -> str:
     """Rewrite ClickHouse type tokens to Spark DDL types (including the
     wrapper types real-world DDL uses: Nullable / LowCardinality /
-    Enum / Decimal / Array).  String-literal contents are never
-    touched."""
-    sql, lits = _mask_literal_contents(sql)
+    Enum / Decimal / Array).  String-literal contents and backticked
+    identifiers are never touched: `` `Date` Date `` keeps its name."""
+    sql, lits = _mask_literal_contents(sql, ("literal", "ident"))
     prev = None
     while prev != sql:  # unwrap nested wrappers/containers to fixpoint
         prev = sql
@@ -371,14 +374,16 @@ def _names_provider(create_sql: str) -> bool:
     return False
 
 
-def _split_assignments(assign: str) -> list[tuple[str, str]]:
-    """Split ``a = e1, b = e2`` on top-level commas only."""
+def _split_assignments(assign: str, lits: list[str]) -> list[tuple[str, str]]:
+    """Split literal-masked ``a = e1, b = e2`` on top-level commas only,
+    unmasking each expression with ``lits``."""
     out = []
     for p in _split_top(assign):
         if "=" not in p:
+            p = _unmask_literal_contents(p, lits)
             raise ValueError(f"ALTER UPDATE assignment without '=': {p.strip()!r}")
         col, expr = p.split("=", 1)
-        out.append((col.strip().strip("`"), expr.strip()))
+        out.append((col.strip().strip("`"), _unmask_literal_contents(expr.strip(), lits)))
     return out
 
 
@@ -396,6 +401,10 @@ def translate(sql: str) -> Statement:
     sql = re.sub(r"\bPOPULATE\s+(?=AS\b)", "", sql, flags=re.I)
     sql = _CODEC_RE.sub("", sql)
     sql = _INLINE_INDEX_RE.sub("", sql)
+    # the lazy ALTER captures that stop at a keyword (UPDATE … WHERE,
+    # MOVE … TO TABLE, REPLACE … FROM) match on literal-masked text, so a
+    # keyword inside a literal is data; each captured field is unmasked
+    masked, lits = _mask_literal_contents(sql)
     m = _ALTER_INDEX_RE.match(sql)
     if m:  # data-skipping index maintenance: parquet footer min/max and
         # bloom-filter write options subsume it — documented no-op
@@ -498,23 +507,23 @@ def translate(sql: str) -> Statement:
             column=m.group("key").strip("`"),
             rename_to=sm.group("t"),
         )
-    m = _MOVE_PART_RE.match(sql)
+    m = _MOVE_PART_RE.match(masked)
     if m:  # partition migration between tables (append + cow-delete)
         return Statement(
             kind="move_partition",
             sql=sql,
             table=m.group("src").strip("`"),
             rename_to=m.group("dst").strip("`"),
-            predicate=m.group("val").strip(),
+            predicate=_unmask_literal_contents(m.group("val").strip(), lits),
         )
-    m = _REPLACE_PART_RE.match(sql)
+    m = _REPLACE_PART_RE.match(masked)
     if m:  # overwrite dst's partition with src's copy (src unchanged)
         return Statement(
             kind="replace_partition",
             sql=sql,
             table=m.group("dst").strip("`"),
             rename_to=m.group("src").strip("`"),
-            predicate=m.group("val").strip(),
+            predicate=_unmask_literal_contents(m.group("val").strip(), lits),
         )
     m = _TRUNCATE_RE.match(sql)
     if m:  # delete all rows, keep schema — executed by the runner so
@@ -614,14 +623,14 @@ def translate(sql: str) -> Statement:
             default=_wrap_unsigned_default(m.group("type"), m.group("default")),
             if_exists=bool(m.group("ifnex")),  # IF NOT EXISTS tolerance
         )
-    m = _UPDATE_RE.match(sql)
+    m = _UPDATE_RE.match(masked)
     if m:
         return Statement(
             kind="cow_update",
             sql=sql,
             table=m.group("table").strip("`"),
-            assignments=_split_assignments(m.group("assign")),
-            predicate=m.group("pred"),
+            assignments=_split_assignments(m.group("assign"), lits),
+            predicate=_unmask_literal_contents(m.group("pred"), lits),
         )
     m = _DELETE_RE.match(sql)
     if m:

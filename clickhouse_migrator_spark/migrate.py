@@ -15,10 +15,12 @@ Spark-native deltas from the reference:
 - pandas metadata frames → driver-side rows: the ledger, claims and
   journal are read and appended as parquet part files on the driver
   (:func:`_read_meta_rows`, :func:`_append_meta_row`) in the directory
-  each entry point resolves once (:func:`_meta`), and the diff is a
-  guard pass over those rows (full outer join + three guards +
-  projection, reference `migrate.py:26-41`) — the bookkeeping starts
-  no Spark job.  Manifest and pending set are local frames.
+  each entry point resolves once (:func:`_meta`, which also creates or
+  widens the table from its schema where it is first needed, in place
+  of the reference's per-call ``init_db``), and the diff is a guard
+  pass over those rows (full outer join + three guards + projection,
+  reference `migrate.py:26-41`) — the bookkeeping starts no Spark job.
+  Manifest and pending set are local frames.
 - ClickHouse async-mutation polling (``pipelined``, reference
   `migrate.py:56-71`) → nothing: Spark actions are synchronous, so the
   sequencing that ``queue_exec=True`` exists to enforce is automatic.
@@ -191,6 +193,10 @@ JOURNAL_SCHEMA = StructType(
     ]
 )
 
+#: each runner metadata table's schema, the one source :func:`_meta`
+#: creates and widens it from
+_META_SCHEMAS = {LEDGER: LEDGER_SCHEMA, CLAIMS: CLAIMS_SCHEMA, JOURNAL: JOURNAL_SCHEMA}
+
 MANIFEST_SCHEMA = StructType(
     [
         StructField("version", LongType()),
@@ -215,85 +221,50 @@ def create_db(spark: SparkSession, db_name: str) -> None:
 
 
 def init_db(spark: SparkSession, db_name: str) -> None:
-    """Idempotent ledger bootstrap (reference `migrate.py:22-23`:
-    ``version UInt32, md5 String, script String, created_at DateTime
-    DEFAULT now()`` — types mapped per SURVEY.md §1.2; the DEFAULT is
-    injected at insert time)."""
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS `{db_name}`.`{LEDGER}` "
-        "(version BIGINT, md5 STRING, script STRING, created_at TIMESTAMP) "
-        "USING PARQUET"
-    )
-    _init_claims(spark, db_name)
-    _init_journal(spark, db_name)
-
-
-def _init_claims(spark: SparkSession, db_name: str) -> None:
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS `{db_name}`.`{CLAIMS}` "
-        "(version BIGINT, owner STRING, started_at TIMESTAMP, "
-        "released BOOLEAN, claim_id STRING) USING PARQUET"
-    )
-    qual = f"`{db_name}`.`{CLAIMS}`"
-    have = {f.name for f in spark.table(qual).schema.fields}
-    widen = [
-        c
-        for c, t in (("released", "BOOLEAN"), ("claim_id", "STRING"))
-        if c not in have
-    ]
-    if widen:
-        # claims table from an older build: widen in place (existing
-        # rows read NULL → released NULL = live claim, claim_id NULL =
-        # legacy row matched by its (version, owner) composite — both
-        # exactly their old meaning)
-        cols = ", ".join(
-            f"{c} {t}" for c, t in (("released", "BOOLEAN"), ("claim_id", "STRING")) if c in widen
-        )
-        spark.sql(f"ALTER TABLE {qual} ADD COLUMNS ({cols})")
-        spark.catalog.refreshTable(qual)
-
-
-def _init_journal(spark: SparkSession, db_name: str) -> None:
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS `{db_name}`.`{JOURNAL}` "
-        "(version BIGINT, stmt_index BIGINT, md5 STRING, owner STRING, "
-        "created_at TIMESTAMP, swap_id STRING, target STRING) USING PARQUET"
-    )
+    """Idempotent bootstrap of the ledger, claims and journal tables
+    (reference `migrate.py:22-23`: ``version UInt32, md5 String, script
+    String, created_at DateTime DEFAULT now()`` — types mapped per
+    SURVEY.md §1.2; the DEFAULT is injected at insert time).  The runner
+    itself needs no call: :func:`_meta` creates or widens each table
+    where it is first needed."""
+    for name in _META_SCHEMAS:
+        _meta(spark, db_name, name)
 
 
 def _describe_table(spark: SparkSession, qual: str) -> dict:
     """One DESCRIBE TABLE EXTENDED, parsed SECTION-AWARE into
-    ``{"detail": {...}, "pcols": [...]}``.
+    ``{"columns": [...], "detail": {...}, "pcols": [...]}``.
 
     Section-awareness matters for correctness, not just tidiness: the
     old per-helper parses keyed the flat row list by col_name, so a
     DATA COLUMN literally named ``Location`` or ``Provider`` (schema
     rows come first) shadowed the metadata row and could route a
-    staged publish to a garbage path (r12 self-review #3).  ``detail``
-    holds only rows after the ``# Detailed Table Information`` header;
-    ``pcols`` the ordered names between ``# Partition Information``
-    and the next blank/``#`` row."""
+    staged publish to a garbage path (r12 self-review #3).  ``columns``
+    holds the schema rows before the first blank/``#`` row, ``detail``
+    only rows after the ``# Detailed Table Information`` header,
+    ``pcols`` the ordered names between ``# Partition Information`` and
+    the next blank/``#`` row."""
+    columns: list[str] = []
     detail: dict[str, str] = {}
     pcols: list[str] = []
-    section = "schema"
+    section = "columns"
     for r in spark.sql(f"DESCRIBE TABLE EXTENDED {qual}").collect():
         name = r.col_name or ""
         if name == "# Partition Information":
             section = "partition"
-            continue
-        if name == "# Detailed Table Information":
+        elif name == "# Detailed Table Information":
             section = "detail"
-            continue
-        if section == "partition":
-            if name == "# col_name":
-                continue
-            if not name.strip() or name.startswith("#"):
-                section = "schema"
-                continue
-            pcols.append(name)
         elif section == "detail":
             detail.setdefault(name, r.data_type)
-    return {"detail": detail, "pcols": pcols}
+        elif name == "# col_name":
+            continue
+        elif not name.strip() or name.startswith("#"):
+            section = None
+        elif section == "columns":
+            columns.append(name)
+        elif section == "partition":
+            pcols.append(name)
+    return {"columns": columns, "detail": detail, "pcols": pcols}
 
 
 def _table_location(spark: SparkSession, qual: str) -> str | None:
@@ -339,21 +310,47 @@ class _MetaTable:
 
 
 def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
-    """Resolve metadata table ``name`` of ``db_name`` with one DESCRIBE.
-    Each entry point resolves the tables it touches once and passes the
-    handle down, so its readers and appenders never ask the catalog
-    again.  The runner reads and appends these tables as local part
-    files, so any other location is refused: on HDFS or an object store
-    replace them with a transactional table format (README)."""
+    """The handle of metadata table ``name`` of ``db_name``, from one
+    DESCRIBE.  This is the only place such a table is created, widened
+    or located, all from its schema in :data:`_META_SCHEMAS`: a missing
+    table is created (IF NOT EXISTS, so a rival's create is no error),
+    and a table an older build wrote gains the fields it lacks, which
+    its rows read as NULL, their old meaning.  Each entry point resolves
+    the tables it touches once and passes the handle down.  The runner
+    reads and appends these tables as local part files, so any other
+    location is refused: on HDFS or an object store replace them with a
+    transactional table format (README)."""
     qual = f"`{db_name}`.`{name}`"
-    path = _table_location(spark, qual)
+    try:
+        info = _describe_table(spark, qual)
+    except AnalysisException as e:
+        if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {qual} "
+            f"({_column_list(_META_SCHEMAS[name].fields)}) USING PARQUET"
+        )
+        info = _describe_table(spark, qual)
+    path = _path_of_location(info["detail"].get("Location"))
     if path is None or not os.path.isdir(path):
         raise ValueError(
             f"runner metadata table {qual} is not in a local directory; the "
             "runner needs a local-filesystem warehouse for its ledger, claims "
             "and journal"
         )
+    missing = [f for f in _META_SCHEMAS[name].fields if f.name not in info["columns"]]
+    if missing:
+        try:
+            spark.sql(f"ALTER TABLE {qual} ADD COLUMNS ({_column_list(missing)})")
+        except AnalysisException as e:  # a rival runner widened it first
+            if e.getCondition() != "COLUMN_ALREADY_EXISTS":
+                raise
+        spark.catalog.refreshTable(qual)
     return _MetaTable(qual, path)
+
+
+def _column_list(fields: list[StructField]) -> str:
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
 
 
 def _append_claim_row(
@@ -518,9 +515,10 @@ def _read_meta_rows(meta: _MetaTable, columns: list[str]) -> list[dict]:
     rows, not die on FileNotFound (every append is one whole file, so
     every surviving row is intact).
 
-    A column a file lacks reads as ``None``: claims files written before
-    ``_init_claims`` widened the table have no ``released``/``claim_id``
-    and mean exactly that (live claim, legacy key).  INT96 timestamps
+    A column a file lacks reads as ``None``: files written before
+    :func:`_meta` widened their table (claims without ``released``/
+    ``claim_id``, journal rows without ``swap_id``/``target``) mean
+    exactly that (live claim, legacy key, commit row).  INT96 timestamps
     (what a Spark ``INSERT INTO`` writes) come back as microsecond
     datetimes, the type a Spark frame built from these rows accepts."""
     import pyarrow.parquet as pq
@@ -608,14 +606,17 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
     versions by definition).  Readers go through
     :func:`_read_journal_rows`, which tolerates a file vanishing
     between its listing and its read — a concurrent compaction is
-    invisible to them.  Called automatically by the runner after each
-    ledger append; safe as an operator step any time.  Returns the
-    number of rows removed."""
-    _init_journal(spark, db_name)
-    journal = _meta(spark, db_name, JOURNAL)
-    ledgered = _ledgered_versions(_meta(spark, db_name, LEDGER))
+    invisible to them.  The runner runs the same compaction after each
+    ledger append, with the handles it already holds; this is the
+    operator step, safe any time.  Returns the number of rows removed."""
+    return _compact_journal(spark, _meta(spark, db_name, JOURNAL), _meta(spark, db_name, LEDGER))
+
+
+def _compact_journal(spark: SparkSession, journal: _MetaTable, ledger: _MetaTable) -> int:
+    """:func:`compact_journal` over resolved handles."""
     import pyarrow.parquet as pq
 
+    ledgered = _ledgered_versions(ledger)
     removed = 0
     for fname in _part_files(journal.path):
         path = os.path.join(journal.path, fname)
@@ -936,7 +937,6 @@ def clear_journal(spark: SparkSession, db_name: str) -> int:
     the rerun to RESUME — clear them to force a full re-execution
     instead).  Single-operator step like :func:`clear_claims`.  Returns
     the number of statement (commit) rows cleared; swap intents go too."""
-    _init_journal(spark, db_name)
     journal = _meta(spark, db_name, JOURNAL)
     rows = _read_journal_rows(journal)
     if rows:
@@ -983,7 +983,6 @@ def clear_claims(spark: SparkSession, db_name: str) -> int:
     LIVE claims cleared.  Single-operator step by contract (like
     Flyway's ``repair``): run it only when no runner is live, so the
     compaction rewrite races nothing."""
-    _init_claims(spark, db_name)
     claims = _meta(spark, db_name, CLAIMS)
     rows = _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
     if rows:
@@ -1337,7 +1336,6 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
     step with no live runners.  Returns {target_table: "completed" |
     "completed:V<n>" | "rolled_back" | "journaled:V<n>"}."""
     actions: dict[str, str] = {}
-    _init_journal(spark, db_name)
     journal = _meta(spark, db_name, JOURNAL)
     tables = {
         r["tableName"]
@@ -2098,7 +2096,7 @@ def apply_migration(
             # removal + the listing-tolerant reader make this safe
             # against rival runners (see compact_journal).
             with _CLAIM_LOCK:
-                compact_journal(spark, db_name)
+                _compact_journal(spark, journal, ledger)
         except BaseException:
             # a FAILED statement releases the claim (the runner is
             # alive and fail-stop is the contract — the rerun must be
@@ -2127,14 +2125,14 @@ def migrate(
     queue_exec: bool = True,
 ) -> int:
     """Top-level orchestrator (reference `migrate.py:79-88`): optional
-    db bootstrap → ledger init → scan → diff → apply.  Returns the
-    number of migrations applied."""
+    db bootstrap → scan → diff → apply; each metadata table is created
+    where it is first needed (:func:`_meta`), the ledger by the diff and
+    the claims and journal by the apply.  Returns the number applied."""
     if create_db_if_no_exists:
         create_db(spark, db_name)
     prev_db = spark.catalog.currentDatabase()
     spark.catalog.setCurrentDatabase(db_name)
     try:
-        init_db(spark, db_name)
         manifest = manifest_df(spark, scan_migrations(migrations_home))
         pending = migrations_to_apply(spark, db_name, manifest)
         return apply_migration(spark, db_name, pending, queue_exec=queue_exec)

@@ -300,6 +300,35 @@ def test_ddl_literals_are_opaque_to_all_scans():
     )
     assert "AS SELECT" not in st.sql
 
+    # the ALTER clause keywords inside a literal are data too: WHERE ends
+    # an UPDATE's assignments, TO TABLE a MOVE's partition, FROM a
+    # REPLACE's partition
+    st = translate("ALTER TABLE t UPDATE s = 'a WHERE b' WHERE id = 1")
+    assert st.kind == "cow_update"
+    assert st.assignments == [("s", "'a WHERE b'")]
+    assert st.predicate == "id = 1"
+    st = translate("ALTER TABLE a MOVE PARTITION 'p TO TABLE b' TO TABLE c")
+    assert (st.kind, st.table, st.rename_to, st.predicate) == (
+        "move_partition",
+        "a",
+        "c",
+        "'p TO TABLE b'",
+    )
+    st = translate("ALTER TABLE a REPLACE PARTITION 'x FROM y' FROM src")
+    assert (st.kind, st.table, st.rename_to, st.predicate) == (
+        "replace_partition",
+        "a",
+        "src",
+        "'x FROM y'",
+    )
+
+    # type names inside backticked identifiers are names, not types
+    st = translate(
+        "CREATE TABLE t (`Date` Date, `x String` String) ENGINE = MergeTree ORDER BY `Date`"
+    )
+    assert st.sql == "CREATE TABLE t (`Date` DATE, `x String` STRING) USING PARQUET"
+    assert st.order_by == "`Date`"
+
 
 def test_split_top_is_quote_aware(spark):
     """Pinned (round-7): top-level comma splits treat literal commas as

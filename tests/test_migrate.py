@@ -835,11 +835,14 @@ def test_noop_migrate_catalog_calls_do_not_grow_with_tables(
     assert counts[0] == counts[1], counts
 
 
+@pytest.mark.usefixtures("ledger_db")
 def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, monkeypatch):
     """The runner looks up its metadata tables' locations once per
     call: a version of three CREATEs asks the catalog as often as a
-    version of one (no DESCRIBE per journal read or append)."""
-    creates = [f"CREATE TABLE t_desc{i} (v Int64) ENGINE = Log" for i in range(4)]
+    version of one (no DESCRIBE per journal read or append).  The
+    database is initialised first, so neither call creates a metadata
+    table."""
+    creates =[f"CREATE TABLE t_desc{i} (v Int64) ENGINE = Log" for i in range(4)]
     home = tmp_path / "mig"
     home.mkdir()
     real = M._describe_table
@@ -857,6 +860,81 @@ def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, 
         assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
         counts.append(len(calls))
     assert counts[0] == counts[1], counts
+
+
+def _count_catalog_calls(spark, monkeypatch):
+    """Counts of CREATE TABLE statements, ``SparkSession.table`` calls,
+    and the quals ``_describe_table`` is asked about, from now on."""
+    from pyspark.sql import SparkSession
+
+    seen = {"create": 0, "table": 0, "describe": []}
+    sql, table, describe = SparkSession.sql, SparkSession.table, M._describe_table
+
+    def counted_sql(self, q, *a, **k):
+        seen["create"] += q.split()[:2] == ["CREATE", "TABLE"]
+        return sql(self, q, *a, **k)
+
+    def counted_table(self, *a, **k):
+        seen["table"] += 1
+        return table(self, *a, **k)
+
+    def counted_describe(sess, qual):
+        seen["describe"].append(qual)
+        return describe(sess, qual)
+
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    monkeypatch.setattr(SparkSession, "table", counted_table)
+    monkeypatch.setattr(M, "_describe_table", counted_describe)
+    return seen
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_noop_migrate_creates_nothing(spark, db, monkeypatch):
+    """On an initialised database a noop migrate() bootstraps nothing:
+    no CREATE TABLE, no schema read, and one DESCRIBE, the ledger's,
+    for the diff."""
+    home = f"{FIXTURES}/migrations_mixed"
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 2
+    seen = _count_catalog_calls(spark, monkeypatch)
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 0
+    assert seen == {"create": 0, "table": 0, "describe": [f"`{db}`.`{M.LEDGER}`"]}
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_compaction_reuses_the_runners_handles(spark, db, tmp_path, monkeypatch):
+    """A version op resolves each metadata table once: the ledger for
+    the diff, then the ledger, claims and journal for the apply, whose
+    compaction after the ledger append reuses those handles."""
+    from collections import Counter
+
+    home = _write_migrations(
+        tmp_path, {"V1__t.sql": "CREATE TABLE t_handles (v Int64) ENGINE = Log"}
+    )
+    seen = _count_catalog_calls(spark, monkeypatch)
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+    meta = {f"`{db}`.`{t}`" for t in (M.LEDGER, M.CLAIMS, M.JOURNAL)}
+    assert Counter(q for q in seen["describe"] if q in meta) == {
+        f"`{db}`.`{M.LEDGER}`": 2,
+        f"`{db}`.`{M.CLAIMS}`": 1,
+        f"`{db}`.`{M.JOURNAL}`": 1,
+    }
+
+
+def test_fresh_database_gets_its_metadata_tables_on_first_need(spark, tmp_path):
+    """migrate() on a database that does not exist yet creates it, then
+    each metadata table where it is first needed, and applies."""
+    db = "testdb_" + uuid.uuid4().hex[:8]
+    home = _write_migrations(
+        tmp_path, {"V1__t.sql": "CREATE TABLE t_fresh (v Int64) ENGINE = Log"}
+    )
+    try:
+        assert M.migrate(spark, db, home, create_db_if_no_exists=True) == 1
+        tables = {r.tableName for r in spark.sql(f"SHOW TABLES IN `{db}`").collect()}
+        assert {M.LEDGER, M.CLAIMS, M.JOURNAL, "t_fresh"} <= tables
+        assert [r.version for r in spark.table(f"`{db}`.`{M.LEDGER}`").collect()] == [1]
+        assert M.migrate(spark, db, home, create_db_if_no_exists=True) == 0
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
 
 
 def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
@@ -1104,7 +1182,7 @@ def test_legacy_null_claim_id_rows_keep_pair_semantics(spark, db):
 
 def test_claims_schema_widens_claim_id_in_place(spark):
     """A claims table created by an older build (no claim_id column) is
-    widened on _init_claims; existing rows read claim_id NULL (legacy
+    widened in place by _meta; existing rows read claim_id NULL (legacy
     semantics)."""
     name = "testdb_" + uuid.uuid4().hex[:8]
     M.create_db(spark, name)
@@ -1118,7 +1196,7 @@ def test_claims_schema_widens_claim_id_in_place(spark):
             f"INSERT INTO `{name}`.`{M.CLAIMS}` VALUES "
             "(1, 'old', current_timestamp(), false)"
         )
-        M._init_claims(spark, name)
+        M._meta(spark, name, M.CLAIMS)
         qual = f"`{name}`.`{M.CLAIMS}`"
         cols = {f.name for f in spark.table(qual).schema.fields}
         assert "claim_id" in cols

@@ -534,6 +534,27 @@ def test_compaction_preserves_failed_version_progress(
     assert spark.table(jq).count() == 0  # V2 now ledgered → compacted
 
 
+def test_journal_schema_widens_swap_columns_in_place(spark, db, tmp_path):
+    """A journal an older build created, without the swap-intent columns,
+    gains ``swap_id`` and ``target`` in place on the next migrate(); its
+    older row reads them as NULL, a commit row, and is kept (its version
+    is not ledgered)."""
+    jq = f"`{db}`.`{M.JOURNAL}`"
+    spark.sql(
+        f"CREATE TABLE {jq} (version BIGINT, stmt_index BIGINT, md5 STRING, "
+        "owner STRING, created_at TIMESTAMP) USING PARQUET"
+    )
+    spark.sql(f"INSERT INTO {jq} VALUES (9, 0, 'old', 'older-build', current_timestamp())")
+    home, _path = _setup(spark, db, tmp_path, stmts=STMTS[:1])
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+    assert _v(spark, db) == 2
+    journal = spark.table(jq)
+    assert {"swap_id", "target"} <= set(journal.columns)
+    assert [(r.version, r.owner) for r in journal.filter("swap_id IS NULL").collect()] == [
+        (9, "older-build")
+    ]
+
+
 @pytest.mark.usefixtures("ledger_db")
 def test_compaction_races_reader_and_appender(spark, db):
     """A rival compacting dead files concurrently with journal appends

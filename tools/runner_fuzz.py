@@ -14,8 +14,9 @@ a copy-on-write crash), and asserts the invariants after every epoch:
   I2  every fuzzed table's (k, v) contents == the model state;
   I3  zero live claims after any completed/failed run (failures release
       their claim; only CRASHES leave one, and clear_claims clears it),
-      no journal row or swap intent left for a ledgered version, and no
-      leftover ``__stage_stmt_*`` / ``__cow_*`` table;
+      no journal row or swap intent left for a ledgered version, no
+      leftover ``__stage_stmt_*`` / ``__cow_*`` table, and every
+      metadata table has its full schema in the catalog;
   I4  a rerun after convergence applies 0 migrations (idempotent diff);
   I5  duplicate versions / edited-after-commit / deleted-after-commit
       manifests are rejected, and the run they reject is a no-op.
@@ -23,6 +24,10 @@ a copy-on-write crash), and asserts the invariants after every epoch:
 I1 and I3 are the benchmark's own runner checker
 (``perfbench/checks.py``'s ``check_runner``), so the fuzz and the
 benchmark hold the runner to one definition.
+
+Odd seeds start from the claims and journal tables an older build made
+(no claim ids, no swap-intent columns) instead of ``init_db``'s, so
+every fault also runs against tables the runner must widen in place.
 
 Faults per epoch (random, seeded):
   - mid-script failure at a random statement index of a .json script
@@ -244,12 +249,31 @@ def _assert_state(spark, db: str, state: dict[str, Counter], ctx: str) -> None:
 
 def _assert_runner(spark, db: str, home: str, applied: list[int], ctx: str) -> None:
     """I1 and I3 through ``check_runner``, which keys the ledger by
-    version; the row count catches a version ledgered twice."""
+    version; the row count catches a version ledgered twice, and the
+    catalog columns a metadata table the runner did not widen."""
     md5 = {m.version: m.md5 for m in M.scan_migrations(home)}
     problems = check_runner(spark, db, {v: md5[v] for v in applied})
     assert not problems, f"{ctx}: {problems}"
     rows = spark.table(f"`{db}`.`{M.LEDGER}`").count()
     assert rows == len(applied), f"{ctx}: {rows} ledger rows for {len(applied)} versions"
+    for name, schema in M._META_SCHEMAS.items():
+        cols = spark.table(f"`{db}`.`{name}`").columns
+        assert cols == schema.fieldNames(), f"{ctx}: {name} has columns {cols}"
+
+
+def _create_pre_intent_tables(spark, db: str) -> None:
+    """The claims and journal tables as older builds created them: claims
+    without ``released``/``claim_id``, a journal without the swap-intent
+    columns ``swap_id``/``target``.  The runner widens both in place, and
+    creates the ledger, on first need."""
+    spark.sql(
+        f"CREATE TABLE `{db}`.`{M.CLAIMS}` "
+        "(version BIGINT, owner STRING, started_at TIMESTAMP) USING PARQUET"
+    )
+    spark.sql(
+        f"CREATE TABLE `{db}`.`{M.JOURNAL}` (version BIGINT, stmt_index BIGINT, "
+        "md5 STRING, owner STRING, created_at TIMESTAMP) USING PARQUET"
+    )
 
 
 def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> None:
@@ -259,7 +283,10 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
     home = f"/tmp/runner_fuzz_{db}"
     os.makedirs(home, exist_ok=True)
     M.create_db(spark, db)
-    M.init_db(spark, db)
+    if seed % 2:
+        _create_pre_intent_tables(spark, db)
+    else:
+        M.init_db(spark, db)
     state: dict[str, Counter] = {}
     applied: list[int] = []
     version = 0
