@@ -8,10 +8,12 @@ tiny and test-pinned:
 
 - ``CREATE TABLE``: map ClickHouse types → Spark types, strip/record
   ``ENGINE``/``PARTITION BY``/``ORDER BY`` clauses, strip/record column
-  ``DEFAULT``s (Spark parquet tables don't support them natively; the
-  runner injects defaults at ADD COLUMN time instead).
-- ``ALTER TABLE … ADD COLUMN c T DEFAULT v``: copy-on-write
-  ``withColumn(lit(v).cast(T))`` + atomic table swap.
+  ``DEFAULT``s (the runner keeps defaults only from ADD COLUMN).
+- ``ALTER TABLE … ADD COLUMN c T [DEFAULT <literal>]``: metadata only,
+  one Spark ``ADD COLUMNS`` with the literal as a Spark column default
+  (``metadata_only``).  An expression ``DEFAULT`` (Spark defaults must
+  be constants): copy-on-write ``withColumn(expr.cast(T))`` + atomic
+  table swap.
 - ``ALTER TABLE … UPDATE c=e WHERE p`` / ``… DELETE WHERE p``
   (ClickHouse's asynchronous "mutations"): copy-on-write rewrite.
   Spark execution is synchronous, which subsumes the reference's
@@ -225,6 +227,8 @@ class Statement:
     rename_to: str | None = None
     if_exists: bool = False
     sample_by: str | None = None
+    #: ADD COLUMN with no DEFAULT or a literal one: a catalog change only
+    metadata_only: bool = False
 
 
 _UINT_RE = re.compile(r"^\s*UInt(8|16|32)\s*$")
@@ -244,6 +248,13 @@ def _wrap_unsigned_default(ch_type: str, default: str | None) -> str | None:
         bits = int(m.group(1))
         return str(int(lit) % (1 << bits))
     return default
+
+
+#: a ClickHouse literal a Spark column default can hold: a number
+#: (optionally signed), a string (``''`` or backslash escapes), or NULL
+_LITERAL_RE = re.compile(
+    r"[+-]?(?:\d+\.?\d*|\.\d+)(?:e[+-]?\d+)?|'(?:[^'\\]|''|\\.)*'|NULL", re.I | re.S
+)
 
 
 _CREATE_RE = re.compile(r"^\s*CREATE\s+TABLE\s", re.I)
@@ -614,14 +625,16 @@ def translate(sql: str) -> Statement:
         )
     m = _ADD_COL_RE.match(sql)
     if m:
+        default = _wrap_unsigned_default(m.group("type"), m.group("default"))
         return Statement(
             kind="add_column",
             sql=sql,
             table=m.group("table").strip("`"),
             column=m.group("col").strip("`"),
             col_type=map_types(m.group("type")),
-            default=_wrap_unsigned_default(m.group("type"), m.group("default")),
+            default=default,
             if_exists=bool(m.group("ifnex")),  # IF NOT EXISTS tolerance
+            metadata_only=default is None or bool(_LITERAL_RE.fullmatch(default.strip())),
         )
     m = _UPDATE_RE.match(masked)
     if m:

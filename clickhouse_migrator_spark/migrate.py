@@ -26,10 +26,14 @@ Spark-native deltas from the reference:
   sequencing that ``queue_exec=True`` exists to enforce is automatic.
   The flag is kept for API fidelity and is a documented no-op; both
   flag values yield correct (identical) results.
-- ``ALTER TABLE UPDATE/DELETE/ADD COLUMN`` mutation DML → copy-on-write
-  rewrite with an atomic temp-table swap (:func:`_swap_overwrite`) —
-  the same write-new-then-swap pattern a 100 TB table rewrite needs
-  (never an in-place overwrite of a table being scanned).
+- ``ALTER TABLE UPDATE/DELETE`` mutation DML (and an ADD COLUMN whose
+  DEFAULT is an expression) → copy-on-write rewrite with an atomic
+  temp-table swap (:func:`_swap_overwrite`) — the same
+  write-new-then-swap pattern a 100 TB table rewrite needs (never an
+  in-place overwrite of a table being scanned).  ADD COLUMN with no
+  DEFAULT or a literal one changes metadata only, as in ClickHouse: a
+  Spark ``ADD COLUMNS`` whose column default existing rows read and
+  later INSERTs that omit the column get.
 """
 
 from __future__ import annotations
@@ -129,7 +133,10 @@ _COW_MARKER_PROPS = (_COW_VERSION_PROP, _COW_STMT_PROP, _COW_MD5_PROP)
 # the same recognize-and-journal pattern recover_cow uses for COW
 # swaps.  A stamp mismatch (or no stamp) keeps the conservative
 # fail-stop: the table is someone else's and re-creating over it would
-# destroy data.
+# destroy data.  A metadata-only ADD COLUMN sets the same stamp on its
+# table BEFORE it adds the column, so a rerun that finds the column on
+# a table wearing its stamp journals it late instead of failing on
+# "column already exists".
 _CREATE_STAMP_PROP = "clickhouse.create_stamp"
 
 
@@ -300,13 +307,26 @@ def _part_files(directory: str) -> list[str]:
     )
 
 
-@dataclass(frozen=True)
+@dataclass(eq=False)
 class _MetaTable:
     """A runner metadata table (ledger, claims or journal): its quoted
-    catalog name and the local directory holding its part files."""
+    catalog name, the local directory holding its part files, and
+    whether files were added or removed since Spark last listed it."""
 
     qual: str
     path: str
+    stale: bool = False
+
+
+def _refresh_stale(spark: SparkSession, *metas: _MetaTable) -> None:
+    """Refresh Spark's file listing of each table in ``metas`` that the
+    runner appended to or compacted, so Spark readers in this session
+    see the change.  The runner reads these tables from their files, so
+    each entry point does this once, when it returns, not per append."""
+    for meta in metas:
+        if meta.stale:
+            meta.stale = False
+            spark.catalog.refreshTable(meta.qual)
 
 
 def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
@@ -315,22 +335,21 @@ def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
     or located, all from its schema in :data:`_META_SCHEMAS`: a missing
     table is created (IF NOT EXISTS, so a rival's create is no error),
     and a table an older build wrote gains the fields it lacks, which
-    its rows read as NULL, their old meaning.  Each entry point resolves
-    the tables it touches once and passes the handle down.  The runner
-    reads and appends these tables as local part files, so any other
-    location is refused: on HDFS or an object store replace them with a
-    transactional table format (README)."""
+    its rows read as NULL, their old meaning.  Existence is probed with
+    ``Catalog.tableExists``, which raises nothing: a failed DESCRIBE
+    costs PySpark's exception conversion and an ERROR record with the
+    Java stack trace.  Each entry point resolves the tables it touches
+    once and passes the handle down.  The runner reads and appends
+    these tables as local part files, so any other location is refused:
+    on HDFS or an object store replace them with a transactional table
+    format (README)."""
     qual = f"`{db_name}`.`{name}`"
-    try:
-        info = _describe_table(spark, qual)
-    except AnalysisException as e:
-        if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
-            raise
+    if not spark.catalog.tableExists(qual):
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {qual} "
             f"({_column_list(_META_SCHEMAS[name].fields)}) USING PARQUET"
         )
-        info = _describe_table(spark, qual)
+    info = _describe_table(spark, qual)
     path = _path_of_location(info["detail"].get("Location"))
     if path is None or not os.path.isdir(path):
         raise ValueError(
@@ -341,11 +360,11 @@ def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
     missing = [f for f in _META_SCHEMAS[name].fields if f.name not in info["columns"]]
     if missing:
         try:
+            # the ALTER refreshes Spark's cached relation itself
             spark.sql(f"ALTER TABLE {qual} ADD COLUMNS ({_column_list(missing)})")
         except AnalysisException as e:  # a rival runner widened it first
             if e.getCondition() != "COLUMN_ALREADY_EXISTS":
                 raise
-        spark.catalog.refreshTable(qual)
     return _MetaTable(qual, path)
 
 
@@ -395,7 +414,7 @@ def _append_claim_row(
         "released": bool(released),
         "claim_id": claim_id,
     }
-    _append_meta_row(spark, claims, CLAIMS_SCHEMA, "claim", row)
+    _append_meta_row(claims, CLAIMS_SCHEMA, "claim", row)
 
 
 def _arrow_table(rows: list[dict], schema: StructType):
@@ -414,26 +433,20 @@ def _arrow_table(rows: list[dict], schema: StructType):
     )
 
 
-def _append_meta_row(
-    spark: SparkSession, meta: _MetaTable, schema: StructType, prefix: str, row: dict
-) -> None:
-    """Append ONE row to a runner metadata table via the private-staging
-    atomic rename (durable-before-visible; see :func:`_append_claim_row`
-    for why a Spark insert can't be used here), then refresh the table
-    so Spark readers in this session see the new file."""
-    _write_meta_file(meta, schema, prefix, row)
-    spark.catalog.refreshTable(meta.qual)
-
-
-def _write_meta_file(meta: _MetaTable, schema: StructType, prefix: str, row: dict) -> None:
-    """Write ``row`` as one part file of ``meta``: a dot-file, then an
-    atomic rename into view."""
+def _append_meta_row(meta: _MetaTable, schema: StructType, prefix: str, row: dict) -> None:
+    """Append ``row`` to a runner metadata table as one part file: a
+    dot-file, then an atomic rename into view (durable-before-visible;
+    see :func:`_append_claim_row` for why a Spark insert can't be used
+    here).  No ``refreshTable``: the runner reads these tables from
+    their files, and the entry point refreshes the table for Spark
+    readers once, when it returns (:func:`_refresh_stale`)."""
     import pyarrow.parquet as pq
 
     fname = f"part-{prefix}-{uuid.uuid4().hex}.snappy.parquet"
     tmp = os.path.join(meta.path, "." + fname)
     pq.write_table(_arrow_table([row], schema), tmp, compression="snappy")
     os.rename(tmp, os.path.join(meta.path, fname))
+    meta.stale = True
 
 
 def _journal_row(
@@ -468,7 +481,7 @@ def _append_journal_row(
     atomic-rename channel and POSIX-local-warehouse scope as the claims
     table."""
     row = _journal_row(version, stmt_index, md5, owner)
-    _append_meta_row(spark, journal, JOURNAL_SCHEMA, "journal", row)
+    _append_meta_row(journal, JOURNAL_SCHEMA, "journal", row)
 
 
 def _append_swap_intent(
@@ -480,13 +493,13 @@ def _append_swap_intent(
     target: str,
     swap_id: str,
 ) -> None:
-    """Record, ahead of the swap's DROP, that statement ``stmt_index``
-    of script ``version`` is about to swap ``target`` to a table stamped
-    ``swap_id`` (see _INFLIGHT).  No ``refreshTable``: the runner reads
-    the journal from its files, and the statement's commit row, appended
-    next, refreshes the table for Spark readers."""
+    """Record, ahead of the write it announces, that statement
+    ``stmt_index`` of script ``version`` is about to write ``target``
+    through an object named ``swap_id``: a COW swap's temp table
+    stamped with that id (see _INFLIGHT), or a staged INSERT's stage
+    table, whose quoted name is the id (:func:`_stage_of`)."""
     row = _journal_row(version, stmt_index, md5, owner, swap_id=swap_id, target=target)
-    _write_meta_file(journal, JOURNAL_SCHEMA, "intent", row)
+    _append_meta_row(journal, JOURNAL_SCHEMA, "intent", row)
 
 
 def _append_ledger_row(
@@ -502,7 +515,7 @@ def _append_ledger_row(
         "script": script,
         "created_at": datetime.datetime.now(datetime.timezone.utc),
     }
-    _append_meta_row(spark, ledger, LEDGER_SCHEMA, "ledger", row)
+    _append_meta_row(ledger, LEDGER_SCHEMA, "ledger", row)
 
 
 def _read_meta_rows(meta: _MetaTable, columns: list[str]) -> list[dict]:
@@ -558,16 +571,17 @@ def _ledgered_versions(ledger: _MetaTable) -> set[int]:
 
 
 def _journaled_stmts(
-    journal: _MetaTable, version: int, md5: str
+    journal: _MetaTable, version: int, md5: str, rows: list[dict] | None = None
 ) -> tuple[set[int], bool]:
     """(indices journaled for this exact script, whether STALE rows for
     the version exist under a DIFFERENT md5).  Stale rows mean the
     script was edited after a partial run — statement indices no longer
     correspond, so the caller discards the progress and falls back to
-    the documented whole-script rerun semantics."""
-    rows = [
-        r for r in _commit_rows(_read_journal_rows(journal)) if int(r["version"]) == version
-    ]
+    the documented whole-script rerun semantics.  ``rows`` are the
+    journal's rows when the caller has read them already."""
+    if rows is None:
+        rows = _read_journal_rows(journal)
+    rows = [r for r in _commit_rows(rows) if int(r["version"]) == version]
     done = {int(r["stmt_index"]) for r in rows if r["md5"] == md5}
     stale = any(r["md5"] != md5 for r in rows)
     return done, stale
@@ -609,11 +623,16 @@ def compact_journal(spark: SparkSession, db_name: str) -> int:
     invisible to them.  The runner runs the same compaction after each
     ledger append, with the handles it already holds; this is the
     operator step, safe any time.  Returns the number of rows removed."""
-    return _compact_journal(spark, _meta(spark, db_name, JOURNAL), _meta(spark, db_name, LEDGER))
+    journal = _meta(spark, db_name, JOURNAL)
+    try:
+        return _compact_journal(journal, _meta(spark, db_name, LEDGER))
+    finally:
+        _refresh_stale(spark, journal)
 
 
-def _compact_journal(spark: SparkSession, journal: _MetaTable, ledger: _MetaTable) -> int:
-    """:func:`compact_journal` over resolved handles."""
+def _compact_journal(journal: _MetaTable, ledger: _MetaTable) -> int:
+    """:func:`compact_journal` over resolved handles; marks the journal
+    stale when it removed a file."""
     import pyarrow.parquet as pq
 
     ledgered = _ledgered_versions(ledger)
@@ -632,7 +651,7 @@ def _compact_journal(spark: SparkSession, journal: _MetaTable, ledger: _MetaTabl
             except FileNotFoundError:  # pragma: no cover - rival won
                 pass
     if removed:
-        spark.catalog.refreshTable(journal.qual)
+        journal.stale = True
     return removed
 
 
@@ -645,8 +664,12 @@ def _compact_journal(spark: SparkSession, journal: _MetaTable, ledger: _MetaTabl
 # it by making the journal row the single COMMIT POINT for the insert's
 # data too: the INSERT executes against a hidden stage table, the
 # journal row is appended (atomic rename), and only then are the staged
-# part files renamed into the target's directory.  Every crash window
-# reconciles deterministically on rerun:
+# part files renamed into the target's directory.  Before the stage is
+# created, a STAGE INTENT naming it and its target is journaled (the
+# swap-intent row shape, the stage's quoted name as its id), so the
+# rerun finds leftover stages in the journal rows it reads anyway —
+# O(interrupted stages), never a listing of the database's tables.
+# Every crash window reconciles deterministically on rerun:
 #   - before the journal append → the stage is garbage; drop it and
 #     re-execute (the target never saw the first attempt's rows);
 #   - after the append → the statement is committed; finish the renames
@@ -716,26 +739,21 @@ def _sql_str_lit(spark: SparkSession, value: str) -> str:
     return "'" + _sq(v) + "'"
 
 
-def _journal_owner_map(
-    journal: _MetaTable, version: int, md5: str
-) -> dict[int, str]:
-    """stmt_index → owner of the journal row that committed it for this
-    exact script body (first row wins; a duplicate row — e.g. one
-    written late by recover_cow racing the runner's own append — is
-    harmless, both attest the same fact)."""
-    out: dict[int, str] = {}
-    for r in _commit_rows(_read_journal_rows(journal)):
-        if int(r["version"]) == version and r["md5"] == md5:
-            out.setdefault(int(r["stmt_index"]), r["owner"])
-    return out
+def _stage_of(row: dict) -> str | None:
+    """The quoted stage table a journal row's stage intent names, or
+    None for a commit row or a swap intent (whose id is a bare hex)."""
+    sid = row["swap_id"]
+    return sid if sid is not None and _STAGE_PREFIX in sid else None
 
 
 def _maybe_stage_insert(
     spark: SparkSession,
     db_name: str,
+    journal: _MetaTable,
     sql: str,
     version: int,
     stmt_index: int,
+    md5: str,
     owner: str,
 ) -> tuple[str, str, str] | None:
     """Execute an INSERT statement against a hidden stage table instead
@@ -744,8 +762,11 @@ def _maybe_stage_insert(
     into a local-filesystem parquet table (the caller falls back to
     direct execution).
 
-    One DESCRIBE resolves the target.  The stage is an empty
-    ``CREATE TABLE … LIKE`` clone of it — same schema, with partition
+    One DESCRIBE resolves the target.  A stage intent naming the stage
+    and the target is journaled before the stage exists, so a rerun
+    finds any stage this call leaves behind (:func:`_reconcile_staged`).
+    The stage is an empty ``CREATE TABLE … LIKE`` clone of the target —
+    same schema and column defaults, with partition
     columns last as Spark normalizes them, and same partitioning, but
     none of its properties — so Spark's insert analysis
     (positional/by-name resolution, coercions, column lists) matches a
@@ -768,10 +789,12 @@ def _maybe_stage_insert(
     if dst is None:
         return None
     stage_qual = f"`{db_name}`.`{_STAGE_PREFIX}{owner}_{version}_{stmt_index}`"
+    _append_swap_intent(journal, version, stmt_index, md5, owner, target_qual, stage_qual)
     spark.sql(
         f"CREATE TABLE {stage_qual} LIKE {target_qual} USING PARQUET "
         f"TBLPROPERTIES ('{_STAGE_TARGET_PROP}' = '{_sq(target_qual)}')"
     )
+    _crash_point("stage_created")
     try:
         staged_sql = sql[: m.start("t")] + stage_qual + sql[m.end("t") :]
         execute_statement(spark, staged_sql)
@@ -896,39 +919,30 @@ def _publish_stage(
 
 
 def _reconcile_staged(
-    spark: SparkSession, db_name: str, journal: _MetaTable, version: int, md5: str
+    spark: SparkSession, rows: list[dict], version: int, md5: str
 ) -> None:
     """Finish or garbage-collect insert stages left behind by a crashed
     or failed earlier run of ``version`` (called before the statement
-    loop).  A stage whose (stmt_index, owner) matches a journal row for
-    the CURRENT script body is committed → publish it so statements the
+    loop), found from their stage intents among the journal ``rows``
+    the apply has read: no catalog listing, and nothing at all to do on
+    a clean run.  A stage whose statement has a commit row from the
+    stage's own runner for the CURRENT script body is committed →
+    publish it (if an earlier rerun has not already) so statements the
     rerun skips are fully visible to the ones it re-executes.  Every
-    other stage for the version (no journal row: crashed pre-commit;
+    other stage for the version (no commit row: crashed pre-commit;
     different md5: script edited; different owner: superseded attempt)
     is garbage → drop it, so the re-executed statement starts clean."""
-    stages: list[tuple[str, str, int]] = []
-    for r in spark.sql(f"SHOW TABLES IN `{db_name}`").collect():
-        name = r["tableName"]
-        if r["isTemporary"] or not name.startswith(_STAGE_PREFIX):
+    mine = [r for r in rows if int(r["version"]) == version]
+    commits = {(r["stmt_index"], r["md5"], r["owner"]) for r in _commit_rows(mine)}
+    for r in mine:
+        stage = _stage_of(r)
+        if stage is None:
             continue
-        try:
-            owner, v_s, i_s = name[len(_STAGE_PREFIX) :].rsplit("_", 2)
-            v, i = int(v_s), int(i_s)
-        except ValueError:  # pragma: no cover - foreign table name
-            continue
-        if v != version:
-            continue  # another version's stage: reconciled when applied
-        stages.append((name, owner, i))
-    if not stages:
-        return  # common case: clean run, no journal read needed
-    owners = _journal_owner_map(journal, version, md5)
-    for name, owner, i in stages:
-        stage_qual = f"`{db_name}`.`{name}`"
-        target = _table_props(spark, stage_qual).get(_STAGE_TARGET_PROP)
-        if owners.get(i) == owner and target is not None:
-            _publish_stage(spark, stage_qual, target)
+        if r["md5"] == md5 and (r["stmt_index"], md5, r["owner"]) in commits:
+            if spark.catalog.tableExists(stage):
+                _publish_stage(spark, stage, r["target"])
         else:
-            spark.sql(f"DROP TABLE IF EXISTS {stage_qual}")
+            spark.sql(f"DROP TABLE IF EXISTS {stage}")
 
 
 def clear_journal(spark: SparkSession, db_name: str) -> int:
@@ -1331,12 +1345,23 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
     live table — O(tables), like the rest of this operator step — so a
     run interrupted under such a build recovers exactly once: the
     markers' statement is journaled late and the markers are unset.
+    Likewise builds before stage intents left insert stages that only a
+    listing finds: recovery publishes each one whose statement its own
+    runner committed and drops the rest.
 
     Run it like :func:`clear_claims`, as a single-operator recovery
     step with no live runners.  Returns {target_table: "completed" |
     "completed:V<n>" | "rolled_back" | "journaled:V<n>"}."""
-    actions: dict[str, str] = {}
     journal = _meta(spark, db_name, JOURNAL)
+    try:
+        return _recover_cow(spark, db_name, journal)
+    finally:
+        _refresh_stale(spark, journal)
+
+
+def _recover_cow(spark: SparkSession, db_name: str, journal: _MetaTable) -> dict[str, str]:
+    """:func:`recover_cow` over the resolved journal handle."""
+    actions: dict[str, str] = {}
     tables = {
         r["tableName"]
         for r in spark.sql(f"SHOW TABLES IN `{db_name}`").collect()
@@ -1373,6 +1398,25 @@ def recover_cow(spark: SparkSession, db_name: str) -> dict[str, str]:
             journaled = _retire_markers(spark, journal, qual, props)
             kind = "journaled" if journaled else "completed"
             actions[name] = f"{kind}:V{props[_COW_VERSION_PROP]}"
+    # a pre-intent build's insert stage, which no stage intent names:
+    # publish it when its own runner committed its statement, else drop
+    rows = _read_journal_rows(journal)
+    intents = {_stage_of(r) for r in rows}
+    commits = {(r["version"], r["stmt_index"], r["owner"]) for r in _commit_rows(rows)}
+    for name in sorted(t for t in tables if t.startswith(_STAGE_PREFIX)):
+        qual = f"`{db_name}`.`{name}`"
+        if qual in intents:
+            continue  # the rerun reconciles it from its intent
+        try:
+            owner, v, i = name[len(_STAGE_PREFIX) :].rsplit("_", 2)
+            key = (int(v), int(i), owner)
+        except ValueError:  # pragma: no cover - foreign table name
+            continue
+        target = _table_props(spark, qual).get(_STAGE_TARGET_PROP)
+        if target is not None and key in commits:
+            _publish_stage(spark, qual, target)
+        else:
+            spark.sql(f"DROP TABLE {qual}")
     for name, version in _reconcile_live_markers(spark, journal).items():
         actions.setdefault(name, f"journaled:V{version}")
     return actions
@@ -1418,7 +1462,8 @@ def _reconcile_live_markers(spark: SparkSession, journal: _MetaTable) -> dict[st
     plain rerun — not just the recover_cow path — is exactly-once.
 
     Cost: one read of the journal's files, plus one property read per
-    intent that has no commit row for its (version, stmt_index, md5) —
+    swap intent that has no commit row for its (version, stmt_index,
+    md5); stage intents are :func:`_reconcile_staged`'s —
     none on a clean run, whatever the number of tables.  An intent's
     table wearing the intent's swap id means the RENAME happened, so the
     statement is journaled late; anything else (table absent mid-swap,
@@ -1435,7 +1480,7 @@ def _reconcile_live_markers(spark: SparkSession, journal: _MetaTable) -> dict[st
     out: dict[str, str] = {}
     for r in rows:
         key = (r["version"], r["stmt_index"], r["md5"])
-        if r["swap_id"] is None or key in committed:
+        if r["swap_id"] is None or _stage_of(r) is not None or key in committed:
             continue
         target = r["target"]
         if target not in stamps:
@@ -1454,6 +1499,27 @@ def _reconcile_live_markers(spark: SparkSession, journal: _MetaTable) -> dict[st
 _CREATE_NAME_RE = re.compile(
     r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.`]+)", re.I
 )
+# where a CREATE's TBLPROPERTIES go: into the clause it already has, or
+# ahead of its CTAS query (Spark wants every table clause before it)
+_PROPS_AT_RE = re.compile(r"\bTBLPROPERTIES\s*\(|\bAS\s+(?:\(\s*)?(?:SELECT|WITH)\b", re.I)
+
+
+def _with_tblproperties(sql: str, props: dict[str, str]) -> str:
+    """The translated CREATE TABLE ``sql`` with ``props`` set by its own
+    TBLPROPERTIES clause."""
+    if not props:
+        return sql
+    kv = ", ".join(f"'{k}' = '{_sq(v)}'" for k, v in props.items())
+    mask = _string_mask(sql)
+    depths = _paren_depths(sql, mask)
+    for m in _PROPS_AT_RE.finditer(sql):
+        if mask[m.start()] or depths[m.start()]:
+            continue
+        if m.group(0).endswith("("):  # merge into the statement's own clause
+            rest = sql[m.end() :]
+            return sql[: m.end()] + kv + ("" if rest.lstrip().startswith(")") else ", ") + rest
+        return f"{sql[: m.start()]}TBLPROPERTIES ({kv}) {sql[m.start() :]}"
+    return f"{sql} TBLPROPERTIES ({kv})"
 
 
 def _table_props(spark: SparkSession, qual: str) -> dict[str, str]:
@@ -1579,9 +1645,16 @@ def _dedupe_latest(df: DataFrame, keys: list[str]) -> DataFrame:
         return (
             df.groupBy(*keys)
             .agg(F.max(F.struct(*others)).alias("_survivor"))
-            .select(*keys, *[F.col(f"_survivor.`{c}`").alias(c) for c in others])
+            .select(*keys, *[_as_column(df, c, F.col(f"_survivor.`{c}`")) for c in others])
         )
     return df.distinct()
+
+
+def _as_column(df: DataFrame, name: str, col: "F.Column") -> "F.Column":
+    """``col`` named as ``df``'s column ``name``, keeping that column's
+    metadata — its Spark column default (metadata-only ADD COLUMN) —
+    which a computed column would otherwise drop in the rewrite."""
+    return col.alias(name, metadata=df.schema[name].metadata)
 
 
 def _optimize_table(spark: SparkSession, st: Statement) -> None:
@@ -1618,6 +1691,16 @@ def _optimize_table(spark: SparkSession, st: Statement) -> None:
 
 
 def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
+    """Execute one translated statement.  A CREATE TABLE carries its
+    ``clickhouse.*`` layout props and, under a migration, its stamp in
+    its own TBLPROPERTIES clause, so the table never stands without
+    them.  An ADD COLUMN with no DEFAULT or a literal one is one Spark
+    ``ADD COLUMNS`` (a column default, as ClickHouse keeps it in
+    metadata); every other mutation is a copy-on-write rewrite
+    (:func:`_swap_overwrite`).  A CREATE or a metadata-only ADD COLUMN
+    whose effect is already present on a table wearing this statement's
+    stamp returns None without acting: the crashed attempt's effect,
+    which the apply loop then journals late."""
     if st.kind == "passthrough":
         # FINAL / SAMPLE SELECT modifiers also reach the runner through
         # migration scripts (e.g. INSERT ... SELECT ... FROM t FINAL)
@@ -1625,8 +1708,26 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
     if st.kind == "create_table":
         stamp = _inflight_stamp()
         m = _CREATE_NAME_RE.search(st.sql)
+        # the ClickHouse physical-layout intent, kept as metadata: ORDER
+        # BY → the write-sort a compaction job should apply; PARTITION
+        # BY → candidate partition columns (SURVEY.md §1.1)
+        props = {}
+        if st.order_by and st.order_by.lower() not in ("tuple()", "tuple ( )"):
+            props["clickhouse.order_by"] = st.order_by
+        if st.partition_by and st.partition_by.lower() not in ("tuple()", "tuple ( )"):
+            props["clickhouse.partition_by"] = st.partition_by
+        if st.engine:
+            props["clickhouse.engine"] = st.engine
+        if st.ttl:
+            props["clickhouse.ttl"] = st.ttl
+        if st.sample_by:
+            props["clickhouse.sample_by"] = st.sample_by
+        if stamp is not None:
+            props[_CREATE_STAMP_PROP] = stamp
         try:
-            out = spark.sql(st.sql)
+            # the props ride in the CREATE itself: no moment exists at
+            # which the table stands without its stamp
+            return spark.sql(_with_tblproperties(st.sql, props))
         except Exception as e:
             # crash-after-CREATE rerun window (VERDICT r11 #1): the
             # earlier attempt created the table and stamped it, then
@@ -1647,39 +1748,22 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
                 if prior == stamp:
                     return None
             raise
-        # preserve the ClickHouse physical-layout intent as metadata:
-        # ORDER BY → the write-sort a compaction job should apply;
-        # PARTITION BY → candidate partition columns (SURVEY.md §1.1)
-        props = {}
-        if st.order_by and st.order_by.lower() not in ("tuple()", "tuple ( )"):
-            props["clickhouse.order_by"] = st.order_by
-        if st.partition_by and st.partition_by.lower() not in ("tuple()", "tuple ( )"):
-            props["clickhouse.partition_by"] = st.partition_by
-        if st.engine:
-            props["clickhouse.engine"] = st.engine
-        if st.ttl:
-            props["clickhouse.ttl"] = st.ttl
-        if st.sample_by:
-            props["clickhouse.sample_by"] = st.sample_by
-        if stamp is not None:
-            # one ALTER sets layout props and the stamp together — no
-            # window in which the table has props but no stamp.  The
-            # residual window (crash between CREATE and this ALTER)
-            # keeps the conservative fail-stop; it is one metadata
-            # statement wide, vs. the whole statement+journal span
-            # before.
-            props[_CREATE_STAMP_PROP] = stamp
-        if props and m:
-            kv = ", ".join(f"'{k}' = '{_sq(v)}'" for k, v in props.items())
-            spark.sql(f"ALTER TABLE {m.group('name')} SET TBLPROPERTIES ({kv})")
-        return out
     if st.kind == "add_column":
         qual = _qualify(spark, st.table)
         df = spark.table(qual)
+        stamp = _inflight_stamp()
         if st.column in df.columns:
             # Spark's withColumn would silently REPLACE the existing
             # column (data loss); ClickHouse errors unless IF NOT EXISTS
             if st.if_exists:
+                return None
+            # this statement's own earlier attempt added it, then the
+            # run died before the journal append: journal it late
+            if (
+                st.metadata_only
+                and stamp is not None
+                and _table_props(spark, qual).get(_CREATE_STAMP_PROP) == stamp
+            ):
                 return None
             raise ValueError(
                 f"ALTER ADD COLUMN: column {st.column!r} already exists "
@@ -1698,7 +1782,22 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
             _check_read_identifiers(
                 df.columns, st.default, f"ALTER ADD COLUMN {st.column!r} DEFAULT"
             )
-        default = _ch_expr(st.default).cast(st.col_type) if st.default is not None else F.lit(None).cast(st.col_type)
+        if st.metadata_only:
+            # ClickHouse's metadata-only ADD COLUMN: a Spark column
+            # default, which existing rows read and INSERTs that omit
+            # the column get.  The stamp goes on first, so a rerun can
+            # tell this statement's column from anyone else's.
+            if stamp is not None:
+                spark.sql(
+                    f"ALTER TABLE {qual} SET TBLPROPERTIES "
+                    f"('{_CREATE_STAMP_PROP}' = '{stamp}')"
+                )
+            default = "" if st.default is None else f" DEFAULT CAST({st.default} AS {st.col_type})"
+            spark.sql(f"ALTER TABLE {qual} ADD COLUMNS (`{st.column}` {st.col_type}{default})")
+            return None
+        # an expression default (Spark defaults must be constants):
+        # rewrite every row; INSERTs that omit the column get NULL
+        default = _ch_expr(st.default).cast(st.col_type)
         _swap_overwrite(spark, st.table, df.withColumn(st.column, default))
         return None
     if st.kind == "drop_column":
@@ -1780,12 +1879,14 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
         out = df.select(
             *[
                 (
-                    F.when(
-                        pred,
-                        _ch_expr(assigned[c]).cast(dtypes.get(c, "string")),
+                    _as_column(
+                        df,
+                        c,
+                        F.when(
+                            pred,
+                            _ch_expr(assigned[c]).cast(dtypes.get(c, "string")),
+                        ).otherwise(F.col(c)),
                     )
-                    .otherwise(F.col(c))
-                    .alias(c)
                     if c in assigned
                     else F.col(c)
                 )
@@ -1875,7 +1976,11 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
             st.table,
             df.withColumn(
                 st.column,
-                F.when(cond, F.lit(None).cast(dtype)).otherwise(F.col(st.column)),
+                _as_column(
+                    df,
+                    st.column,
+                    F.when(cond, F.lit(None).cast(dtype)).otherwise(F.col(st.column)),
+                ),
             ),
         )
         return None
@@ -1961,6 +2066,22 @@ def apply_migration(
     if not pending:
         return 0
     ledger, claims, journal = (_meta(spark, db_name, t) for t in (LEDGER, CLAIMS, JOURNAL))
+    try:
+        return _apply_pending(spark, db_name, pending, ledger, claims, journal)
+    finally:
+        _refresh_stale(spark, ledger, claims, journal)
+
+
+def _apply_pending(
+    spark: SparkSession,
+    db_name: str,
+    pending: list,
+    ledger: _MetaTable,
+    claims: _MetaTable,
+    journal: _MetaTable,
+) -> int:
+    """:func:`apply_migration`'s loop over the ``pending`` rows, sorted,
+    with the metadata handles it resolved."""
     # self-heal first: a run that died between a swap's RENAME and its
     # journal append (a crash OR a plain append failure, ADVICE r10)
     # left an intent whose swap happened — journal the completed
@@ -2042,11 +2163,12 @@ def apply_migration(
             # the journaled progress and keeps the documented
             # whole-script rerun semantics (indices no longer
             # correspond after an edit)
-            done, stale = _journaled_stmts(journal, version, row.md5)
+            rows = _read_journal_rows(journal)
+            done, stale = _journaled_stmts(journal, version, row.md5, rows)
             # publish journal-committed insert stages a crash orphaned
             # (their statements are in `done` and will be skipped) and
             # drop uncommitted ones (their statements re-execute clean)
-            _reconcile_staged(spark, db_name, journal, version, row.md5)
+            _reconcile_staged(spark, rows, version, row.md5)
             if stale:
                 print(
                     f"V{version}: discarding journaled progress from an "
@@ -2075,7 +2197,7 @@ def apply_migration(
                     # exactly-once via their swap intent (the next run
                     # journals late); everything else executes direct.
                     staged = _maybe_stage_insert(
-                        spark, db_name, stmt, version, i, owner
+                        spark, db_name, journal, stmt, version, i, row.md5, owner
                     )
                     if staged is None:
                         execute_statement(spark, stmt)
@@ -2096,7 +2218,7 @@ def apply_migration(
             # removal + the listing-tolerant reader make this safe
             # against rival runners (see compact_journal).
             with _CLAIM_LOCK:
-                _compact_journal(spark, journal, ledger)
+                _compact_journal(journal, ledger)
         except BaseException:
             # a FAILED statement releases the claim (the runner is
             # alive and fail-stop is the contract — the rerun must be

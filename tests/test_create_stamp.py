@@ -5,8 +5,8 @@ journal append used to fail-stop the rerun on TABLE_ALREADY_EXISTS —
 the one statement class the runner fuzzer had to EXCLUDE from the
 ``after_stmt`` crash stage.  The runner now stamps every table it
 creates with the in-flight ``version:stmt_index:md5``
-(``clickhouse.create_stamp``, set in the same ALTER as the layout
-props), so the rerun's re-executed CREATE recognizes the existing table
+(``clickhouse.create_stamp``, set with the layout props in the
+CREATE's own TBLPROPERTIES clause), so the rerun's re-executed CREATE recognizes the existing table
 as its own earlier attempt's product and reports success — the apply
 loop then journals the statement late, exactly the recognize-and-journal
 pattern ``recover_cow`` uses for COW swaps.
@@ -144,3 +144,40 @@ def test_direct_execute_statement_never_stamps(spark, db):
         M.execute_statement(
             spark, "CREATE TABLE cd (k Int64) ENGINE = MergeTree ORDER BY k"
         )
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_create_sets_its_props_in_its_own_statement(spark, db, tmp_path, monkeypatch):
+    """A CREATE-only version issues no ALTER TABLE: the layout props and
+    the stamp ride in the CREATE's TBLPROPERTIES clause — ahead of a
+    CTAS query, or merged into a clause the statement has — so no
+    moment exists at which the table stands without its stamp."""
+    from pyspark.sql import SparkSession
+
+    stmts = [
+        "CREATE TABLE cp (k Int64, d Date) ENGINE = MergeTree "
+        "PARTITION BY toYYYYMM(d) ORDER BY (k, if(k = 1, 'a', 'b'))",
+        "CREATE TABLE cq ENGINE = ReplacingMergeTree ORDER BY k AS SELECT 1 AS k",
+        "CREATE TABLE cr (k BIGINT) USING PARQUET TBLPROPERTIES ('note' = 'AS SELECT')",
+    ]
+    home = _setup(spark, db, tmp_path, stmts, version=9)
+    real_sql, statements = SparkSession.sql, []
+
+    def counted(sess, q, *a, **k):
+        statements.append(" ".join(q.split()[:2]).upper())
+        return real_sql(sess, q, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", counted)
+    assert M.migrate(spark, db, home) == 1
+    assert "ALTER TABLE" not in statements, statements
+    monkeypatch.setattr(SparkSession, "sql", real_sql)
+    cp = M._table_props(spark, f"`{db}`.cp")
+    assert cp["clickhouse.partition_by"] == "toYYYYMM(d)"
+    assert cp["clickhouse.order_by"] == "(k, if(k = 1, 'a', 'b'))"
+    assert cp[M._CREATE_STAMP_PROP].startswith("9:0:")
+    cq = M._table_props(spark, f"`{db}`.cq")
+    assert (cq["clickhouse.engine"], cq["clickhouse.order_by"]) == ("ReplacingMergeTree", "k")
+    assert cq[M._CREATE_STAMP_PROP].startswith("9:1:")
+    assert [r.k for r in spark.table(f"`{db}`.cq").collect()] == [1]
+    cr = M._table_props(spark, f"`{db}`.cr")
+    assert cr["note"] == "AS SELECT" and cr[M._CREATE_STAMP_PROP].startswith("9:2:")

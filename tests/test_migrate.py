@@ -798,7 +798,9 @@ def test_noop_migrate_catalog_calls_do_not_grow_with_tables(
 ):
     """A noop migrate() asks the catalog the same questions with 1 user
     table and with 30: its self-heal reads the journal's swap intents,
-    not every table's properties."""
+    not every table's properties.  So does a version op (a staged
+    INSERT), which lists no tables: leftover stages are found from the
+    journal's stage intents."""
     from collections import Counter
 
     from pyspark.sql import SparkSession
@@ -825,40 +827,65 @@ def test_noop_migrate_catalog_calls_do_not_grow_with_tables(
     monkeypatch.setattr(Catalog, "refreshTable", counting("refreshTable", Catalog.refreshTable))
     for name in ("_describe_table", "_table_props"):
         monkeypatch.setattr(M, name, counting(name, getattr(M, name)))
-    counts = []
-    for n_tables in (1, 30):
+    counts, version_counts = [], []
+    for version, n_tables in ((2, 1), (3, 30)):
         for i in range(1, n_tables):
             spark.sql(f"CREATE TABLE IF NOT EXISTS `{db}`.t_cat{i} (v BIGINT) USING PARQUET")
         calls.clear()
         assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 0
         counts.append(dict(calls))
+        _write_migrations(tmp_path, {f"V{version}__i.sql": f"INSERT INTO t_cat0 VALUES ({version})"})
+        calls.clear()
+        assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+        version_counts.append(dict(calls))
     assert counts[0] == counts[1], counts
+    assert version_counts[0] == version_counts[1], version_counts
+    assert "SHOW TABLES" not in version_counts[0], version_counts
 
 
 @pytest.mark.usefixtures("ledger_db")
 def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, monkeypatch):
     """The runner looks up its metadata tables' locations once per
     call: a version of three CREATEs asks the catalog as often as a
-    version of one (no DESCRIBE per journal read or append).  The
+    version of one (no DESCRIBE per journal read or append).  Nor does
+    it refresh a metadata table per append: each table it appended to
+    is refreshed once, when the call returns.  It lists no tables, and
+    a CREATE sets its properties in its own statement (no ALTER).  The
     database is initialised first, so neither call creates a metadata
     table."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.catalog import Catalog
+
     creates =[f"CREATE TABLE t_desc{i} (v Int64) ENGINE = Log" for i in range(4)]
     home = tmp_path / "mig"
     home.mkdir()
-    real = M._describe_table
-    calls = []
+    real, real_sql, real_refresh = M._describe_table, SparkSession.sql, Catalog.refreshTable
+    calls, refreshed, statements = [], [], []
 
     def counted(sess, qual):
         calls.append(qual)
         return real(sess, qual)
 
+    def counted_sql(sess, q, *a, **k):
+        statements.append(" ".join(q.split()[:2]).upper())
+        return real_sql(sess, q, *a, **k)
+
+    def counted_refresh(cat, qual):
+        refreshed.append(qual)
+        return real_refresh(cat, qual)
+
     monkeypatch.setattr(M, "_describe_table", counted)
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    monkeypatch.setattr(Catalog, "refreshTable", counted_refresh)
+    meta = {f"`{db}`.`{t}`" for t in (M.LEDGER, M.CLAIMS, M.JOURNAL)}
     counts = []
     for name, stmts in (("V1__one.json", creates[:1]), ("V2__three.json", creates[1:])):
         (home / name).write_text(json.dumps(stmts))
-        calls.clear()
+        calls.clear(), refreshed.clear(), statements.clear()
         assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
         counts.append(len(calls))
+        assert sorted(refreshed) == sorted(meta), refreshed
+        assert "SHOW TABLES" not in statements and "ALTER TABLE" not in statements, statements
     assert counts[0] == counts[1], counts
 
 
@@ -935,6 +962,32 @@ def test_fresh_database_gets_its_metadata_tables_on_first_need(spark, tmp_path):
         assert M.migrate(spark, db, home, create_db_if_no_exists=True) == 0
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
+
+
+def test_first_migrate_on_fresh_database_logs_no_error(spark, tmp_path):
+    """A missing metadata table is found without an exception: a failed
+    DESCRIBE costs PySpark's exception conversion and logs an ERROR
+    record with the Java stack trace (``SQLQueryContextLogger``), one
+    per metadata table of a fresh database."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    db = "testdb_" + uuid.uuid4().hex[:8]
+    home = _write_migrations(
+        tmp_path, {"V1__t.sql": "CREATE TABLE t_quiet (v Int64) ENGINE = Log"}
+    )
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    logger.addHandler(handler)
+    try:
+        assert M.migrate(spark, db, home, create_db_if_no_exists=True) == 1
+    finally:
+        logger.removeHandler(handler)
+        spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
+    assert [r.getMessage()[:80] for r in records] == []
 
 
 def test_guards_read_spark_written_ledger_and_legacy_claims(spark, tmp_path):
@@ -1252,6 +1305,10 @@ def test_table_location_unquotes_percent_escapes(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         M.SparkSession, "sql", lambda self, q: _FakeDF(rows), raising=False
     )
+    # the faked catalog holds the table: _meta's existence probe says so
+    from pyspark.sql.catalog import Catalog
+
+    monkeypatch.setattr(Catalog, "tableExists", lambda self, *a, **k: True)
 
     class _FakeDF:
         def __init__(self, rows):

@@ -524,8 +524,9 @@ def test_compaction_preserves_failed_version_progress(
     monkeypatch.setattr(M, "_crash_point", lambda s: None)
     jq = f"`{db}`.`{M.JOURNAL}`"
     spark.catalog.refreshTable(jq)
-    rows = [(r.version, r.stmt_index) for r in spark.table(jq).collect()]
-    assert rows == [(2, 0)], f"V1 compacted, V2 progress kept — got {rows}"
+    # V2's INSERT left its commit row and the stage intent ahead of it
+    rows = sorted((r.version, r.stmt_index, r.swap_id is None) for r in spark.table(jq).collect())
+    assert rows == [(2, 0, False), (2, 0, True)], f"V1 compacted, V2 progress kept — got {rows}"
     M.clear_claims(spark, db)
     assert M.migrate(spark, db, str(home)) == 1
     got = sorted((r.k, r.v) for r in spark.table(f"`{db}`.pt").collect())
@@ -757,3 +758,61 @@ def test_recover_cow_retires_legacy_live_markers(spark, db):
     # idempotent: second pass finds nothing and adds nothing
     assert M.recover_cow(spark, db) == {}
     assert M._journaled_stmts(journal, 4, "mmm")[0] == {1}
+
+
+# ── stage intents: leftover stages are found from the journal ───────────────
+
+
+def _stages(spark, db):
+    return [
+        r["tableName"]
+        for r in spark.sql(f"SHOW TABLES IN `{db}`").collect()
+        if r["tableName"].startswith(M._STAGE_PREFIX)
+    ]
+
+
+@pytest.mark.usefixtures("ledger_db")
+@pytest.mark.parametrize("stage", ["stage_created", "after_stmt"])
+def test_stage_intent_crash_windows_rerun_exactly_once(
+    spark, db, tmp_path, monkeypatch, stage
+):
+    """A crash after the stage is created but before its INSERT runs,
+    and one after the INSERT but before its journal row: each leaves a
+    stage that only its journaled stage intent names.  The plain rerun
+    (no recover_cow) drops it, re-executes the INSERT once and leaves
+    no ``__stage_stmt_*`` table."""
+    home, _ = _setup_insert(spark, db, tmp_path, INSERT_STMTS[:3])
+    _arm(monkeypatch, stage, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        M.migrate(spark, db, home)
+    monkeypatch.setattr(M, "_crash_point", lambda s: None)
+    assert len(_stages(spark, db)) == 1
+    intents = [r for r in M._read_journal_rows(M._meta(spark, db, M.JOURNAL)) if M._stage_of(r)]
+    assert sorted((r["stmt_index"], r["target"]) for r in intents) == [
+        (0, f"`{db}`.`ji`"),
+        (1, f"`{db}`.`ji`"),
+    ]
+    M.clear_claims(spark, db)
+    assert M.migrate(spark, db, home) == 1
+    assert _rows(spark, db, "ji") == sorted((i, 10**i) for i in range(3))
+    assert _stages(spark, db) == []
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_recover_cow_reconciles_stages_without_intents(spark, db):
+    """Stages an older build left, which no stage intent names: recovery
+    publishes the one whose statement its runner committed and drops
+    the one it did not."""
+    spark.sql(f"CREATE TABLE `{db}`.tl (k BIGINT, v BIGINT) USING PARQUET")
+    target = f"`{db}`.`tl`"
+    for i in (0, 1):
+        spark.sql(
+            f"CREATE TABLE `{db}`.`{M._STAGE_PREFIX}old_7_{i}` LIKE {target} USING PARQUET "
+            f"TBLPROPERTIES ('{M._STAGE_TARGET_PROP}' = '{target}')"
+        )
+        spark.sql(f"INSERT INTO `{db}`.`{M._STAGE_PREFIX}old_7_{i}` VALUES ({i}, {i})")
+    journal = M._meta(spark, db, M.JOURNAL)
+    M._append_journal_row(spark, journal, 7, 0, "m", "old")
+    M.recover_cow(spark, db)
+    assert _rows(spark, db, "tl") == [(0, 0)]
+    assert _stages(spark, db) == []

@@ -44,9 +44,11 @@ Faults per epoch (random, seeded):
   - statement-journal crash injection (r10, fault "crashj") at
     before_stmt / after_stmt / after_journal on a random statement of
     the batch — covering the journal-append and staged-insert-publish
-    windows and a swap left without its commit row (journaled late by
-    the rerun's self-heal); the model asserts every statement (INSERTs
-    included, r11: staged-append commit) applies exactly once;
+    windows, a swap left without its commit row (journaled late by
+    the rerun's self-heal) and a metadata-only ADD COLUMN (literal
+    DEFAULT) left without one (journaled late through its stamp); the
+    model asserts every statement (INSERTs included, r11: staged-append
+    commit) applies exactly once;
   - fallback-path crash injection (r12, fault "crashf"): the INSERT's
     target is made non-stageable (_local_parquet_location → None,
     simulating bucketed parquet, JDBC sinks, object stores —
@@ -92,7 +94,7 @@ from perfbench.checks import check_runner  # noqa: E402
 @dataclass
 class Stmt:
     sql: str
-    kind: str  # create | insert | update | delete
+    kind: str  # create | insert | update | delete | add_column
     table: str
     # model params
     rows: list[tuple[int, int]] = field(default_factory=list)  # insert
@@ -112,7 +114,8 @@ class Stmt:
         duplicates differ in v.  The old dict model silently upserted and
         the old dict-comprehension state check kept an arbitrary
         duplicate — seed 10109 produced a nondeterministic fuzz failure
-        that was a MODEL hole, not an engine defect (r10)."""
+        that was a MODEL hole, not an engine defect (r10).  An ADD
+        COLUMN leaves (k, v) as it is."""
         if self.kind == "create":
             state[self.table] = Counter()
         elif self.kind == "insert":
@@ -142,6 +145,7 @@ class Gen:
         self.rng = rng
         self.tables: list[str] = []
         self.next_key: dict[str, int] = {}
+        self.added: dict[str, int] = {}  # table -> columns added so far
 
     def stmt(self) -> Stmt:
         r = self.rng
@@ -158,15 +162,25 @@ class Gen:
                 table=t,
             )
         t = r.choice(self.tables)
-        kind = r.choice(["insert", "insert", "update", "update", "delete"])
+        kind = r.choice(["insert", "insert", "update", "update", "delete", "add_column"])
+        if kind == "add_column":
+            # a literal DEFAULT: a metadata-only change, exactly-once
+            # across a crash through its stamp
+            n = self.added[t] = self.added.get(t, 0) + 1
+            return Stmt(
+                sql=f"ALTER TABLE {t} ADD COLUMN c{n} Int64 DEFAULT {r.randint(0, 99)}",
+                kind="add_column",
+                table=t,
+            )
         if kind == "insert":
             k0 = self.next_key[t]
             n = r.randint(1, 6)
             self.next_key[t] = k0 + n
             rows = [(k0 + i, r.randint(0, 99)) for i in range(n)]
             vals = ", ".join(f"({k}, {v})" for k, v in rows)
+            # named columns: an added column takes its default
             return Stmt(
-                sql=f"INSERT INTO {t} VALUES {vals}", kind="insert", table=t, rows=rows
+                sql=f"INSERT INTO {t} (k, v) VALUES {vals}", kind="insert", table=t, rows=rows
             )
         mod, rem = r.randint(1, 4), 0
         rem = r.randint(0, mod - 1)
@@ -387,8 +401,8 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                         f.write(orig)
             elif fault == "midfail":
                 # inject a failing statement into the LAST new script at
-                # a random index BEFORE any CREATE (a re-executed CREATE
-                # would fail the rerun — the documented fix-and-rerun
+                # a random index BEFORE any CREATE or ADD COLUMN (either,
+                # re-executed, would fail the rerun — the documented fix-and-rerun
                 # contract makes that the user's problem, not the
                 # orchestrator's; the fuzz pins orchestration);
                 # fail-stop leaves prior statements' effects, ledger
@@ -396,7 +410,8 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                 # re-executes the WHOLE script (model replays both)
                 v_bad, stmts, path = new[-1]
                 first_create = next(
-                    (i for i, s in enumerate(stmts) if s.kind == "create"), len(stmts)
+                    (i for i, s in enumerate(stmts) if s.kind in ("create", "add_column")),
+                    len(stmts),
                 )
                 bad_idx = min(rng.randint(0, len(stmts)), first_create)
                 if verbose:
@@ -547,6 +562,11 @@ def run_scenario(spark, seed: int, n_epochs: int = 4, verbose: bool = False) -> 
                 # first firing (statement-index targeting doesn't apply)
                 cand = list(range(len(seq)))
                 k = 0 if stage == "mid_publish" else rng.choice(cand)
+                # half the time, the after_stmt window of an ADD COLUMN
+                # of the batch: only its stamp makes that exactly-once
+                adds = [j for j, (_v, _i, s) in enumerate(seq) if s.kind == "add_column"]
+                if adds and rng.random() < 0.5:
+                    stage, k = "after_stmt", rng.choice(adds)
                 if verbose:
                     print(f"{ctx}: crashj stage={stage} k={k}")
                 armed_j = {"n": 0}
