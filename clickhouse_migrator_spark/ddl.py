@@ -7,8 +7,11 @@ shim the engine needs (SURVEY.md §2.C C1–C3, §4).  It is deliberately
 tiny and test-pinned:
 
 - ``CREATE TABLE``: map ClickHouse types → Spark types, strip/record
-  ``ENGINE``/``PARTITION BY``/``ORDER BY`` clauses, strip/record column
-  ``DEFAULT``s (the runner keeps defaults only from ADD COLUMN).
+  ``ENGINE``/``PARTITION BY``/``ORDER BY`` clauses.  A column
+  ``DEFAULT`` that is one literal stays as ``DEFAULT CAST(<lit> AS
+  T)``, so INSERTs that omit the column get it; an expression
+  ``DEFAULT`` is dropped (Spark defaults must be constants), as are
+  ``CODEC``, column ``TTL`` and ``INDEX`` items.
 - ``ALTER TABLE … ADD COLUMN c T [DEFAULT <literal>]``: metadata only,
   one Spark ``ADD COLUMNS`` with the literal as a Spark column default
   (``metadata_only``).  An expression ``DEFAULT`` (Spark defaults must
@@ -35,7 +38,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .functions.select_funcs import _blank, _lex_spans, _split_top
+from .functions.select_funcs import _COMMA_RE, _blank, _lex_spans, _split_top, _top_level
 
 TYPE_MAP = {
     "UInt8": "SMALLINT",
@@ -83,11 +86,6 @@ _TUPLE_RE = re.compile(rf"\bTuple\(\s*({_INNER})\s*\)")
 # column/statement decorations with no Spark equivalent:
 # CODEC(...) — parquet has its own codecs (possibly nested: ZSTD(3))
 _CODEC_RE = re.compile(r"\s*CODEC\([^()]*(?:\([^()]*\)[^()]*)*\)", re.I)
-# inline data-skipping index definitions — parquet min/max + optional
-# bloom filters subsume them
-_INLINE_INDEX_RE = re.compile(
-    r",\s*INDEX\s+[^,()]+?(?:\([^)]*\))?[^,()]*?GRANULARITY\s+\d+", re.I
-)
 _ALTER_INDEX_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+"
     r"(?:ADD|DROP|CLEAR|MATERIALIZE)\s+INDEX\b",
@@ -178,7 +176,7 @@ def _mask_literal_contents(
 
 def _is_literal(text: str) -> bool:
     """Whether ``text`` is exactly one string literal."""
-    return _lex_spans(text) == [(0, len(text), "literal")]
+    return _lex_spans(text) == ((0, len(text), "literal"),)
 
 
 def _unmask_literal_contents(sql: str | None, lits: list[str]) -> str | None:
@@ -277,17 +275,23 @@ _DELETE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+DELETE\s+WHERE\s+(?P<pred>.+?)\s*;?\s*$",
     re.I | re.S,
 )
-_ENGINE_RE = re.compile(r"\bENGINE\s*=?\s*\w+(\(.*?\))?", re.I)
-# physical-layout clauses can appear in any order after the column list;
-# each capture stops at the next clause keyword so none bleeds into the
-# recorded property value (TTL/SETTINGS once did — see test_ddl_dialect)
-_CLAUSE_STOP = r"(?=\bORDER\s+BY|\bPARTITION\s+BY|\bPRIMARY\s+KEY|\bSAMPLE\s+BY|\bTTL\b|\bSETTINGS\b|\bENGINE\b|;|$)"
-_PARTITION_RE = re.compile(r"\bPARTITION\s+BY\s+(?P<e>[^;]*?)" + _CLAUSE_STOP, re.I)
-_ORDER_RE = re.compile(r"\bORDER\s+BY\s+(?P<e>[^;]*?)" + _CLAUSE_STOP, re.I)
-_TTL_RE = re.compile(r"\bTTL\s+(?P<e>[^;]*?)" + _CLAUSE_STOP, re.I)
-_SETTINGS_RE = re.compile(r"\bSETTINGS\s+[^;]*", re.I)
-_SAMPLE_BY_RE = re.compile(r"\bSAMPLE\s+BY\s+(?P<e>[^;]*?)" + _CLAUSE_STOP, re.I)
-_PRIMARY_KEY_RE = re.compile(r"\bPRIMARY\s+KEY\s+(?P<e>[^;]*?)" + _CLAUSE_STOP, re.I)
+# a CREATE's layout clauses, each running to the next one; its CTAS
+# query ends them all
+_LAYOUT_RE = re.compile(
+    r"\b(?P<kw>ENGINE|PARTITION\s+BY|ORDER\s+BY|PRIMARY\s+KEY|SAMPLE\s+BY|TTL|SETTINGS)\b"
+    r"|(?P<ctas>\bAS\s+\(?\s*(?:SELECT|WITH)\b)",
+    re.I,
+)
+_CREATE_HEAD_RE = re.compile(
+    r"\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?:`(?:[^`\\]|\\.)*`|[^\s(])*\s*", re.I
+)
+_USING_RE = re.compile(r"\bUSING\s+\w+", re.I)
+# a column item: its name, then its type up to the first option
+_COL_NAME_RE = re.compile(r"\s*(?:`(?:[^`\\]|\\.)*`|\S+)")
+_COL_OPTION_RE = re.compile(r"\s+(?P<kw>DEFAULT|COMMENT|CODEC|TTL)\b", re.I)
+# inline data-skipping index definitions — parquet min/max + optional
+# bloom filters subsume them
+_INDEX_ITEM_RE = re.compile(r"\s*INDEX\s+\S+\s.*\bTYPE\s", re.I | re.S)
 _MODIFY_TTL_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+MODIFY\s+TTL\s+(?P<e>.+?)\s*;?\s*$",
     re.I | re.S,
@@ -366,23 +370,32 @@ _COMMENT_COL_RE = re.compile(
     r"(?:IF\s+EXISTS\s+)?(?P<col>[\w`]+)\s+(?P<txt>'.*')\s*;?\s*$",
     re.I | re.S,
 )
-_DEFAULT_COL_RE = re.compile(r"\s+DEFAULT\s+[^,)]+", re.I)
 
 
-def _names_provider(create_sql: str) -> bool:
-    """Whether a literal-masked CREATE TABLE names its own provider: a
-    ``USING <fmt>`` at paren depth 0, wherever it stands after the
-    column list (``PARTITIONED BY``, ``OPTIONS`` or ``TBLPROPERTIES``
-    may follow it; column definitions sit at depth 1)."""
-    depth = 0
-    for m in re.finditer(r"[()]|\bUSING\s+\w+", create_sql, re.I):
-        if m.group(0) == "(":
-            depth += 1
-        elif m.group(0) == ")":
-            depth -= 1
-        elif depth == 0:
-            return True
-    return False
+def _column_def(item: str) -> str | None:
+    """One literal-masked CREATE column item as Spark DDL, or None for
+    an INDEX item.  A DEFAULT that is one literal stays, cast to the
+    column's type as metadata-only ADD COLUMN does; an expression
+    DEFAULT (Spark defaults must be constants), CODEC and TTL are
+    dropped; COMMENT stays."""
+    if _INDEX_ITEM_RE.match(item):
+        return None
+    name_end = _COL_NAME_RE.match(item).end()
+    opts = _top_level(_COL_OPTION_RE, item, name_end)[0]
+    type_end = opts[0].start() if opts else len(item)
+    ch_type = item[name_end:type_end]
+    out = [map_types(item[:type_end])]
+    for opt, nxt in zip(opts, [*opts[1:], None]):
+        end = nxt.start() if nxt else len(item)
+        kw = opt.group("kw").upper()
+        lit = _wrap_unsigned_default(ch_type, item[opt.end() : end].strip())
+        if kw == "COMMENT":
+            out.append(item[opt.start() : end])
+        elif kw == "DEFAULT" and _LITERAL_RE.fullmatch(lit):
+            out.append(f" DEFAULT CAST({lit} AS {map_types(ch_type).strip()})")
+        else:
+            out.append(" ")
+    return "".join(out)
 
 
 def _split_assignments(assign: str, lits: list[str]) -> list[tuple[str, str]]:
@@ -411,7 +424,6 @@ def translate(sql: str) -> Statement:
     )
     sql = re.sub(r"\bPOPULATE\s+(?=AS\b)", "", sql, flags=re.I)
     sql = _CODEC_RE.sub("", sql)
-    sql = _INLINE_INDEX_RE.sub("", sql)
     # the lazy ALTER captures that stop at a keyword (UPDATE … WHERE,
     # MOVE … TO TABLE, REPLACE … FROM) match on literal-masked text, so a
     # keyword inside a literal is data; each captured field is unmasked
@@ -565,8 +577,8 @@ def translate(sql: str) -> Statement:
         )
     m = _CLEAR_COL_RE.match(sql)
     if m:  # ClickHouse resets the column to its default inside the
-        # partition; defaults are stripped at CREATE (module docstring)
-        # so the reset value is NULL — documented divergence
+        # partition; the rewrite resets it to NULL, whatever the
+        # column's default — documented divergence
         return Statement(
             kind="clear_column_in_partition",
             sql=sql,
@@ -662,55 +674,45 @@ def translate(sql: str) -> Statement:
             ttl=m.group("e").strip(),
         )
     if _CREATE_RE.match(sql):
-        # mask literal contents for the whole clause-scan phase: a
-        # column DEFAULT/COMMENT literal may contain ENGINE/ORDER BY/
-        # PARTITION BY/AS SELECT spellings, commas, or parens that the
-        # scans below must not see (round-7 probe battery)
-        out, _lits = _mask_literal_contents(map_types(sql).strip().rstrip(";"))
-        # CTAS: split off the SELECT before clause-stripping, or the
-        # layout-clause regexes would eat the query (ORDER BY inside the
-        # SELECT is *its* order, and `AS SELECT ...` after ORDER BY (k)
-        # would be captured into the recorded key — data-losing bugs)
-        ctas_tail = ""
-        cm = re.search(r"\bAS\s+\(?\s*SELECT\b", out, re.I)
-        if cm:
-            ctas_tail = " " + re.sub(r"\s+", " ", out[cm.start():]).strip()
-            out = out[: cm.start()]
-        order_by = partition_by = ttl = None
-        em = re.search(r"\bENGINE\s*=?\s*(?P<name>\w+)", out, re.I)
-        engine = em.group("name") if em else None
-        pm = _PARTITION_RE.search(out)
-        if pm:
-            partition_by = pm.group("e").strip()
-            out = _PARTITION_RE.sub(" ", out)
-        om = _ORDER_RE.search(out)
-        if om:
-            order_by = om.group("e").strip()
-            out = _ORDER_RE.sub(" ", out)
-        tm = _TTL_RE.search(out)
-        if tm:
-            ttl = tm.group("e").strip()
-            out = _TTL_RE.sub(" ", out)
-        sample_by = None
-        sm = _SAMPLE_BY_RE.search(out)
-        if sm:  # recorded so SELECT ... SAMPLE k can hash the right key
-            sample_by = sm.group("e").strip()
-        out = _SETTINGS_RE.sub(" ", out)
-        out = _SAMPLE_BY_RE.sub(" ", out)
-        out = _PRIMARY_KEY_RE.sub(" ", out)
-        out = _ENGINE_RE.sub(" ", out)
-        out = _DEFAULT_COL_RE.sub(" ", out)
-        out = re.sub(r"\s+", " ", out).strip().rstrip(";")
-        if not _names_provider(out):
+        # read by structure on literal-masked text: the column list is
+        # the group after the table name, split before map_types (Spark's
+        # MAP<K, V> nests with angle brackets); the layout clauses are
+        # the top-level spans between clause keywords, and the CTAS
+        # query after them keeps its own ORDER BY
+        out, lits = _mask_literal_contents(sql.strip().rstrip(";"))
+        pos = _CREATE_HEAD_RE.match(out).end()
+        head = map_types(out[:pos])
+        if out[pos : pos + 1] == "(":
+            end = _top_level(_COMMA_RE, out, pos + 1)[1]
+            if end == len(out):
+                raise ValueError(f"unclosed column list in: {sql.strip()!r}")
+            cols = [_column_def(c) for c in _split_top(out[pos + 1 : end])]
+            head += "(" + ",".join(c for c in cols if c is not None) + ")"
+            pos = end + 1
+        rest = map_types(out[pos:])
+        stops = _top_level(_LAYOUT_RE, rest)[0]
+        ctas = next((m for m in stops if m.group("ctas")), None)
+        stops = stops[: stops.index(ctas) + 1] if ctas else stops
+        layout: dict[str, str] = {}
+        for m, nxt in zip(stops, [*stops[1:], None]):
+            if m.group("kw"):
+                value = rest[m.end() : nxt.start() if nxt else len(rest)].strip()
+                kw = re.sub(r"\s+", " ", m.group("kw").upper())
+                layout.setdefault(kw, _unmask_literal_contents(value, lits))
+        kept = rest[: stops[0].start() if stops else len(rest)]
+        out = re.sub(r"\s+", " ", head + kept).strip()
+        if not _top_level(_USING_RE, kept)[0]:
             out += " USING PARQUET"
-        out += ctas_tail  # Spark syntax: USING comes before AS SELECT
+        if ctas:  # Spark syntax: USING comes before AS SELECT
+            out += " " + re.sub(r"\s+", " ", rest[ctas.start() :]).strip()
+        em = re.match(r"\s*=?\s*(\w+)", layout.get("ENGINE", ""))
         return Statement(
             kind="create_table",
-            sql=_unmask_literal_contents(out, _lits),
-            order_by=_unmask_literal_contents(order_by, _lits),
-            partition_by=_unmask_literal_contents(partition_by, _lits),
-            engine=engine,
-            ttl=_unmask_literal_contents(ttl, _lits),
-            sample_by=_unmask_literal_contents(sample_by, _lits),
+            sql=_unmask_literal_contents(out, lits),
+            order_by=layout.get("ORDER BY"),
+            partition_by=layout.get("PARTITION BY"),
+            engine=em.group(1) if em else None,
+            ttl=layout.get("TTL"),
+            sample_by=layout.get("SAMPLE BY"),
         )
     return Statement(kind="passthrough", sql=map_types(sql).strip().rstrip(";"))

@@ -47,6 +47,7 @@ would return the first capture group.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 
@@ -70,19 +71,21 @@ _LEX_RE = re.compile(
 )
 
 
-def _lex_spans(sql: str) -> list[tuple[int, int, str]]:
+@functools.lru_cache(maxsize=64)
+def _lex_spans(sql: str) -> tuple[tuple[int, int, str], ...]:
     """``(start, end, kind)`` of every literal, backticked identifier,
     comment and hint in ``sql``, in order; ``kind`` is ``literal``,
     ``ident``, ``comment``, ``hint`` or ``open`` (an unterminated quote,
     which runs to the end).  None of them may be rewritten or
-    paren-scanned."""
+    paren-scanned.  Cached: a rewrite pass runs several scans over one
+    statement."""
     spans: list[tuple[int, int, str]] = []
     pos = 0
     while (m := _LEX_RE.search(sql, pos)) is not None:
         end = len(sql) if m.lastgroup == "open" else m.end()
         spans.append((m.start(), end, m.lastgroup))
         pos = end
-    return spans
+    return tuple(spans)
 
 
 def _string_mask(sql: str) -> list[bool]:
@@ -105,49 +108,70 @@ def _blank(sql: str, kinds: tuple[str, ...] = ("comment",)) -> str:
     return "".join(out)
 
 
+_SPAN_KINDS = ("literal", "ident", "comment", "hint", "open")
+_BRACKET_RE = re.compile(r"[()\[\]]")
+_COMMA_RE = re.compile(",")
+
+
+def _depths(sql: str) -> list[int]:
+    """The translators' one nesting rule: the depth before each position
+    of ``sql``, and after its end at index ``len(sql)``.  ``(`` and
+    ``[`` open, ``)`` and ``]`` close, and lexer spans count for
+    nothing."""
+    out: list[int] = []
+    depth = last = 0
+    for m in _BRACKET_RE.finditer(_blank(sql, _SPAN_KINDS)):
+        out += [depth] * (m.start() + 1 - last)
+        depth += 1 if m.group() in "([" else -1
+        last = m.start() + 1
+    return out + [depth] * (len(sql) + 1 - last)
+
+
+def _top_level(
+    pattern: "re.Pattern[str]", sql: str, start: int = 0, depths: list[int] | None = None
+) -> tuple[list["re.Match[str]"], int]:
+    """``(matches, end)``: the matches of ``pattern`` from ``start`` on
+    that begin outside lexer spans at ``start``'s :func:`_depths` depth,
+    up to ``end``, the index of the closer of the group that encloses
+    ``start`` (``len(sql)`` when none closes it).  ``depths`` is
+    ``_depths(sql)`` when the caller already has it."""
+    depths = _depths(sql) if depths is None else depths
+    base = depths[start]
+    end = next((i for i in range(start, len(sql)) if depths[i + 1] < base), len(sql))
+    mask = _string_mask(sql)
+    matches = []
+    for m in pattern.finditer(sql, start):
+        if m.start() >= end:
+            break
+        if depths[m.start()] == base and not mask[m.start()]:
+            matches.append(m)
+    return matches, end
+
+
 def _split_top(text: str) -> list[str]:
-    """Split on commas outside parens, brackets and lexer spans.  Parts
-    come back unstripped and rejoin with ``,`` to ``text``; ``""`` gives
-    ``[]``."""
-    mask = _string_mask(text)
-    parts, depth, last = [], 0, 0
-    for i, ch in enumerate(text):
-        if mask[i]:
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[last:i])
-            last = i + 1
-    return parts + [text[last:]] if text else []
+    """Split on :func:`_top_level` commas.  Parts come back unstripped
+    and rejoin with ``,`` to ``text``; ``""`` gives ``[]``."""
+    if not text:
+        return []
+    cuts = [-1, *(m.start() for m in _top_level(_COMMA_RE, text)[0]), len(text)]
+    return [text[a + 1 : b] for a, b in zip(cuts, cuts[1:])]
 
 
 def _scan_args(
-    sql: str, start: int, mask: list[bool] | None = None
+    sql: str, start: int, depths: list[int] | None = None
 ) -> tuple[list[str], int]:
     """Split a balanced argument list starting just after '('.
 
-    Returns (stripped args, index_past_closing_paren); ``mask`` is
-    ``_string_mask(sql)`` when the caller already has it.  An empty or
+    Returns (stripped args, index_past_closing_paren); ``depths`` is
+    ``_depths(sql)`` when the caller already has it.  An empty or
     blank list yields [] (zero-arg call).
     """
-    mask = _string_mask(sql) if mask is None else mask
-    depth = 1
-    for i in range(start, len(sql)):
-        if mask[i]:
-            continue
-        if sql[i] in "([":
-            depth += 1
-        elif sql[i] == "]":
-            depth -= 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                args = [a.strip() for a in _split_top(sql[start:i])]
-                return (args if args != [""] else []), i + 1
-    raise ValueError(f"unbalanced parentheses in: {sql[start - 20 : start + 40]!r}")
+    commas, end = _top_level(_COMMA_RE, sql, start, depths)
+    if end == len(sql) or sql[end] != ")":
+        raise ValueError(f"unbalanced parentheses in: {sql[start - 20 : start + 40]!r}")
+    cuts = [start - 1, *(m.start() for m in commas), end]
+    args = [sql[a + 1 : b].strip() for a, b in zip(cuts, cuts[1:])]
+    return (args if args != [""] else []), end + 1
 
 
 Rule = Callable[[list[str]], "str | None"]  # None → leave the call untouched
@@ -1003,6 +1027,9 @@ _PARAMETRIC: dict[str, Callable[[list[str], list[str]], str]] = {
 }
 
 _IDENT_RE = re.compile(r"(?<![\w.`'])([A-Za-z_][A-Za-z0-9_]*)\s*\(")
+# a literal-start bracket: not element access after an identifier,
+# a closing paren or bracket, or a quoted name
+_ARRAY_LITERAL_RE = re.compile(r"(?<![\w)\]`'])\[")
 
 
 def _rewrite_array_literals(sql: str) -> str:
@@ -1016,30 +1043,16 @@ def _rewrite_array_literals(sql: str) -> str:
     (both 1-based) for portable indexing."""
     while True:
         mask = _string_mask(sql)
-        start = -1
-        for i, ch in enumerate(sql):
-            if ch != "[" or mask[i]:
-                continue
-            j = i - 1
-            if j >= 0 and (sql[j].isalnum() or sql[j] in "_)]`'"):
-                continue
-            start = i
-            break
-        if start == -1:
+        start = next(
+            (m.start() for m in _ARRAY_LITERAL_RE.finditer(sql) if not mask[m.start()]),
+            None,
+        )
+        if start is None:
             return sql
-        depth, k = 0, start
-        while k < len(sql):
-            if not mask[k]:
-                if sql[k] == "[":
-                    depth += 1
-                elif sql[k] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            k += 1
-        if depth != 0:
+        end = _top_level(_COMMA_RE, sql, start + 1)[1]
+        if end == len(sql) or sql[end] != "]":
             return sql  # unbalanced — leave for Spark's parser to report
-        sql = sql[:start] + "array(" + sql[start + 1 : k] + ")" + sql[k + 1 :]
+        sql = sql[:start] + "array(" + sql[start + 1 : end] + ")" + sql[end + 1 :]
 
 
 _TABLE_VALUED_AMBIGUOUS = {"range"}
@@ -1055,19 +1068,6 @@ _UA_CLAUSE_RE = re.compile(
     re.I,
 )
 _UA_ALLOWED = ("SELECT", "FROM", "WHERE", "GROUP BY", "ORDER BY", "LIMIT")
-
-
-def _depths(sql: str, mask: list[bool]) -> list[int]:
-    """Paren depth BEFORE each position (quote/comment-aware)."""
-    out, d = [], 0
-    for i, ch in enumerate(sql):
-        out.append(d)
-        if not mask[i]:
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-    return out
 
 
 def _rewrite_uniq_array_context(sql: str) -> str:
@@ -1096,13 +1096,10 @@ def _rewrite_uniq_array_context(sql: str) -> str:
     equivalent, including NULL-element handling)."""
     if "uniqArray" not in sql:
         return sql
-    mask = _string_mask(sql)
-    depths = _depths(sql, mask)
-    clauses: list[tuple[str, int, int]] = []
-    for m in _UA_CLAUSE_RE.finditer(sql):
-        if mask[m.start()] or depths[m.start()] != 0:
-            continue
-        clauses.append((re.sub(r"\s+", " ", m.group(1).upper()), m.start(), m.end()))
+    clauses = [
+        (re.sub(r"\s+", " ", m.group(1).upper()), m.start(), m.end())
+        for m in _top_level(_UA_CLAUSE_RE, sql)[0]
+    ]
     order = [c[0] for c in clauses]
     if (
         not order
@@ -1231,7 +1228,7 @@ def rewrite_functions(sql: str) -> str:
         if budget < 0:
             return sql
         progress = False
-        mask = _string_mask(sql)
+        mask, depths = _string_mask(sql), _depths(sql)
         for m in _IDENT_RE.finditer(sql):
             if mask[m.start(1)]:
                 continue
@@ -1245,7 +1242,7 @@ def rewrite_functions(sql: str) -> str:
                 prev = re.search(r"([A-Za-z_]+)\s*$", sql[: m.start()])
                 if prev and prev.group(1).upper() in ("FROM", "JOIN"):
                     continue
-            args, end = _scan_args(sql, m.end(), mask)
+            args, end = _scan_args(sql, m.end(), depths)
             rest = sql[end:]
             stripped = rest.lstrip()
             # a rule that raises on malformed arity/params DECLINES the
@@ -1255,7 +1252,7 @@ def rewrite_functions(sql: str) -> str:
                 if name in _PARAMETRIC and stripped.startswith("("):
                     # name(params)(args) — the combinator form
                     inner_start = end + (len(rest) - len(stripped)) + 1
-                    inner_args, end = _scan_args(sql, inner_start, mask)
+                    inner_args, end = _scan_args(sql, inner_start, depths)
                     repl = _PARAMETRIC[name](args, inner_args)
                 elif name in RULES:
                     maybe = RULES[name](args)

@@ -61,11 +61,12 @@ from pyspark.sql.types import (
 from .ddl import Statement, translate
 from .functions.select_funcs import (
     _blank,
-    _depths as _paren_depths,
+    _depths,
     _lex_spans,
     _scan_args,
     _split_top,
     _string_mask,
+    _top_level,
     rewrite_functions as _rewrite_funcs,
 )
 
@@ -1510,11 +1511,7 @@ def _with_tblproperties(sql: str, props: dict[str, str]) -> str:
     if not props:
         return sql
     kv = ", ".join(f"'{k}' = '{_sq(v)}'" for k, v in props.items())
-    mask = _string_mask(sql)
-    depths = _paren_depths(sql, mask)
-    for m in _PROPS_AT_RE.finditer(sql):
-        if mask[m.start()] or depths[m.start()]:
-            continue
+    for m in _top_level(_PROPS_AT_RE, sql)[0]:
         if m.group(0).endswith("("):  # merge into the statement's own clause
             rest = sql[m.end() :]
             return sql[: m.end()] + kv + ("" if rest.lstrip().startswith(")") else ", ") + rest
@@ -1812,11 +1809,8 @@ def _exec_translated(spark: SparkSession, st: Statement) -> DataFrame | None:
         qual = _qualify(spark, st.table)
         df = spark.table(qual)
         _check_exact_column(df.columns, st.column, "ALTER MODIFY COLUMN")
-        _swap_overwrite(
-            spark,
-            st.table,
-            df.withColumn(st.column, F.col(st.column).cast(st.col_type)),
-        )
+        cast = _as_column(df, st.column, F.col(st.column).cast(st.col_type))
+        _swap_overwrite(spark, st.table, df.withColumn(st.column, cast))
         return None
     if st.kind == "rename_column":
         qual = _qualify(spark, st.table)
@@ -2363,9 +2357,30 @@ def _rewrite_dictget(spark: SparkSession, query: str) -> str:
 # ROLLUP: that would add per-prefix subtotals ClickHouse doesn't emit.)
 # In the totals row the grouping keys are NULL (ClickHouse emits type
 # defaults — documented divergence, same as dictGet misses).
-_WITH_TOTALS_RE = re.compile(
-    r"\bGROUP\s+BY\s+(?P<keys>.+?)\s+WITH\s+TOTALS\b", re.I | re.S
-)
+_GROUP_BY_OR_TOTALS_RE = re.compile(r"\bGROUP\s+BY\b|(?P<totals>\bWITH\s+TOTALS\b)", re.I)
+
+
+def _rewrite_with_totals(query: str) -> str:
+    """Each ``GROUP BY k… WITH TOTALS`` → ``GROUP BY GROUPING SETS
+    ((k…), ())``: a GROUP BY pairs with a WITH TOTALS only when that is
+    the next of the two at the GROUP BY's own depth, so a subquery's
+    GROUP BY never captures the outer query's keys."""
+    while True:
+        depths, mask = _depths(query), _string_mask(query)
+        for g in _GROUP_BY_OR_TOTALS_RE.finditer(query):
+            if mask[g.start()] or g.group("totals"):
+                continue
+            nxt = _top_level(_GROUP_BY_OR_TOTALS_RE, query, g.end(), depths)[0]
+            if nxt and nxt[0].group("totals"):
+                keys = query[g.end() : nxt[0].start()].strip()
+                query = (
+                    f"{query[: g.start()]}GROUP BY GROUPING SETS (({keys}), ())"
+                    f"{query[nxt[0].end() :]}"
+                )
+                break
+        else:
+            return query
+
 
 # ClickHouse clause-level SELECT dialect -------------------------------
 # PREWHERE is a ClickHouse scan-stage optimization hint; semantically it
@@ -2380,31 +2395,20 @@ _PREWHERE_END_RE = re.compile(
 
 
 def _find_prewhere(query: str):
-    """Locate ``PREWHERE <pred>`` with a quote-aware, paren-depth-aware
-    end scan: a boundary keyword inside a predicate subquery
-    (``PREWHERE id IN (SELECT … LIMIT 3)``) belongs to the subquery,
-    and keywords or parens inside STRING LITERALS count for nothing
-    (``PREWHERE s = '('`` — both round-7 fuzzer/review classes).
-    Returns (start, end_of_pred, pred) or None."""
-    mask = _string_mask(query)
-    m = next(
-        (
-            mm
-            for mm in _PREWHERE_START_RE.finditer(query)
-            if not mask[mm.start()]
-        ),
-        None,
-    )
+    """Locate ``PREWHERE <pred>``: the predicate ends at the first
+    boundary keyword at its own depth, or where its group closes.  A
+    boundary keyword inside a predicate subquery (``PREWHERE id IN
+    (SELECT … LIMIT 3)``) belongs to the subquery, and keywords or
+    parens inside string literals count for nothing (``PREWHERE s =
+    '('``).  Returns (start, end_of_pred, pred) or None."""
+    m = _search_unquoted(_PREWHERE_START_RE, query)
     if m is None or m.end() >= len(query):
         return None
-    depths = _paren_depths(query, mask)
-    base = depths[m.end()]
-    for b in _PREWHERE_END_RE.finditer(query, m.end()):
-        if mask[b.start()]:
-            continue
-        if depths[b.start()] - base <= 0:
-            return m.start(), b.start(), query[m.end() : b.start()].strip()
-    return m.start(), len(query), query[m.end() :].strip()
+    ends, close = _top_level(_PREWHERE_END_RE, query, m.end())
+    cut = ends[0].start() if ends else close
+    return m.start(), cut, query[m.end() : cut].strip()
+
+
 # `[LEFT] ARRAY JOIN expr AS alias` — single-column form only (the
 # multi-column zip form has no 1:1 Spark clause; raise, don't mangle).
 _ARRAY_JOIN_START_RE = re.compile(r"\b(?P<left>LEFT\s+)?ARRAY\s+JOIN\s+", re.I)
@@ -2424,38 +2428,24 @@ def _rewrite_array_join(query: str) -> str:
         spans = _lex_spans(query)
         if spans and spans[-1][2] == "open" and spans[-1][0] >= m.end():
             raise ValueError("unterminated string literal in ARRAY JOIN")
-        mask = _string_mask(query)
-        depth = 0
-        for i in range(m.end(), len(query)):
-            if mask[i]:
-                continue
-            ch = query[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                mm = _ARRAY_JOIN_AS_RE.match(query, i)
-                if mm:
-                    expr = _blank(query[m.end() : i]).strip()
-                    if _ARRAY_JOIN_ZIP_RE.match(query, mm.end()):
-                        raise ValueError(
-                            "multi-column ARRAY JOIN (zip form) is not "
-                            "supported; use one ARRAY JOIN per array or "
-                            "arrays_zip"
-                        )
-                    outer = " OUTER" if m.group("left") else ""
-                    repl = (
-                        f"LATERAL VIEW{outer} explode({expr}) "
-                        f"AS {mm.group('alias')}"
-                    )
-                    query = query[: m.start()] + repl + query[mm.end() :]
-                    break
-        else:
+        aliases = _top_level(_ARRAY_JOIN_AS_RE, query, m.end())[0]
+        if not aliases:
             raise ValueError(
                 "ARRAY JOIN requires an 'AS <alias>' (the bare form would "
                 "shadow the source column ambiguously in Spark)"
             )
+        mm = aliases[0]
+        if _ARRAY_JOIN_ZIP_RE.match(query, mm.end()):
+            raise ValueError(
+                "multi-column ARRAY JOIN (zip form) is not supported; use "
+                "one ARRAY JOIN per array or arrays_zip"
+            )
+        expr = _blank(query[m.end() : mm.start()]).strip()
+        outer = " OUTER" if m.group("left") else ""
+        repl = f"LATERAL VIEW{outer} explode({expr}) AS {mm.group('alias')}"
+        query = query[: m.start()] + repl + query[mm.end() :]
+
+
 _GLOBAL_RE = re.compile(
     r"\bGLOBAL\s+(?=(?:NOT\s+)?IN\b|ANY\b|ALL\b|JOIN\b|LEFT\b|RIGHT\b"
     r"|INNER\b|FULL\b|CROSS\b|SEMI\b|ANTI\b)",
@@ -2491,6 +2481,20 @@ _LIMIT_BY_TAIL_RE = re.compile(
     re.I | re.S,
 )
 _LIMIT_BY_ANY_RE = re.compile(r"\bLIMIT\s+\d+\s+BY\b", re.I)
+_ORDER_BY_RE = re.compile(r"\bORDER\s+BY\b", re.I)
+
+
+def _reject_nested(pattern: "re.Pattern[str]", query: str, clause: str) -> None:
+    """Raise when ``clause`` (spelled by ``pattern``) occurs below the
+    statement's top level: its rewrite wraps the whole statement, so it
+    cannot apply inside a subquery or CTE."""
+    mask = _string_mask(query)
+    unquoted = [m for m in pattern.finditer(query) if not mask[m.start()]]
+    if len(unquoted) > len(_top_level(pattern, query)[0]):
+        raise ValueError(
+            f"{clause} is supported only at the statement's top level, "
+            "not inside a subquery or CTE"
+        )
 
 
 def _rewrite_limit_by(query: str) -> str:
@@ -2508,31 +2512,17 @@ def _rewrite_limit_by(query: str) -> str:
     the (already reduced) outer ORDER BY.  An explicit ORDER BY is
     required — ClickHouse's LIMIT BY without one picks arbitrary rows,
     which a distributed rewrite must not silently reproduce."""
-    # anchor on the LAST depth-0, unquoted ORDER BY — an ORDER BY
-    # inside a predicate subquery (`WHERE id IN (SELECT … ORDER BY id
-    # LIMIT 80)`) must not become the window's sort key (round-7
-    # fuzzer catch, same class as the PREWHERE scans)
+    _reject_nested(_LIMIT_BY_ANY_RE, query, "LIMIT n BY")
+    # anchor on the LAST top-level ORDER BY — an ORDER BY inside a
+    # predicate subquery (`WHERE id IN (SELECT … ORDER BY id LIMIT 80)`)
+    # must not become the window's sort key
+    orders = _top_level(_ORDER_BY_RE, query)[0]
+    # run the tail parse on a literal-masked SAME-LENGTH copy, so no
+    # keyword, digit or ';' inside a literal can match; every captured
+    # group is recovered by SPAN from the original text
     mask = _string_mask(query)
-    depths = _paren_depths(query, mask)
-    anchor = None
-    for om in re.finditer(r"\bORDER\s+BY\b", query, re.I):
-        if not mask[om.start()] and depths[om.start()] == 0:
-            anchor = om.start()
-    # run the tail parse on a literal-masked SAME-LENGTH copy: the
-    # regex past the anchor was still quote-blind, so ' LIMIT 9 BY '
-    # spelled inside a string literal after ORDER BY split the query
-    # there (ADVICE r7).  Masked positions become \x01 — no keyword,
-    # digit, or ';' can match inside a literal — and every captured
-    # group is recovered by SPAN from the original text, literals
-    # intact.
-    masked = "".join(
-        "\x01" if mask[i] else ch for i, ch in enumerate(query)
-    )
-    m = _LIMIT_BY_TAIL_RE.match(masked, anchor) if anchor is not None else None
-    if m is not None and depths[m.start("n")] != 0:
-        # a ' LIMIT n BY ' nested in parens belongs to a subexpression,
-        # not the statement tail
-        m = None
+    masked = "".join("\x01" if mask[i] else ch for i, ch in enumerate(query))
+    m = _LIMIT_BY_TAIL_RE.match(masked, orders[-1].start()) if orders else None
     if not m:
         if _search_unquoted(_LIMIT_BY_ANY_RE, query):
             raise ValueError(
@@ -2573,6 +2563,7 @@ _WITH_FILL_UNSUPPORTED = (
 # the names the rewrite below introduces; a query that uses one would
 # be silently rebound to the rewrite's own CTE or bounds
 _WITH_FILL_RESERVED_RE = re.compile(r"(?<!\w)__(?:wf|lo|hi)(?!\w)", re.I)
+_WITH_FILL_ANY_RE = re.compile(r"\bWITH\s+FILL\b", re.I)
 
 
 def _rewrite_with_fill(query: str) -> str:
@@ -2586,11 +2577,13 @@ def _rewrite_with_fill(query: str) -> str:
     ClickHouse's TO bound is exclusive and is honored with a grid
     filter.  Non-fill columns are NULL on filled rows, as in
     ClickHouse."""
-    m = _search_unquoted(_WITH_FILL_RE, query)
-    if not m:
-        if _search_unquoted(re.compile(r"\bWITH\s+FILL\b", re.I), query):
+    _reject_nested(_WITH_FILL_ANY_RE, query, "WITH FILL")
+    fills = _top_level(_WITH_FILL_RE, query)[0]
+    if not fills:
+        if _search_unquoted(_WITH_FILL_ANY_RE, query):
             raise ValueError(_WITH_FILL_UNSUPPORTED)
         return query
+    m = fills[0]
     inner = query[: m.start()].strip()
     col = m.group("col")
     if _WITH_FILL_RESERVED_RE.search(_blank(f"{inner} {col}", ("literal", "comment"))):
@@ -2669,19 +2662,13 @@ _CLAUSE_BOUNDARY_RE = re.compile(
 
 def _merge_prewhere(pred: str, rest_after_where: str) -> str:
     """AND-merge a PREWHERE predicate into the following WHERE clause,
-    wrapping only up to the next DEPTH-0 clause boundary (a boundary
-    keyword inside a WHERE subquery — ``WHERE v IN (SELECT … LIMIT 3)``
-    — belongs to that subquery, not to this clause; keywords and parens
-    inside string literals are ignored)."""
-    mask = _string_mask(rest_after_where)
-    depths = _paren_depths(rest_after_where, mask)
-    cut = len(rest_after_where)
-    for b in _CLAUSE_BOUNDARY_RE.finditer(rest_after_where):
-        if mask[b.start()]:
-            continue
-        if depths[b.start()] <= 0:
-            cut = b.start()
-            break
+    wrapping only up to the next clause boundary at its own depth, or
+    where its group closes (a boundary keyword inside a WHERE subquery —
+    ``WHERE v IN (SELECT … LIMIT 3)`` — belongs to that subquery, not to
+    this clause; keywords and parens inside string literals are
+    ignored)."""
+    bounds, close = _top_level(_CLAUSE_BOUNDARY_RE, rest_after_where)
+    cut = bounds[0].start() if bounds else close
     wpred = rest_after_where[:cut].strip()
     tail = rest_after_where[cut:]
     return f"WHERE ({pred}) AND ({wpred}) {tail}".rstrip()
@@ -2714,11 +2701,7 @@ def rewrite_query(spark: SparkSession, query: str) -> str:
     query = _sub_unquoted(
         _SYSTEM_RE, lambda m: _system_view(spark, m.group("which").lower()), query
     )
-    query = _sub_unquoted(
-        _WITH_TOTALS_RE,
-        lambda m: f"GROUP BY GROUPING SETS (({m.group('keys')}), ())",
-        query,
-    )
+    query = _rewrite_with_totals(query)
 
     def _sub(m: "re.Match[str]") -> str:
         t = m.group("t")

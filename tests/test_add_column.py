@@ -1,5 +1,6 @@
-"""ADD COLUMN: a metadata change for a literal DEFAULT, a rewrite for an
-expression one.
+"""Column defaults.  ADD COLUMN: a metadata change for a literal
+DEFAULT, a rewrite for an expression one; CREATE TABLE keeps literal
+DEFAULTs; MODIFY COLUMN keeps a column's default.
 
 ClickHouse keeps a column's DEFAULT in metadata: existing rows read it
 and a later INSERT that omits the column gets it.  With no DEFAULT or a
@@ -181,3 +182,63 @@ def test_crash_after_metadata_add_resumes_once(spark, db, tmp_path, monkeypatch)
     _write(home, 2, ["ALTER TABLE tc ADD COLUMN c Int64 DEFAULT 7"])
     with pytest.raises(ValueError, match="already exists"):
         M.migrate(spark, db, str(home), create_db_if_no_exists=False)
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_create_literal_defaults_reach_inserts_that_omit_them(spark, db, tmp_path):
+    """CREATE TABLE keeps a literal DEFAULT as a Spark column default, so
+    an INSERT that omits the column gets it: a staged INSERT through
+    migrate(), and one through ``execute_statement``.  An expression
+    DEFAULT is dropped (NULL), as before."""
+    ddl = (
+        "CREATE TABLE {} (id Int64, s String DEFAULT 'it''s', n Int32 DEFAULT -3, "
+        "u UInt32 DEFAULT -1, f Float64 DEFAULT 0.5, z Nullable(String) DEFAULT NULL, "
+        "d Date DEFAULT today()) ENGINE = MergeTree ORDER BY id"
+    )
+    cols = ("id", "s", "n", "u", "f", "z", "d")
+    want = [(1, "it's", -3, 4294967295, 0.5, None, None)]
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write(home, 1, [ddl.format("tm"), "INSERT INTO tm (id) VALUES (1)"])
+    assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
+    assert _rows(spark, db, "tm", cols) == want
+    M.execute_statement(spark, ddl.format("tx"))
+    M.execute_statement(spark, "INSERT INTO tx (id) VALUES (1)")
+    assert _rows(spark, db, "tx", cols) == want
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_reference_ledger_ddl_through_migrate(spark, db, tmp_path):
+    """The reference's own ledger DDL, ``created_at DateTime DEFAULT
+    now()``, applies through migrate() (it used to end in a stray paren
+    Spark could not parse); the expression default is dropped."""
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write(home, 1, [
+        "CREATE TABLE IF NOT EXISTS audit (version UInt32, md5 String, script String, "
+        "created_at DateTime DEFAULT now()) ENGINE = MergeTree ORDER BY tuple(created_at)",
+        "INSERT INTO audit (version, md5, script) VALUES (1, 'm', 's')",
+    ])
+    assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
+    df = spark.table(f"`{db}`.audit")
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("version", "bigint"), ("md5", "string"), ("script", "string"),
+        ("created_at", "timestamp"),
+    ]
+    assert _rows(spark, db, "audit", ("version", "md5", "created_at")) == [(1, "m", None)]
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_modify_column_keeps_the_default(spark, db):
+    """MODIFY COLUMN's rewrite keeps the column's default: an INSERT that
+    omits the widened column still gets it."""
+    for stmt in (
+        "CREATE TABLE tw (id Int64) ENGINE = MergeTree ORDER BY id",
+        "INSERT INTO tw VALUES (1)",
+        "ALTER TABLE tw ADD COLUMN c Int32 DEFAULT 7",
+        "ALTER TABLE tw MODIFY COLUMN c Int64",
+        "INSERT INTO tw (id) VALUES (2)",
+    ):
+        M.execute_statement(spark, stmt)
+    assert spark.table(f"`{db}`.tw").schema["c"].dataType.simpleString() == "bigint"
+    assert _rows(spark, db, "tw", ("id", "c")) == [(1, 7), (2, 7)]

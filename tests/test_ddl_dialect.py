@@ -3,6 +3,8 @@ wrapper types, enums, decimals, arrays, RENAME/OPTIMIZE/TRUNCATE."""
 
 from __future__ import annotations
 
+import pytest
+
 from clickhouse_migrator_spark import ddl
 from clickhouse_migrator_spark.ddl import map_types, translate
 
@@ -195,6 +197,36 @@ def test_codec_and_inline_index_stripped():
     assert st.sql == "CREATE TABLE t (id BIGINT, v BIGINT) USING PARQUET"
 
 
+def test_create_column_list_and_engine_args_nest():
+    """The column list is the group after the table name and the ENGINE
+    clause runs to the next clause keyword, whatever parens they hold:
+    an expression DEFAULT is dropped whole (``DEFAULT now()`` used to
+    leave ``TIMESTAMP ))``), and so is a nested ENGINE argument."""
+    for default in ("now()", "toDate(ts)", "map('a', 1)", "[1, 2]"):
+        st = translate(
+            f"CREATE TABLE t (id UInt32, created_at DateTime DEFAULT {default}) "
+            "ENGINE = MergeTree ORDER BY id"
+        )
+        assert st.sql == "CREATE TABLE t (id BIGINT, created_at TIMESTAMP ) USING PARQUET"
+        assert st.order_by == "id"
+    st = translate(
+        "CREATE TABLE t (id UInt32, ver UInt64) "
+        "ENGINE = ReplacingMergeTree(toUInt64(ver)) ORDER BY id SETTINGS a = 1"
+    )
+    assert st.sql == "CREATE TABLE t (id BIGINT, ver BIGINT) USING PARQUET"
+    assert (st.engine, st.order_by) == ("ReplacingMergeTree", "id")
+    st = translate(
+        "CREATE TABLE t (m Map(String, UInt8) DEFAULT map('a', 1), u UInt32 DEFAULT -1 "
+        "COMMENT 'c', d Date TTL d + INTERVAL 1 DAY) ENGINE = MergeTree ORDER BY tuple()"
+    )
+    assert st.sql == (
+        "CREATE TABLE t (m MAP<STRING, SMALLINT> , u BIGINT DEFAULT CAST(4294967295 AS BIGINT) "
+        "COMMENT 'c', d DATE ) USING PARQUET"
+    )
+    with pytest.raises(ValueError, match="unclosed column list"):
+        translate("CREATE TABLE t (id UInt32, d DateTime DEFAULT now() ENGINE = Log")
+
+
 def test_create_keeps_its_own_provider_before_partitioned_by():
     """A top-level ``USING <fmt>`` anywhere after the column list names
     the provider; only a CREATE without one gets ``USING PARQUET``."""
@@ -269,7 +301,10 @@ def test_ddl_literals_are_opaque_to_all_scans():
         "CREATE TABLE t (s String DEFAULT 'ORDER BY x', id UInt64) "
         "ENGINE = MergeTree ORDER BY (id) PARTITION BY tuple()"
     )
-    assert st.sql == "CREATE TABLE t (s STRING , id BIGINT) USING PARQUET"
+    assert st.sql == (
+        "CREATE TABLE t (s STRING DEFAULT CAST('ORDER BY x' AS STRING), id BIGINT) "
+        "USING PARQUET"
+    )
     assert st.order_by == "(id)" and st.partition_by == "tuple()"
 
     st = translate(
@@ -279,12 +314,12 @@ def test_ddl_literals_are_opaque_to_all_scans():
     assert st.engine == "MergeTree"
     assert "COMMENT 'ENGINE = Memory SETTINGS x=1'" in st.sql
 
-    # a literal containing , and ) no longer truncates the DEFAULT strip
+    # a literal containing , and ) no longer truncates the DEFAULT
     st = translate(
         "CREATE TABLE t (s String DEFAULT 'a,b)c') ENGINE = MergeTree "
         "ORDER BY tuple()"
     )
-    assert st.sql == "CREATE TABLE t (s STRING ) USING PARQUET"
+    assert st.sql == "CREATE TABLE t (s STRING DEFAULT CAST('a,b)c' AS STRING)) USING PARQUET"
 
     # quoted expressions in recorded clauses survive unmasking intact
     st = translate(
@@ -298,7 +333,9 @@ def test_ddl_literals_are_opaque_to_all_scans():
         "CREATE TABLE t (s String DEFAULT 'x AS SELECT y') "
         "ENGINE = MergeTree ORDER BY tuple()"
     )
-    assert "AS SELECT" not in st.sql
+    assert st.sql == (
+        "CREATE TABLE t (s STRING DEFAULT CAST('x AS SELECT y' AS STRING)) USING PARQUET"
+    )
 
     # the ALTER clause keywords inside a literal are data too: WHERE ends
     # an UPDATE's assignments, TO TABLE a MOVE's partition, FROM a

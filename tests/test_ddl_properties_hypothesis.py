@@ -35,13 +35,26 @@ def ch_types(draw, depth: int = 2) -> str:
 _COLNAMES = st.sampled_from(["id", "name", "value", "ts", "payload", "k1"])
 
 
+# a column DEFAULT of each kind: a literal, a function call, an array, a
+# map; CODEC arguments nest
+_DEFAULTS = st.sampled_from(
+    ["", " DEFAULT 7", " DEFAULT 'a,b)c'", " DEFAULT -1", " DEFAULT NULL",
+     " DEFAULT now()", " DEFAULT toDate(now())", " DEFAULT [1, 2]",
+     " DEFAULT map('a', 1)"]
+)
+_CODECS = st.sampled_from(["", " CODEC(Delta(4), ZSTD(1))", " CODEC(ZSTD(3))"])
+
+
 @st.composite
 def create_tables(draw) -> str:
     ncols = draw(st.integers(1, 4))
     names = draw(st.lists(_COLNAMES, min_size=ncols, max_size=ncols, unique=True))
-    cols = ", ".join(f"{n} {draw(ch_types())}" for n in names)
+    cols = ", ".join(
+        f"{n} {draw(ch_types())}{draw(_DEFAULTS)}{draw(_CODECS)}" for n in names
+    )
     engine = draw(st.sampled_from(
-        ["MergeTree", "ReplacingMergeTree", "SummingMergeTree", "TinyLog"]))
+        ["MergeTree", "ReplacingMergeTree", "SummingMergeTree", "TinyLog",
+         f"ReplacingMergeTree(toUInt64({names[0]}))", "MergeTree()"]))
     stmt = f"CREATE TABLE t ({cols}) ENGINE = {engine}"
     if draw(st.booleans()):
         stmt += f" PARTITION BY {draw(st.sampled_from(['tuple()', names[0]]))}"
@@ -72,6 +85,14 @@ def test_translate_create_never_crashes_and_strips_engine(stmt):
     assert "SETTINGS" not in st_out.sql.upper()
     # engine intent is preserved as metadata, not lost
     assert st_out.engine is not None
+
+
+@given(create_tables())
+@settings(max_examples=150, deadline=None)
+def test_translated_create_parses_in_spark(spark, stmt):
+    """Nested DEFAULTs, ENGINE arguments and CODECs never leave a
+    stray paren: Spark's parser accepts every translated CREATE."""
+    spark._jsparkSession.sessionState().sqlParser().parsePlan(translate(stmt).sql)
 
 
 @given(st.sampled_from(["UPDATE", "DELETE"]),

@@ -6,7 +6,8 @@ smoke each exercise ONE rewriter rule at a time; the bugs they caught
 *interaction* bugs.  This suite draws random COMPOSITIONS of the
 clause rewrites — CTE prefix × [LEFT] ARRAY JOIN × PREWHERE/WHERE
 spellings × (grouped aggregates | LIMIT BY | WITH FILL) × ORDER
-BY/LIMIT — and asserts, for every generated statement:
+BY/LIMIT × a FROM-subquery wrap of the grouped shape — and asserts,
+for every generated statement:
 
 1. the full rewrite pipeline (`migrate.rewrite_query`) is idempotent,
 2. the rewritten statement EXECUTES on Spark, and
@@ -78,6 +79,12 @@ _PREDICATES = [
         f"id IN (SELECT id FROM {VIEW} ORDER BY id LIMIT 80)",
     ),
     ("s != '(WHERE'", "s != '(WHERE'"),
+    # a GROUP BY inside a predicate subquery belongs to that subquery
+    # (WITH TOTALS pairs with the GROUP BY at its own depth)
+    (
+        f"id IN (SELECT id FROM {VIEW} GROUP BY id)",
+        f"id IN (SELECT id FROM {VIEW} GROUP BY id)",
+    ),
     # backtick-quoted identifiers (round-8 widening): the rewriter's
     # masks treat backticks as opaque spans — a quoted column crossing
     # a clause scan must survive verbatim
@@ -177,14 +184,16 @@ def compositions(draw):
             gb_ch = gb_dd = "GROUP BY g"
             limit = draw(st.sampled_from(["", " LIMIT 3"]))
             ordered = True
-        ch = (
-            f"{cte_ch}SELECT {sel_ch} {from_ch}{where_ch} "
-            f"{gb_ch}{hv_ch} ORDER BY g{limit}"
-        )
-        dd = (
-            f"{cte_dd}SELECT {sel_dd} {from_dd}{where_dd} "
-            f"{gb_dd}{hv_dd} ORDER BY g{limit}"
-        )
+        ch = f"SELECT {sel_ch} {from_ch}{where_ch} {gb_ch}{hv_ch} ORDER BY g{limit}"
+        dd = f"SELECT {sel_dd} {from_dd}{where_dd} {gb_dd}{hv_dd} ORDER BY g{limit}"
+        # the FROM-subquery dimension: every clause scan must stop where
+        # the subquery closes, and the outer query adds its own clause
+        outer = draw(st.sampled_from([None, "WHERE g > 1", "ORDER BY g"]))
+        if outer is not None:
+            ch = f"SELECT * FROM ({ch}) AS sub {outer}"
+            dd = f"SELECT * FROM ({dd}) AS sub {outer}"
+            ordered = ordered and outer.startswith("ORDER")
+        ch, dd = cte_ch + ch, cte_dd + dd
     elif shape == "limit_by":
         n = draw(st.integers(1, 3))
         tail = draw(st.sampled_from(["", " LIMIT 5"]))
@@ -355,6 +364,62 @@ def test_limit_by_anchors_on_depth0_order_by(comp_env):
         ") WHERE _rn <= 1 ORDER BY v, id"
     ).fetchall()
     assert got == want and len(got) == 7
+
+
+def test_prewhere_in_from_subquery_ends_at_its_close(comp_env):
+    """A PREWHERE inside a FROM subquery ends where the subquery closes:
+    the outer WHERE is not merged into it (it became ``WHERE (v > 30)
+    sub) AND (g > 1)``)."""
+    spark, con = comp_env
+    for ch, pred in (
+        (f"SELECT * FROM (SELECT id, g FROM {VIEW} PREWHERE v > 30) sub WHERE g > 1",
+         "v > 30"),
+        (f"SELECT * FROM (SELECT id, g FROM {VIEW} PREWHERE v > 30 WHERE id < 90) sub "
+         "WHERE g > 1", "v > 30 AND id < 90"),
+    ):
+        out = M.rewrite_query(spark, ch)
+        got = sorted(tuple(r) for r in spark.sql(out).collect())
+        want = sorted(con.sql(
+            f"SELECT * FROM (SELECT id, g FROM {VIEW} WHERE {pred}) sub WHERE g > 1"
+        ).fetchall())
+        assert got == want and got, (ch, out)
+
+
+def test_with_totals_pairs_with_the_group_by_at_its_depth(comp_env):
+    """WITH TOTALS pairs with the GROUP BY at its own depth, not with one
+    inside a predicate subquery (that gave ``GROUPING SETS ((g) GROUP BY
+    g), ())``)."""
+    spark, con = comp_env
+    ch = (
+        f"SELECT g, count(*) AS cnt FROM {VIEW} "
+        f"WHERE g IN (SELECT g FROM {VIEW} GROUP BY g) GROUP BY g WITH TOTALS"
+    )
+    out = M.rewrite_query(spark, ch)
+    assert out.endswith("GROUP BY GROUPING SETS ((g), ())"), out
+    got = sorted((tuple(r) for r in spark.sql(out).collect()), key=repr)
+    want = sorted(con.sql(
+        f"SELECT g, CAST(count(*) AS BIGINT) AS cnt FROM {VIEW} "
+        "GROUP BY GROUPING SETS ((g), ())"
+    ).fetchall(), key=repr)
+    assert got == want and len(want) == 8
+
+
+def test_nested_limit_by_and_with_fill_are_refused_as_nested():
+    """LIMIT BY and WITH FILL rewrite the whole statement, so inside a
+    subquery they are refused with an error that says so (a nested
+    LIMIT BY used to be told it lacked the ORDER BY it has)."""
+    from clickhouse_migrator_spark.migrate import _rewrite_clauses
+
+    for sql in (
+        "SELECT x FROM (SELECT x FROM t ORDER BY x LIMIT 1 BY x)",
+        "WITH c AS (SELECT x FROM t ORDER BY x LIMIT 1 BY x) SELECT * FROM c",
+        "SELECT * FROM (SELECT x FROM t ORDER BY x LIMIT 1 BY x) ORDER BY x LIMIT 2 BY x",
+        "SELECT * FROM (SELECT d FROM t ORDER BY d WITH FILL) x",
+    ):
+        with pytest.raises(ValueError, match="only at the statement's top level"):
+            _rewrite_clauses(sql)
+    with pytest.raises(ValueError, match="requires an explicit ORDER BY"):
+        _rewrite_clauses("SELECT x FROM t LIMIT 1 BY x")
 
 
 def test_all_clause_rewrites_ignore_string_literals():

@@ -6,12 +6,16 @@ not just the hand-picked examples in test_select_functions.py."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings, strategies as st
 
 from clickhouse_migrator_spark.functions.select_funcs import (
+    _depths,
     _lex_spans,
     _split_top,
     _string_mask,
+    _top_level,
     rewrite_functions,
 )
 
@@ -171,3 +175,37 @@ def test_split_top_rejoins_and_never_splits_a_span(sql):
     for p in parts[:-1]:
         cut += len(p) + 1
         assert sql[cut] == "," and not mask[cut], (sql, parts)
+
+
+# ── the nesting rule: one depth counter under every clause scan ─────────────
+
+_NEST_PATTERN = re.compile(r",|\(|\bFROM\b")
+
+
+def _reference_depths(sql: str) -> list[int]:
+    """A plain character scan: brackets of either kind outside the
+    reference mask move the depth."""
+    mask, out, d = _reference_mask(sql), [], 0
+    for i, ch in enumerate(sql):
+        out.append(d)
+        if not mask[i] and ch in "([":
+            d += 1
+        elif not mask[i] and ch in ")]":
+            d -= 1
+    return out + [d]
+
+
+@given(st.one_of(_LEX_TEXT, sql_statements()), st.data())
+@settings(max_examples=500, deadline=None)
+def test_depths_and_top_level_match_reference_scan(sql, data):
+    depths = _reference_depths(sql)
+    assert _depths(sql) == depths
+    start = data.draw(st.integers(0, len(sql)))
+    mask = _reference_mask(sql)
+    end = next((i for i in range(start, len(sql)) if depths[i + 1] < depths[start]), len(sql))
+    want = [
+        i for i in range(start, end)
+        if not mask[i] and depths[i] == depths[start] and _NEST_PATTERN.match(sql, i)
+    ]
+    matches, got_end = _top_level(_NEST_PATTERN, sql, start)
+    assert (got_end, [m.start() for m in matches]) == (end, want), (sql, start)
