@@ -8,10 +8,10 @@ tiny and test-pinned:
 
 - ``CREATE TABLE``: map ClickHouse types → Spark types, strip/record
   ``ENGINE``/``PARTITION BY``/``ORDER BY`` clauses.  A column
-  ``DEFAULT`` that is one literal stays as ``DEFAULT CAST(<lit> AS
-  T)``, so INSERTs that omit the column get it; an expression
-  ``DEFAULT`` is dropped (Spark defaults must be constants), as are
-  ``CODEC``, column ``TTL`` and ``INDEX`` items.
+  ``DEFAULT`` that is one literal Spark can cast to the column's type
+  stays as ``DEFAULT CAST(<lit> AS T)``, so INSERTs that omit the
+  column get it; any other ``DEFAULT`` is dropped (Spark defaults must
+  be constants), as are ``CODEC``, column ``TTL`` and ``INDEX`` items.
 - ``ALTER TABLE … ADD COLUMN c T [DEFAULT <literal>]``: metadata only,
   one Spark ``ADD COLUMNS`` with the literal as a Spark column default
   (``metadata_only``).  An expression ``DEFAULT`` (Spark defaults must
@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from .functions.select_funcs import _COMMA_RE, _blank, _lex_spans, _split_top, _top_level
 
@@ -83,21 +84,18 @@ _MAP_RE = re.compile(rf"\bMap\(\s*([^(),]*?)\s*,\s*({_INNER})\s*\)")
 # unnamed Tuple(T1, T2) → STRUCT<_1: T1, _2: T2>; named
 # Tuple(a T1, b T2) → STRUCT<a: T1, b: T2>
 _TUPLE_RE = re.compile(rf"\bTuple\(\s*({_INNER})\s*\)")
-# column/statement decorations with no Spark equivalent:
-# CODEC(...) — parquet has its own codecs (possibly nested: ZSTD(3))
-_CODEC_RE = re.compile(r"\s*CODEC\([^()]*(?:\([^()]*\)[^()]*)*\)", re.I)
-_ALTER_INDEX_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+"
-    r"(?:ADD|DROP|CLEAR|MATERIALIZE)\s+INDEX\b",
-    re.I,
-)
-_PROJECTION_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+"
-    r"(?:ADD|DROP|CLEAR|MATERIALIZE)\s+PROJECTION\b",
-    re.I,
-)
-_SETTING_OP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+(?:MODIFY|RESET)\s+SETTING\b",
+# statements with no Spark referent, each a documented no-op (``SELECT
+# 1``): data-skipping index and projection maintenance (parquet footer
+# min/max and bloom filters subsume indexes; Catalyst plans from the
+# one layout), MODIFY/RESET SETTING (CREATE-time SETTINGS are dropped),
+# FREEZE (object-store versioning subsumes snapshots) and FETCH (there
+# are no replicas), KILL (mutations are synchronous, so KILL MUTATION
+# targets an empty set — see migrate.pipelined) and SYSTEM
+# STOP/START/FLUSH/RELOAD (no merges, replication queues or caches)
+_NOOP_RE = re.compile(
+    r"^\s*(?:ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+(?:(?:ADD|DROP|CLEAR|MATERIALIZE)\s+"
+    r"(?:INDEX|PROJECTION)|(?:MODIFY|RESET)\s+SETTING|(?:UN)?FREEZE|FETCH)\b"
+    r"|KILL\s+(?:MUTATION|QUERY)\b|SYSTEM\s+(?:STOP|START|FLUSH|RELOAD)\s+\w+)",
     re.I,
 )
 _MODIFY_ORDER_RE = re.compile(
@@ -176,7 +174,7 @@ def _mask_literal_contents(
 
 def _is_literal(text: str) -> bool:
     """Whether ``text`` is exactly one string literal."""
-    return _lex_spans(text) == ((0, len(text), "literal"),)
+    return _lex_spans(text) == [(0, len(text), "literal")]
 
 
 def _unmask_literal_contents(sql: str | None, lits: list[str]) -> str | None:
@@ -311,12 +309,13 @@ _RENAME_COL_RE = re.compile(
     r"(?:(?P<ifex>IF\s+EXISTS)\s+)?(?P<src>[\w`]+)\s+TO\s+(?P<dst>[\w`]+)\s*;?\s*$",
     re.I,
 )
-# distributed-DDL decoration; meaningless off-cluster and rejected by
-# Spark's parser — stripped from every statement before classification
-_ON_CLUSTER_RE = re.compile(r"\bON\s+CLUSTER\s+[`'\"]?[\w-]+[`'\"]?", re.I)
-_NOOP_OPS_RE = re.compile(
-    r"^\s*(?:KILL\s+(?:MUTATION|QUERY)\b|SYSTEM\s+(?:STOP|START|FLUSH|RELOAD)\s+\w+)",
-    re.I,
+# statement decorations with no Spark equivalent, dropped at the top
+# level of every statement before classification: the distributed-DDL
+# ``ON CLUSTER c`` (meaningless off-cluster, rejected by Spark's
+# parser) and an ALTER column's ``CODEC(…)`` (parquet has its own
+# codecs; a CREATE column item drops its own in :func:`_column_def`)
+_DECORATION_RE = re.compile(
+    r"\bON\s+CLUSTER\s+[`'\"]?[\w-]+[`'\"]?|(?P<call>\bCODEC\s*\()", re.I
 )
 _EXCHANGE_RE = re.compile(
     r"^\s*EXCHANGE\s+TABLES\s+(?P<a>[\w.`]+)\s+AND\s+(?P<b>[\w.`]+)\s*;?\s*$", re.I
@@ -353,9 +352,6 @@ _CLEAR_COL_RE = re.compile(
     r"(?:(?P<ifex>IF\s+EXISTS)\s+)?(?P<col>[\w`]+)\s+IN\s+PARTITION\s+(?P<val>.+?)\s*;?\s*$",
     re.I | re.S,
 )
-_FREEZE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.`]+)\s+(?:(?:UN)?FREEZE|FETCH)\b", re.I
-)
 _DETACH_TABLE_RE = re.compile(
     r"^\s*DETACH\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<table>[\w.`]+)"
     r"(?:\s+PERMANENTLY)?\s*;?\s*$",
@@ -372,30 +368,69 @@ _COMMENT_COL_RE = re.compile(
 )
 
 
-def _column_def(item: str) -> str | None:
-    """One literal-masked CREATE column item as Spark DDL, or None for
-    an INDEX item.  A DEFAULT that is one literal stays, cast to the
-    column's type as metadata-only ADD COLUMN does; an expression
-    DEFAULT (Spark defaults must be constants), CODEC and TTL are
-    dropped; COMMENT stays."""
+#: the width of each integral Spark type, for a DEFAULT's range check
+_INT_BITS = {"TINYINT": 8, "SMALLINT": 16, "INT": 32, "BIGINT": 64}
+#: a date or timestamp string Spark casts: no zero month or day, so not
+#: ClickHouse's zero date ``'0000-00-00'``
+_DATE_LIT_RE = re.compile(r"'\d{4}-(?!00)\d\d-(?!00)\d\d(?:[ T][\d:.]*)?'")
+
+
+def _castable(lit: str, spark_type: str) -> bool:
+    """Whether ``lit`` is one literal that Spark casts to ``spark_type``.
+    ClickHouse also takes a number or its zero date for a date (both
+    read from the epoch) and an integer out of the type's range
+    (wrapped); Spark refuses those, so such a DEFAULT is dropped."""
+    if not _LITERAL_RE.fullmatch(lit):
+        return False
+    if lit.upper() == "NULL":
+        return True
+    if spark_type in ("DATE", "TIMESTAMP"):
+        return bool(_DATE_LIT_RE.fullmatch(lit))
+    if spark_type in _INT_BITS and not lit.startswith("'"):
+        half = 1 << (_INT_BITS[spark_type] - 1)
+        return -half - 1 < Decimal(lit) < half  # the cast truncates
+    return not spark_type.startswith(("ARRAY", "MAP", "STRUCT"))
+
+
+def _column_def(item: str, lits: list[str]) -> str | None:
+    """One literal-masked CREATE column item, its types still
+    ClickHouse's, or None for an INDEX item.  A DEFAULT that is one
+    literal Spark can cast to the column's type stays, as ``DEFAULT
+    CAST(<lit> AS T)`` like metadata-only ADD COLUMN; any other DEFAULT
+    (Spark defaults must be constants), CODEC and TTL are dropped;
+    COMMENT stays."""
     if _INDEX_ITEM_RE.match(item):
         return None
     name_end = _COL_NAME_RE.match(item).end()
     opts = _top_level(_COL_OPTION_RE, item, name_end)[0]
     type_end = opts[0].start() if opts else len(item)
-    ch_type = item[name_end:type_end]
-    out = [map_types(item[:type_end])]
+    ch_type = item[name_end:type_end].strip()
+    out = [item[:type_end]]
     for opt, nxt in zip(opts, [*opts[1:], None]):
         end = nxt.start() if nxt else len(item)
         kw = opt.group("kw").upper()
         lit = _wrap_unsigned_default(ch_type, item[opt.end() : end].strip())
         if kw == "COMMENT":
             out.append(item[opt.start() : end])
-        elif kw == "DEFAULT" and _LITERAL_RE.fullmatch(lit):
-            out.append(f" DEFAULT CAST({lit} AS {map_types(ch_type).strip()})")
-        else:
+        elif kw == "DEFAULT" and _castable(
+            _unmask_literal_contents(lit, lits), map_types(ch_type)
+        ):
+            out.append(f" DEFAULT CAST({lit} AS {ch_type})")
+        elif kw != "CODEC":  # a dropped CODEC leaves no space behind
             out.append(" ")
     return "".join(out)
+
+
+def _drop_decorations(sql: str) -> str:
+    """``sql`` with each top-level :data:`_DECORATION_RE` match replaced
+    by a space; a ``CODEC(`` runs on through its close."""
+    if not _DECORATION_RE.search(sql):
+        return sql
+    out, last = [], 0
+    for m in _top_level(_DECORATION_RE, sql)[0]:
+        out += [sql[last : m.start()], " "]
+        last = _top_level(_COMMA_RE, sql, m.end())[1] + 1 if m.group("call") else m.end()
+    return "".join(out) + sql[last:]
 
 
 def _split_assignments(assign: str, lits: list[str]) -> list[tuple[str, str]]:
@@ -414,7 +449,7 @@ def _split_assignments(assign: str, lits: list[str]) -> list[tuple[str, str]]:
 def translate(sql: str) -> Statement:
     """Classify + translate one ClickHouse-dialect statement.  Comments
     are blanked first, so none can hide a keyword or swallow a clause."""
-    sql = _ON_CLUSTER_RE.sub(" ", _blank(sql))
+    sql = _drop_decorations(_blank(sql))
     sql = re.sub(r"\bSYNC\s*;?\s*$", "", sql, flags=re.I)  # synchronous-drop modifier
     # MATERIALIZED VIEW → a real table built by CTAS (POPULATE is then
     # implicit — Spark has no deferred-fill concept); *continuous*
@@ -423,25 +458,12 @@ def translate(sql: str) -> Statement:
         r"^(\s*CREATE\s+)MATERIALIZED\s+VIEW\b", r"\1TABLE", sql, flags=re.I
     )
     sql = re.sub(r"\bPOPULATE\s+(?=AS\b)", "", sql, flags=re.I)
-    sql = _CODEC_RE.sub("", sql)
     # the lazy ALTER captures that stop at a keyword (UPDATE … WHERE,
     # MOVE … TO TABLE, REPLACE … FROM) match on literal-masked text, so a
     # keyword inside a literal is data; each captured field is unmasked
     masked, lits = _mask_literal_contents(sql)
-    m = _ALTER_INDEX_RE.match(sql)
-    if m:  # data-skipping index maintenance: parquet footer min/max and
-        # bloom-filter write options subsume it — documented no-op
-        return Statement(kind="passthrough", sql="SELECT 1", table=m.group("table"))
-    m = _PROJECTION_RE.match(sql)
-    if m:  # ClickHouse projections are materialized alternative sort/agg
-        # layouts — the same query-acceleration class as data-skipping
-        # indexes; Catalyst chooses plans from the single layout here —
-        # documented no-op (raw passthrough errored in Spark's parser)
-        return Statement(kind="passthrough", sql="SELECT 1", table=m.group("table"))
-    m = _SETTING_OP_RE.match(sql)
-    if m:  # MODIFY/RESET SETTING: CREATE-time SETTINGS are stripped (no
-        # Spark analog for MergeTree knobs), so their mutation is the
-        # same documented no-op
+    m = _NOOP_RE.match(sql)
+    if m:
         return Statement(kind="passthrough", sql="SELECT 1", table=m.group("table"))
     m = _MODIFY_ORDER_RE.match(sql)
     if m:  # the recorded ORDER BY drives OPTIMIZE …  DEDUPLICATE — a
@@ -479,13 +501,6 @@ def translate(sql: str) -> Statement:
             table=m.group("table").strip("`"),
             column=m.group("col").strip("`"),
         )
-    if _NOOP_OPS_RE.match(sql):
-        # operational statements with no referent here: mutations are
-        # synchronous (KILL MUTATION targets an empty set by
-        # construction — see migrate.pipelined) and there are no
-        # background merges/replication queues/mark caches to
-        # STOP/START/FLUSH/RELOAD — documented no-ops
-        return Statement(kind="passthrough", sql="SELECT 1")
     m = _RENAME_RE.match(sql)
     if m:  # ClickHouse RENAME TABLE → Spark ALTER TABLE … RENAME TO
         return Statement(
@@ -557,14 +572,6 @@ def translate(sql: str) -> Statement:
             table=m.group("table").strip("`"),
             if_exists=bool(m.group("ifex")),
         )
-    m = _FREEZE_RE.match(sql)
-    if m:  # FREEZE = local filesystem snapshot for backup; FETCH
-        # PARTITION = pull a part from another replica.  No Spark analog
-        # for either (object-store versioning subsumes snapshots; there
-        # are no replicas in a single-warehouse engine) — documented
-        # no-ops.  Previously FETCH fell through to a raw passthrough
-        # that errored in Spark's parser at apply time.
-        return Statement(kind="passthrough", sql="SELECT 1", table=m.group("table"))
     m = _PART_OP_RE.match(sql)
     if m:  # partition lifecycle against the recorded PARTITION BY
         # expression: DROP deletes, DETACH parks rows in a side table,
@@ -686,8 +693,8 @@ def translate(sql: str) -> Statement:
             end = _top_level(_COMMA_RE, out, pos + 1)[1]
             if end == len(out):
                 raise ValueError(f"unclosed column list in: {sql.strip()!r}")
-            cols = [_column_def(c) for c in _split_top(out[pos + 1 : end])]
-            head += "(" + ",".join(c for c in cols if c is not None) + ")"
+            cols = [_column_def(c, lits) for c in _split_top(out[pos + 1 : end])]
+            head += "(" + map_types(",".join(c for c in cols if c is not None)) + ")"
             pos = end + 1
         rest = map_types(out[pos:])
         stops = _top_level(_LAYOUT_RE, rest)[0]

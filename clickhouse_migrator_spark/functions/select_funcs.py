@@ -47,7 +47,6 @@ would return the first capture group.
 
 from __future__ import annotations
 
-import functools
 import re
 from collections.abc import Callable
 
@@ -71,21 +70,19 @@ _LEX_RE = re.compile(
 )
 
 
-@functools.lru_cache(maxsize=64)
-def _lex_spans(sql: str) -> tuple[tuple[int, int, str], ...]:
+def _lex_spans(sql: str) -> list[tuple[int, int, str]]:
     """``(start, end, kind)`` of every literal, backticked identifier,
     comment and hint in ``sql``, in order; ``kind`` is ``literal``,
     ``ident``, ``comment``, ``hint`` or ``open`` (an unterminated quote,
     which runs to the end).  None of them may be rewritten or
-    paren-scanned.  Cached: a rewrite pass runs several scans over one
-    statement."""
+    paren-scanned."""
     spans: list[tuple[int, int, str]] = []
     pos = 0
     while (m := _LEX_RE.search(sql, pos)) is not None:
         end = len(sql) if m.lastgroup == "open" else m.end()
         spans.append((m.start(), end, m.lastgroup))
         pos = end
-    return tuple(spans)
+    return spans
 
 
 def _string_mask(sql: str) -> list[bool]:
@@ -108,42 +105,47 @@ def _blank(sql: str, kinds: tuple[str, ...] = ("comment",)) -> str:
     return "".join(out)
 
 
-_SPAN_KINDS = ("literal", "ident", "comment", "hint", "open")
 _BRACKET_RE = re.compile(r"[()\[\]]")
+_CLOSE_RE = re.compile(r"[)\]]")
 _COMMA_RE = re.compile(",")
 
 
 def _depths(sql: str) -> list[int]:
     """The translators' one nesting rule: the depth before each position
-    of ``sql``, and after its end at index ``len(sql)``.  ``(`` and
-    ``[`` open, ``)`` and ``]`` close, and lexer spans count for
-    nothing."""
+    of ``sql``, and after its end at index ``len(sql)``; -1 inside a
+    lexer span.  ``(`` and ``[`` open, ``)`` and ``]`` close (a stray
+    closer leaves depth 0), and lexer spans count for nothing."""
     out: list[int] = []
     depth = last = 0
-    for m in _BRACKET_RE.finditer(_blank(sql, _SPAN_KINDS)):
-        out += [depth] * (m.start() + 1 - last)
-        depth += 1 if m.group() in "([" else -1
-        last = m.start() + 1
-    return out + [depth] * (len(sql) + 1 - last)
+    for s, e, _kind in [*_lex_spans(sql), (len(sql), len(sql), "")]:
+        for m in _BRACKET_RE.finditer(sql, last, s):
+            out += [depth] * (m.start() + 1 - len(out))
+            depth = depth + 1 if m.group() in "([" else max(depth - 1, 0)
+        out += [depth] * (s - len(out)) + [-1] * (e - s)
+        last = e
+    return out + [depth]
 
 
 def _top_level(
     pattern: "re.Pattern[str]", sql: str, start: int = 0, depths: list[int] | None = None
 ) -> tuple[list["re.Match[str]"], int]:
     """``(matches, end)``: the matches of ``pattern`` from ``start`` on
-    that begin outside lexer spans at ``start``'s :func:`_depths` depth,
-    up to ``end``, the index of the closer of the group that encloses
-    ``start`` (``len(sql)`` when none closes it).  ``depths`` is
-    ``_depths(sql)`` when the caller already has it."""
+    that begin at ``start``'s :func:`_depths` depth, so outside lexer
+    spans, up to ``end``, the index of the closer of the group that
+    encloses ``start`` (``len(sql)`` when none closes it).  ``depths``
+    is ``_depths(sql)`` when the caller already has it."""
     depths = _depths(sql) if depths is None else depths
-    base = depths[start]
-    end = next((i for i in range(start, len(sql)) if depths[i + 1] < base), len(sql))
-    mask = _string_mask(sql)
+    at = start
+    while depths[at] < 0:  # a span moves no depth: take the one after it
+        at += 1
+    base = depths[at]
+    closers = (m.start() for m in _CLOSE_RE.finditer(sql, start))
+    end = next((i for i in closers if depths[i] == base), len(sql))
     matches = []
     for m in pattern.finditer(sql, start):
         if m.start() >= end:
             break
-        if depths[m.start()] == base and not mask[m.start()]:
+        if depths[m.start()] == base:
             matches.append(m)
     return matches, end
 
@@ -1041,18 +1043,19 @@ def _rewrite_array_literals(sql: str) -> str:
     1-based while Spark's bracket access is 0-based, so silent
     translation would be wrong; use ``arrayElement`` → ``element_at``
     (both 1-based) for portable indexing."""
-    while True:
-        mask = _string_mask(sql)
+    while "[" in sql:
+        depths = _depths(sql)  # -1 marks a lexer span
         start = next(
-            (m.start() for m in _ARRAY_LITERAL_RE.finditer(sql) if not mask[m.start()]),
+            (m.start() for m in _ARRAY_LITERAL_RE.finditer(sql) if depths[m.start()] >= 0),
             None,
         )
         if start is None:
             return sql
-        end = _top_level(_COMMA_RE, sql, start + 1)[1]
+        end = _top_level(_COMMA_RE, sql, start + 1, depths)[1]
         if end == len(sql) or sql[end] != "]":
             return sql  # unbalanced — leave for Spark's parser to report
         sql = sql[:start] + "array(" + sql[start + 1 : end] + ")" + sql[end + 1 :]
+    return sql
 
 
 _TABLE_VALUED_AMBIGUOUS = {"range"}
@@ -1228,9 +1231,9 @@ def rewrite_functions(sql: str) -> str:
         if budget < 0:
             return sql
         progress = False
-        mask, depths = _string_mask(sql), _depths(sql)
+        depths = _depths(sql)
         for m in _IDENT_RE.finditer(sql):
-            if mask[m.start(1)]:
+            if depths[m.start(1)] < 0:  # inside a lexer span
                 continue
             name = m.group(1)
             if name not in RULES and name not in _PARAMETRIC:

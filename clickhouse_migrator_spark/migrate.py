@@ -2366,9 +2366,9 @@ def _rewrite_with_totals(query: str) -> str:
     the next of the two at the GROUP BY's own depth, so a subquery's
     GROUP BY never captures the outer query's keys."""
     while True:
-        depths, mask = _depths(query), _string_mask(query)
+        depths = _depths(query)
         for g in _GROUP_BY_OR_TOTALS_RE.finditer(query):
-            if mask[g.start()] or g.group("totals"):
+            if depths[g.start()] < 0 or g.group("totals"):  # -1: a lexer span
                 continue
             nxt = _top_level(_GROUP_BY_OR_TOTALS_RE, query, g.end(), depths)[0]
             if nxt and nxt[0].group("totals"):
@@ -2512,6 +2512,8 @@ def _rewrite_limit_by(query: str) -> str:
     the (already reduced) outer ORDER BY.  An explicit ORDER BY is
     required — ClickHouse's LIMIT BY without one picks arbitrary rows,
     which a distributed rewrite must not silently reproduce."""
+    if not _LIMIT_BY_ANY_RE.search(query):
+        return query
     _reject_nested(_LIMIT_BY_ANY_RE, query, "LIMIT n BY")
     # anchor on the LAST top-level ORDER BY — an ORDER BY inside a
     # predicate subquery (`WHERE id IN (SELECT … ORDER BY id LIMIT 80)`)
@@ -2577,6 +2579,8 @@ def _rewrite_with_fill(query: str) -> str:
     ClickHouse's TO bound is exclusive and is honored with a grid
     filter.  Non-fill columns are NULL on filled rows, as in
     ClickHouse."""
+    if not _WITH_FILL_ANY_RE.search(query):
+        return query
     _reject_nested(_WITH_FILL_ANY_RE, query, "WITH FILL")
     fills = _top_level(_WITH_FILL_RE, query)[0]
     if not fills:

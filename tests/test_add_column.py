@@ -12,6 +12,7 @@ copy-on-write rewrite, and INSERTs that omit such a column get NULL.
 
 from __future__ import annotations
 
+import datetime
 import json
 import uuid
 
@@ -189,14 +190,23 @@ def test_create_literal_defaults_reach_inserts_that_omit_them(spark, db, tmp_pat
     """CREATE TABLE keeps a literal DEFAULT as a Spark column default, so
     an INSERT that omits the column gets it: a staged INSERT through
     migrate(), and one through ``execute_statement``.  An expression
-    DEFAULT is dropped (NULL), as before."""
+    DEFAULT is dropped (NULL), as before, and so is a literal Spark
+    cannot cast to the column's type: a number or the zero date for a
+    date, an integer out of the type's range."""
     ddl = (
         "CREATE TABLE {} (id Int64, s String DEFAULT 'it''s', n Int32 DEFAULT -3, "
         "u UInt32 DEFAULT -1, f Float64 DEFAULT 0.5, z Nullable(String) DEFAULT NULL, "
-        "d Date DEFAULT today()) ENGINE = MergeTree ORDER BY id"
+        "d Date DEFAULT today(), k Date DEFAULT '2020-01-02', "
+        "t DateTime DEFAULT '2020-01-02 03:04:05', d0 Date DEFAULT 0, "
+        "d1 Date DEFAULT -1, dz Date DEFAULT '0000-00-00', "
+        "tz DateTime DEFAULT '0000-00-00 00:00:00', b Int8 DEFAULT 300) "
+        "ENGINE = MergeTree ORDER BY id"
     )
-    cols = ("id", "s", "n", "u", "f", "z", "d")
-    want = [(1, "it's", -3, 4294967295, 0.5, None, None)]
+    cols = ("id", "s", "n", "u", "f", "z", "d", "k", "t", "d0", "d1", "dz", "tz", "b")
+    want = [(
+        1, "it's", -3, 4294967295, 0.5, None, None, datetime.date(2020, 1, 2),
+        datetime.datetime(2020, 1, 2, 3, 4, 5), None, None, None, None, None,
+    )]
     home = tmp_path / "mig"
     home.mkdir()
     _write(home, 1, [ddl.format("tm"), "INSERT INTO tm (id) VALUES (1)"])

@@ -337,6 +337,21 @@ def test_ddl_literals_are_opaque_to_all_scans():
         "CREATE TABLE t (s STRING DEFAULT CAST('x AS SELECT y' AS STRING)) USING PARQUET"
     )
 
+    # CODEC and ON CLUSTER spellings inside a literal are data: only the
+    # statement's own decorations are dropped
+    st = translate(
+        "CREATE TABLE t (s String DEFAULT 'x CODEC(ZSTD(1)) y' CODEC(ZSTD(1))) "
+        "ENGINE = MergeTree ORDER BY tuple()"
+    )
+    assert st.sql == (
+        "CREATE TABLE t (s STRING DEFAULT CAST('x CODEC(ZSTD(1)) y' AS STRING)) USING PARQUET"
+    )
+    st = translate("ALTER TABLE t ON CLUSTER c UPDATE s = 'a CODEC(b)' WHERE k = 1")
+    assert (st.table, st.assignments) == ("t", [("s", "'a CODEC(b)'")])
+    assert translate("INSERT INTO t VALUES ('p ON CLUSTER c q')").sql == (
+        "INSERT INTO t VALUES ('p ON CLUSTER c q')"
+    )
+
     # the ALTER clause keywords inside a literal are data too: WHERE ends
     # an UPDATE's assignments, TO TABLE a MOVE's partition, FROM a
     # REPLACE's partition
@@ -429,3 +444,16 @@ def test_map_types_backslash_literal_content_untouched():
     out = ddl.map_types(sql)
     assert r"'keep UInt32 \' Nullable(Int8)'" in out
     assert out.startswith("s STRING")
+
+
+def test_alter_column_codec_is_dropped_through_its_close():
+    """An ALTER column's CODEC is dropped through its own close, however
+    deep its arguments nest, so the DEFAULT or type before it stands."""
+    from clickhouse_migrator_spark.ddl import translate
+
+    st = translate("ALTER TABLE t ADD COLUMN c UInt32 DEFAULT 5 CODEC(Delta(4), ZSTD(1))")
+    assert (st.kind, st.col_type, st.default, st.metadata_only) == (
+        "add_column", "BIGINT", "5", True
+    )
+    st = translate("ALTER TABLE t ON CLUSTER 'main' MODIFY COLUMN c UInt64 CODEC(ZSTD(1))")
+    assert (st.kind, st.table, st.col_type) == ("modify_column", "t", "BIGINT")

@@ -184,14 +184,15 @@ _NEST_PATTERN = re.compile(r",|\(|\bFROM\b")
 
 def _reference_depths(sql: str) -> list[int]:
     """A plain character scan: brackets of either kind outside the
-    reference mask move the depth."""
+    reference mask move the depth, which never drops below 0; -1 inside
+    the mask."""
     mask, out, d = _reference_mask(sql), [], 0
     for i, ch in enumerate(sql):
-        out.append(d)
+        out.append(-1 if mask[i] else d)
         if not mask[i] and ch in "([":
             d += 1
         elif not mask[i] and ch in ")]":
-            d -= 1
+            d = max(d - 1, 0)
     return out + [d]
 
 
@@ -201,11 +202,10 @@ def test_depths_and_top_level_match_reference_scan(sql, data):
     depths = _reference_depths(sql)
     assert _depths(sql) == depths
     start = data.draw(st.integers(0, len(sql)))
-    mask = _reference_mask(sql)
-    end = next((i for i in range(start, len(sql)) if depths[i + 1] < depths[start]), len(sql))
-    want = [
-        i for i in range(start, end)
-        if not mask[i] and depths[i] == depths[start] and _NEST_PATTERN.match(sql, i)
-    ]
+    base = next(d for d in depths[start:] if d >= 0)
+    end = next(
+        (i for i in range(start, len(sql)) if sql[i] in ")]" and depths[i] == base), len(sql)
+    )
+    want = [i for i in range(start, end) if depths[i] == base and _NEST_PATTERN.match(sql, i)]
     matches, got_end = _top_level(_NEST_PATTERN, sql, start)
     assert (got_end, [m.start() for m in matches]) == (end, want), (sql, start)
