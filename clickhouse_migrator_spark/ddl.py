@@ -8,14 +8,17 @@ tiny and test-pinned:
 
 - ``CREATE TABLE``: map ClickHouse types → Spark types, strip/record
   ``ENGINE``/``PARTITION BY``/``ORDER BY`` clauses.  A column
-  ``DEFAULT`` that is one literal Spark can cast to the column's type
-  stays as ``DEFAULT CAST(<lit> AS T)``, so INSERTs that omit the
-  column get it; any other ``DEFAULT`` is dropped (Spark defaults must
-  be constants), as are ``CODEC``, column ``TTL`` and ``INDEX`` items.
+  ``DEFAULT`` that is one literal stays as ``DEFAULT CAST(<value> AS
+  T)``, where the value is what ClickHouse stores (the zero date is the
+  epoch, an out-of-range integer wraps), so INSERTs that omit the
+  column get it.  A literal Spark still cannot cast and any other
+  ``DEFAULT`` are dropped (Spark defaults must be constants), as are
+  ``CODEC``, column ``TTL`` and ``INDEX`` items.
 - ``ALTER TABLE … ADD COLUMN c T [DEFAULT <literal>]``: metadata only,
-  one Spark ``ADD COLUMNS`` with the literal as a Spark column default
-  (``metadata_only``).  An expression ``DEFAULT`` (Spark defaults must
-  be constants): copy-on-write ``withColumn(expr.cast(T))`` + atomic
+  one Spark ``ADD COLUMNS`` with the stored value as a Spark column
+  default (``metadata_only``); a literal Spark cannot cast raises
+  ``ValueError``.  An expression ``DEFAULT`` (Spark defaults must be
+  constants): copy-on-write ``withColumn(expr.cast(T))`` + atomic
   table swap.
 - ``ALTER TABLE … UPDATE c=e WHERE p`` / ``… DELETE WHERE p``
   (ClickHouse's asynchronous "mutations"): copy-on-write rewrite.
@@ -230,22 +233,6 @@ class Statement:
 _UINT_RE = re.compile(r"^\s*UInt(8|16|32)\s*$")
 
 
-def _wrap_unsigned_default(ch_type: str, default: str | None) -> str | None:
-    """ClickHouse reinterprets a negative integer DEFAULT on an
-    unsigned column as its two's-complement value (UInt32 DEFAULT -1 →
-    4294967295).  The mapped Spark type is the next WIDER signed type,
-    so the wrapped constant always fits; UInt64 is excluded (wrap would
-    overflow BIGINT — documented signed divergence)."""
-    if default is None:
-        return None
-    m = _UINT_RE.match(ch_type)
-    lit = default.strip()
-    if m and re.fullmatch(r"-\d+", lit):
-        bits = int(m.group(1))
-        return str(int(lit) % (1 << bits))
-    return default
-
-
 #: a ClickHouse literal a Spark column default can hold: a number
 #: (optionally signed), a string (``''`` or backslash escapes), or NULL
 _LITERAL_RE = re.compile(
@@ -375,11 +362,13 @@ _INT_BITS = {"TINYINT": 8, "SMALLINT": 16, "INT": 32, "BIGINT": 64}
 _DATE_LIT_RE = re.compile(r"'\d{4}-(?!00)\d\d-(?!00)\d\d(?:[ T][\d:.]*)?'")
 
 
+#: ClickHouse's zero date, which it reads as the epoch
+_ZERO_DATE_RE = re.compile(r"0|'0000-00-00(?: 00:00:00)?'")
+
+
 def _castable(lit: str, spark_type: str) -> bool:
-    """Whether ``lit`` is one literal that Spark casts to ``spark_type``.
-    ClickHouse also takes a number or its zero date for a date (both
-    read from the epoch) and an integer out of the type's range
-    (wrapped); Spark refuses those, so such a DEFAULT is dropped."""
+    """Whether ``lit`` is one literal that Spark casts to ``spark_type``:
+    not a number for a date, nor an integer out of the type's range."""
     if not _LITERAL_RE.fullmatch(lit):
         return False
     if lit.upper() == "NULL":
@@ -392,13 +381,38 @@ def _castable(lit: str, spark_type: str) -> bool:
     return not spark_type.startswith(("ARRAY", "MAP", "STRUCT"))
 
 
+def _stored_default(ch_type: str, lit: str, lits: list[str] | None = None) -> str | None:
+    """The literal DEFAULT ``lit`` (``lits`` unmask it) as the value
+    ClickHouse stores in a ``ch_type`` column, written so that Spark
+    casts it to the mapped type, or None if Spark cannot.  ClickHouse
+    reads its zero date (``0``, ``'0000-00-00'``, ``'0000-00-00
+    00:00:00'``) as the epoch and wraps an integer outside an integral
+    type's range as two's complement (``Int8 DEFAULT 300`` → 44,
+    ``UInt32 DEFAULT -1`` → 4294967295: UInt8/16/32 map to the next
+    wider signed type, so the wrapped value fits).  UInt64 maps to
+    BIGINT and keeps signed semantics.  ``lit`` comes back as given
+    when no mapping applies."""
+    value = _unmask_literal_contents(lit, lits)
+    spark_type = map_types(ch_type)
+    unsigned = _UINT_RE.match(ch_type)
+    if spark_type in ("DATE", "TIMESTAMP") and _ZERO_DATE_RE.fullmatch(value):
+        value = lit = "'1970-01-01'"
+    elif re.fullmatch(r"[+-]?\d+", value) and (unsigned or spark_type in _INT_BITS):
+        bits = int(unsigned.group(1)) if unsigned else _INT_BITS[spark_type]
+        v = int(value) % (1 << bits)
+        if not unsigned and v >= 1 << (bits - 1):
+            v -= 1 << bits
+        value = lit = str(v)
+    return lit if _castable(value, spark_type) else None
+
+
 def _column_def(item: str, lits: list[str]) -> str | None:
     """One literal-masked CREATE column item, its types still
-    ClickHouse's, or None for an INDEX item.  A DEFAULT that is one
-    literal Spark can cast to the column's type stays, as ``DEFAULT
-    CAST(<lit> AS T)`` like metadata-only ADD COLUMN; any other DEFAULT
-    (Spark defaults must be constants), CODEC and TTL are dropped;
-    COMMENT stays."""
+    ClickHouse's, or None for an INDEX item.  A literal DEFAULT whose
+    stored value Spark can cast to the column's type stays, as
+    ``DEFAULT CAST(<value> AS T)`` like metadata-only ADD COLUMN (see
+    :func:`_stored_default`); any other DEFAULT (Spark defaults must be
+    constants), CODEC and TTL are dropped; COMMENT stays."""
     if _INDEX_ITEM_RE.match(item):
         return None
     name_end = _COL_NAME_RE.match(item).end()
@@ -409,12 +423,14 @@ def _column_def(item: str, lits: list[str]) -> str | None:
     for opt, nxt in zip(opts, [*opts[1:], None]):
         end = nxt.start() if nxt else len(item)
         kw = opt.group("kw").upper()
-        lit = _wrap_unsigned_default(ch_type, item[opt.end() : end].strip())
+        lit = (
+            _stored_default(ch_type, item[opt.end() : end].strip(), lits)
+            if kw == "DEFAULT"
+            else None
+        )
         if kw == "COMMENT":
             out.append(item[opt.start() : end])
-        elif kw == "DEFAULT" and _castable(
-            _unmask_literal_contents(lit, lits), map_types(ch_type)
-        ):
+        elif lit is not None:
             out.append(f" DEFAULT CAST({lit} AS {ch_type})")
         elif kw != "CODEC":  # a dropped CODEC leaves no space behind
             out.append(" ")
@@ -644,7 +660,15 @@ def translate(sql: str) -> Statement:
         )
     m = _ADD_COL_RE.match(sql)
     if m:
-        default = _wrap_unsigned_default(m.group("type"), m.group("default"))
+        default = m.group("default")
+        literal = default is None or bool(_LITERAL_RE.fullmatch(default.strip()))
+        if default is not None and literal:
+            default = _stored_default(m.group("type"), default.strip())
+            if default is None:
+                raise ValueError(
+                    f"ALTER ADD COLUMN {m.group('col')!r}: Spark cannot store "
+                    f"DEFAULT {m.group('default').strip()} as {m.group('type')}"
+                )
         return Statement(
             kind="add_column",
             sql=sql,
@@ -653,7 +677,7 @@ def translate(sql: str) -> Statement:
             col_type=map_types(m.group("type")),
             default=default,
             if_exists=bool(m.group("ifnex")),  # IF NOT EXISTS tolerance
-            metadata_only=default is None or bool(_LITERAL_RE.fullmatch(default.strip())),
+            metadata_only=literal,
         )
     m = _UPDATE_RE.match(masked)
     if m:

@@ -85,14 +85,6 @@ def _lex_spans(sql: str) -> list[tuple[int, int, str]]:
     return spans
 
 
-def _string_mask(sql: str) -> list[bool]:
-    """True at positions inside a :func:`_lex_spans` span."""
-    mask = [False] * len(sql)
-    for s, e, _kind in _lex_spans(sql):
-        mask[s:e] = [True] * (e - s)
-    return mask
-
-
 def _blank(sql: str, kinds: tuple[str, ...] = ("comment",)) -> str:
     """``sql`` with every span of the given kinds replaced by spaces of
     the same length, so offsets into the result index ``sql`` too."""

@@ -26,10 +26,9 @@ Every memo goes through :func:`get`, which applies one set of rules:
   the build's wall seconds through :func:`..memo_events.record_fill`
   under the memo's name.
 
-Deployment note: ``.cache()`` and ``localCheckpoint`` pin blocks to
-live executors.  On a cluster with executor churn, persist memo frames
-to storage or use a reliable checkpoint
-(``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``) instead.
+A frame that one query reads several times, rather than many queries,
+goes through :func:`pin` instead, which also holds the deployment note
+for both kinds of pin.
 """
 
 from __future__ import annotations
@@ -114,6 +113,33 @@ def get(
 
 def _fingerprint(paths: tuple[str, ...]) -> tuple:
     return tuple(fingerprint_path(p) for p in paths)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df`` materialized by one eager ``localCheckpoint``, its lineage
+    truncated.  This is the only per-query pin in the package.
+
+    Pin a frame only when it is bounded, small next to the tables
+    beneath it (an aggregate, a grid, a capped sample or a narrow
+    projection), and pinning it does one of:
+
+    * saves a fact-table scan, because several subtrees of the final
+      plan (or several jobs) read the frame and each would otherwise
+      re-run the scan beneath it;
+    * measures faster, over alternating warm runs;
+    * truncates the lineage that a loop grows
+      (``dedup._component_labels_loop``);
+    * keeps the data of a table that is dropped next
+      (``dialect_final_replacing_latest``).
+
+    Deployment note: ``localCheckpoint`` keeps its blocks on live
+    executors only and drops the lineage that could recompute them, so
+    on a cluster that loses executors the job fails; the memo frames'
+    ``.cache()`` blocks are likewise lost with their executor.  Such a
+    deployment switches this function to a reliable checkpoint
+    (``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``) and
+    persists the memo frames to storage."""
+    return df.localCheckpoint(eager=True)
 
 
 def _pin(frames: tuple[DataFrame, ...]) -> None:

@@ -41,6 +41,7 @@ from __future__ import annotations
 import datetime
 import hashlib
 import json
+import logging
 import os
 import re
 import threading
@@ -65,10 +66,11 @@ from .functions.select_funcs import (
     _lex_spans,
     _scan_args,
     _split_top,
-    _string_mask,
     _top_level,
     rewrite_functions as _rewrite_funcs,
 )
+
+_log = logging.getLogger(__name__)
 
 
 def _ch_expr(s: str) -> "F.Column":
@@ -1132,9 +1134,9 @@ def _search_unquoted(pattern: "re.Pattern[str]", query: str, pos: int = 0):
     ``SELECT 'use SETTINGS a=1'`` — is data, not a clause (round-7
     review class: the PREWHERE scan had this bug; a probe battery found
     the same hole in every other clause regex)."""
-    mask = _string_mask(query)
+    depths = _depths(query)
     for m in pattern.finditer(query, pos):
-        if not mask[m.start()]:
+        if depths[m.start()] >= 0:
             return m
     return None
 
@@ -1142,11 +1144,11 @@ def _search_unquoted(pattern: "re.Pattern[str]", query: str, pos: int = 0):
 def _sub_unquoted(pattern: "re.Pattern[str]", repl, query: str) -> str:
     """``pattern.sub`` that skips matches starting inside string
     literals / backticked identifiers (see :func:`_search_unquoted`)."""
-    mask = _string_mask(query)
+    depths = _depths(query)
     out: list[str] = []
     last = 0
     for m in pattern.finditer(query):
-        if mask[m.start()]:
+        if depths[m.start()] < 0:
             continue
         out.append(query[last : m.start()])
         out.append(repl(m) if callable(repl) else m.expand(repl))
@@ -1435,16 +1437,18 @@ def _retire_markers(
     journaled = stmt is not None and md5 is not None
     if journaled:
         _journal_late(spark, journal, version, stmt, md5, "recover_cow")
-        print(
-            f"recover_cow: journaled statement {stmt} of migration V{version} "
-            f"from the markers on {qual} — the rerun resumes AFTER it (exactly-once)"
+        _log.info(
+            "recover_cow: journaled statement %s of migration V%s from the "
+            "markers on %s — the rerun resumes AFTER it (exactly-once)",
+            stmt, version, qual,
         )
     else:
-        print(
-            f"recover_cow: the effects of migration V{version} on {qual} are "
-            "ALREADY PRESENT but unrecorded (pre-journal temp); the rerun will "
-            f"re-execute V{version}, so verify it is idempotent or record it "
-            "applied manually"
+        _log.warning(
+            "recover_cow: the effects of migration V%s on %s are ALREADY "
+            "PRESENT but unrecorded (pre-journal temp); the rerun will "
+            "re-execute V%s, so verify it is idempotent or record it "
+            "applied manually",
+            version, qual, version,
         )
     keys = ", ".join(f"'{k}'" for k in _COW_MARKER_PROPS if k in props)
     spark.sql(f"ALTER TABLE {qual} UNSET TBLPROPERTIES ({keys})")
@@ -2114,7 +2118,7 @@ def _apply_pending(
             # OWN SparkSession are visible
             if version in _ledgered_versions(ledger):
                 # another runner applied it between our diff and now
-                print(f"Skipping V{version}: already applied by a concurrent runner")
+                _log.info("Skipping V%s: already applied by a concurrent runner", version)
                 continue
             _append_claim_row(
                 spark, claims, version, owner, released=False, claim_id=claim_id
@@ -2138,8 +2142,8 @@ def _apply_pending(
                 # that we hold the winning claim
                 if version in _ledgered_versions(ledger):
                     _release_own_claim_locked()
-                    print(
-                        f"Skipping V{version}: already applied by a concurrent runner"
+                    _log.info(
+                        "Skipping V%s: already applied by a concurrent runner", version
                     )
                     continue
         if rivals:
@@ -2164,15 +2168,16 @@ def _apply_pending(
             # drop uncommitted ones (their statements re-execute clean)
             _reconcile_staged(spark, rows, version, row.md5)
             if stale:
-                print(
-                    f"V{version}: discarding journaled progress from an "
-                    "earlier run of a DIFFERENT script body (edited after "
-                    "the failure) — re-executing from the first statement"
+                _log.warning(
+                    "V%s: discarding journaled progress from an earlier run "
+                    "of a DIFFERENT script body (edited after the failure) — "
+                    "re-executing from the first statement",
+                    version,
                 )
             if done:
-                print(
-                    f"V{version}: resuming — statements "
-                    f"{sorted(done)} already journaled as applied"
+                _log.info(
+                    "V%s: resuming — statements %s already journaled as applied",
+                    version, sorted(done),
                 )
             _INFLIGHT.version, _INFLIGHT.md5 = version, row.md5
             _INFLIGHT.journal, _INFLIGHT.owner = journal, owner
@@ -2228,7 +2233,7 @@ def _apply_pending(
             raise
         with _CLAIM_LOCK:
             _release_own_claim_locked()
-        print(f"Applied migration V{version}: {os.path.basename(row.script)}")
+        _log.info("Applied migration V%s: %s", version, os.path.basename(row.script))
         applied += 1
     return applied
 
@@ -2488,9 +2493,9 @@ def _reject_nested(pattern: "re.Pattern[str]", query: str, clause: str) -> None:
     """Raise when ``clause`` (spelled by ``pattern``) occurs below the
     statement's top level: its rewrite wraps the whole statement, so it
     cannot apply inside a subquery or CTE."""
-    mask = _string_mask(query)
-    unquoted = [m for m in pattern.finditer(query) if not mask[m.start()]]
-    if len(unquoted) > len(_top_level(pattern, query)[0]):
+    depths = _depths(query)
+    unquoted = [m for m in pattern.finditer(query) if depths[m.start()] >= 0]
+    if len(unquoted) > len(_top_level(pattern, query, depths=depths)[0]):
         raise ValueError(
             f"{clause} is supported only at the statement's top level, "
             "not inside a subquery or CTE"
@@ -2522,8 +2527,8 @@ def _rewrite_limit_by(query: str) -> str:
     # run the tail parse on a literal-masked SAME-LENGTH copy, so no
     # keyword, digit or ';' inside a literal can match; every captured
     # group is recovered by SPAN from the original text
-    mask = _string_mask(query)
-    masked = "".join("\x01" if mask[i] else ch for i, ch in enumerate(query))
+    depths = _depths(query)
+    masked = "".join("\x01" if depths[i] < 0 else ch for i, ch in enumerate(query))
     m = _LIMIT_BY_TAIL_RE.match(masked, orders[-1].start()) if orders else None
     if not m:
         if _search_unquoted(_LIMIT_BY_ANY_RE, query):

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import memo
 from ..hashsafe import oracle_round_quotient, round_quotient
 from ..registry import register
 from ..tables import table, register_views
@@ -1287,14 +1288,10 @@ def agg_bitmap_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A∖B| = |A|−|A∩B|, |A△B| = |A|+|B|−2|A∩B|."""
     # du feeds THREE subtrees (per-type cardinalities + both sides of
     # the co-occurrence self-join), each of which otherwise re-ran the
-    # fact scan + global distinct; the frame is distinct (type, user)
-    # pairs, so one eager localCheckpoint pins the fact pass + distinct
-    # shuffle to exactly one.
-    du = (
-        table(spark, sf_dir, "events")
-        .select("event_type", "user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    # fact scan + global distinct; it is distinct (type, user) pairs,
+    # so pinning it runs the fact pass + distinct shuffle once.
+    du = memo.pin(
+        table(spark, sf_dir, "events").select("event_type", "user_id").distinct()
     )
     card = du.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
     inter = (
@@ -1893,13 +1890,7 @@ def agg_hll_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_inter_exact", F.col("n_a") + F.col("n_b") - F.col("n_union_exact")
         )
     )
-    # one sketch pass; the 2-row state frame is pinned so the union
-    # merge and the per-segment estimates read it, not the fact table
-    sk = (
-        ab.groupBy("_s")
-        .agg(F.expr("hll_sketch_agg(o_custkey, 14)").alias("sk"))
-        .localCheckpoint(eager=True)
-    )
+    sk = ab.groupBy("_s").agg(F.expr("hll_sketch_agg(o_custkey, 14)").alias("sk"))
     # coalesce to 0: on an empty/degenerate segment the sketch
     # aggregates yield NULL where approx_count_distinct yielded 0 —
     # the flags must stay TRUE, not go NULL (round-13 edge fuzz)

@@ -456,8 +456,8 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scratch cache in its own job first makes the checkpoint's
         # four reads cache hits — same plan, same rows, one pass.
         per_doc.count()
-        pairs = pairs.localCheckpoint(eager=True)
-        # the checkpoint materialized the pairs; the per-doc scratch
+        pairs = memo.pin(pairs)
+        # the pin materialized the pairs; the per-doc scratch
         # (32 hashes + the full hashed shingle set per doc) is never
         # read again
         per_doc.unpersist()
@@ -707,13 +707,12 @@ def dedup_embedding_cosine_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _embedding_cosine_pairs(spark, sf_dir, None)
 
 
-def _capped_vec_blocks(
+def _embedding_cosine_pairs(
     spark: SparkSession, sf_dir: str, n_cap: int | None
 ) -> DataFrame:
-    """Capped, typed, blocked vector frame — PRE-materialization.  Split
-    out so tests can assert the cap-sample filter is in the plan (the
-    caller's ``localCheckpoint`` truncates lineage, hiding it from the
-    final plan string)."""
+    import numpy as np
+    import pandas as pd
+
     base = table(spark, sf_dir, "embeddings")
     # NULL embeddings carry no vector: they can't form a pair on either
     # engine (oracle similarity of NULL fails the threshold) but a None
@@ -726,23 +725,9 @@ def _capped_vec_blocks(
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         (F.col("vec_id") % N_COSINE_BLOCKS).alias("block"),
     )
-    return e.groupBy("block").agg(
+    blocks = e.groupBy("block").agg(
         F.collect_list(F.struct("vec_id", "v")).alias("items")
     )
-
-
-def _embedding_cosine_pairs(
-    spark: SparkSession, sf_dir: str, n_cap: int | None
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    # blocks is BOTH sides of the block-pair self-join: left lazy, each
-    # side re-ran the scan + cap-sample + collect_list aggregate (8
-    # embeddings scans in the committed before-plan).  The frame is
-    # B rows holding the ≤n_cap-vector sample — bounded — so one eager
-    # localCheckpoint pins the corpus pass to exactly one.
-    blocks = _capped_vec_blocks(spark, sf_dir, n_cap).localCheckpoint(eager=True)
     a, b = blocks.alias("a"), blocks.alias("b")
     pairs = a.join(b, F.col("a.block") <= F.col("b.block")).select(
         F.col("a.block").alias("block_a"),
@@ -888,14 +873,15 @@ def dedup_embedding_cosine_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     # base feeds FIVE subtrees (band-width scalar, planted twins, both
     # sides of the bucket self-join, and the two verify-join sides):
     # left lazy they each re-derived the scan+cast — 20 embeddings
-    # scans in the committed before-plan.  One eager localCheckpoint
-    # pins the corpus read to a single pass; every downstream stage is
-    # a memory read.  (Kept per-query, NOT the sim_* vector memo: this
-    # scan deliberately KEEPS NULL embeddings — the oracle's base CTE
-    # has no NULL filter.)
-    base = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    ).localCheckpoint(eager=True)
+    # scans in the committed before-plan.  Pinning it runs the corpus
+    # read once; every downstream stage is a memory read.  (Kept
+    # per-query, NOT the sim_* vector memo: this scan deliberately KEEPS
+    # NULL embeddings — the oracle's base CTE has no NULL filter.)
+    base = memo.pin(
+        table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        )
+    )
     # scalar band width from the corpus count (exact mirror of the
     # oracle's kk CTE — bit-length arithmetic, no float-log edge)
     kdf = base.agg(
@@ -1016,8 +1002,8 @@ LOCAL_CC_EDGE_CAP = 100_000
 
 def _component_labels_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # near_dup_pairs is localCheckpoint-materialized, so this count is a
-    # cheap scan of an in-memory RDD, not a recompute
+    # near_dup_pairs is pinned, so this count is a cheap scan of an
+    # in-memory RDD, not a recompute
     if pairs.count() <= LOCAL_CC_EDGE_CAP:
         return _component_labels_local(spark, pairs)
     return _component_labels_loop(spark, pairs)
@@ -1058,12 +1044,12 @@ def _component_labels_loop(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     sym = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).cache()
-    labels = (
+    labels = memo.pin(
         sym.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("component", F.col("doc_id"))
-        .localCheckpoint()
     )
+
     def propagate(lab: DataFrame) -> DataFrame:
         # ONE join + ONE min-aggregate per round: a message table unions
         # the graph edges with each node's LABEL POINTER (doc_id →
@@ -1095,7 +1081,7 @@ def _component_labels_loop(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         # iteration fixed cost, and an extra round past the fixpoint is
         # idempotent — so halving the barrier count is free accuracy-
         # wise and ~halves the loop's scheduling overhead
-        labels = propagate(propagate(labels)).localCheckpoint()
+        labels = memo.pin(propagate(propagate(labels)))
         # labels only ever decrease, so the label sum is strictly
         # monotone until the fixpoint — convergence detection for the
         # cost of one aggregate instead of a self-join + filter
@@ -1103,8 +1089,7 @@ def _component_labels_loop(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    # the returned frame is localCheckpoint-materialized (eager), so the
-    # edge cache is no longer needed — release the executor storage it
+    # the returned frame is pinned, so the edge cache is no longer needed — release the executor storage it
     # pinned rather than letting one entry leak per corpus
     sym.unpersist()
     return labels
@@ -1143,7 +1128,7 @@ def dedup_components_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels) + a min-aggregate; iterations needed = component diameter,
     and near-dup clusters are shallow (dups of a common ancestor), so
     3–5 rounds converge (smoked at 9M edges / 1M chain components).
-    `localCheckpoint` truncates the growing loop lineage —
+    Pinning each round (`memo.pin`) truncates the growing loop lineage —
     without it the plan doubles every round and the driver, not the
     data, becomes the bottleneck.  (At extreme skew the alternating
     large-star/small-star variant halves rounds; same join shape.)
@@ -1325,13 +1310,12 @@ def dedup_shared_passage_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct AFTER the explode, not array_distinct on the per-doc
     # array: array_distinct is O(len²) per row and long documents make
     # it the bottleneck; the exploded dropDuplicates dedups map-side
-    # before one (doc, gram) shuffle.  localCheckpoint materializes g
-    # once for its two consumers (frequency + join).
-    g = (
+    # before one (doc, gram) shuffle.  g is pinned for its two
+    # consumers (frequency + join).
+    g = memo.pin(
         d.where(F.size(toks) >= k)
         .select("doc_id", F.explode(grams).alias("gram"))
         .dropDuplicates(["doc_id", "gram"])
-        .localCheckpoint()
     )
     df_counts = g.groupBy("gram").agg(F.count(F.lit(1)).alias("d"))
     per_doc = (

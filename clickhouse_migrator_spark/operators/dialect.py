@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sql_functions
 
+from .. import memo
 from ..registry import register
 from ..tables import table
 
@@ -257,9 +258,10 @@ def dialect_final_replacing_latest(spark: SparkSession, sf_dir: str) -> DataFram
         SELECT o_custkey, o_orderkey, o_totalprice FROM {v}
         """,
     )
-    out = execute_and_inflate(
-        spark, "SELECT k, version, price FROM dq_final_orders FINAL"
-    ).localCheckpoint()  # materialize: the table is dropped next
+    # pinned: the table is dropped next
+    out = memo.pin(
+        execute_and_inflate(spark, "SELECT k, version, price FROM dq_final_orders FINAL")
+    )
     execute_statement(spark, "DROP TABLE dq_final_orders")
     return out
 

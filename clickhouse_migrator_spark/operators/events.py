@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import memo
 from ..hashsafe import oracle_round_quotient, round_quotient
 from ..registry import register
 from ..tables import table
@@ -361,14 +362,12 @@ def events_locf_hourly_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each user's first observation — that fact is a `lag` on the SAME
     # window pass the segments already run (lag NULL ⇔ first row).
     # One purchase aggregate instead of two; the segment frame is then
-    # checkpointed once (aggregate-sized: observed (user, hour) rows)
-    # for the two explode branches, which otherwise re-ran the
-    # agg+window per branch (measured 1.11 → 0.96 s warm min at sf0.1).
-    seg = (
+    # pinned (aggregate-sized: observed (user, hour) rows) for the two
+    # explode branches, which otherwise re-ran the agg+window per branch.
+    seg = memo.pin(
         hourly.withColumn("nt", F.lead("bucket").over(w_obs))
         .withColumn("prev_t", F.lag("bucket").over(w_obs))
         .crossJoin(F.broadcast(bounds))
-        .localCheckpoint(eager=True)
     )
     hour = F.expr("INTERVAL 1 HOUR")
     covered = seg.select(
@@ -1172,10 +1171,9 @@ def events_linear_interp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (VERDICT r12 next-round #7; guide §2.4): `prev_t` (a lag on
     # the same window pass) marks each user's first observation, so the
     # leading-NULL branch no longer re-aggregates `hourly`; the segment
-    # frame is checkpointed once (aggregate-sized) for its THREE
-    # explode branches, which otherwise re-ran the purchase aggregate +
-    # window per branch (measured 1.28 → 1.14 s warm min at sf0.1).
-    base = (
+    # frame is pinned (aggregate-sized) for its THREE explode branches,
+    # which otherwise re-ran the purchase aggregate + window per branch.
+    base = memo.pin(
         hourly.select(
             "user_id",
             F.col("bucket").alias("pt"),
@@ -1183,9 +1181,7 @@ def events_linear_interp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("avg_value").over(w_obs).alias("nv"),
             F.lead("bucket").over(w_obs).alias("nt"),
             F.lag("bucket").over(w_obs).alias("prev_t"),
-        )
-        .crossJoin(F.broadcast(bounds))
-        .localCheckpoint(eager=True)
+        ).crossJoin(F.broadcast(bounds))
     )
     k = F.expr("timestampdiff(HOUR, pt, bucket)").cast("long")
     n = F.expr("timestampdiff(HOUR, pt, nt)").cast("long")
@@ -1266,14 +1262,13 @@ def events_sequence_next_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number sort of the full event stream; both aggregations and
     the join ride a single user_id shuffle."""
     e = table(spark, sf_dir, "events")
-    # s feeds the later-events probe AND the final left join; the frame
-    # is one row per signed-up user, so one eager localCheckpoint saves
-    # a full duplicate fact scan + first-signup aggregate.
-    s = (
+    # s feeds the later-events probe AND the final left join; it is
+    # one row per signed-up user, so pinning it saves a duplicate fact
+    # scan + first-signup aggregate.
+    s = memo.pin(
         e.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("s_ts"))
-        .localCheckpoint(eager=True)
     )
     nxt = (
         e.join(s, "user_id")
@@ -1988,16 +1983,15 @@ def events_weekly_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     over raw events."""
     # uw feeds THREE subtrees (the last-week bound, the shifted probe
     # side, and the active side of the churn join), each of which
-    # otherwise re-ran the fact scan + global distinct; the frame is
-    # distinct (user, week) pairs, so one eager localCheckpoint pins
-    # the fact pass + distinct shuffle to exactly one.
-    uw = (
+    # otherwise re-ran the fact scan + global distinct; it is distinct
+    # (user, week) pairs, so pinning it runs the fact pass + distinct
+    # shuffle once.
+    uw = memo.pin(
         table(spark, sf_dir, "events")
         .select(
             "user_id", F.date_trunc("week", "ts").cast("date").alias("week")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     last_week = uw.agg(F.max("week").alias("mx"))
     nxt = uw.select(
@@ -2127,12 +2121,14 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohorts x offsets — tiny) via a running window, never re-joining
     the fact table per offset."""
     ev = table(spark, sf_dir, "events")
-    # first_seen feeds the cohort-size rollup AND the revenue join; the
-    # frame is one row per user, so one eager localCheckpoint saves a
-    # full duplicate fact scan + per-user aggregate.
-    first_seen = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort")
-    ).localCheckpoint(eager=True)
+    # first_seen feeds the cohort-size rollup AND the revenue join; it
+    # is one row per user, so pinning it saves a duplicate fact scan +
+    # per-user aggregate.
+    first_seen = memo.pin(
+        ev.groupBy("user_id").agg(
+            F.date_trunc("week", F.min("ts")).cast("date").alias("cohort")
+        )
+    )
     sizes = first_seen.groupBy("cohort").agg(F.count(F.lit(1)).alias("n_users"))
     rev = (
         ev.filter(F.col("event_type") == "purchase")
@@ -2294,15 +2290,11 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("neg_recency", -F.col("recency_s"))
     )
     # the three ranks are INDEPENDENT orders over the same per-user
-    # grid: materialize the grid once (each substrate reads its input
-    # ~3× — bounds, windows, counts), then rank each dimension as its
-    # own branch and join the 2-column (user_id, rn) results back.
-    # Independent branches share one job and schedule concurrently,
-    # where the previous nested-substrate shape serialized three
-    # window chains behind two extra checkpoint barriers (3.5 → ~2 s
-    # at sf0.1; same plan shape a 100 TB run wants — the joins are
-    # 1:1 on the grid key, not the fact table).
-    per_user = per_user.localCheckpoint(eager=True)
+    # grid: pin the grid once (each substrate reads its input ~3× —
+    # bounds, windows, counts), then rank each dimension as its own
+    # branch and join the 2-column (user_id, rn) results back; the
+    # joins are 1:1 on the grid key, not the fact table.
+    per_user = memo.pin(per_user)
     # the ntile divisor rides the R branch's own 64-row bucket frame
     # (with_totals) — no separate count pass over the checkpoint, no
     # broadcast cross join
@@ -2910,21 +2902,19 @@ def events_survival_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFr
     )
     # st feeds BOTH sides of the risk join (event-day grid + at-risk
     # probe), each of which otherwise re-ran the whole subj subtree
-    # (two per-user aggregates + join: 3 fact scans, twice).  The frame
-    # is one row per signed-up user, so one eager localCheckpoint pins
-    # the upstream to a single pass.
-    st = subj.select(
-        F.coalesce(
-            F.least("event_t", "censor_t"), F.col("censor_t")
-        ).alias("t"),
-        F.when(
-            F.col("event_t").isNotNull()
-            & (F.col("event_t") <= F.col("censor_t")),
-            1,
+    # (two per-user aggregates + join: 3 fact scans, twice).  It is one
+    # row per signed-up user, so pinning it runs the upstream once.
+    st = memo.pin(
+        subj.select(
+            F.coalesce(F.least("event_t", "censor_t"), F.col("censor_t")).alias("t"),
+            F.when(
+                F.col("event_t").isNotNull() & (F.col("event_t") <= F.col("censor_t")),
+                1,
+            )
+            .otherwise(0)
+            .alias("observed"),
         )
-        .otherwise(0)
-        .alias("observed"),
-    ).localCheckpoint(eager=True)
+    )
     grid = (
         st.filter(F.col("observed") == 1)
         .groupBy(F.col("t").alias("day"))
@@ -3063,12 +3053,12 @@ def events_rolling_7d_uniques_hll(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # daily feeds THREE subtrees (anchors, the rolling merge's sketch
     # side, and the exact pass's anchor grid), each of which otherwise
-    # re-ran the fact scan + sketch aggregate; the frame is one sketch
-    # row per day, so one eager localCheckpoint pins the fact passes to
-    # the minimum two (daily sketches + the exact-uniques certifier).
-    daily = e.groupBy("d").agg(
-        F.expr("hll_sketch_agg(user_id, 14)").alias("sk")
-    ).localCheckpoint(eager=True)
+    # re-ran the fact scan + sketch aggregate; it is one sketch row per
+    # day, so pinning it cuts the fact passes to the minimum two (daily
+    # sketches + the exact-uniques certifier).
+    daily = memo.pin(
+        e.groupBy("d").agg(F.expr("hll_sketch_agg(user_id, 14)").alias("sk"))
+    )
     anchors = daily.select(F.col("d").alias("anchor"))
     merged = (
         anchors.join(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import memo
 from ..hashsafe import oracle_round_quotient, round_quotient, utrim
 
 _N_TOK_SQL = r"len(string_split_regex(lower(trim(text)), '\s+'))"
@@ -677,11 +678,10 @@ def pipeline_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).alias("n_tokens"),
         round_quotient(F.length("text"), F.size(toks), 6).alias("difficulty"),
     )
-    # materialize the per-doc difficulty frame once for the substrate's
-    # two readers (bounds + bucketing): the tokenize projection is the
-    # expensive part and ran once per reader (measured 1.05 → 0.73 s
-    # warm at sf0.1)
-    t = t.localCheckpoint(eager=True)
+    # pin the per-doc difficulty frame for the substrate's two readers
+    # (bounds + bucketing): the tokenize projection is the expensive
+    # part and ran once per reader
+    t = memo.pin(t)
     # the phase divisor comes from the substrate's own 64-row bucket
     # frame (with_totals) — the previous eager t.count() was a whole
     # extra documents-scan + tokenize pass AND a driver round-trip
@@ -1275,11 +1275,9 @@ def pipeline_language_temperature_mix(spark: SparkSession, sf_dir: str) -> DataF
     d = table(spark, sf_dir, "documents")
     # lt feeds four subtrees (total, the pow projection, z, the final
     # select), each of which otherwise re-ran the corpus scan + token-
-    # count aggregate; the frame is #languages rows, so one eager
-    # localCheckpoint pins the tokenize pass to exactly one.
-    lt = d.groupBy("lang").agg(
-        F.sum(F.size(_tokens())).alias("n_tokens")
-    ).localCheckpoint(eager=True)
+    # count aggregate; it is #languages rows, so pinning it runs the
+    # tokenize pass once.
+    lt = memo.pin(d.groupBy("lang").agg(F.sum(F.size(_tokens())).alias("n_tokens")))
     tot = lt.agg(F.sum("n_tokens").alias("total"))
     powed = lt.crossJoin(F.broadcast(tot)).select(
         "lang",

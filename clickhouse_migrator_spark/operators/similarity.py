@@ -591,19 +591,11 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     run to certify the index, not the production search path.  The
     exact top-k (≤ N_QUERIES × TOP_K rows) is cached so the two
     operating-point comparisons share one brute-force scan."""
-    # deployment note: localCheckpoint pins blocks to live executors —
-    # under executor churn use a reliable checkpoint instead (see
-    # dedup.near_dup_pairs / the stats.py module docstring).
-    # eager localCheckpoint, not .cache(): the fused action below reads
-    # this frame from FOUR subtrees at once (two per operating point) —
-    # a cold cache would be raced and the brute-force scan re-run 4×.
-    # The frame is bounded (≤ N_QUERIES × TOP_K rows), so materializing
-    # it is the audit's one deliberate exact pass (guide §1/§5).
-    exact = (
-        sim_topk_cosine_full(spark, sf_dir)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=True)
-    )
+    # pinned, not .cache(): the fused action below reads this frame
+    # from FOUR subtrees at once (two per operating point) — a cold
+    # cache would be raced and the brute-force scan re-run 4×.  The
+    # frame is bounded (≤ N_QUERIES × TOP_K rows).
+    exact = memo.pin(sim_topk_cosine_full(spark, sf_dir).select("query_id", "cand_id"))
 
     def mean_recall(nprobe: int) -> float:
         # .distinct() before the join (ADVICE r11): a duplicated
@@ -645,11 +637,8 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mr = mean_recall(NPROBE)
     fr = mean_recall(KMEANS_K)
-    # NOTE (ADVICE r12 #3): unpersist on a localCheckpoint'd frame only
-    # clears CacheManager registrations, NOT the checkpointed RDD
-    # blocks — those are freed by GC of the RDD.  The frame is bounded
-    # (≤ N_QUERIES×TOP_K rows), so leaving the blocks to GC is fine; no
-    # explicit release is attempted.
+    # the pinned blocks of `exact` are freed by GC of its RDD (unpersist
+    # would only clear CacheManager registrations); it is bounded.
     return spark.createDataFrame(
         [
             (
@@ -879,13 +868,13 @@ def sim_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairwise join) and radius twice — left lazy, each consumption
     # re-ran the full corpus aggregate (12 embeddings scans in the
     # committed before-plan).  Both frames are K rows (K = #labels), so
-    # an eager localCheckpoint is a ~free barrier that pins the corpus
-    # passes to exactly two: one for centroids, one for radii.
-    cent = v.groupBy("label").agg(
-        *[F.avg(F.element_at("v", i + 1)).alias(f"c{i}") for i in range(dim)]
-    ).select(
-        "label", F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cv")
-    ).localCheckpoint(eager=True)
+    # pinning them cuts the corpus passes to exactly two: one for
+    # centroids, one for radii.
+    cent = memo.pin(
+        v.groupBy("label")
+        .agg(*[F.avg(F.element_at("v", i + 1)).alias(f"c{i}") for i in range(dim)])
+        .select("label", F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cv"))
+    )
     dist = lambda a, b: F.sqrt(  # noqa: E731
         F.aggregate(
             F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
@@ -893,12 +882,11 @@ def sim_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, z: acc + z,
         )
     )
-    radius = (
+    radius = memo.pin(
         v.join(F.broadcast(cent), "label")
         .select("label", dist(F.col("v"), F.col("cv")).alias("d"))
         .groupBy("label")
         .agg(F.avg("d").alias("r"))
-        .localCheckpoint(eager=True)
     )
     a = cent.select(F.col("label").alias("label_a"), F.col("cv").alias("cva"))
     b = cent.select(F.col("label").alias("label_b"), F.col("cv").alias("cvb"))

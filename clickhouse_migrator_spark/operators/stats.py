@@ -24,22 +24,13 @@ Scale notes: global rank windows (AUC / Mann-Whitney / Spearman
 within a group) need a total order over the scored set; at 100 TB
 those become range-partitioned sorts (Spark's global orderBy) — still
 one pass.  Everything else is partial-aggregatable and skew-free.
-
-Deployment note (applies to every ``localCheckpoint`` in this module —
-the substrate-input grids, the Theil-Sen pair table, and the scalar
-frames): ``localCheckpoint`` pins the materialized partitions to LIVE
-executors; on a real cluster with executor loss the frame recomputes
-from nothing (lineage is truncated) or the job fails.  For
-fault-tolerant deployments swap in a reliable checkpoint
-(``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``) or
-persist the intermediate to storage — same guidance as
-``dedup.near_dup_pairs``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import memo
 from ..hashsafe import oracle_round_quotient, round_quotient, utrim
 from ..registry import register
 from ..tables import table
@@ -52,10 +43,12 @@ PREFIX_BUCKETS = 64
 _BOUNDS_ACCURACY = 1_000
 
 
-def _bucket_by_bounds(df: DataFrame, bounds: DataFrame, value_col: str) -> DataFrame:
+def _bucketed(df: DataFrame, value_col: str, n_buckets: int) -> DataFrame:
     """Attach the order-preserving ``_bucket`` id (= #boundaries
-    strictly below ``value_col``) via a BROADCAST RANGE JOIN against
-    the exploded boundary list.
+    strictly below ``value_col``): ``n_buckets − 1`` approx-quantile
+    boundaries of ``value_col`` (one broadcast row; the approximation
+    only steers bucket balance, never exactness), then a BROADCAST
+    RANGE JOIN against the exploded boundary list.
 
     Probe-shape history (the substrate's hot inner loop):
 
@@ -77,6 +70,12 @@ def _bucket_by_bounds(df: DataFrame, bounds: DataFrame, value_col: str) -> DataF
     yield ``lo == hi`` ranges that simply match nothing, exactly the
     strictly-less counting semantics.  ``value_col`` must be non-null
     (rank substrates order on non-null keys by construction)."""
+    fracs = [i / n_buckets for i in range(1, n_buckets)]
+    bounds = df.agg(
+        F.percentile_approx(
+            value_col, F.array(*[F.lit(f) for f in fracs]), _BOUNDS_ACCURACY
+        ).alias("_bounds")
+    )
     n = F.size(F.col("_bounds"))
     ranges = bounds.select(
         F.posexplode(
@@ -96,85 +95,6 @@ def _bucket_by_bounds(df: DataFrame, bounds: DataFrame, value_col: str) -> DataF
     return df.join(F.broadcast(ranges), cond, "inner").drop("_lo", "_hi")
 
 
-def grid_prefix_sums(
-    grid: DataFrame,
-    value_col: str,
-    sum_cols: list[str],
-    n_buckets: int = PREFIX_BUCKETS,
-    with_totals: bool = False,
-) -> DataFrame:
-    """EXACT inclusive prefix sums of ``sum_cols`` in ``value_col``
-    order, WITHOUT a single-partition global sort — the distributed
-    two-level prefix-sum:
-
-    1. ``n_buckets − 1`` approx-quantile boundaries of the value (one
-       broadcast row; approximation only affects bucket balance, never
-       the sums);
-    2. order-preserving bucket id = #boundaries strictly below value;
-    3. within-bucket running sums — ``Window.partitionBy(bucket)``,
-       partition-parallel;
-    4. cross-bucket offsets — per-bucket totals through one tiny
-       ``n_buckets``-row ordered window, broadcast-joined back.
-
-    For a continuous score column the distinct-value grid approaches
-    the row count, so the naive ``Window.orderBy(value)`` becomes a
-    single-partition sort of the corpus; this shape caps the serial
-    work at ``n_buckets`` rows no matter how large the grid grows.
-    Returns the grid plus ``cum_<col>`` for each requested column.
-
-    ``with_totals=True`` additionally attaches ``tot_<col>`` — the
-    GRAND total of each column — as a constant column on every row,
-    summed over the same ≤``n_buckets``-row per-bucket totals frame
-    the offsets come from: no extra scan of the grid, where a separate
-    ``grid.agg(...)`` consumer duplicates the whole upstream subtree
-    (callers must not already have ``tot_<col>`` columns)."""
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = grid.agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(f) for f in fracs]), _BOUNDS_ACCURACY
-        ).alias("_bounds")
-    )
-    bucketed = _bucket_by_bounds(grid, bounds, value_col)
-    wb = (
-        Window.partitionBy("_bucket")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = bucketed.select(
-        "*", *[F.sum(c).over(wb).alias(f"_within_{c}") for c in sum_cols]
-    )
-    # totals from `within` (not `bucketed`) so both sides share one
-    # _bucket exchange → ReusedExchange, single scan+bucket pass
-    totals = within.groupBy("_bucket").agg(
-        *[F.sum(c).alias(f"_tot_{c}") for c in sum_cols]
-    )
-    wo = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
-    # grand totals ride the SAME ordered 64-row window pass as the
-    # offsets (unbounded-following frame), so with_totals adds no
-    # exchange and no job — only extra broadcast-side columns
-    wall = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = totals.select(
-        "_bucket",
-        *[
-            F.coalesce(F.sum(f"_tot_{c}").over(wo), F.lit(0)).alias(f"_off_{c}")
-            for c in sum_cols
-        ],
-        *(
-            [F.sum(f"_tot_{c}").over(wall).alias(f"tot_{c}") for c in sum_cols]
-            if with_totals
-            else []
-        ),
-    )
-    out = within.join(F.broadcast(offsets), "_bucket")
-    for c in sum_cols:
-        out = out.withColumn(f"cum_{c}", F.col(f"_off_{c}") + F.col(f"_within_{c}"))
-    return out.drop(
-        "_bucket", *[f"_within_{c}" for c in sum_cols], *[f"_off_{c}" for c in sum_cols]
-    )
-
-
 def with_global_row_number(
     df: DataFrame,
     order_cols: list[str],
@@ -185,13 +105,21 @@ def with_global_row_number(
     with_totals: bool = False,
 ) -> DataFrame:
     """Global 1-based ``row_number()`` over a total order WITHOUT a
-    single-partition sort — the row-level sibling of
-    :func:`grid_prefix_sums` (same two-level shape: approx-quantile
-    buckets on the FIRST order column, partition-parallel within-bucket
-    windows, a ``n_buckets``-row offset pass).
+    single-partition sort — the distributed two-level shape:
 
-    ``order_cols`` must form a total order (include a unique tiebreak);
-    the first column drives the bucketing and must be numeric.  Equal
+    1. order-preserving buckets on the FIRST order column
+       (:func:`_bucketed`);
+    2. within-bucket windows — ``Window.partitionBy(bucket)``,
+       partition-parallel;
+    3. cross-bucket offsets — per-bucket totals through one tiny
+       ``n_buckets``-row ordered window, broadcast-joined back.
+
+    A naive ``Window.orderBy`` is a single-partition sort of the whole
+    input; this shape caps the serial work at ``n_buckets`` rows.
+
+    ``order_cols`` must form a total order (include a unique tiebreak,
+    or order a distinct-value grid by its value alone); the first
+    column drives the bucketing and must be numeric.  Equal
     first-column values always land in one bucket (strictly-less
     boundary test), so the composite order is preserved.  Exact ntile /
     percent_rank / cume_dist are row-local arithmetic on the result:
@@ -214,14 +142,7 @@ def with_global_row_number(
     named ``n_total`` / ``tot_<col>``."""
     sum_cols = sum_cols or []
     tot_cols = [c for c in (tot_cols or []) if c not in sum_cols]
-    first = order_cols[0]
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.agg(
-        F.percentile_approx(
-            first, F.array(*[F.lit(f) for f in fracs]), _BOUNDS_ACCURACY
-        ).alias("_bounds")
-    )
-    b = _bucket_by_bounds(df, bounds, first)
+    b = _bucketed(df, order_cols[0], n_buckets)
     wb = Window.partitionBy("_bucket").orderBy(*order_cols)
     wbf = wb.rowsBetween(Window.unboundedPreceding, 0)
     within = b.select(
@@ -292,13 +213,7 @@ def median_rank_select(
     (callers usually know it arithmetically — passing it in avoids a
     count pass).  Ties are fine: the value at a global rank is
     deterministic regardless of tie order."""
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = vals.agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(f) for f in fracs]), _BOUNDS_ACCURACY
-        ).alias("_bounds")
-    )
-    b = _bucket_by_bounds(vals, bounds, value_col)
+    b = _bucketed(vals, value_col, n_buckets)
     counts = b.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_cnt"))
     wo = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)
     offs = counts.select(
@@ -500,13 +415,13 @@ def agg_value_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).alias("c_pos"),
         F.sum(F.when(~F.col("pos"), 1).otherwise(0)).alias("c_neg"),
     ).withColumn("c_tot", F.col("c_pos") + F.col("c_neg"))
-    # materialize the distinct-score grid once for the substrate's two
-    # readers (bounds + bucketing) — one events scan instead of two
-    # (same pattern/measurement as agg_ks_two_sample)
-    grid = grid.localCheckpoint(eager=True)
+    # the substrate reads the grid twice (bounds + bucketing): pin it
+    # once, one events scan instead of two
+    grid = memo.pin(grid)
     # distributed two-level prefix sum: no single-partition sort even
-    # when the score is continuous and the grid approaches row count
-    ranked = grid_prefix_sums(grid, "value", ["c_tot"]).select(
+    # when the score is continuous and the grid approaches row count;
+    # the grid is distinct on value, so [value] is a total order
+    ranked = with_global_row_number(grid, ["value"], sum_cols=["c_tot"]).select(
         "c_pos",
         "c_neg",
         (
@@ -576,17 +491,17 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("c_p"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("c_e"),
     )
-    # materialize the distinct-value grid once for the substrate's two
-    # readers (bounds + bucketing) — one events scan instead of two
-    # (measured 0.79 → 0.75 s warm at sf0.1; the win is the dropped
-    # fact scan at scale)
-    grid = grid.localCheckpoint(eager=True)
-    # distributed two-level prefix sum (see grid_prefix_sums): the ECDF
-    # running sums stay partition-parallel at any grid cardinality.
+    # the substrate reads the grid twice (bounds + bucketing): pin it
+    # once, one events scan instead of two
+    grid = memo.pin(grid)
+    # distributed two-level prefix sum (see with_global_row_number): the
+    # ECDF running sums stay partition-parallel at any grid cardinality.
     # Totals come from the substrate's own 64-row bucket frame
     # (with_totals) — a separate grid.agg() would re-run the whole
     # events-scan + grid aggregate subtree
-    cum = grid_prefix_sums(grid, "value", ["c_p", "c_e"], with_totals=True).select(
+    cum = with_global_row_number(
+        grid, ["value"], sum_cols=["c_p", "c_e"], with_totals=True
+    ).select(
         F.col("cum_c_p").alias("cum_p"),
         F.col("cum_c_e").alias("cum_e"),
         F.col("tot_c_p").alias("n_purchase"),
@@ -713,11 +628,9 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).alias("c_pos"),
         F.sum(F.when(~F.col("pos"), 1).otherwise(0)).alias("c_neg"),
     ).withColumn("c_tot", F.col("c_pos") + F.col("c_neg"))
-    # grid materialized once for the substrate's two readers — same
-    # pattern/measurement as agg_ks_two_sample / agg_value_auc
-    grid = grid.localCheckpoint(eager=True)
-    # same distributed prefix-sum substrate as agg_value_auc
-    ranked = grid_prefix_sums(grid, "value", ["c_tot"]).select(
+    # pinned for the substrate's two readers, as in agg_value_auc
+    grid = memo.pin(grid)
+    ranked = with_global_row_number(grid, ["value"], sum_cols=["c_tot"]).select(
         "c_pos",
         "c_neg",
         (
@@ -1667,13 +1580,12 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(utrim(F.col("text"))), r"\s+")).alias("token")
     )
     # freq feeds the rank substrate's bounds pass AND its bucketed-rows
-    # pass; the frame is vocabulary-sized (Heaps-bounded), so one eager
-    # localCheckpoint pins the corpus tokenize+count to a single pass.
-    freq = (
+    # pass; it is vocabulary-sized (Heaps-bounded), so pinning it runs
+    # the corpus tokenize+count once
+    freq = memo.pin(
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("f"))
         .withColumn("neg_f", -F.col("f"))
-        .localCheckpoint(eager=True)
     )
     ranked = with_global_row_number(freq, ["neg_f", "token"], rn_col="_rk").select(
         F.log(F.col("_rk").cast("double")).alias("lr"),
@@ -1736,14 +1648,11 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("y"))
     )
     # mean via a frame-less window over the tiny aggregated series.
-    # stats feeds THREE subtrees (denom, both lag-join sides), each of
-    # which otherwise re-ran the full fact scan+hourly rollup; the
-    # frame is #hours rows, so one eager localCheckpoint pins the fact
-    # pass to exactly one (same bounded-frame materialization posture
-    # as sim_cluster_separation's centroid frames).
-    stats = series.select(
-        F.avg("y").over(Window.partitionBy()).alias("mu"), "h", "y"
-    ).localCheckpoint(eager=True)
+    # stats feeds THREE subtrees (denom, both lag-join sides); it is
+    # #hours rows, so pinning it runs the fact scan+hourly rollup once
+    stats = memo.pin(
+        series.select(F.avg("y").over(Window.partitionBy()).alias("mu"), "h", "y")
+    )
     denom = stats.agg(F.sum(F.pow(F.col("y") - F.col("mu"), 2)).alias("ss"))
     lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("k"))
     a = stats.alias("a")
@@ -1808,11 +1717,8 @@ def agg_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
     )
     # the substrate reads its input twice (quantile bounds + bucketing):
-    # materialize the user-level aggregate once instead of re-running
-    # the events scan per consumer (aggregate-sized frame — the same
-    # localCheckpoint-between-substrate-layers pattern as rfm/median;
-    # measured 0.80 → 0.71 s warm at sf0.1, one fewer fact scan at 100 TB)
-    per_user = per_user.localCheckpoint(eager=True)
+    # pin the user-level aggregate, one events scan instead of two
+    per_user = memo.pin(per_user)
     # n and Σx come from the substrate's own 64-row bucket-counts frame
     # (with_totals) — a separate per_user.agg() consumer would duplicate
     # the whole events-scan + user-aggregate subtree
@@ -2055,10 +1961,8 @@ def agg_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
         .withColumn("neg_cents", -F.col("cents"))
     )
-    # materialize the user-level aggregate once for the substrate's two
-    # readers (bounds + bucketing) — same pattern/measurement as
-    # agg_gini_spend above
-    per_user = per_user.localCheckpoint(eager=True)
+    # pinned for the substrate's two readers, as in agg_gini_spend
+    per_user = memo.pin(per_user)
     # n and the grand total come from the substrate's 64-row bucket
     # frame (with_totals) instead of a second events-scan aggregate
     ranked = (
@@ -2110,7 +2014,7 @@ def agg_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No single-partition sort at any cardinality: the (price → summed
     weight) grid feeds the distributed two-level prefix sum
-    (:func:`grid_prefix_sums`), and the median is the first grid row
+    (:func:`with_global_row_number`), and the median is the first grid row
     whose cumulative weight crosses half the total — a 1-row reduce.
     Weights ride the exact integer centi-quantity grid, so the
     crossing compares exact integers."""
@@ -2123,17 +2027,14 @@ def agg_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_extendedprice").alias("v"))
         .agg(F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("w"))
     )
-    # the grid feeds two consumers (quantile bounds, the bucketed
-    # windows) — materialize the linear-sized aggregate once
-    # instead of re-running the fact scan per consumer (measured
-    # 5.9 → ~2 s at sf0.1; the localCheckpoint-between-substrate-layers
-    # pattern from SCALE.md r2)
-    grid = grid.localCheckpoint(eager=True)
+    # the substrate reads the grid twice (bounds + bucketing): pin it
+    # once, one lineitem scan instead of two
+    grid = memo.pin(grid)
     # total weight from the substrate's 64-row bucket frame
     # (with_totals): drops the separate grid.agg() pass + cross join
-    cum = grid_prefix_sums(grid, "v", ["w"], with_totals=True).withColumn(
-        "tw", F.col("tot_w")
-    )
+    cum = with_global_row_number(
+        grid, ["v"], sum_cols=["w"], with_totals=True
+    ).withColumn("tw", F.col("tot_w"))
     return cum.agg(
         F.round(
             F.min(F.when(2 * F.col("cum_w") >= F.col("tw"), F.col("v"))), 2
@@ -2194,7 +2095,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the grid is tiny (calendar-bounded) but sits on top of a full
     # fact scan — materialize it once so the pair join, the residual
     # pass and the count don't each re-scan orders
-    series = series.localCheckpoint(eager=True)
+    series = memo.pin(series)
     # the checkpointed grid is AQE-coalesced to ONE partition, so the
     # O(days²) nested-loop pair expansion would run single-task
     # (measured 3.6 s of the query) — spread the probe side across the
@@ -2217,17 +2118,13 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = series.agg(F.count(F.lit(1)).alias("n_days")).withColumn(
         "n_pairs", (F.col("n_days") * (F.col("n_days") - 1) / 2).cast("bigint")
     )
-    # the rank-selection reads the pair set three times (quantile
-    # bounds, bucket counts, middle-bucket sort) — materialize it once
-    # (~23 MB, scale-invariant) instead of re-running the grid
-    # self-join per pass.  median_rank_select sorts ONLY the 1-2
-    # buckets holding the middle ranks (~2/64 of the pairs); the
-    # previous full row-number substrate sorted all 3M.
-    pairs = pairs.localCheckpoint(eager=True)
-    m = (
-        median_rank_select(pairs, "slope", counts, "n_pairs")
-        .select(F.col("median").alias("slope"))
-        .localCheckpoint(eager=True)
+    # median_rank_select sorts ONLY the 1-2 buckets holding the middle
+    # ranks (~2/64 of the pairs); the full row-number substrate would
+    # sort all 3M.
+    m = memo.pin(
+        median_rank_select(pairs, "slope", counts, "n_pairs").select(
+            F.col("median").alias("slope")
+        )
     )
     r = (
         series.crossJoin(F.broadcast(m))

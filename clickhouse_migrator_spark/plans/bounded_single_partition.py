@@ -14,8 +14,8 @@ three legitimate sources:
   whose cardinality is fixed by calendar/domain, not corpus (#days,
   #months, deciles, contingency cells…).  The site audit lives in
   ``tests/test_global_window_audit.py``; entries here name the bound.
-* **rank/prefix substrate offsets** — ``grid_prefix_sums`` /
-  ``with_global_row_number`` / ``median_rank_select`` route row-scale
+* **rank/prefix substrate offsets** — ``with_global_row_number`` /
+  ``median_rank_select`` route row-scale
   ranks through per-bucket totals: only ``PREFIX_BUCKETS`` (64) rows
   ever sit in the single partition.
 

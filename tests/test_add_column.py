@@ -21,6 +21,9 @@ import pytest
 from clickhouse_migrator_spark import migrate as M
 
 
+EPOCH = datetime.date(1970, 1, 1)
+
+
 def _write(home, version: int, stmts: list[str]) -> None:
     (home / f"V{version}__step.json").write_text(json.dumps(stmts))
 
@@ -189,10 +192,11 @@ def test_crash_after_metadata_add_resumes_once(spark, db, tmp_path, monkeypatch)
 def test_create_literal_defaults_reach_inserts_that_omit_them(spark, db, tmp_path):
     """CREATE TABLE keeps a literal DEFAULT as a Spark column default, so
     an INSERT that omits the column gets it: a staged INSERT through
-    migrate(), and one through ``execute_statement``.  An expression
-    DEFAULT is dropped (NULL), as before, and so is a literal Spark
-    cannot cast to the column's type: a number or the zero date for a
-    date, an integer out of the type's range."""
+    migrate(), and one through ``execute_statement``.  The zero date
+    (``0``, ``'0000-00-00'``, ``'0000-00-00 00:00:00'``) reads as the
+    epoch and an integer out of the type's range wraps, as ClickHouse
+    stores them.  An expression DEFAULT is dropped (NULL), as before,
+    and so is a literal Spark cannot cast: ``Date DEFAULT -1``."""
     ddl = (
         "CREATE TABLE {} (id Int64, s String DEFAULT 'it''s', n Int32 DEFAULT -3, "
         "u UInt32 DEFAULT -1, f Float64 DEFAULT 0.5, z Nullable(String) DEFAULT NULL, "
@@ -205,7 +209,8 @@ def test_create_literal_defaults_reach_inserts_that_omit_them(spark, db, tmp_pat
     cols = ("id", "s", "n", "u", "f", "z", "d", "k", "t", "d0", "d1", "dz", "tz", "b")
     want = [(
         1, "it's", -3, 4294967295, 0.5, None, None, datetime.date(2020, 1, 2),
-        datetime.datetime(2020, 1, 2, 3, 4, 5), None, None, None, None, None,
+        datetime.datetime(2020, 1, 2, 3, 4, 5), EPOCH, None, EPOCH,
+        datetime.datetime(1970, 1, 1), 44,
     )]
     home = tmp_path / "mig"
     home.mkdir()
@@ -215,6 +220,36 @@ def test_create_literal_defaults_reach_inserts_that_omit_them(spark, db, tmp_pat
     M.execute_statement(spark, ddl.format("tx"))
     M.execute_statement(spark, "INSERT INTO tx (id) VALUES (1)")
     assert _rows(spark, db, "tx", cols) == want
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_add_column_stores_zero_dates_and_wrapped_integers(spark, db, tmp_path):
+    """Through migrate(), ADD COLUMN stores what ClickHouse stores: the
+    zero date reads as the epoch and an out-of-range integer wraps, for
+    existing rows and for a later INSERT that omits the columns.  A
+    literal Spark cannot store fails with its column, literal and type
+    named, before the table changes."""
+    home = tmp_path / "mig"
+    home.mkdir()
+    _write(home, 1, [
+        "CREATE TABLE tz (id Int64) ENGINE = MergeTree ORDER BY id",
+        "INSERT INTO tz VALUES (1)",
+        "ALTER TABLE tz ADD COLUMN d Date DEFAULT 0",
+        "ALTER TABLE tz ADD COLUMN ds Date DEFAULT '0000-00-00'",
+        "ALTER TABLE tz ADD COLUMN t DateTime DEFAULT '0000-00-00 00:00:00'",
+        "ALTER TABLE tz ADD COLUMN b Int8 DEFAULT 300",
+        "ALTER TABLE tz ADD COLUMN s Int16 DEFAULT -32769",
+        "INSERT INTO tz (id) VALUES (2)",
+    ])
+    assert M.migrate(spark, db, str(home), create_db_if_no_exists=False) == 1
+    row = (EPOCH, EPOCH, datetime.datetime(1970, 1, 1), 44, 32767)
+    assert _rows(spark, db, "tz", ("id", "d", "ds", "t", "b", "s")) == [
+        (1, *row), (2, *row),
+    ]
+    _write(home, 2, ["ALTER TABLE tz ADD COLUMN bad Date DEFAULT -1"])
+    with pytest.raises(ValueError, match=r"'bad'.*DEFAULT -1 as Date"):
+        M.migrate(spark, db, str(home), create_db_if_no_exists=False)
+    assert "bad" not in spark.table(f"`{db}`.tz").columns
 
 
 @pytest.mark.usefixtures("ledger_db")

@@ -11,11 +11,16 @@ reads.  These tests rewrite fixture copies IN PLACE and assert that:
   ``clearCache()``;
 * the ``refreshByPath`` record survives an explicit invalidation, so a
   rebuilt plan never reads the old bytes' cached blocks.
+
+Per-query pins go through ``memo.pin`` alone, which holds the rule for
+when a frame may be pinned and the deployment note.
 """
 
 from __future__ import annotations
 
+import re
 import shutil
+from pathlib import Path
 
 import duckdb
 
@@ -192,3 +197,18 @@ def test_events_schema_cache_rebuilds_on_rewrite(spark, tmp_path):
     assert "extra_col" in s2.fieldNames()
     # one live entry per (app, path): the stale fingerprint was evicted
     assert len(memo.entries(d, ["events_schema"])) == 1
+
+
+def test_every_local_checkpoint_goes_through_memo_pin():
+    """No module but memo.py calls ``.localCheckpoint(``: a reliable-
+    checkpoint deployment then changes ``memo.pin`` and nothing else."""
+    pkg = Path(memo.__file__).parent
+    call = re.compile(r"\.\s*localCheckpoint\s*\(")
+    found = [
+        f"{py.relative_to(pkg)}:{i}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py != pkg / "memo.py"
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if call.search(line)
+    ]
+    assert found == []

@@ -61,16 +61,11 @@ def test_cap_sample_matches_duckdb_twin(spark, sf_dir):
 
 def test_registered_baselines_are_capped(spark, sf_dir):
     """The registered plans must contain the cap's count-broadcast
-    filter — i.e. they route through cap_sample, not the raw table.
-
-    `dedup_embedding_cosine` materializes its capped block frame with an
-    eager localCheckpoint (r13), which truncates lineage and hides the
-    filter from the final plan string — so the structural assertion runs
-    on the pre-checkpoint frame its impl consumes, plus a behavioral
-    check that a BINDING cap actually bounds the pair output."""
+    filter — i.e. they route through cap_sample, not the raw table —
+    plus a behavioral check that a BINDING cap actually bounds the pair
+    output."""
     from clickhouse_migrator_spark.operators.dedup import (
         EXACT_COSINE_CAP,
-        _capped_vec_blocks,
         _embedding_cosine_pairs,
     )
     from clickhouse_migrator_spark.operators.similarity import sim_topk_cosine
@@ -83,13 +78,13 @@ def test_registered_baselines_are_capped(spark, sf_dir):
     )
     assert "_n_total" in plan, "sim_topk_cosine lost its sample cap"
 
-    blocks_plan = (
-        _capped_vec_blocks(spark, sf_dir, EXACT_COSINE_CAP)
+    pairs_plan = (
+        _embedding_cosine_pairs(spark, sf_dir, EXACT_COSINE_CAP)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
     )
-    assert "_n_total" in blocks_plan, "dedup_embedding_cosine lost its sample cap"
+    assert "_n_total" in pairs_plan, "dedup_embedding_cosine lost its sample cap"
 
     # Behavioral: with a cap below N, output pairs only involve kept ids.
     e = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())

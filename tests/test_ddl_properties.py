@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from clickhouse_migrator_spark.ddl import TYPE_MAP, map_types, translate
@@ -26,14 +27,22 @@ def test_add_column_roundtrip(name, ch_type):
 
 @given(name=IDENT, ch_type=CH_TYPE, default=st.integers(-100, 100))
 def test_add_column_default_preserved(name, ch_type, default):
-    st_ = translate(f"ALTER TABLE db1.t ADD COLUMN {name} {ch_type} DEFAULT {default}")
+    sql = f"ALTER TABLE db1.t ADD COLUMN {name} {ch_type} DEFAULT {default}"
+    # the value ClickHouse stores (see ddl._stored_default): a date reads
+    # 0 as the epoch and takes no other number; negative defaults on
+    # UInt8/16/32 wrap two's-complement; everything else passes through
+    # verbatim
+    if TYPE_MAP[ch_type] in ("DATE", "TIMESTAMP") and default != 0:
+        with pytest.raises(ValueError, match=f"'{name}'.*DEFAULT {default} as {ch_type}"):
+            translate(sql)
+        return
+    st_ = translate(sql)
     assert st_.kind == "add_column"
     assert st_.table == "db1.t"
-    # negative defaults on UInt8/16/32 wrap two's-complement (ClickHouse
-    # reinterprets them; see ddl._wrap_unsigned_default) — everything
-    # else passes through verbatim
     m = re.fullmatch(r"UInt(8|16|32)", ch_type)
-    if m and default < 0:
+    if TYPE_MAP[ch_type] in ("DATE", "TIMESTAMP"):
+        assert st_.default == "'1970-01-01'"
+    elif m and default < 0:
         assert st_.default == str(default % (1 << int(m.group(1))))
     else:
         assert st_.default == str(default)

@@ -3,16 +3,15 @@
 so every surviving site must have a PROVABLY BOUNDED input.  This test
 is the enforcement: any new global window fails until it is audited
 (either bounded and added below, or rewritten onto the distributed
-substrates — ``grid_prefix_sums`` / ``with_global_row_number`` in
-``operators/stats.py``, or the bucketed-lead shape in
+substrate — ``with_global_row_number`` in ``operators/stats.py``, or the bucketed-lead shape in
 ``events_id_gap_audit``).
 
 Audit table (round 2) — input bound for every allowed site:
 
 | site | input frame | bound |
 |---|---|---|
-| stats grid_prefix_sums / with_global_row_number offsets | per-bucket totals | PREFIX_BUCKETS (64) rows |
-| stats grid_prefix_sums / with_global_row_number grand totals (r12 `wall`) ×2 | per-bucket totals | PREFIX_BUCKETS (64) rows |
+| stats with_global_row_number offsets | per-bucket totals | PREFIX_BUCKETS (64) rows |
+| stats with_global_row_number grand totals (r12 `wall`) | per-bucket totals | PREFIX_BUCKETS (64) rows |
 | stats median_rank_select offsets (r3) | per-bucket counts | PREFIX_BUCKETS (64) rows |
 | windows w_all percent_of_parent | (region, nation) aggregate | #region×#nation |
 | windows rolling 7d revenue ×2 | daily grid | #days (calendar) |
@@ -53,7 +52,7 @@ OPERATORS = Path(__file__).parent.parent / "clickhouse_migrator_spark"
 ALLOWED = {
     "operators/windows.py": 11,
     "operators/aggregates.py": 4,
-    "operators/stats.py": 12,
+    "operators/stats.py": 10,
     "operators/text.py": 1,
     "operators/graph.py": 1,
     "operators/events.py": 7,

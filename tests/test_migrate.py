@@ -319,15 +319,14 @@ def test_unsigned_default_wraps_two_complement(spark, db):
     reference's V1_sequential_dmls.json relies on before its UPDATEs
     overwrite it).  UInt64 stays signed (wrap would overflow BIGINT;
     documented divergence)."""
-    from clickhouse_migrator_spark.ddl import _wrap_unsigned_default
+    from clickhouse_migrator_spark.ddl import _stored_default
 
-    assert _wrap_unsigned_default("UInt32", "-1") == "4294967295"
-    assert _wrap_unsigned_default("UInt16", "-1") == "65535"
-    assert _wrap_unsigned_default("UInt8", "-2") == "254"
-    assert _wrap_unsigned_default("UInt32", "7") == "7"
-    assert _wrap_unsigned_default("UInt64", "-1") == "-1"
-    assert _wrap_unsigned_default("Int32", "-1") == "-1"
-    assert _wrap_unsigned_default("UInt32", None) is None
+    assert _stored_default("UInt32", "-1") == "4294967295"
+    assert _stored_default("UInt16", "-1") == "65535"
+    assert _stored_default("UInt8", "-2") == "254"
+    assert _stored_default("UInt32", "7") == "7"
+    assert _stored_default("UInt64", "-1") == "-1"
+    assert _stored_default("Int32", "-1") == "-1"
 
     spark.catalog.setCurrentDatabase(db)
     try:

@@ -1,17 +1,19 @@
-"""Distributed two-level prefix sum (stats.grid_prefix_sums): exact
-equality with the naive global-window prefix sum at high cardinality —
-the substrate that keeps AUC/KS/Mann-Whitney free of single-partition
-sorts when the score column is continuous."""
+"""Distributed two-level rank substrate (stats.with_global_row_number):
+exact equality with the naive global window — row numbers and running
+sums — at high cardinality, under ties and under duplicate bucket
+boundaries.  A distinct-value grid ordered by its value alone is the
+input AUC/KS/Mann-Whitney/weighted-median use; it keeps them free of
+single-partition sorts when the score column is continuous."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from clickhouse_migrator_spark.operators.stats import grid_prefix_sums
+from clickhouse_migrator_spark.operators.stats import with_global_row_number
 
 
-def test_grid_prefix_sums_match_naive_window_100k(spark):
+def test_with_global_row_number_sums_match_naive_window_100k(spark):
     # 100k distinct pseudo-continuous values — the regime where the
     # distinct-value grid approaches row count
     grid = spark.range(100_000).select(
@@ -19,15 +21,17 @@ def test_grid_prefix_sums_match_naive_window_100k(spark):
         (F.col("id") % 7 + 1).alias("c_a"),
         (F.col("id") % 3).alias("c_b"),
     )
-    fast = grid_prefix_sums(grid, "value", ["c_a", "c_b"])
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
+    fast = with_global_row_number(grid, ["value"], rn_col="rn", sum_cols=["c_a", "c_b"])
+    w = Window.orderBy("value")
+    wf = w.rowsBetween(Window.unboundedPreceding, 0)
     naive = grid.select(
         "value",
-        F.sum("c_a").over(w).alias("cum_c_a"),
-        F.sum("c_b").over(w).alias("cum_c_b"),
+        F.row_number().over(w).alias("rn"),
+        F.sum("c_a").over(wf).alias("cum_c_a"),
+        F.sum("c_b").over(wf).alias("cum_c_b"),
     )
     diff = (
-        fast.select("value", "cum_c_a", "cum_c_b")
+        fast.select("value", "rn", "cum_c_a", "cum_c_b")
         .exceptAll(naive)
         .count()
     )
@@ -35,15 +39,14 @@ def test_grid_prefix_sums_match_naive_window_100k(spark):
     assert fast.count() == 100_000
 
 
-def test_grid_prefix_sums_parallel_window(spark):
+def test_with_global_row_number_parallel_window(spark):
     """The big window must be partitioned (parallel); only the
     n_buckets-row offset window may be global."""
     grid = spark.range(1000).select(
         F.col("id").cast("double").alias("value"), F.lit(1).alias("c")
     )
-    plan = grid_prefix_sums(grid, "value", ["c"])._jdf.queryExecution().executedPlan().toString()
-    # the within-bucket window is partitioned by _bucket
-    assert "partitionBy" not in plan or True  # plan text varies; key check below
+    out = with_global_row_number(grid, ["value"], sum_cols=["c"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") >= 2  # within-bucket + offsets windows exist
 
 
@@ -67,7 +70,7 @@ def test_median_rank_select_matches_percentile_cont(spark):
         assert got == want, (n, got, want)
 
 
-def test_grid_prefix_sums_duplicate_boundaries(spark):
+def test_with_global_row_number_duplicate_boundaries(spark):
     """90% of the mass on one value → percentile_approx returns the
     same boundary many times; the (lo, hi] range-join probe must still
     assign every row to exactly one bucket (duplicate boundaries yield
@@ -79,10 +82,14 @@ def test_grid_prefix_sums_duplicate_boundaries(spark):
         .alias("value"),
         F.lit(1).alias("c"),
     ).groupBy("value").agg(F.sum("c").alias("c"))
-    fast = grid_prefix_sums(grid, "value", ["c"])
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    naive = grid.select("value", F.sum("c").over(w).alias("cum_c"))
-    assert fast.select("value", "cum_c").exceptAll(naive).count() == 0
+    fast = with_global_row_number(grid, ["value"], rn_col="rn", sum_cols=["c"])
+    w = Window.orderBy("value")
+    naive = grid.select(
+        "value",
+        F.row_number().over(w).alias("rn"),
+        F.sum("c").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum_c"),
+    )
+    assert fast.select("value", "rn", "cum_c").exceptAll(naive).count() == 0
     assert fast.count() == grid.count()  # every row in exactly one bucket
 
 
@@ -90,8 +97,6 @@ def test_with_global_row_number_matches_naive(spark):
     """with_global_row_number == row_number() over the same total order,
     including the optional cum_<col> running sums, under first-column
     ties (the composite tiebreak must survive bucketing)."""
-    from clickhouse_migrator_spark.operators.stats import with_global_row_number
-
     df = spark.range(80_000).select(
         (F.col("id") % 997).cast("double").alias("score"),  # heavy ties
         F.col("id").alias("k"),
@@ -114,13 +119,9 @@ def test_with_global_row_number_matches_naive(spark):
 def test_with_totals_equal_separate_aggregates(spark):
     """with_totals / tot_cols (r12): n_total and tot_<col> attached from
     the substrate's 64-row bucket frame must equal the separate
-    df.agg() they replace — on every row, for both substrates,
-    including negative values (descending-order via negated keys)."""
-    from clickhouse_migrator_spark.operators.stats import (
-        grid_prefix_sums,
-        with_global_row_number,
-    )
-
+    df.agg() they replace — on every row, for a row-level order and for
+    a distinct-value grid ordered by its value alone, including
+    negative values (descending-order via negated keys)."""
     df = spark.range(60_000).select(
         (F.col("id") % 1009).cast("double").alias("score"),
         F.col("id").alias("k"),
@@ -150,7 +151,7 @@ def test_with_totals_equal_separate_aggregates(spark):
 
     g = df.groupBy("score").agg(F.sum("c").alias("c"), F.sum("d").alias("d"))
     wantg = g.agg(F.sum("c").alias("tc"), F.sum("d").alias("td")).collect()[0]
-    rg = grid_prefix_sums(g, "score", ["c", "d"], with_totals=True)
+    rg = with_global_row_number(g, ["score"], sum_cols=["c", "d"], with_totals=True)
     gotg = rg.select("tot_c", "tot_d").distinct().collect()
     assert len(gotg) == 1
     assert (gotg[0]["tot_c"], gotg[0]["tot_d"]) == (wantg["tc"], wantg["td"])

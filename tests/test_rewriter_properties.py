@@ -14,10 +14,15 @@ from clickhouse_migrator_spark.functions.select_funcs import (
     _depths,
     _lex_spans,
     _split_top,
-    _string_mask,
     _top_level,
     rewrite_functions,
 )
+
+
+def _span_mask(sql: str) -> list[bool]:
+    """True inside a lexer span: where ``_depths`` reads -1."""
+    return [d < 0 for d in _depths(sql)[: len(sql)]]
+
 
 # building blocks for random-but-balanced SQL expressions
 _IDENTS = st.sampled_from(
@@ -85,7 +90,7 @@ def test_quoted_literals_survive_verbatim(sql):
 @settings(max_examples=300, deadline=None)
 def test_brackets_stay_balanced(sql):
     out = rewrite_functions(sql)
-    mask = _string_mask(out)
+    mask = _span_mask(out)
     depth = 0
     for i, ch in enumerate(out):
         if mask[i]:
@@ -161,7 +166,7 @@ def _reference_mask(sql: str) -> list[bool]:
 @given(st.one_of(_LEX_TEXT, sql_statements()))
 @settings(max_examples=500, deadline=None)
 def test_span_mask_matches_reference_scanner(sql):
-    assert _string_mask(sql) == _reference_mask(sql)
+    assert _span_mask(sql) == _reference_mask(sql)
 
 
 @given(st.one_of(_LEX_TEXT, sql_statements()))
@@ -170,7 +175,7 @@ def test_split_top_rejoins_and_never_splits_a_span(sql):
     parts = _split_top(sql)
     assert ",".join(parts) == sql
     assert parts or sql == ""
-    mask = _string_mask(sql)
+    mask = _span_mask(sql)
     cut = -1
     for p in parts[:-1]:
         cut += len(p) + 1

@@ -15,7 +15,7 @@ import pytest
 
 from clickhouse_migrator_spark import migrate as M
 from clickhouse_migrator_spark.functions.select_funcs import (
-    _string_mask,
+    _depths,
     rewrite_functions,
 )
 from clickhouse_migrator_spark.migrate import execute_and_inflate
@@ -1156,7 +1156,7 @@ def test_format_readable_quantity_top_tier_no_separator(spark):
 
 def test_string_mask_backslash_quote_stays_inside_literal():
     q = r"SELECT 'it\'s data SETTINGS max_threads = 1' AS note, v FROM t"
-    mask = _string_mask(q)
+    mask = [d < 0 for d in _depths(q)]  # -1 marks a lexer span
     lit_start = q.index("'")
     lit_end = q.index("' AS") + 1
     assert all(mask[i] for i in range(lit_start, lit_end))

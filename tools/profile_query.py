@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from clickhouse_migrator_spark.registry import all_specs
 from clickhouse_migrator_spark.session import get_spark
@@ -29,7 +30,11 @@ def _materialize(df) -> None:
 
 
 class P:
-    def __init__(self, sf_dir: str = "/root/testdata/sf0.1", cpus: str = "32"):
+    def __init__(
+        self,
+        sf_dir: str = os.path.join(ROOT, "perfbench", "data", "sf0.1"),
+        cpus: str | None = None,
+    ):
         self.sf_dir = sf_dir
         self.spark = get_spark(app_name="profile", cpus=cpus)
         self.spark.sparkContext.setLogLevel("ERROR")
