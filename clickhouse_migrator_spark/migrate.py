@@ -20,7 +20,8 @@ Spark-native deltas from the reference:
   of the reference's per-call ``init_db``), and the diff is a guard
   pass over those rows (full outer join + three guards + projection,
   reference `migrate.py:26-41`) — the bookkeeping starts no Spark job.
-  Manifest and pending set are local frames.
+  Manifest and pending set are driver rows, and catalog facts come from
+  the session catalog (:func:`_describe_table`: a classic session).
 - ClickHouse async-mutation polling (``pipelined``, reference
   `migrate.py:56-71`) → nothing: Spark actions are synchronous, so the
   sequencing that ``queue_exec=True`` exists to enforce is automatic.
@@ -46,7 +47,8 @@ import os
 import re
 import threading
 import uuid
-from dataclasses import dataclass
+import weakref
+from dataclasses import asdict, dataclass
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -227,7 +229,8 @@ class Migration:
 
 
 def create_db(spark: SparkSession, db_name: str) -> None:
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db_name}`")
+    if not spark.catalog.databaseExists(db_name):
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db_name}`")
 
 
 def init_db(spark: SparkSession, db_name: str) -> None:
@@ -241,48 +244,57 @@ def init_db(spark: SparkSession, db_name: str) -> None:
         _meta(spark, db_name, name)
 
 
-def _describe_table(spark: SparkSession, qual: str) -> dict:
-    """One DESCRIBE TABLE EXTENDED, parsed SECTION-AWARE into
-    ``{"columns": [...], "detail": {...}, "pcols": [...]}``.
+@dataclass(frozen=True)
+class _TableInfo:
+    """A catalog table or view as :func:`_describe_table` reads it;
+    ``path`` is None for a view or a non-file location."""
 
-    Section-awareness matters for correctness, not just tidiness: the
-    old per-helper parses keyed the flat row list by col_name, so a
-    DATA COLUMN literally named ``Location`` or ``Provider`` (schema
-    rows come first) shadowed the metadata row and could route a
-    staged publish to a garbage path (r12 self-review #3).  ``columns``
-    holds the schema rows before the first blank/``#`` row, ``detail``
-    only rows after the ``# Detailed Table Information`` header,
-    ``pcols`` the ordered names between ``# Partition Information`` and
-    the next blank/``#`` row."""
-    columns: list[str] = []
-    detail: dict[str, str] = {}
-    pcols: list[str] = []
-    section = "columns"
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {qual}").collect():
-        name = r.col_name or ""
-        if name == "# Partition Information":
-            section = "partition"
-        elif name == "# Detailed Table Information":
-            section = "detail"
-        elif section == "detail":
-            detail.setdefault(name, r.data_type)
-        elif name == "# col_name":
-            continue
-        elif not name.strip() or name.startswith("#"):
-            section = None
-        elif section == "columns":
-            columns.append(name)
-        elif section == "partition":
-            pcols.append(name)
-    return {"columns": columns, "detail": detail, "pcols": pcols}
+    schema: StructType
+    path: str | None
+    provider: str | None
+    bucketed: bool
+    pcols: list[str]
+    props: dict[str, str]
 
 
-def _table_location(spark: SparkSession, qual: str) -> str | None:
-    """Local-filesystem path of a table's storage location, or None for
-    non-file schemes (HDFS, object stores — where the atomic-rename
-    append doesn't apply and a transactional table format is the
-    production answer, per README)."""
-    return _path_of_location(_describe_table(spark, qual)["detail"].get("Location"))
+#: session -> (its SessionCatalog, SQL parser, a Jackson mapper that
+#: writes Scala values, scala.Tuple5): each ``_jvm.a.b`` segment is a
+#: py4j round trip, so they are fetched once
+_JVM: "weakref.WeakKeyDictionary[SparkSession, tuple]" = weakref.WeakKeyDictionary()
+
+
+def _jvm_helpers(spark: SparkSession) -> tuple:
+    if spark not in _JVM:
+        jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+        scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+        mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        mapper.registerModule(getattr(scala, "MODULE$"))
+        _JVM[spark] = (state.catalog(), state.sqlParser(), mapper, jvm.scala.Tuple5)
+    return _JVM[spark]
+
+
+def _describe_table(spark: SparkSession, qual: str) -> _TableInfo:
+    """Table or view ``qual``'s ``CatalogTable``, read from the session
+    catalog with no SQL statement and no result collect.  The schema
+    comes as its JSON, the rest as one JSON written in the JVM (a py4j
+    walk over a Java map is one round trip per entry).  A missing table
+    raises ``AnalysisException``.  Needs a classic, JVM-backed session."""
+    catalog, parser, mapper, tuple5 = _jvm_helpers(spark)
+    t = catalog.getTempViewOrPermanentTableMetadata(parser.parseTableIdentifier(qual))
+    facts = tuple5(
+        t.storage().locationUri(), t.provider(), t.bucketSpec(),
+        t.partitionColumnNames(), t.properties(),
+    )
+    location, provider, buckets, pcols, props = json.loads(mapper.writeValueAsString(facts))
+    schema = StructType.fromJson(json.loads(t.schema().json()))
+    # a view keeps its definition in ``view.*`` properties
+    props = {k: v for k, v in props.items() if not k.startswith("view.")}
+    path = _path_of_location(location)
+    return _TableInfo(schema, path, provider, buckets is not None, pcols, props)
+
+
+def _table_props(spark: SparkSession, qual: str) -> dict[str, str]:
+    return _describe_table(spark, qual).props
 
 
 def _path_of_location(loc: str | None) -> str | None:
@@ -334,33 +346,33 @@ def _refresh_stale(spark: SparkSession, *metas: _MetaTable) -> None:
 
 def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
     """The handle of metadata table ``name`` of ``db_name``, from one
-    DESCRIBE.  This is the only place such a table is created, widened
-    or located, all from its schema in :data:`_META_SCHEMAS`: a missing
-    table is created (IF NOT EXISTS, so a rival's create is no error),
-    and a table an older build wrote gains the fields it lacks, which
-    its rows read as NULL, their old meaning.  Existence is probed with
-    ``Catalog.tableExists``, which raises nothing: a failed DESCRIBE
-    costs PySpark's exception conversion and an ERROR record with the
-    Java stack trace.  Each entry point resolves the tables it touches
-    once and passes the handle down.  The runner reads and appends
-    these tables as local part files, so any other location is refused:
-    on HDFS or an object store replace them with a transactional table
-    format (README)."""
+    catalog lookup.  This is the only place such a table is created,
+    widened or located, all from its schema in :data:`_META_SCHEMAS`: a
+    missing table is created (IF NOT EXISTS, so a rival's create is no
+    error), and a table an older build wrote gains the fields it lacks,
+    which its rows read as NULL, their old meaning.  Existence is probed
+    with ``SessionCatalog.tableExists``, which raises nothing: a failed
+    lookup costs PySpark's exception conversion.  Each entry point
+    resolves the tables it touches once and passes the handle down.  The
+    runner reads and appends these tables as local part files, so any
+    other location is refused: on HDFS or an object store replace them
+    with a transactional table format (README)."""
     qual = f"`{db_name}`.`{name}`"
-    if not spark.catalog.tableExists(qual):
+    catalog, parser, *_ = _jvm_helpers(spark)
+    if not catalog.tableExists(parser.parseTableIdentifier(qual)):
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {qual} "
             f"({_column_list(_META_SCHEMAS[name].fields)}) USING PARQUET"
         )
     info = _describe_table(spark, qual)
-    path = _path_of_location(info["detail"].get("Location"))
-    if path is None or not os.path.isdir(path):
+    if info.path is None or not os.path.isdir(info.path):
         raise ValueError(
             f"runner metadata table {qual} is not in a local directory; the "
             "runner needs a local-filesystem warehouse for its ledger, claims "
             "and journal"
         )
-    missing = [f for f in _META_SCHEMAS[name].fields if f.name not in info["columns"]]
+    have = info.schema.fieldNames()
+    missing = [f for f in _META_SCHEMAS[name].fields if f.name not in have]
     if missing:
         try:
             # the ALTER refreshes Spark's cached relation itself
@@ -368,7 +380,7 @@ def _meta(spark: SparkSession, db_name: str, name: str) -> _MetaTable:
         except AnalysisException as e:  # a rival runner widened it first
             if e.getCondition() != "COLUMN_ALREADY_EXISTS":
                 raise
-    return _MetaTable(qual, path)
+    return _MetaTable(qual, info.path)
 
 
 def _column_list(fields: list[StructField]) -> str:
@@ -688,10 +700,10 @@ _INSERT_TARGET_RE = re.compile(
 )
 
 
-def _local_parquet_location(detail: dict) -> str | None:
+def _local_parquet_location(info: _TableInfo) -> str | None:
     """Local-filesystem path of an UNBUCKETED PARQUET catalog table,
-    given the ``detail`` section of its :func:`_describe_table`, or
-    None (view, non-parquet provider, HDFS or object-store scheme — the
+    given its :func:`_describe_table`, or None (view, non-parquet
+    provider, HDFS or object-store scheme — the
     staged-append path publishes by ``os.rename``, so it applies only to
     local directories; other targets execute direct).
 
@@ -705,11 +717,9 @@ def _local_parquet_location(detail: dict) -> str | None:
     violate the bucket layout that bucket-pruned reads and shuffle-free
     joins rely on — those targets take the direct-execution fallback
     (at-least-once on crash-before-journal, see README scope note)."""
-    if (detail.get("Provider") or "").lower() != "parquet":
+    if (info.provider or "").lower() != "parquet" or info.bucketed:
         return None
-    if "Num Buckets" in detail:
-        return None
-    return _path_of_location(detail.get("Location"))
+    return info.path
 
 
 #: Spark/Hive's directory name for a NULL partition value
@@ -765,8 +775,8 @@ def _maybe_stage_insert(
     into a local-filesystem parquet table (the caller falls back to
     direct execution).
 
-    One DESCRIBE resolves the target.  A stage intent naming the stage
-    and the target is journaled before the stage exists, so a rerun
+    One catalog lookup resolves the target.  A stage intent naming the
+    stage and the target is journaled before the stage exists, so a rerun
     finds any stage this call leaves behind (:func:`_reconcile_staged`).
     The stage is an empty ``CREATE TABLE … LIKE`` clone of the target —
     same schema and column defaults, with partition
@@ -788,7 +798,7 @@ def _maybe_stage_insert(
     except Exception:
         # unresolvable target: let direct execution raise the user error
         return None
-    dst = _local_parquet_location(info["detail"])
+    dst = _local_parquet_location(info)
     if dst is None:
         return None
     stage_qual = f"`{db_name}`.`{_STAGE_PREFIX}{owner}_{version}_{stmt_index}`"
@@ -865,16 +875,16 @@ def _publish_stage(
 
     ``dst`` is the target's path as :func:`_maybe_stage_insert` resolved
     it; the recovery call from :func:`_reconcile_staged` leaves it None
-    and the target is resolved by name.  The stage's own DESCRIBE gives
+    and the target is resolved by name.  The stage's own lookup gives
     its location and its partition columns, which the ``LIKE`` clone
     took from the target."""
-    sinfo = _describe_table(spark, stage_qual)  # one DESCRIBE: loc + pcols
-    src = _path_of_location(sinfo["detail"].get("Location"))
+    sinfo = _describe_table(spark, stage_qual)
+    src = sinfo.path
     if dst is None:
-        dst = _table_location(spark, target_qual)
+        dst = _describe_table(spark, target_qual).path
     token = stage_qual.rsplit(".", 1)[1].strip("`")[len(_STAGE_PREFIX) :]
     if src is not None and dst is not None and os.path.isdir(src):
-        pcols = sinfo["pcols"]
+        pcols = sinfo.pcols
         rels = _stage_partition_dirs(src, pcols)
         # register EVERY touched partition in ONE batched ALTER before
         # any rename (crash windows stay reconcilable from the surviving
@@ -1044,76 +1054,72 @@ def _local_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> D
 
 
 def manifest_df(spark: SparkSession, migrations: list[Migration]) -> DataFrame:
-    rows = [{"version": m.version, "script": m.script, "md5": m.md5} for m in migrations]
-    return _local_frame(spark, rows, MANIFEST_SCHEMA)
+    return _local_frame(spark, [asdict(m) for m in migrations], MANIFEST_SCHEMA)
 
 
 # ── the diff planner (reference migrate.py:26-41) ────────────────────────────
 
 
-def migrations_to_apply(
-    spark: SparkSession, db_name: str, incoming: DataFrame
-) -> DataFrame:
-    """Driver-side guard pass: ledger vs incoming manifest on ``version``.
+def _pending(ledger: _MetaTable, incoming: list[Migration]) -> list[Migration]:
+    """Driver-side guard pass: the ``ledger``'s rows vs the incoming
+    manifest on ``version``.
 
     Mirrors reference `migrate.py:26-41`, which does the same on a few
     pandas rows: full-outer join, then three validations
     (missing-count guard, deleted-migration guard, edited-migration
     guard), then the pending set = the incoming rows no ledger row
-    matches.  Both sides are a handful of metadata rows, so the join
-    runs in Python over the ledger's part files (:func:`_read_meta_rows`)
-    and ``incoming.collect()`` — no Spark job for a local ``incoming``
-    such as :func:`manifest_df`'s.  The join is row-for-row, so a
-    duplicated ledger row counts twice in the missing-count guard, as
-    it did in the Spark join.  The pending set comes back as a local
-    frame with the manifest's columns."""
-    ledger = _read_meta_rows(
-        _meta(spark, db_name, LEDGER), ["version", "script", "md5"]
-    )
-    if not ledger:
+    matches.  The join is row-for-row, so a duplicated ledger row counts
+    twice in the missing-count guard, as it did in a Spark join."""
+    rows = _read_meta_rows(ledger, ["version", "script", "md5"])
+    if not rows:
         return incoming
-    inc = [
-        {
-            "version": None if r.version is None else int(r.version),
-            "script": r.script,
-            "md5": r.md5,
-        }
-        for r in incoming.collect()
-    ]
-    if not inc or len(inc) < len(ledger):
+    if not incoming or len(incoming) < len(rows):
         raise AssertionError(
             "Migrations have gone missing: "
-            f"ledger has {len(ledger)}, incoming has {len(inc)}"
+            f"ledger has {len(rows)}, incoming has {len(incoming)}"
         )
     # the full outer join on version: (ledger row | None, incoming row |
     # None, ledger md5, incoming md5); a NULL version matches nothing
-    by_version: dict[int, list[dict]] = {}
-    for i in inc:
-        if i["version"] is not None:
-            by_version.setdefault(i["version"], []).append(i)
+    by_version: dict[int, list[Migration]] = {}
+    for i in incoming:
+        if i.version is not None:
+            by_version.setdefault(i.version, []).append(i)
     pairs = []
-    for c in ledger:
+    for c in rows:
         pairs += [(c, i) for i in by_version.get(c["version"], [])] or [(c, None)]
-    ledgered = {c["version"] for c in ledger}
-    pairs += [(None, i) for i in inc if i["version"] is None or i["version"] not in ledgered]
-    joined = [(c, i, c["md5"] if c else None, i["md5"] if i else None) for c, i in pairs]
+    ledgered = {c["version"] for c in rows}
+    pairs += [(None, i) for i in incoming if i.version is None or i.version not in ledgered]
+    joined = [(c, i, c["md5"] if c else None, i.md5 if i else None) for c, i in pairs]
 
     missing = [c["script"] for c, _, cm, im in joined if cm is not None and im is None]
     if missing:
         raise AssertionError(f"Migrations deleted from codebase but already run: {missing}")
-    bad = [i["script"] for _, i, cm, im in joined if None not in (cm, im) and cm != im]
+    bad = [i.script for _, i, cm, im in joined if None not in (cm, im) and cm != im]
     if bad:
         raise AssertionError(f"Do not edit migrations once run: {bad}")
-    pending = [
-        {
-            "version": c["version"] if c else i["version"],
-            "script": i["script"] if i else None,
-            "md5": im,
-        }
+    return [
+        Migration(c["version"] if c else i.version, i.script if i else None, im)
         for c, i, cm, im in joined
         if cm is None
     ]
-    return _local_frame(spark, pending, MANIFEST_SCHEMA)
+
+
+def _migrations(df: DataFrame) -> list[Migration]:
+    return [
+        Migration(None if r.version is None else int(r.version), r.script, r.md5)
+        for r in df.collect()
+    ]
+
+
+def migrations_to_apply(
+    spark: SparkSession, db_name: str, incoming: DataFrame
+) -> DataFrame:
+    """The pending set of the manifest frame ``incoming`` against the
+    ledger (:func:`_pending`), as a local frame with the manifest's
+    columns — the frame form of the diff :func:`migrate` runs on driver
+    rows."""
+    pending = _pending(_meta(spark, db_name, LEDGER), _migrations(incoming))
+    return _local_frame(spark, [asdict(m) for m in pending], MANIFEST_SCHEMA)
 
 
 # ── copy-on-write DML execution (SURVEY.md §2.C C2-C3) ───────────────────────
@@ -1269,16 +1275,16 @@ def _swap_overwrite(spark: SparkSession, table: str, df: DataFrame) -> None:
 
     The recorded ``clickhouse.*`` layout/engine properties are carried
     over — every mutation path flows through here, and OPTIMIZE's
-    dedupe/compaction decisions depend on them surviving.  Props are
-    copied onto the TEMP table *before* the old table is dropped, so a
-    crash in the DROP→RENAME window loses nothing: the complete new
-    table (data + properties) sits under ``__cow_<t>`` and
-    :func:`recover_cow` finishes the rename.  A crash anywhere earlier
-    leaves the user-visible table untouched and :func:`recover_cow`
-    rolls the orphan back.
+    dedupe/compaction decisions depend on them surviving.  The TEMP
+    table is created with its props in the statement that writes it, so
+    it never stands without them, and a crash in the DROP→RENAME window
+    loses nothing: the complete new table (data + properties) sits under
+    ``__cow_<t>`` and :func:`recover_cow` finishes the rename.  A crash
+    anywhere earlier leaves the user-visible table untouched and
+    :func:`recover_cow` rolls the orphan back.
 
-    Under :func:`apply_migration` the same ALTER also stamps a fresh
-    swap id on the temp, and a swap intent naming the statement, the
+    Under :func:`apply_migration` the temp is also created wearing a
+    fresh swap id, and a swap intent naming the statement, the
     table and that id is journaled before the DROP (see _INFLIGHT): if
     the run dies after the RENAME but before the statement's commit row,
     the next run finds the id on the live table and journals the
@@ -1286,23 +1292,22 @@ def _swap_overwrite(spark: SparkSession, table: str, df: DataFrame) -> None:
     qual = _qualify(spark, table)
     db, t = qual.split(".", 1)
     props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {qual}").collect()
+        k: v
+        for k, v in _table_props(spark, qual).items()
         # a swap stamp (or an earlier build's leaked marker) belongs to
         # the swap that wrote it and must never ride onto a later one
-        if r["key"].startswith("clickhouse.")
-        and r["key"] not in (_COW_SWAP_PROP, *_COW_MARKER_PROPS)
+        if k.startswith("clickhouse.") and k not in (_COW_SWAP_PROP, *_COW_MARKER_PROPS)
     }
     tmp = f"{db}.`__cow_{t.strip('`')}`"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    df.write.mode("overwrite").format("parquet").saveAsTable(tmp.replace("`", ""))
     journal = getattr(_INFLIGHT, "journal", None)
     swap_id = None if journal is None else uuid.uuid4().hex
     if swap_id is not None:
         props[_COW_SWAP_PROP] = swap_id
-    if props:
-        kv = ", ".join(f"'{k}' = '{_sq(v)}'" for k, v in props.items())
-        spark.sql(f"ALTER TABLE {tmp} SET TBLPROPERTIES ({kv})")
+    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+    writer = df.writeTo(tmp).using("parquet")
+    for k, v in props.items():
+        writer = writer.tableProperty(k, v)
+    writer.create()
     if swap_id is not None:
         i = _INFLIGHT
         _append_swap_intent(journal, i.version, i.stmt, i.md5, i.owner, qual, swap_id)
@@ -1521,12 +1526,6 @@ def _with_tblproperties(sql: str, props: dict[str, str]) -> str:
             return sql[: m.end()] + kv + ("" if rest.lstrip().startswith(")") else ", ") + rest
         return f"{sql[: m.start()]}TBLPROPERTIES ({kv}) {sql[m.start() :]}"
     return f"{sql} TBLPROPERTIES ({kv})"
-
-
-def _table_props(spark: SparkSession, qual: str) -> dict[str, str]:
-    return {
-        r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {qual}").collect()
-    }
 
 
 # ClickHouse partition-key functions → Spark column expressions.  The
@@ -2059,183 +2058,177 @@ def apply_migration(
     journaled progress — the documented whole-script rerun semantics
     for edited scripts.
     """
-    # a Python sort: ``orderBy`` starts 3 Spark jobs even on a few rows
-    pending = sorted(migrations.collect(), key=lambda r: r.version)
+    return _apply(spark, db_name, _migrations(migrations))
+
+
+def _apply(
+    spark: SparkSession, db_name: str, pending: list[Migration], ledger: _MetaTable | None = None
+) -> int:
+    """:func:`apply_migration` over driver rows, with the ledger handle
+    the caller resolved, if any."""
     if not pending:
         return 0
-    ledger, claims, journal = (_meta(spark, db_name, t) for t in (LEDGER, CLAIMS, JOURNAL))
+    ledger = ledger or _meta(spark, db_name, LEDGER)
+    claims, journal = (_meta(spark, db_name, t) for t in (CLAIMS, JOURNAL))
     try:
-        return _apply_pending(spark, db_name, pending, ledger, claims, journal)
+        # self-heal first: a run that died between a swap's RENAME and its
+        # journal append (a crash OR a plain append failure, ADVICE r10)
+        # left an intent whose swap happened — journal the completed
+        # mutation late so this run resumes after it.  Only a pending
+        # version can own such an intent, so a call with nothing pending
+        # (returned above) has nothing to heal.
+        _reconcile_live_markers(spark, journal)
+        applied = 0
+        owner = uuid.uuid4().hex
+        for row in sorted(pending, key=lambda m: m.version):
+            version = row.version
+            # ── concurrent-runner guard (VERDICT r6 #3) ──────────────────
+            # Claim the version BEFORE executing; refuse if any other claim
+            # is visible.  Claim append + read are serialized in-process by
+            # _CLAIM_LOCK (exact for same-driver races); across processes
+            # the durable-before-visible append makes the guard at-most-one
+            # (two racers can both refuse — rerun applies).
+            # one fresh claim_id per (runner, version) claim; its tombstone
+            # releases exactly this row and can never shadow a future claim
+            claim_id = uuid.uuid4().hex
+
+            def _release_own_claim_locked() -> None:
+                # append-only release: a tombstone row (released = true)
+                # carrying OUR claim_id.  No table rewrite — the old
+                # DROP/RENAME release window destroyed rival claims
+                # appended mid-swap and could serve a rival's read a
+                # FileNotFound (ADVICE r7); an atomic-rename append races
+                # nothing and a rival's rows are physically untouched.
+                _append_claim_row(
+                    spark, claims, version, owner, released=True, claim_id=claim_id
+                )
+
+            with _CLAIM_LOCK:
+                # every guard read lists the metadata tables' files afresh
+                # (_read_meta_rows), so a rival runner's appends through its
+                # OWN SparkSession are visible
+                if version in _ledgered_versions(ledger):
+                    # another runner applied it between our diff and now
+                    _log.info("Skipping V%s: already applied by a concurrent runner", version)
+                    continue
+                _append_claim_row(
+                    spark, claims, version, owner, released=False, claim_id=claim_id
+                )
+                rivals = any(
+                    c["version"] == version and c["owner"] not in (owner, None)
+                    for c in _live_claim_rows(
+                        _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
+                    )
+                )
+                if rivals:
+                    # release OWN claim before refusing: both racers may
+                    # refuse (the documented cross-process outcome), and
+                    # neither may leave a row that blocks the rerun
+                    _release_own_claim_locked()
+                else:
+                    # cross-process close: a rival may have finished and
+                    # RELEASED between our first ledger check and the
+                    # rivals read (its claim is gone, its ledger row is
+                    # durable-before-visible) — re-check the ledger now
+                    # that we hold the winning claim
+                    if version in _ledgered_versions(ledger):
+                        _release_own_claim_locked()
+                        _log.info(
+                            "Skipping V%s: already applied by a concurrent runner", version
+                        )
+                        continue
+            if rivals:
+                raise ConcurrentMigrationError(
+                    f"migration V{version} is claimed by another runner "
+                    f"(claims table `{db_name}`.`{CLAIMS}`; if that runner "
+                    "crashed, clear with migrate.clear_claims())"
+                )
+            try:
+                stmts = _parse_script(row.script)
+                # ── statement-level journal (VERDICT r9 #1) ──────────────
+                # a rerun of the SAME script (same md5) resumes after the
+                # last journaled statement instead of re-executing the
+                # whole script; an EDITED script (md5 mismatch) discards
+                # the journaled progress and keeps the documented
+                # whole-script rerun semantics (indices no longer
+                # correspond after an edit)
+                rows = _read_journal_rows(journal)
+                done, stale = _journaled_stmts(journal, version, row.md5, rows)
+                # publish journal-committed insert stages a crash orphaned
+                # (their statements are in `done` and will be skipped) and
+                # drop uncommitted ones (their statements re-execute clean)
+                _reconcile_staged(spark, rows, version, row.md5)
+                if stale:
+                    _log.warning(
+                        "V%s: discarding journaled progress from an earlier run "
+                        "of a DIFFERENT script body (edited after the failure) — "
+                        "re-executing from the first statement",
+                        version,
+                    )
+                if done:
+                    _log.info(
+                        "V%s: resuming — statements %s already journaled as applied",
+                        version, sorted(done),
+                    )
+                _INFLIGHT.version, _INFLIGHT.md5 = version, row.md5
+                _INFLIGHT.journal, _INFLIGHT.owner = journal, owner
+                try:
+                    for i, stmt in enumerate(stmts):
+                        if i in done:
+                            continue
+                        _INFLIGHT.stmt = i
+                        _crash_point("before_stmt")
+                        # INSERTs run STAGED (VERDICT r10 #1): rows land in
+                        # a hidden stage table and become visible only
+                        # after the journal append below — the journal row
+                        # is the commit point, so a crash on either side of
+                        # it reconciles to exactly-once on rerun
+                        # (_reconcile_staged).  COW mutations are
+                        # exactly-once via their swap intent (the next run
+                        # journals late); everything else executes direct.
+                        staged = _maybe_stage_insert(
+                            spark, db_name, journal, stmt, version, i, row.md5, owner
+                        )
+                        if staged is None:
+                            execute_statement(spark, stmt)
+                        # effects durable (or staged): the commit row
+                        _crash_point("after_stmt")
+                        _append_journal_row(
+                            spark, journal, version, i, row.md5, owner
+                        )
+                        _crash_point("after_journal")
+                        if staged is not None:
+                            _publish_stage(spark, *staged)
+                finally:
+                    vars(_INFLIGHT).clear()
+                _append_ledger_row(spark, ledger, version, row.md5, row.script)
+                # the version's journal rows are dead weight now that its
+                # ledger row is durable — compact them so the journal stays
+                # bounded across N migrations (VERDICT r10 #6).  Whole-file
+                # removal + the listing-tolerant reader make this safe
+                # against rival runners (see compact_journal).
+                with _CLAIM_LOCK:
+                    _compact_journal(journal, ledger)
+            except BaseException:
+                # a FAILED statement releases the claim (the runner is
+                # alive and fail-stop is the contract — the rerun must be
+                # able to re-execute the script, SURVEY §4); only a CRASH
+                # leaves a stale claim, for clear_claims().  A release
+                # failure must never MASK the statement error the user
+                # needs to fix the script.
+                try:
+                    with _CLAIM_LOCK:
+                        _release_own_claim_locked()
+                except Exception:
+                    pass
+                raise
+            with _CLAIM_LOCK:
+                _release_own_claim_locked()
+            _log.info("Applied migration V%s: %s", version, os.path.basename(row.script))
+            applied += 1
+        return applied
     finally:
         _refresh_stale(spark, ledger, claims, journal)
-
-
-def _apply_pending(
-    spark: SparkSession,
-    db_name: str,
-    pending: list,
-    ledger: _MetaTable,
-    claims: _MetaTable,
-    journal: _MetaTable,
-) -> int:
-    """:func:`apply_migration`'s loop over the ``pending`` rows, sorted,
-    with the metadata handles it resolved."""
-    # self-heal first: a run that died between a swap's RENAME and its
-    # journal append (a crash OR a plain append failure, ADVICE r10)
-    # left an intent whose swap happened — journal the completed
-    # mutation late so this run resumes after it.  Only a pending
-    # version can own such an intent, so a call with nothing pending
-    # (returned above) has nothing to heal.
-    _reconcile_live_markers(spark, journal)
-    applied = 0
-    owner = uuid.uuid4().hex
-    for row in pending:
-        version = int(row.version)
-        # ── concurrent-runner guard (VERDICT r6 #3) ──────────────────
-        # Claim the version BEFORE executing; refuse if any other claim
-        # is visible.  Claim append + read are serialized in-process by
-        # _CLAIM_LOCK (exact for same-driver races); across processes
-        # the durable-before-visible append makes the guard at-most-one
-        # (two racers can both refuse — rerun applies).
-        # one fresh claim_id per (runner, version) claim; its tombstone
-        # releases exactly this row and can never shadow a future claim
-        claim_id = uuid.uuid4().hex
-
-        def _release_own_claim_locked() -> None:
-            # append-only release: a tombstone row (released = true)
-            # carrying OUR claim_id.  No table rewrite — the old
-            # DROP/RENAME release window destroyed rival claims
-            # appended mid-swap and could serve a rival's read a
-            # FileNotFound (ADVICE r7); an atomic-rename append races
-            # nothing and a rival's rows are physically untouched.
-            _append_claim_row(
-                spark, claims, version, owner, released=True, claim_id=claim_id
-            )
-
-        with _CLAIM_LOCK:
-            # every guard read lists the metadata tables' files afresh
-            # (_read_meta_rows), so a rival runner's appends through its
-            # OWN SparkSession are visible
-            if version in _ledgered_versions(ledger):
-                # another runner applied it between our diff and now
-                _log.info("Skipping V%s: already applied by a concurrent runner", version)
-                continue
-            _append_claim_row(
-                spark, claims, version, owner, released=False, claim_id=claim_id
-            )
-            rivals = any(
-                c["version"] == version and c["owner"] not in (owner, None)
-                for c in _live_claim_rows(
-                    _read_meta_rows(claims, CLAIMS_SCHEMA.fieldNames())
-                )
-            )
-            if rivals:
-                # release OWN claim before refusing: both racers may
-                # refuse (the documented cross-process outcome), and
-                # neither may leave a row that blocks the rerun
-                _release_own_claim_locked()
-            else:
-                # cross-process close: a rival may have finished and
-                # RELEASED between our first ledger check and the
-                # rivals read (its claim is gone, its ledger row is
-                # durable-before-visible) — re-check the ledger now
-                # that we hold the winning claim
-                if version in _ledgered_versions(ledger):
-                    _release_own_claim_locked()
-                    _log.info(
-                        "Skipping V%s: already applied by a concurrent runner", version
-                    )
-                    continue
-        if rivals:
-            raise ConcurrentMigrationError(
-                f"migration V{version} is claimed by another runner "
-                f"(claims table `{db_name}`.`{CLAIMS}`; if that runner "
-                "crashed, clear with migrate.clear_claims())"
-            )
-        try:
-            stmts = _parse_script(row.script)
-            # ── statement-level journal (VERDICT r9 #1) ──────────────
-            # a rerun of the SAME script (same md5) resumes after the
-            # last journaled statement instead of re-executing the
-            # whole script; an EDITED script (md5 mismatch) discards
-            # the journaled progress and keeps the documented
-            # whole-script rerun semantics (indices no longer
-            # correspond after an edit)
-            rows = _read_journal_rows(journal)
-            done, stale = _journaled_stmts(journal, version, row.md5, rows)
-            # publish journal-committed insert stages a crash orphaned
-            # (their statements are in `done` and will be skipped) and
-            # drop uncommitted ones (their statements re-execute clean)
-            _reconcile_staged(spark, rows, version, row.md5)
-            if stale:
-                _log.warning(
-                    "V%s: discarding journaled progress from an earlier run "
-                    "of a DIFFERENT script body (edited after the failure) — "
-                    "re-executing from the first statement",
-                    version,
-                )
-            if done:
-                _log.info(
-                    "V%s: resuming — statements %s already journaled as applied",
-                    version, sorted(done),
-                )
-            _INFLIGHT.version, _INFLIGHT.md5 = version, row.md5
-            _INFLIGHT.journal, _INFLIGHT.owner = journal, owner
-            try:
-                for i, stmt in enumerate(stmts):
-                    if i in done:
-                        continue
-                    _INFLIGHT.stmt = i
-                    _crash_point("before_stmt")
-                    # INSERTs run STAGED (VERDICT r10 #1): rows land in
-                    # a hidden stage table and become visible only
-                    # after the journal append below — the journal row
-                    # is the commit point, so a crash on either side of
-                    # it reconciles to exactly-once on rerun
-                    # (_reconcile_staged).  COW mutations are
-                    # exactly-once via their swap intent (the next run
-                    # journals late); everything else executes direct.
-                    staged = _maybe_stage_insert(
-                        spark, db_name, journal, stmt, version, i, row.md5, owner
-                    )
-                    if staged is None:
-                        execute_statement(spark, stmt)
-                    # effects durable (or staged): the commit row
-                    _crash_point("after_stmt")
-                    _append_journal_row(
-                        spark, journal, version, i, row.md5, owner
-                    )
-                    _crash_point("after_journal")
-                    if staged is not None:
-                        _publish_stage(spark, *staged)
-            finally:
-                vars(_INFLIGHT).clear()
-            _append_ledger_row(spark, ledger, version, row.md5, row.script)
-            # the version's journal rows are dead weight now that its
-            # ledger row is durable — compact them so the journal stays
-            # bounded across N migrations (VERDICT r10 #6).  Whole-file
-            # removal + the listing-tolerant reader make this safe
-            # against rival runners (see compact_journal).
-            with _CLAIM_LOCK:
-                _compact_journal(journal, ledger)
-        except BaseException:
-            # a FAILED statement releases the claim (the runner is
-            # alive and fail-stop is the contract — the rerun must be
-            # able to re-execute the script, SURVEY §4); only a CRASH
-            # leaves a stale claim, for clear_claims().  A release
-            # failure must never MASK the statement error the user
-            # needs to fix the script.
-            try:
-                with _CLAIM_LOCK:
-                    _release_own_claim_locked()
-            except Exception:
-                pass
-            raise
-        with _CLAIM_LOCK:
-            _release_own_claim_locked()
-        _log.info("Applied migration V%s: %s", version, os.path.basename(row.script))
-        applied += 1
-    return applied
 
 
 def migrate(
@@ -2246,17 +2239,19 @@ def migrate(
     queue_exec: bool = True,
 ) -> int:
     """Top-level orchestrator (reference `migrate.py:79-88`): optional
-    db bootstrap → scan → diff → apply; each metadata table is created
-    where it is first needed (:func:`_meta`), the ledger by the diff and
-    the claims and journal by the apply.  Returns the number applied."""
+    db bootstrap → scan → diff → apply, planned on driver rows (the
+    manifest and the ledger's rows meet in :func:`_pending`; no Spark
+    frame is built).  Each metadata table is created where it is first
+    needed (:func:`_meta`), the ledger by the diff and the claims and
+    journal by the apply.  Returns the number applied."""
     if create_db_if_no_exists:
         create_db(spark, db_name)
     prev_db = spark.catalog.currentDatabase()
     spark.catalog.setCurrentDatabase(db_name)
     try:
-        manifest = manifest_df(spark, scan_migrations(migrations_home))
-        pending = migrations_to_apply(spark, db_name, manifest)
-        return apply_migration(spark, db_name, pending, queue_exec=queue_exec)
+        ledger = _meta(spark, db_name, LEDGER)
+        pending = _pending(ledger, scan_migrations(migrations_home))
+        return _apply(spark, db_name, pending, ledger)
     finally:
         spark.catalog.setCurrentDatabase(prev_db)
 
@@ -2288,27 +2283,23 @@ def _system_view(spark: SparkSession, which: str) -> str:
     reference inflates the same query results into pandas), never data-
     bearing scans."""
     name = f"__system_{which.lower()}"
-    if which == "tables":
+    if which in ("tables", "columns"):
         rows = []
         for db in spark.catalog.listDatabases():
             for t in spark.catalog.listTables(db.name):
                 if t.name.startswith("__") or t.database is None:
                     continue
-                props = _table_props(spark, f"`{db.name}`.`{t.name}`")
-                rows.append(
-                    (db.name, t.name, props.get("clickhouse.engine", t.tableType or ""))
-                )
-        df = spark.createDataFrame(rows, "database string, name string, engine string")
-    elif which == "columns":
-        rows = []
-        for db in spark.catalog.listDatabases():
-            for t in spark.catalog.listTables(db.name):
-                if t.name.startswith("__") or t.database is None:
-                    continue
-                for c in spark.catalog.listColumns(f"`{db.name}`.`{t.name}`"):
-                    rows.append((db.name, t.name, c.name, c.dataType))
+                info = _describe_table(spark, f"`{db.name}`.`{t.name}`")
+                key = (db.name, t.name)
+                if which == "tables":
+                    rows.append((*key, info.props.get("clickhouse.engine", t.tableType or "")))
+                else:
+                    rows += [(*key, f.name, f.dataType.simpleString()) for f in info.schema]
         df = spark.createDataFrame(
-            rows, "database string, table string, name string, type string"
+            rows,
+            "database string, name string, engine string"
+            if which == "tables"
+            else "database string, table string, name string, type string",
         )
     else:  # mutations: Spark statements are synchronous — every
         # mutation is complete before control returns, so the poll

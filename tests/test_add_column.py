@@ -126,7 +126,7 @@ def test_literal_defaults_direct_on_partitioned_table(spark, db):
         (1, "a", "it's", -3, 4294967295, None, None),
         (2, "b", "it's", -3, 4294967295, None, None),
     ]
-    assert M._describe_table(spark, f"`{db}`.`tp`")["pcols"] == ["p"]
+    assert M._describe_table(spark, f"`{db}`.`tp`").pcols == ["p"]
     assert M._CREATE_STAMP_PROP not in M._table_props(spark, f"`{db}`.`tp`")
 
 

@@ -761,7 +761,7 @@ def test_create_only_version_starts_no_bookkeeping_jobs(
         stage = re.search(r"`[^`]+`\.`" + M._STAGE_PREFIX + r"[^`]+`", sql)
         if stage is not None:
             qual = stage.group(0)
-            stages.append((M._describe_table(sess, qual)["pcols"], M._table_props(sess, qual)))
+            stages.append((M._describe_table(sess, qual).pcols, M._table_props(sess, qual)))
         return out
 
     def counted(sess, sql):
@@ -846,7 +846,7 @@ def test_noop_migrate_catalog_calls_do_not_grow_with_tables(
 def test_describes_per_version_do_not_grow_with_statements(spark, db, tmp_path, monkeypatch):
     """The runner looks up its metadata tables' locations once per
     call: a version of three CREATEs asks the catalog as often as a
-    version of one (no DESCRIBE per journal read or append).  Nor does
+    version of one (no lookup per journal read or append).  Nor does
     it refresh a metadata table per append: each table it appended to
     is refreshed once, when the call returns.  It lists no tables, and
     a CREATE sets its properties in its own statement (no ALTER).  The
@@ -917,8 +917,8 @@ def _count_catalog_calls(spark, monkeypatch):
 @pytest.mark.usefixtures("ledger_db")
 def test_noop_migrate_creates_nothing(spark, db, monkeypatch):
     """On an initialised database a noop migrate() bootstraps nothing:
-    no CREATE TABLE, no schema read, and one DESCRIBE, the ledger's,
-    for the diff."""
+    no CREATE TABLE, no schema read, and one catalog lookup, the
+    ledger's, for the diff."""
     home = f"{FIXTURES}/migrations_mixed"
     assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 2
     seen = _count_catalog_calls(spark, monkeypatch)
@@ -929,8 +929,8 @@ def test_noop_migrate_creates_nothing(spark, db, monkeypatch):
 @pytest.mark.usefixtures("ledger_db")
 def test_compaction_reuses_the_runners_handles(spark, db, tmp_path, monkeypatch):
     """A version op resolves each metadata table once: the ledger for
-    the diff, then the ledger, claims and journal for the apply, whose
-    compaction after the ledger append reuses those handles."""
+    the diff, whose handle the apply reuses with the claims and journal
+    it resolves, and so does the compaction after the ledger append."""
     from collections import Counter
 
     home = _write_migrations(
@@ -940,10 +940,96 @@ def test_compaction_reuses_the_runners_handles(spark, db, tmp_path, monkeypatch)
     assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
     meta = {f"`{db}`.`{t}`" for t in (M.LEDGER, M.CLAIMS, M.JOURNAL)}
     assert Counter(q for q in seen["describe"] if q in meta) == {
-        f"`{db}`.`{M.LEDGER}`": 2,
+        f"`{db}`.`{M.LEDGER}`": 1,
         f"`{db}`.`{M.CLAIMS}`": 1,
         f"`{db}`.`{M.JOURNAL}`": 1,
     }
+
+
+def _count_statements(monkeypatch):
+    """Counts of ``SparkSession.sql`` statements by their first two
+    words, and of ``SparkSession.createDataFrame`` calls, from now on."""
+    from collections import Counter
+
+    from pyspark.sql import SparkSession
+
+    calls: Counter = Counter()
+    sql, frame = SparkSession.sql, SparkSession.createDataFrame
+
+    def counted_sql(self, q, *a, **k):
+        calls[" ".join(q.split()[:2]).upper()] += 1
+        return sql(self, q, *a, **k)
+
+    def counted_frame(self, *a, **k):
+        calls["createDataFrame"] += 1
+        return frame(self, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    monkeypatch.setattr(SparkSession, "createDataFrame", counted_frame)
+    return calls
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_noop_migrate_runs_no_statement_and_builds_no_frame(spark, db, monkeypatch):
+    """A noop migrate() plans on driver rows and reads the catalog
+    through the session catalog: no SQL statement (the database probe
+    included) and no local DataFrame."""
+    home = f"{FIXTURES}/migrations_mixed"
+    assert M.migrate(spark, db, home) == 2
+    calls = _count_statements(monkeypatch)
+    assert M.migrate(spark, db, home) == 0
+    assert calls == {}
+
+
+@pytest.mark.usefixtures("ledger_db")
+def test_version_op_issues_no_describe_or_property_listing(spark, db, tmp_path, monkeypatch):
+    """A version that creates a table, runs a staged INSERT into it and
+    a copy-on-write UPDATE on it reads every catalog fact through the
+    lookup: no DESCRIBE and no SHOW TBLPROPERTIES statement.  The
+    UPDATE's swap creates its temp with the table's properties, so its
+    one ALTER is the RENAME."""
+    home = _write_migrations(
+        tmp_path,
+        {
+            "V1__ops.json": json.dumps(
+                [
+                    "CREATE TABLE t_ops (k Int64, v Int64) ENGINE = ReplacingMergeTree ORDER BY k",
+                    "INSERT INTO t_ops VALUES (1, 10), (2, 20)",
+                    "ALTER TABLE t_ops UPDATE v = v + 1 WHERE k = 1",
+                ]
+            )
+        },
+    )
+    calls = _count_statements(monkeypatch)
+    assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+    listed = {k for k in calls if k.startswith(("DESCRIBE", "SHOW"))}
+    assert listed == set(), calls
+    assert calls["ALTER TABLE"] == 1, calls
+    assert sorted((r.k, r.v) for r in spark.table(f"`{db}`.t_ops").collect()) == [
+        (1, 11),
+        (2, 20),
+    ]
+    assert M._table_props(spark, f"`{db}`.`t_ops`")["clickhouse.engine"] == "ReplacingMergeTree"
+
+
+def test_perfbench_runner_layers_name_migrate_attributes():
+    """``perfbench/run.py --trace 1`` wraps each attribute its
+    ``RUNNER_LAYERS`` names on the runner module; a renamed or removed
+    one would crash the traced run."""
+    import ast
+
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", "run.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    layers = next(
+        ast.literal_eval(node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "RUNNER_LAYERS" for t in node.targets)
+    )
+    names = [a for attrs in layers.values() for a in attrs]
+    assert "_describe_table" in names
+    assert [a for a in names if not callable(getattr(M, a, None))] == []
 
 
 def test_fresh_database_gets_its_metadata_tables_on_first_need(spark, tmp_path):
@@ -965,7 +1051,8 @@ def test_fresh_database_gets_its_metadata_tables_on_first_need(spark, tmp_path):
 
 def test_first_migrate_on_fresh_database_logs_no_error(spark, tmp_path):
     """A missing metadata table is found without an exception: a failed
-    DESCRIBE costs PySpark's exception conversion and logs an ERROR
+    lookup costs PySpark's exception conversion, and a failed DESCRIBE
+    logs an ERROR
     record with the Java stack trace (``SQLQueryContextLogger``), one
     per metadata table of a fresh database."""
     import logging
@@ -1285,51 +1372,42 @@ def test_apply_releases_use_fresh_claim_ids(spark, db, tmp_path, request):
 # ── table location URIs are percent-decoded ──────────────────────────────────
 
 
-def test_table_location_unquotes_percent_escapes(spark, tmp_path, monkeypatch):
-    # faked DESCRIBE output must carry the section header: since the
-    # r12 section-aware parse, a Location row is only metadata when it
-    # appears AFTER '# Detailed Table Information' (a data column named
-    # 'Location' no longer shadows it)
-    def _row(name, dtype):
-        r = type("_Row", (), {})()
-        r.col_name, r.data_type = name, dtype
-        return r
+def test_table_location_unquotes_percent_escapes(spark, db, tmp_path):
+    """The catalog keeps a LOCATION as a URI, which percent-escapes a
+    space; the lookup gives the real directory, and a staged INSERT
+    publishes into it.  A metadata table outside a local directory (a
+    non-file scheme, or a location that is no directory) is refused."""
+    loc = tmp_path / "Application Support" / "t"
+    loc.mkdir(parents=True)
+    spark.sql(f"CREATE TABLE `{db}`.t_space (k BIGINT) USING PARQUET LOCATION '{loc}'")
+    info = M._describe_table(spark, f"`{db}`.`t_space`")
+    assert info.path == M._local_parquet_location(info) == str(loc)
+    published = []
+    publish = M._publish_stage
 
-    rows = [
-        _row("k", "bigint"),
-        _row("# Detailed Table Information", ""),
-        _row("Location", "file:/tmp/Application%20Support/wh/t"),
-        _row("Provider", "parquet"),
-    ]
-    monkeypatch.setattr(
-        M.SparkSession, "sql", lambda self, q: _FakeDF(rows), raising=False
-    )
-    # the faked catalog holds the table: _meta's existence probe says so
-    from pyspark.sql.catalog import Catalog
+    def recorded(sess, stage_qual, target_qual, dst=None):
+        published.append(dst)
+        publish(sess, stage_qual, target_qual, dst)
 
-    monkeypatch.setattr(Catalog, "tableExists", lambda self, *a, **k: True)
-
-    class _FakeDF:
-        def __init__(self, rows):
-            self._rows = rows
-
-        def collect(self):
-            return self._rows
-
-    assert (
-        M._table_location(spark, "`x`.`t`")
-        == "/tmp/Application Support/wh/t"
-    )
-    assert (
-        M._local_parquet_location(M._describe_table(spark, "`x`.`t`")["detail"])
-        == "/tmp/Application Support/wh/t"
-    )
-    # an object-store location has no local path, and the runner refuses
-    # to keep its metadata tables there
-    rows[2] = _row("Location", "s3a://bucket/wh/t")
-    assert M._table_location(spark, "`x`.`t`") is None
-    with pytest.raises(ValueError, match="`x`.`t`"):
-        M._meta(spark, "x", "t")
+    home = _write_migrations(tmp_path, {"V1__i.sql": "INSERT INTO t_space VALUES (7)"})
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(M, "_publish_stage", recorded)
+        assert M.migrate(spark, db, home, create_db_if_no_exists=False) == 1
+    assert published == [str(loc)]
+    assert [r.k for r in spark.table(f"`{db}`.t_space").collect()] == [7]
+    assert any(f.startswith("part-stmt-") for f in os.listdir(loc))
+    assert M._path_of_location("s3a://bucket/wh/t") is None
+    other = "testdb_" + uuid.uuid4().hex[:8]
+    M.create_db(spark, other)
+    try:
+        spark.sql(
+            f"CREATE TABLE `{other}`.`{M.CLAIMS}` (version BIGINT) USING PARQUET "
+            f"LOCATION '{tmp_path / 'gone'}'"
+        )
+        with pytest.raises(ValueError, match=M.CLAIMS):
+            M._meta(spark, other, M.CLAIMS)
+    finally:
+        spark.sql(f"DROP DATABASE `{other}` CASCADE")
 
 
 # ── ALTER UPDATE/DELETE validate column names case-sensitively ───────────────

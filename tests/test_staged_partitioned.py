@@ -146,7 +146,7 @@ def test_append_into_existing_partition_merges_files(spark, db, tmp_path):
     assert _rows(spark, db) == [(0, 5, "a"), (1, 10, "a"), (2, 20, "b")]
     # pruning still works on the merged layout: one partition's files only
     assert spark.table(f"`{db}`.pt").filter(F.col("d") == "a").count() == 2
-    loc = M._table_location(spark, f"`{db}`.`pt`")
+    loc = M._describe_table(spark, f"`{db}`.`pt`").path
     staged_files = [
         f for f in os.listdir(os.path.join(loc, "d=a")) if f.startswith("part-stmt-")
     ]
@@ -267,11 +267,11 @@ def test_migration_created_partitioned_table_takes_staged_inserts(
     monkeypatch.setattr(M, "_publish_stage", recorded)
     assert M.migrate(spark, db, home) == 1
     assert published == [f"`{db}`.`cp`"] * 2
-    assert M._describe_table(spark, f"`{db}`.`cp`")["pcols"] == ["d"]
+    assert M._describe_table(spark, f"`{db}`.`cp`").pcols == ["d"]
     assert _rows(spark, db, "cp") == [(1, 10, "a"), (2, 20, "b"), (3, 30, "a")]
     parts = {r.partition for r in spark.sql(f"SHOW PARTITIONS `{db}`.cp").collect()}
     assert parts == {"d=a", "d=b"}
-    loc = M._table_location(spark, f"`{db}`.`cp`")
+    loc = M._describe_table(spark, f"`{db}`.`cp`").path
     assert any(f.startswith("part-stmt-") for f in os.listdir(os.path.join(loc, "d=a")))
     assert _no_stage_leftovers(spark, db)
 
@@ -344,13 +344,13 @@ def test_backslash_partition_value(spark, db, tmp_path):
 
 @pytest.mark.usefixtures("ledger_db")
 def test_data_column_named_location_does_not_shadow_metadata(spark, db, tmp_path):
-    """DESCRIBE parsing is section-aware: a data column literally named
-    'Location' (schema rows come first) must not shadow the detailed
-    section's Location row and route the publish to a garbage path."""
+    """A data column literally named 'Location' must not shadow the
+    table's location and route the publish to a garbage path (a flat
+    parse of DESCRIBE rows, whose schema rows come first, did)."""
     spark.sql(
         f"CREATE TABLE `{db}`.lt (k BIGINT, Location STRING) USING PARQUET"
     )
-    real_loc = M._table_location(spark, f"`{db}`.`lt`")
+    real_loc = M._describe_table(spark, f"`{db}`.`lt`").path
     assert real_loc is not None and os.path.isdir(real_loc)
     assert real_loc != "string"  # the old rows[0] bug returned the TYPE
     home = _mig(tmp_path, ["INSERT INTO lt VALUES (1, 'somewhere')"])
@@ -376,11 +376,11 @@ def test_local_parquet_location_refuses_bucketed_accepts_partitioned(spark, db):
     )
     spark.sql(f"CREATE TABLE `{db}`.ft (k BIGINT, v BIGINT) USING PARQUET")
     info = {t: M._describe_table(spark, f"`{db}`.`{t}`") for t in ("pt", "bt", "ft")}
-    assert M._local_parquet_location(info["pt"]["detail"]) is not None
-    assert M._local_parquet_location(info["bt"]["detail"]) is None
-    assert M._local_parquet_location(info["ft"]["detail"]) is not None
-    assert info["pt"]["pcols"] == ["d"]
-    assert info["ft"]["pcols"] == []
+    assert M._local_parquet_location(info["pt"]) is not None
+    assert M._local_parquet_location(info["bt"]) is None
+    assert M._local_parquet_location(info["ft"]) is not None
+    assert info["pt"].pcols == ["d"]
+    assert info["ft"].pcols == []
 
 
 @pytest.mark.usefixtures("ledger_db")
@@ -407,7 +407,7 @@ def test_runner_insert_into_partitioned_table_rows_visible(spark, db, tmp_path):
     assert (
         spark.table(f"`{db}`.pt").filter(F.col("d") == "a").count() == 2
     )
-    loc = M._table_location(spark, f"`{db}`.`pt`")
+    loc = M._describe_table(spark, f"`{db}`.`pt`").path
     assert loc and os.path.isdir(os.path.join(loc, "d=a"))
     # and no stage-table garbage
     leftovers = [
